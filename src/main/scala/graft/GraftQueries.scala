@@ -58,13 +58,8 @@ object GraftQueries {
     * (an index TABLE, n_terms-gated) is held as the warm serving
     * structure.
     */
-  private val engineCache =
-    scala.collection.concurrent.TrieMap.empty[String, QueryEngine]
-  private val multiEngineCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.index.MultiGenEngine]
-
-  private def sessionKey(spark: SparkSession, root: String): String =
-    System.identityHashCode(spark).toHexString + ":" + root
+  private val engineCache = new SessionCache[QueryEngine]
+  private val multiEngineCache = new SessionCache[graft.index.MultiGenEngine]
 
   private def safeName(dir: String): String = dir.replaceAll("[^a-zA-Z0-9.]", "_")
 
@@ -91,12 +86,20 @@ object GraftQueries {
         .build(docsAsTurns(spark, dir), out)
       out
     })
-    engineCache.getOrElseUpdate(sessionKey(spark, root), {
-      val e = new QueryEngine(spark, root, Map.empty)
+    cachedEngine(spark, root, Map.empty)
+  }
+
+  /** The warmed serving engine over `root` for this session: built and
+    * dictionary-warmed on first use, then the same instance per
+    * (session, root).
+    */
+  private[graft] def cachedEngine(spark: SparkSession, root: String,
+      lemmas: Map[String, String]): QueryEngine =
+    engineCache.getOrElseUpdate(spark, root) {
+      val e = new QueryEngine(spark, root, lemmas)
       e.warmDictionaryLocal()
       e
-    })
-  }
+    }
 
   /** The lemma map used by the lemma/bigram driver checks (q28/q29):
     * 'small' and 'big' are variants of the lemma 'size' — chosen so the
@@ -119,11 +122,7 @@ object GraftQueries {
         .build(docsAsTurns(spark, dir), out)
       out
     })
-    engineCache.getOrElseUpdate(sessionKey(spark, root), {
-      val e = new QueryEngine(spark, root, testLemmas)
-      e.warmDictionaryLocal()
-      e
-    })
+    cachedEngine(spark, root, testLemmas)
   }
 
   /** internal engine doc_id -> original documents.doc_id, given the
@@ -160,7 +159,7 @@ object GraftQueries {
   def multiGenFor(spark: SparkSession, dir: String): graft.index.MultiGenEngine = {
     val root = indexCache.getOrElseUpdate(s"twogen:$dir",
       twoGenRootFor(spark, dir, "twogen"))
-    multiEngineCache.getOrElseUpdate(sessionKey(spark, root),
+    multiEngineCache.getOrElseUpdate(spark, root)(
       new graft.index.MultiGenEngine(spark, root, Map.empty)
         .warmDictionariesLocal())
   }
@@ -211,7 +210,7 @@ object GraftQueries {
       graft.index.Generations.deleteDocsAt(spark, delIds, out, s"$out/del-00000")
       out
     })
-    multiEngineCache.getOrElseUpdate(sessionKey(spark, root),
+    multiEngineCache.getOrElseUpdate(spark, root)(
       new graft.index.MultiGenEngine(spark, root, Map.empty)
         .warmDictionariesLocal())
   }
@@ -253,7 +252,7 @@ object GraftQueries {
         Map.empty, conf)
       out
     })
-    multiEngineCache.getOrElseUpdate(sessionKey(spark, root),
+    multiEngineCache.getOrElseUpdate(spark, root)(
       new graft.index.MultiGenEngine(spark, root, Map.empty)
         .warmDictionariesLocal())
   }

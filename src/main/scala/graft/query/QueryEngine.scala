@@ -263,12 +263,42 @@ class QueryEngine(spark: SparkSession, root: String,
     */
   var wandMinPostings: Long = 100000L
 
-  /** Below this many total postings, skip Spark jobs entirely: collect the
-    * (term_id-pruned) chunk rows and score on the driver with the exact
-    * same formulas and fold order — millisecond latency for rare-term
-    * queries, bit-identical results (asserted in tests). 0 disables.
+  /** The driver-local gate: when the total df of every term a call
+    * decodes (unigrams and bigrams together) is at most this, the call
+    * collects those terms' (term_id-pruned) chunk rows in ONE Spark job
+    * and answers on the driver through [[LocalServing]] — the exact
+    * same formulas, fold order and tie-breaks, so results are
+    * bit-identical (LocalServingSpec). It covers `bm25TopK`,
+    * `handleQuery`, `phraseMatch`, `searchWithSnippets` (plus one
+    * pushed `doc_id IN` job for the result text) and
+    * `bm25ScoresFiltered` / `bm25TopKFiltered` (plus one pushed job
+    * that runs the predicate over the docs those postings hold). Driver
+    * memory is bounded by this many postings; the positional kinds (phrase, tiered, snippets) also
+    * ship `pos_blob`, whose size grows with the collected terms' cf.
+    * 0 disables: every call then runs its distributed plan.
     */
   var localMaxPostings: Long = 20000L
+
+  private def servesLocally(entries: Seq[DictRow]): Boolean =
+    localMaxPostings > 0 && entries.iterator.map(_.df).sum <= localMaxPostings
+
+  /** ONE job: the chunk rows of `termIds`, decoded on the driver.
+    * `pos_blob` is read only for `posTermIds` (not at all when empty).
+    */
+  private def localPostings(termIds: Seq[Long],
+      posTermIds: Set[Long] = Set.empty): Map[Long, TermPostings] =
+    if (termIds.isEmpty) Map.empty
+    else {
+      val pos =
+        if (posTermIds.isEmpty) lit(null).cast("binary")
+        else if (termIds.forall(posTermIds)) $"pos_blob"
+        else when($"term_id".isin(posTermIds.toSeq: _*), $"pos_blob")
+      LocalServing.decode(postings
+        .filter($"term_id".isin(termIds.distinct: _*))
+        .select($"term_id", $"n_postings", $"doc_gaps", $"tfs", $"dls",
+          pos.as("pos_blob"))
+        .as[ChunkRow].collect().toSeq)
+    }
 
   /** Above this many surviving chunks, chunk pruning switches from a
     * literal `chunk_seq IN (...)` pushed filter to a broadcast LEFT SEMI
@@ -325,30 +355,9 @@ class QueryEngine(spark: SparkSession, root: String,
     * same (score desc, doc_id asc) tie-break).
     */
   private def bm25TopKLocal(entries: Seq[DictRow], k: Int): DataFrame = {
-    val avgdl = meta.avgdl
-    val byId = entries.sortBy(_.term_id)
-    val rows = postings
-      .filter($"term_id".isin(entries.map(_.term_id): _*))
-      .select($"term_id", $"n_postings", $"doc_gaps", $"tfs", $"dls")
-      .as[(Long, Int, Array[Byte], Seq[Int], Seq[Int])]
-      .collect()
-    val perDoc = scala.collection.mutable.HashMap.empty[Long, List[(Long, Double)]]
-    byId.foreach { e =>
-      rows.iterator.filter(_._1 == e.term_id).foreach { case (_, n, gaps, tfs, dls) =>
-        val ids = ChunkCodec.decodeDocGaps(gaps, n)
-        var i = 0
-        while (i < n) {
-          val imp = Bm25.impact(e.idf, tfs(i), dls(i), avgdl, meta.k1, meta.b)
-          perDoc(ids(i)) = (e.term_id, imp) :: perDoc.getOrElse(ids(i), Nil)
-          i += 1
-        }
-      }
-    }
-    val scored = perDoc.iterator.map { case (docId, imps) =>
-      (docId, imps.sortBy(_._1).foldLeft(0.0)((acc, x) => acc + x._2))
-    }.toSeq
-    val top = scored.sortBy { case (d, s) => (-s, d) }.take(k)
-    spark.createDataFrame(top).toDF("doc_id", "score")
+    val ps = localPostings(entries.map(_.term_id))
+    spark.createDataFrame(LocalServing.topK(LocalServing.scores(entries, ps, meta), k))
+      .toDF("doc_id", "score")
   }
 
   /** Disjunctive (free-text) BM25 top-k. `useWand = true` applies the
@@ -371,7 +380,7 @@ class QueryEngine(spark: SparkSession, root: String,
   private def topKFromEntries(entries: Seq[DictRow], k: Int,
       useWand: Boolean = true): DataFrame = {
     val totalDf = entries.map(_.df).sum
-    if (totalDf <= localMaxPostings && localMaxPostings > 0) bm25TopKLocal(entries, k)
+    if (servesLocally(entries)) bm25TopKLocal(entries, k)
     else if (useWand && totalDf >= wandMinPostings) wand(entries, k)
     else topK(exactScores(entries), k)
   }
@@ -415,6 +424,9 @@ class QueryEngine(spark: SparkSession, root: String,
     *
     * A doc keeps its HIGHEST tier (the reference's append order is the
     * precedence), ordered (tier asc, score desc, doc_id asc), top-k.
+    * Under the [[localMaxPostings]] gate (unigram plus active bigram
+    * df) the tiers are computed on the driver by
+    * [[LocalServing.tiered]] from one collect.
     */
   /** Claimed-doc cap for handleQuery's PRUNED tier construction: when
     * the phrase + bigram-conjunctive doc sets are each within this
@@ -436,7 +448,9 @@ class QueryEngine(spark: SparkSession, root: String,
     */
   var handleQueryGuessFloor: Int = -1
 
-  /** Diagnostic: "pruned" | "exact" form taken by the last handleQuery. */
+  /** Diagnostic: "local" | "pruned" | "exact" form taken by the last
+    * handleQuery.
+    */
   var lastHandlePath: String = ""
 
   def handleQuery(query: String, k: Int): DataFrame = {
@@ -455,12 +469,11 @@ class QueryEngine(spark: SparkSession, root: String,
     // ONE unigram dictionary probe serves scoring, the phrase chain and
     // the unigram tier's top-k dispatch
     val entries = lookupTerms(terms)
-    if (phraseSeq.size == 1) {
+    if (phraseSeq.size == 1 && !servesLocally(entries)) {
       lastHandlePath = "pruned"
       return TieredQuery.singleTerm(
         n => if (entries.isEmpty) emptyScores() else topKFromEntries(entries, n), k)
     }
-    val phraseDocs = phraseMatchFromEntries(phraseSeq, entries)
     val bigramTerms = parsed.bigrams.map(_.term).distinct
     // ONE dictionary probe serves the existence check, the bigram BM25
     // scoring, and the conjunctive intersection
@@ -468,6 +481,18 @@ class QueryEngine(spark: SparkSession, root: String,
       if (bigramTerms.isEmpty) Nil else lookupTerms(bigramTerms)
     val bigramActive =
       bigramTerms.nonEmpty && bigramEntries.size == bigramTerms.size
+    val decoded = entries ++ (if (bigramActive) bigramEntries else Nil)
+    if (servesLocally(decoded)) {
+      lastHandlePath = "local"
+      // positions only when a phrase can match: 2+ tokens, all present
+      val posIds =
+        if (phraseSeq.size > 1 && entries.size == terms.size) entries.map(_.term_id).toSet
+        else Set.empty[Long]
+      val ps = localPostings(decoded.map(_.term_id), posIds)
+      return LocalServing.tiered(phraseSeq, entries, bigramActive, bigramEntries, ps,
+        meta, k).toDF("doc_id", "score", "tier")
+    }
+    val phraseDocs = phraseMatchFromEntries(phraseSeq, entries)
     val conjDocs =
       if (bigramActive) Some(conjunctiveFromEntries(bigramEntries)) else None
     TieredQuery.run(spark, TieredQuery.Scorers(
@@ -521,22 +546,12 @@ class QueryEngine(spark: SparkSession, root: String,
     *    save nothing while shipping a huge broadcast.
     * At 10^12 turns the routing probe is a metadata-cheap scan of the
     * docs table (column-pruned to doc_id + the predicate columns) that
-    * ships at most cap+1 ids to the driver.
+    * ships at most cap+1 ids to the driver. Under the
+    * [[localMaxPostings]] gate neither plan runs: see `filteredScores`.
     */
   def bm25ScoresFiltered(terms: Seq[String], pred: Column,
-      candidateCap: Int = 20000): DataFrame = {
-    val entries = lookupTerms(terms)
-    if (entries.isEmpty) return emptyScores()
-    val allowed = docs.filter(pred).select($"doc_id")
-    // routing + materialization in one job (the WAND tier-1 pattern):
-    // length > cap routes to the broad plan, which re-reads `allowed`
-    // distributed — the limit rows are discarded, like a count would be
-    val cap = math.min(candidateCap, Int.MaxValue - 2)
-    val cand = allowed.limit(cap + 1).as[Long].collect()
-    if (cand.isEmpty) emptyScores()
-    else if (cand.length <= cap) scoresForCandidates(entries, cand.sorted)
-    else exactScores(entries, restrict = Some(allowed))
-  }
+      candidateCap: Int = 20000): DataFrame =
+    filteredScores(lookupTerms(terms), pred, candidateCap, None)
 
   /** BM25 top-k under a metadata predicate. Post-filtering an
     * UNfiltered top-k is NOT equivalent (it returns < k rows whenever
@@ -544,7 +559,43 @@ class QueryEngine(spark: SparkSession, root: String,
     * filtered candidate set and heaps over it.
     */
   def bm25TopKFiltered(query: String, k: Int, pred: Column): DataFrame =
-    topK(bm25ScoresFiltered(queryTerms(query), pred), k)
+    filteredScores(lookupTerms(queryTerms(query)), pred, 20000, Some(k))
+
+  /** [[bm25ScoresFiltered]], top-k'd when `k` is given. Under the
+    * driver-local gate the decoded postings bound the candidates: one
+    * collect of the terms' chunk rows, then the predicate runs only
+    * over the docs those postings hold (one pushed `doc_id IN` job,
+    * at most `localMaxPostings` rows), and the allowed docs are scored
+    * and ranked on the driver. The cap-limited candidate probe below
+    * is skipped there: a CollectLimit scans the docs table in
+    * incremental jobs until it sees cap+1 rows or the table ends.
+    */
+  private def filteredScores(entries: Seq[DictRow], pred: Column,
+      candidateCap: Int, k: Option[Int]): DataFrame = {
+    def ranked(scored: DataFrame): DataFrame = k.fold(scored)(topK(scored, _))
+    if (entries.isEmpty) return ranked(emptyScores())
+    if (servesLocally(entries)) {
+      val ps = localPostings(entries.map(_.term_id))
+      val held = ps.valuesIterator.flatMap(_.docIds.iterator).toArray.distinct
+      val allowedIds =
+        if (held.isEmpty) held
+        else textFor(held).filter(pred).select($"doc_id").as[Long].collect()
+      java.util.Arrays.sort(allowedIds)
+      val scored = LocalServing.scores(entries, ps, meta,
+        d => java.util.Arrays.binarySearch(allowedIds, d) >= 0)
+      return spark.createDataFrame(LocalServing.topK(scored, k.getOrElse(Int.MaxValue)))
+        .toDF("doc_id", "score")
+    }
+    val allowed = docs.filter(pred).select($"doc_id")
+    // routing + materialization in one job (the WAND tier-1 pattern):
+    // length > cap routes to the broad plan, which re-reads `allowed`
+    // distributed — the limit rows are discarded, like a count would be
+    val cap = math.min(candidateCap, Int.MaxValue - 2)
+    val cand = allowed.limit(cap + 1).as[Long].collect()
+    if (cand.isEmpty) ranked(emptyScores())
+    else if (cand.length <= cap) ranked(scoresForCandidates(entries, cand.sorted))
+    else ranked(exactScores(entries, restrict = Some(allowed)))
+  }
 
   // -------------------------------------------------------- snippets (q52)
 
@@ -593,14 +644,18 @@ class QueryEngine(spark: SparkSession, root: String,
     // parquet to O(k) row groups (measured 4.2M docs: the full-scan
     // join dominated snippet latency). Above the literal-pushdown
     // comfort zone, semi-join first (same guard as chunkInMaxLiterals).
-    val textSide =
-      if (docIds.length <= chunkInMaxLiterals)
-        docs.filter($"doc_id".isin(docIds.toSeq: _*))
-      else
-        docs.join(broadcast(docIds.toSeq.toDF("doc_id")),
-          Seq("doc_id"), "left_semi")
-    QueryEngine.assembleSnippets(firstPos, textSide, window)
+    QueryEngine.assembleSnippets(firstPos, textFor(docIds), window)
   }
+
+  /** The docs rows of `docIds`: a pushed doc_id IN for up to
+    * [[chunkInMaxLiterals]] ids, else a broadcast semi-join.
+    */
+  private def textFor(docIds: Array[Long]): DataFrame =
+    if (docIds.length <= chunkInMaxLiterals)
+      docs.filter($"doc_id".isin(docIds.toSeq: _*))
+    else
+      docs.join(broadcast(docIds.toSeq.toDF("doc_id")),
+        Seq("doc_id"), "left_semi")
 
   /** Positioned postings of SEVERAL terms restricted to a sorted
     * candidate array, with ONE metadata pre-pass across all of them
@@ -641,12 +696,35 @@ class QueryEngine(spark: SparkSession, root: String,
     * result-page shape (doc_id, score, first_pos, snippet). The top-k
     * ids are collected (k-bounded) to drive the chunk-pruned snippet
     * pass; left join so a result doc is never dropped by the snippet
-    * stage.
+    * stage. Under the driver-local gate: one collect of the terms'
+    * chunk rows (positions included) ranks and anchors on the driver,
+    * and one pushed `doc_id IN` job fetches the k texts.
     */
   def searchWithSnippets(query: String, k: Int, window: Int = 3): DataFrame = {
     val terms = queryTerms(query)
-    QueryEngine.searchPage(spark, bm25TopKForTerms(terms, k),
+    val entries = lookupTerms(terms)
+    if (window >= 0 && servesLocally(entries)) searchPageLocal(entries, k, window)
+    else QueryEngine.searchPage(spark,
+      if (entries.isEmpty) emptyScores() else topKFromEntries(entries, k),
       ids => snippetsFor(terms, ids, window))
+  }
+
+  private def searchPageLocal(entries: Seq[DictRow], k: Int, window: Int): DataFrame = {
+    val ps = localPostings(entries.map(_.term_id), entries.map(_.term_id).toSet)
+    val top = LocalServing.topK(LocalServing.scores(entries, ps, meta), k)
+    val first = LocalServing.firstPositions(ps, top.map(_._1).toSet)
+    val text: Map[Long, String] =
+      if (top.isEmpty) Map.empty
+      else textFor(top.map(_._1).toArray).select($"doc_id", $"text")
+        .as[(Long, String)].collect().toMap
+    val rows = top.map { case (d, s) =>
+      (first.get(d), text.get(d)) match {
+        case (Some(p), Some(t)) =>
+          org.apache.spark.sql.Row(d, s, p, LocalServing.snippet(t, p, window))
+        case _ => org.apache.spark.sql.Row(d, s, null, null)
+      }
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), QueryEngine.SearchPageSchema)
   }
 
   // -------------------------------------------- prefix suggest (q53)
@@ -657,13 +735,27 @@ class QueryEngine(spark: SparkSession, root: String,
     * scan pushes a StringStartsWith filter into the dictionary Parquet
     * (whose term-sorted, range-partitioned layout makes the prefix a
     * contiguous row-group range); no postings IO at all, and the plan
-    * is a TakeOrderedAndProject over the pruned scan.
+    * is a TakeOrderedAndProject over the pruned scan. With
+    * [[warmDictionaryLocal]] installed the same answer comes from the
+    * driver lexicon instead, with no Spark job.
     */
   def suggest(prefix: String, n: Int): DataFrame =
-    dictionary.filter($"term".startsWith(prefix))
-      .select($"term", $"df")
-      .orderBy($"df".desc, $"term".asc)
-      .limit(n)
+    if (dictLocalMap.isDefined)
+      LocalServing.suggest(suggestTerms, prefix, n).toDF("term", "df")
+    else
+      dictionary.filter($"term".startsWith(prefix))
+        .select($"term", $"df")
+        .orderBy($"df".desc, $"term".asc)
+        .limit(n)
+
+  /** The [[warmDictionaryLocal]] lexicon in UTF-8 term order — the
+    * dictionary Parquet's own order — so a prefix is one binary-searched
+    * range: [[suggest]] then runs no Spark job. Built on the first
+    * suggest call, not at warm-up.
+    */
+  private lazy val suggestTerms: Array[DictRow] =
+    dictLocalMap.get.values.toArray(new Array[DictRow](0))
+      .sortBy(_.term)(Tokenizer.utf8Ordering)
 
   /** Exact block-max top-k pruning — the batch MaxScore strategy (Turtle
     * & Flood '95; block-max refinement after Ding & Suel '11), on top of
@@ -1010,10 +1102,22 @@ class QueryEngine(spark: SparkSession, root: String,
   private def positionalPruningPays(minDf: Long): Boolean =
     minDf <= phraseMaxCandidates && minDf * positionalPruneDensity < meta.n_docs
 
+  /** Docs where `terms` occur at consecutive positions (a one-term
+    * phrase is that term's doc set). Under the [[localMaxPostings]]
+    * gate: one collect and [[LocalServing.phraseDocs]]; above it the
+    * distributed plans documented above.
+    */
   def phraseMatch(terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty)
-    if (terms.size == 1) return conjunctive(terms)
-    phraseMatchFromEntries(terms, lookupTerms(terms))
+    val entries = lookupTerms(terms)
+    if (entries.size < terms.distinct.size) Seq.empty[Long].toDF("doc_id")
+    else if (servesLocally(entries)) {
+      val ids = entries.map(_.term_id)
+      val ps = localPostings(ids, if (terms.size > 1) ids.toSet else Set.empty)
+      LocalServing.phraseDocs(terms, entries, ps).toSeq.toDF("doc_id")
+    }
+    else if (terms.size == 1) conjunctiveFromEntries(entries)
+    else phraseMatchFromEntries(terms, entries)
   }
 
   /** [[phraseMatch]] over ALREADY looked-up entries (handleQuery shares
@@ -1428,6 +1532,14 @@ object QueryEngine {
   val ConjBroadcastMaxDf: Long = 1000000L
   val PhraseBroadcastMaxCand: Int = 200000
   val PhraseBroadcastMaxCf: Long = 2000000L
+
+  /** The result-page schema [[searchPage]]'s left join produces. */
+  val SearchPageSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("doc_id", LongType, nullable = false),
+      StructField("score", DoubleType, nullable = false),
+      StructField("first_pos", IntegerType), StructField("snippet", StringType)))
+  }
 
   /** Dictionary-probe counter (each probe = one pushed driver-side
     * dictionary scan) — test hook for probe budgets: handleQuery must

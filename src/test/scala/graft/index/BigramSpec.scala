@@ -127,7 +127,8 @@ class BigramSpec extends SparkSpecBase {
     def run(q: String): Seq[(Long, Double, Int)] =
       engine.handleQuery(q, 20).collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
-    Seq("the big join", "kelba sorro the", "alba the corba").foreach { q =>
+    engine.localMaxPostings = 0L // the distributed forms under test
+    try Seq("the big join", "kelba sorro the", "alba the corba").foreach { q =>
       engine.handleQueryClaimCap = 100000
       val pruned = run(q)
       assert(engine.lastHandlePath == "pruned",
@@ -138,7 +139,7 @@ class BigramSpec extends SparkSpecBase {
       engine.handleQueryClaimCap = 100000
       assert(pruned == exact, s"tier construction drift for '$q'\n " +
         s"pruned=$pruned\n exact=$exact")
-    }
+    } finally engine.localMaxPostings = 20000L
   }
 
   test("handleQuery without indexed bigrams leaves the middle tier empty") {
@@ -181,6 +182,7 @@ class BigramSpec extends SparkSpecBase {
     new IndexBuilder(spark, Map.empty, IndexConf(numParts = 2, indexBigrams = true))
       .build(spark.createDataset(custom), dir)
     val e = new QueryEngine(spark, dir, Map.empty)
+    e.localMaxPostings = 0L // the distributed tier construction under test
     val floorBefore = TieredQuery.guessFloor
     TieredQuery.guessFloor = 0
     try {
@@ -215,6 +217,7 @@ class BigramSpec extends SparkSpecBase {
     new IndexBuilder(spark, Map.empty, IndexConf(numParts = 2, indexBigrams = true))
       .build(spark.createDataset(custom), dir)
     val e = new QueryEngine(spark, dir, Map.empty)
+    e.localMaxPostings = 0L // the distributed tier construction under test
     val floorBefore = TieredQuery.guessFloor
     TieredQuery.guessFloor = 0 // guess = k + min(9, 4k) = 10 < k + 9 = 11
     try {
@@ -252,6 +255,8 @@ class BigramSpec extends SparkSpecBase {
     val eTiny = new QueryEngine(spark, dir, Map.empty)
     eTiny.handleQueryGuessFloor = 0
     val eDefault = new QueryEngine(spark, dir, Map.empty)
+    // the distributed tier construction under test
+    Seq(eTiny, eDefault).foreach(_.localMaxPostings = 0L)
     val globalBefore = TieredQuery.guessFloor
     def run(e: QueryEngine): Seq[(Long, Double, Int)] =
       e.handleQuery("zebra quartz nickel", 1).collect()
@@ -287,6 +292,7 @@ class BigramSpec extends SparkSpecBase {
     new IndexBuilder(spark, Map.empty, IndexConf(numParts = 2, indexBigrams = true))
       .build(spark.createDataset(custom), dir)
     val e = new QueryEngine(spark, dir, Map.empty)
+    e.localMaxPostings = 0L // the distributed tier construction under test
     def run(k: Int): Seq[(Long, Double, Int)] =
       e.handleQuery("zebra quartz", k).collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq

@@ -389,7 +389,8 @@ class IndexEndToEndSpec extends SparkSpecBase {
     val phrases = sample.map { t =>
       graft.core.Tokenizer.tokenize(t.text, lemmas).take(3).map(_.term)
     }.filter(ts => ts.distinct.length == 3) ++ Seq(Seq("the", "of"))
-    phrases.take(6).foreach { ts =>
+    engine.localMaxPostings = 0L // the distributed phrase plans under test
+    try phrases.take(6).foreach { ts =>
       val want = oracle.phraseMatch(ts)
       engine.positionalPruneDensity = 0L // force the pruned plan
       val pruned = engine.phraseMatch(ts).collect().map(_.getLong(0)).toSet
@@ -399,7 +400,7 @@ class IndexEndToEndSpec extends SparkSpecBase {
       engine.positionalPruneDensity = 256L
       assert(pruned == want, s"pruned phrase plan mismatch for $ts")
       assert(shuffled == want, s"shuffle phrase plan mismatch for $ts")
-    }
+    } finally engine.localMaxPostings = 20000L
     val wantP = oracle.proximity("the", "of", 3).toSet
     engine.positionalPruneDensity = 0L
     val prunedP = engine.proximity("the", "of", 3)

@@ -59,16 +59,8 @@ class RandomizedParitySpec extends SparkSpecBase {
     sys.env.get("GRAFT_FUZZ_SEED").map(_.toLong).getOrElse(20260818L)
 
   test("handleQuery: seeded random queries identical across single / 3-gen / merged / oracle") {
-    val rnd = new scala.util.Random(fuzzSeed)
-    def word(): String = rnd.nextInt(10) match {
-      case 0 | 1 => // near-miss typo of a corpus term
-        val w = vocab(rnd.nextInt(vocab.size))
-        if (w.length > 3) w.dropRight(1) + "q" else w + "q"
-      case 2 => s"zzjunk${rnd.nextInt(100)}" // absent
-      case _ => vocab(rnd.nextInt(vocab.size)) // in-domain
-    }
     val queries =
-      Seq.fill(fuzzQueries)(Seq.fill(1 + rnd.nextInt(4))(word()).mkString(" "))
+      RandomQueries.queries(vocab, new scala.util.Random(fuzzSeed), fuzzQueries)
 
     val mPre = new MultiGenEngine(spark, root, lemmas).warmDictionaries()
     assert(mPre.gens.size == 3)

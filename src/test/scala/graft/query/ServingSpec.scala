@@ -26,10 +26,12 @@ class ServingSpec extends SparkSpecBase {
   test("filtered scores: candidate path == semi-join path == brute force, bit-identical") {
     val terms = Seq("the", Transcripts.contentWords(5))
     val pred = col("doc_len") % 3 === 0 // ~1/3 of docs, no doc_id bias
-    val viaCandidates = scoreMap(
-      engine.bm25ScoresFiltered(terms, pred)) // small corpus -> candidate path
-    val viaJoin = scoreMap(
-      engine.bm25ScoresFiltered(terms, pred, candidateCap = 0)) // forced semi-join
+    engine.localMaxPostings = 0L // the distributed routes under test
+    val (viaCandidates, viaJoin) = try (scoreMap(
+      engine.bm25ScoresFiltered(terms, pred)), // small corpus -> candidate path
+      scoreMap(
+      engine.bm25ScoresFiltered(terms, pred, candidateCap = 0))) // forced semi-join
+    finally engine.localMaxPostings = 20000L
     val allowed = engine.docs.filter(pred).select(col("doc_id"))
     val brute = scoreMap(
       engine.bm25Scores(terms).join(allowed, Seq("doc_id"), "left_semi"))
