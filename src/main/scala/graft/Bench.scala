@@ -283,7 +283,7 @@ object Bench {
     val dictLocal =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_MERGE_LOCALDICT", "1") == "1"
     def warmMulti(m: graft.index.MultiGenEngine): graft.index.MultiGenEngine =
-      if (dictLocal) m.warmDictionariesLocal() else m.warmDictionaries()
+      if (dictLocal) m.warmDictionariesLocal() else m.warmDictionary()
     val mPre = warmMulti(
       new graft.index.MultiGenEngine(spark, root, Transcripts.lemmas))
     val (p50Pre, idsPre) = p50(q => mPre.bm25TopK(q, 10))

@@ -47,7 +47,7 @@ object GraftQueries {
 
   /** Engine-INSTANCE caches (round 6): the index DIRECTORIES were always
     * cached per JVM (indexCache above), but every catalog call built a
-    * fresh QueryEngine/MultiGenEngine over them, so each query re-paid
+    * fresh QueryEngine over them, so each query re-paid
     * distributed dictionary probes (one Spark job per term set, times
     * generations for the multi-gen rows). Serving engines are warmed
     * once per (session, root) — warmDictionaryLocal is exactly the
@@ -59,7 +59,6 @@ object GraftQueries {
     * structure.
     */
   private val engineCache = new SessionCache[QueryEngine]
-  private val multiEngineCache = new SessionCache[graft.index.MultiGenEngine]
 
   private def safeName(dir: String): String = dir.replaceAll("[^a-zA-Z0-9.]", "_")
 
@@ -125,26 +124,16 @@ object GraftQueries {
     cachedEngine(spark, root, testLemmas)
   }
 
-  /** internal engine doc_id -> original documents.doc_id, given the
-    * engine's docs table — ONE home for the conv_id -> orig_doc_id
-    * encoding so the single- and multi-generation variants cannot drift.
+  /** internal engine doc_id -> original documents.doc_id (the conv_id
+    * encoding), over the engine's docs — one relation for a single
+    * index and a generations root alike.
     */
-  private def withOrigDocIdFrom(docs: DataFrame, df: DataFrame): DataFrame = {
-    val mapping = docs.select(col("doc_id"),
+  def withOrigDocId(engine: QueryEngine, df: DataFrame): DataFrame = {
+    val mapping = engine.docs.select(col("doc_id"),
       expr("cast(substring(conv_id, 6) as long)").as("orig_doc_id"))
     df.join(mapping, Seq("doc_id"))
       .drop("doc_id").withColumnRenamed("orig_doc_id", "doc_id")
   }
-
-  /** internal engine doc_id -> original documents.doc_id. */
-  def withOrigDocId(engine: QueryEngine, df: DataFrame): DataFrame =
-    withOrigDocIdFrom(engine.docs, df)
-
-  /** [[withOrigDocId]] over a multi-generation engine: the mapping is
-    * the union of the generations' docs tables (doc_id ranges disjoint).
-    */
-  def withOrigDocIdMulti(m: graft.index.MultiGenEngine, df: DataFrame): DataFrame =
-    withOrigDocIdFrom(m.engines.map(_.docs).reduce(_ unionByName _), df)
 
   /** Two-generation UNCOMPACTED root over `documents` (hot-append
     * serving shape, q46): the corpus split at the median doc_id into
@@ -156,12 +145,10 @@ object GraftQueries {
     * testdata regeneration must resolve to a fresh directory rather
     * than silently serving the old corpus.
     */
-  def multiGenFor(spark: SparkSession, dir: String): graft.index.MultiGenEngine = {
+  def multiGenFor(spark: SparkSession, dir: String): QueryEngine = {
     val root = indexCache.getOrElseUpdate(s"twogen:$dir",
       twoGenRootFor(spark, dir, "twogen"))
-    multiEngineCache.getOrElseUpdate(spark, root)(
-      new graft.index.MultiGenEngine(spark, root, Map.empty)
-        .warmDictionariesLocal())
+    cachedEngine(spark, root, Map.empty)
   }
 
   /** ONE home for the two-generation build shared by the q46 and q54
@@ -196,8 +183,7 @@ object GraftQueries {
     * docs while BM25 statistics stay pre-delete, which is exactly what
     * the oracle SQL expresses (full-corpus stats, filtered final SELECT).
     */
-  def multiGenDeletedFor(spark: SparkSession, dir: String)
-      : graft.index.MultiGenEngine = {
+  def multiGenDeletedFor(spark: SparkSession, dir: String): QueryEngine = {
     val key = s"twogendel:$dir"
     val root = indexCache.getOrElseUpdate(key, {
       val out = twoGenRootFor(spark, dir, "twogendel")
@@ -210,9 +196,7 @@ object GraftQueries {
       graft.index.Generations.deleteDocsAt(spark, delIds, out, s"$out/del-00000")
       out
     })
-    multiEngineCache.getOrElseUpdate(spark, root)(
-      new graft.index.MultiGenEngine(spark, root, Map.empty)
-        .warmDictionariesLocal())
+    cachedEngine(spark, root, Map.empty)
   }
 
   /** Three-generation root (thirds in conv_id order) whose FIRST TWO
@@ -226,8 +210,7 @@ object GraftQueries {
     * the merged copy. gc is spec-pinned (GenerationMergeSpec); the
     * serving-relevant exclusion (replaces.json) is exercised right here.
     */
-  def multiGenMergedFor(spark: SparkSession, dir: String)
-      : graft.index.MultiGenEngine = {
+  def multiGenMergedFor(spark: SparkSession, dir: String): QueryEngine = {
     val key = s"merged:$dir"
     val root = indexCache.getOrElseUpdate(key, {
       val token = IndexBuilder.tableToken(s"$dir/documents.parquet").take(12)
@@ -252,9 +235,7 @@ object GraftQueries {
         Map.empty, conf)
       out
     })
-    multiEngineCache.getOrElseUpdate(spark, root)(
-      new graft.index.MultiGenEngine(spark, root, Map.empty)
-        .warmDictionariesLocal())
+    cachedEngine(spark, root, Map.empty)
   }
 
   // --------------------------------------------------------- query catalog
@@ -806,7 +787,7 @@ object GraftQueries {
     }),
 
     // reference handle_query served from an UNCOMPACTED two-generation
-    // root (MultiGenEngine.handleQuery — the hot-append serving entry
+    // root (QueryEngine.handleQuery — the hot-append serving entry
     // point): global BM25 statistics make it tier/rank/score-identical
     // to the single-index q25, so the oracle IS the q25 oracle. Same
     // top-100-raw + rounded-reorder envelope for boundary stability.
@@ -814,7 +795,7 @@ object GraftQueries {
       val m = multiGenFor(s, dir)
       val got = m.handleQuery("table scan", 100)
         .select(col("doc_id"), round(col("score"), 4).as("score"), col("tier"))
-      withOrigDocIdMulti(m, got)
+      withOrigDocId(m, got)
         .orderBy(col("tier").asc, col("score").desc, col("doc_id").asc)
         .limit(10)
         .select("doc_id", "score", "tier")
@@ -974,7 +955,7 @@ object GraftQueries {
       val m = multiGenDeletedFor(s, dir)
       val got = m.handleQuery("table scan", 100)
         .select(col("doc_id"), round(col("score"), 4).as("score"), col("tier"))
-      withOrigDocIdMulti(m, got)
+      withOrigDocId(m, got)
         .orderBy(col("tier").asc, col("score").desc, col("doc_id").asc)
         .limit(10)
         .select("doc_id", "score", "tier")
@@ -1052,7 +1033,7 @@ object GraftQueries {
       val m = multiGenMergedFor(s, dir)
       val got = m.handleQuery("table scan", 100)
         .select(col("doc_id"), round(col("score"), 4).as("score"), col("tier"))
-      withOrigDocIdMulti(m, got)
+      withOrigDocId(m, got)
         .orderBy(col("tier").asc, col("score").desc, col("doc_id").asc)
         .limit(10)
         .select("doc_id", "score", "tier")

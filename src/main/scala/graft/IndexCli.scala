@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.expr
 
 import graft.core.Tokenizer
 import graft.corpus.Turn
-import graft.index.{Compactor, Generations, IndexBuilder, IndexConf, MultiGenEngine}
+import graft.index.{Compactor, Generations, IndexBuilder, IndexConf}
 import graft.query.QueryEngine
 
 /** spark-submit entry point — the deployable surface of the library
@@ -232,17 +232,9 @@ object IndexCli {
         val k = o.get("k").map(_.toInt).getOrElse(10)
         val lem = lemmasFrom(o)
         val window = o.get("window").map(_.toInt).getOrElse(3)
-        val res =
-          if (isSingleIndex(root)) {
-            val e = new QueryEngine(spark, root, lem)
-            if (a.cmd == "query") e.handleQuery(q, k)
-            else e.searchWithSnippets(q, k, window)
-          } else {
-            val e = new MultiGenEngine(spark, root, lem)
-            if (a.cmd == "query") e.handleQuery(q, k)
-            else e.searchWithSnippets(q, k, window)
-          }
-        emit(res, o)
+        val e = new QueryEngine(spark, root, lem)
+        emit(if (a.cmd == "query") e.handleQuery(q, k)
+          else e.searchWithSnippets(q, k, window), o)
       case "stats" =>
         // operational inventory, metadata-only: generation metas +
         // tombstone markers (one small read each), no table scans

@@ -80,6 +80,7 @@ object PlanDump {
       "PER GENERATION and warm p50 grew near-linearly with fan-out " +
       "(3.73 s @8 gens -> 0.86 s, BENCH.md round-5 addendum).") {
       val m = new graft.index.MultiGenEngine(spark, delRoot(), Transcripts.lemmas)
+      m.localMaxPostings = 0L // the distributed read, not the driver-local gate
       m.bm25TopKForTerms(Seq("the", "of"), 10)
     }
     cap("Takedown-wave fallback (tombstones above liveDocsCap)",

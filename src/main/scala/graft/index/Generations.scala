@@ -16,6 +16,12 @@ import graft.corpus.Turn
   */
 object Generations {
 
+  /** The index directories a serving engine reads for `root`: the root
+    * itself when it is one built index, else its live generations.
+    */
+  def servingDirs(root: String): Seq[String] =
+    if (Fs.exists(IndexPaths(root).meta)) Seq(root) else genDirs(root)
+
   def genDirs(root: String): Seq[String] = {
     val complete = Fs.listNames(root)
       .filter(n => n.startsWith("gen-") &&
@@ -49,7 +55,7 @@ object Generations {
     * generations hold non-contiguous doc ranges and cannot be
     * interval-mapped from doc_ids.
     */
-  private[index] def genSegOf(path: String): String = {
+  private[graft] def genSegOf(path: String): String = {
     val parts = path.split('/')
     val i = parts.lastIndexOf("postings")
     if (i > 0) parts(i - 1) else ""
@@ -119,7 +125,7 @@ object Generations {
   // a `del-NNNNN/` directory beside the generations holds the deleted
   // doc_ids as parquet plus a `del_meta.json` marker written LAST
   // (atomic rename), so a crashed delete is invisible. Tombstoned docs
-  // are excluded from every MultiGenEngine result and from its scoring
+  // are excluded from every QueryEngine result and from its scoring
   // folds immediately, but global statistics (N, df, avgdl) stay
   // PRE-DELETE until compaction physically purges the postings — the
   // exact semantics Lucene serves between a deleteDocuments() and the
@@ -207,7 +213,7 @@ object Generations {
     * indexed version without touching its postings. The existing ids
     * are resolved from the CURRENT generations before the append, so
     * the new generation's own docs can never be tombstoned by their own
-    * keys. Readers see the swap on their next MultiGenEngine
+    * keys. Readers see the swap on their next QueryEngine
     * construction (both steps are committed by atomic markers; a crash
     * between them leaves the delete committed and the append absent —
     * re-running the same upsert re-tombstones an already-dead key set,
@@ -271,1041 +277,10 @@ object Generations {
   }
 }
 
-/** Query engine over all generations of an incremental index. BM25 idf
-  * and avgdl are recomputed GLOBALLY at query time (per-generation df
-  * summed; avgdl doc-weighted), so scores equal a from-scratch build over
-  * the concatenated corpus bit-for-bit — asserted in tests. Block-max
-  * pruning works across generations too: per-generation max_impacts are
-  * rescaled to the global idf (see bm25TopKForTerms), so hot multi-gen
-  * serving prunes without compacting first.
-  */
-class MultiGenEngine(spark: SparkSession, root: String,
-    lemmas: Map[String, String] = Map.empty) {
-  import spark.implicits._
-  import graft.query.QueryEngine
-
-  val gens: Seq[String] = Generations.genDirs(root)
-  require(gens.nonEmpty, s"no generations under $root")
-  val engines: Seq[QueryEngine] = gens.map(new QueryEngine(spark, _, lemmas))
-
-  /** Tombstoned doc_ids (union of the root's committed `del-*` batches),
-    * None when the root has no deletes. Lucene liveDocs semantics:
-    * deleted docs are excluded from every doc-level result and from the
-    * scoring FOLD itself (they never emit fold rows, so theta, the
-    * candidate set and the top-k limit all operate on survivors only —
-    * exact top-k over the live corpus), while global statistics
-    * (N, df, avgdl) and chunk block-max bounds stay PRE-DELETE until
-    * compaction purges the postings. Stale bounds remain valid UPPER
-    * bounds for survivor scores, so pruning stays sound, just slightly
-    * less tight. Term-level surfaces (suggest, fuzzyTerms, dictionary
-    * df) are likewise unaffected until compaction — exactly Lucene's
-    * docFreq-includes-deletes behavior, documented here so nobody
-    * "fixes" it into a per-query df recount (which would need a
-    * per-term deleted-df table rebuilt on every delete).
-    */
-  val deletedIds: Option[DataFrame] = Generations.deletedDocs(spark, root)
-
-  /** Tombstone sets up to this size are collected ONCE at first use and
-    * served as a broadcast sorted array (the Lucene liveDocs form) —
-    * above it, takedown-wave scale, the per-query filter falls back to
-    * a distributed anti-join. The array is the right default: a
-    * measured 4.2M-turn probe with 420k tombstones paid a 2.2× median
-    * per-query latency through the anti-join (every fold rebuilds the
-    * broadcast hashed relation from the del-* parquet), vs ~parity for
-    * the one-time collected array probed by binary search inside the
-    * fold stage. 2M ids ≈ 16 MB broadcast, re-shipped per executor
-    * like any task broadcast.
-    */
-  var liveDocsCap: Long = 2000000L
-
-  /** The collected liveDocs complement (sorted tombstoned ids), resolved
-    * lazily on the first delete-filtered query: None when the root has
-    * no deletes OR the tombstone set outgrew [[liveDocsCap]].
-    */
-  private lazy val deletedLocal: Option[org.apache.spark.broadcast.Broadcast[Array[Long]]] =
-    deletedIds.flatMap { d =>
-      // ONE job: collect cap+1 rows and decide from the length — a
-      // separate count() pass would double the construction cost that a
-      // per-query engine (the bench catalog shape) pays on every build
-      val cap = math.min(liveDocsCap, Int.MaxValue - 2L).toInt
-      val ids = d.limit(cap + 1).as[Long].collect()
-      if (ids.length > cap) None
-      else {
-        java.util.Arrays.sort(ids)
-        Some(spark.sparkContext.broadcast(ids))
-      }
-    }
-
-  /** Drop tombstoned doc_ids from `df`; no-op (nothing added to the plan
-    * at all) on roots without deletes. Under [[liveDocsCap]] this is a
-    * binary-search filter against the broadcast sorted array — it fuses
-    * into the surrounding stage with no exchange and no per-query
-    * broadcast-relation build; above the cap it is a distributed
-    * anti-join against the del-* parquet (AQE broadcasts while the wave
-    * still fits, then shuffles).
-    */
-  private def dropDeleted(df: DataFrame): DataFrame =
-    deletedIds.fold(df) { d =>
-      deletedLocal match {
-        case Some(bc) =>
-          val live = udf((id: Long) =>
-            java.util.Arrays.binarySearch(bc.value, id) < 0)
-          df.filter(live($"doc_id"))
-        case None => df.join(d, Seq("doc_id"), "left_anti")
-      }
-    }
-
-  val nDocs: Long = engines.map(_.meta.n_docs).sum
-  // one set of BM25 constants across generations (chunk max_impacts are
-  // baked under them, and a global fold cannot mix two k1/b regimes)
-  require(engines.map(e => (e.meta.k1, e.meta.b)).distinct.size == 1,
-    s"generations disagree on BM25 constants: " +
-      engines.map(e => (e.meta.k1, e.meta.b)).distinct.mkString(","))
-  private val k1 = engines.head.meta.k1
-  private val bParam = engines.head.meta.b
-  val avgdl: Double = {
-    // identical expression shape to the single-build avg: Long sum / count
-    val totalLen = engines.map(e => math.round(e.meta.avgdl * e.meta.n_docs)).sum
-    totalLen.toDouble / nDocs
-  }
-
-  /** Warm every generation's dictionary — the multi-generation analog
-    * of QueryEngine.warmDictionary (always safe: lexicon-sized). Without
-    * it a warm serving deployment pays one parquet dictionary probe PER
-    * GENERATION per query term set, which dominates the multi-gen vs
-    * single-index latency gap (measured 4.2M-turn serving, BENCH.md
-    * round 5). Postings stay on the pruned-scan path, as on the
-    * single engine.
-    */
-  def warmDictionaries(): this.type = {
-    engines.foreach(_.warmDictionary())
-    this
-  }
-
-  /** The driver-hash-map analog of [[warmDictionaries]]
-    * (QueryEngine.warmDictionaryLocal per generation, each gen gated on
-    * its own `meta.n_terms`): [[GlobalStats]] runs one dictionary probe
-    * PER GENERATION per term set, sequentially — at 8 generations those
-    * probe jobs are the largest per-query fixed cost (BENCH.md round-5
-    * fan-out anatomy), and this turns all of them into driver hash
-    * lookups. Generations whose lexicon exceeds the cap fall back to a
-    * cached distributed probe individually.
-    */
-  def warmDictionariesLocal(): this.type = {
-    engines.foreach(_.warmDictionaryLocal())
-    this
-  }
-
-  // ------------------------------------------------- fused postings read
-  //
-  // Per-generation plan branches are the dominant multi-generation
-  // serving cost: each scoring read unioned one typed sub-plan PER
-  // GENERATION (its own pushed scan, broadcasts and — on the
-  // candidate-pruned path — its own chunk-metadata collect job), so
-  // per-query latency grew near-linearly with generation count
-  // (measured 0.64 s @1 gen / 1.63 s @5 / 3.61 s @8 at 420k turns,
-  // BENCH.md round 5). The fused read replaces them with ONE multi-path
-  // scan over every generation's postings dir: term_id predicates push
-  // as before (the union of the generations' local ids — over-selecting
-  // chunk ROWS whose local id collides across generations is fine, the
-  // decode step drops them before any byte is decoded), the owning
-  // generation is recovered from the file path (the dir segment before
-  // `postings` — robust for MERGED generations, whose doc ranges are
-  // non-contiguous and therefore cannot be interval-mapped), and chunk
-  // pruning runs one metadata pre-pass instead of one per generation.
-  // Scoring output is bit-identical: same (doc_id, fold_key, impact)
-  // rows, same sorted per-doc fold.
-
-  /** Serve scoring reads through the fused single-scan path (default).
-    * `false` restores the per-generation union form — kept for paired
-    * A/B and as the correctness cross-check in FusedReadSpec.
-    */
-  var fusedRead: Boolean = true
-
-  private lazy val genSegIndex: Map[String, Int] =
-    gens.zipWithIndex.map { case (g, i) => g.split('/').last -> i }.toMap
-
-  // engine-constant: broadcast once, not per query (three call sites
-  // re-broadcasting an identical small map per fold left churn for the
-  // ContextCleaner)
-  private lazy val bcSegIdx
-      : org.apache.spark.broadcast.Broadcast[Map[String, Int]] =
-    spark.sparkContext.broadcast(genSegIndex)
-
-  private lazy val fusedPostings: DataFrame = spark.read
-    .option("recursiveFileLookup", "true")
-    .parquet(gens.map(g => IndexPaths(g).postings): _*)
-
-  /** Fused (doc_id, fold_key, impact) rows for `ts` across ALL
-    * generations in one scan; `candOpt` (sorted) engages the fused
-    * chunk-pruned read. None when no generation holds any of `ts`.
-    */
-  private def fusedFoldRows(st: GlobalStats, ts: Seq[String],
-      candOpt: Option[Array[Long]]): Option[DataFrame] = {
-    val pairs: Seq[(Int, DictRow, Int, Double)] =
-      st.perGen.zipWithIndex.flatMap { case (dict, gi) =>
-        st.ordered.filter(t => ts.contains(t) && dict.contains(t))
-          .map(t => (gi, dict(t), st.foldKey(t), st.idf(t)))
-      }
-    if (pairs.isEmpty) return None
-    val info: Map[(Int, Long), (Int, Double)] =
-      pairs.map { case (gi, d, fk, tIdf) => (gi, d.term_id) -> (fk, tIdf) }.toMap
-    val unionIds = pairs.map(_._2.term_id).distinct
-    val bcInfo = spark.sparkContext.broadcast(info)
-    val bcSeg = bcSegIdx // local alias: the closure must not capture `this`
-    val bcCand = candOpt.map(spark.sparkContext.broadcast(_))
-    // local copies — capturing the fields would capture `this`
-    val avg = avgdl
-    val k1L = k1
-    val bL = bParam
-
-    // _file is captured directly over the scan, BELOW any join:
-    // input_file_name() is only defined while the task is reading the
-    // file and returns "" once rows cross an exchange, so evaluating it
-    // above the over-cap SHUFFLED semi-join would zero out generation
-    // recovery and silently drop every posting row (test-pinned in
-    // FusedReadSpec). Catalyst still prunes unused columns through this
-    // projection.
-    val base = fusedPostings.filter($"term_id".isin(unionIds: _*))
-    val withFile = base.select(
-      (input_file_name().as("_file") +: base.columns.toSeq.map(col)): _*)
-    val pruned = candOpt match {
-      case None => withFile
-      case Some(cand) =>
-        // one metadata pre-pass over the fused relation (vs one PER
-        // GENERATION before): same dense-skip / literal-IN / semi-join
-        // routing as the single-index candidatePrunedPostings, with the
-        // same driver-known survivor bound before any collect. The
-        // (gen, term_id) validity check runs in the pre-pass too, so
-        // survivor pairs are exact; chunk_seq is a doc_id and doc
-        // ranges are disjoint, so (term_id, chunk_seq) stays a
-        // globally-unique join key across generations.
-        val knobs = engines.head
-        val totalChunks = pairs.map { case (_, d, _, _) =>
-          (d.df + graft.core.ChunkCodec.ChunkSize - 1) /
-            graft.core.ChunkCodec.ChunkSize }.sum.toDouble
-        val metaPairs = withFile
-          .select($"_file", $"term_id", $"chunk_seq",
-            $"min_doc_id", $"max_doc_id")
-          .as[(String, Long, Long, Long, Long)]
-          .filter { c =>
-            val gi = bcSeg.value.getOrElse(Generations.genSegOf(c._1), -1)
-            bcInfo.value.contains((gi, c._2)) &&
-              QueryEngine.rangeHasCandidate(c._4, c._5, bcCand.get.value)
-          }
-          .select($"term_id", $"chunk_seq")
-        val survBound = math.min(totalChunks, cand.length.toDouble * pairs.size)
-        if (survBound <= knobs.chunkMetaCollectCap) {
-          val survivors = metaPairs.as[(Long, Long)].collect()
-          if (survivors.length > knobs.chunkPruneDenseFraction * totalChunks)
-            withFile
-          else if (survivors.length <= knobs.chunkInMaxLiterals)
-            withFile.filter(
-              $"chunk_seq".isin(survivors.map(_._2).distinct.toSeq: _*))
-          else
-            withFile.join(
-              broadcast(survivors.toSeq.toDF("term_id", "chunk_seq")),
-              Seq("term_id", "chunk_seq"), "left_semi")
-        } else
-          withFile.join(metaPairs.toDF("term_id", "chunk_seq"),
-            Seq("term_id", "chunk_seq"), "left_semi")
-    }
-    Some(dropDeleted(pruned
-      .select($"_file", $"term_id", $"min_doc_id", $"max_doc_id",
-        $"n_postings", $"doc_gaps", $"tfs", $"dls")
-      .as[(String, Long, Long, Long, Int, Array[Byte], Seq[Int], Seq[Int])]
-      .flatMap { case (file, termId, minD, maxD, n, gaps, tfs, dls) =>
-        // chunk-level range re-check before touching the blobs — the
-        // dense-skip branch arrives unpruned, and the single-index
-        // candidatePrunedPostings applies the same metadata-only skip
-        val rangeOk = bcCand.forall(bc =>
-          QueryEngine.rangeHasCandidate(minD, maxD, bc.value))
-        val gi = bcSeg.value.getOrElse(Generations.genSegOf(file), -1)
-        (if (rangeOk) bcInfo.value.get((gi, termId)) else None) match {
-          case None => Iterator.empty
-          case Some((fk, tIdf)) =>
-            val ids = graft.core.ChunkCodec.decodeDocGaps(gaps, n)
-            val it = Iterator.tabulate(n)(i =>
-              (ids(i), fk, Bm25.impact(tIdf, tfs(i), dls(i), avg, k1L, bL)))
-            bcCand match {
-              case Some(bc) => it.filter(r =>
-                java.util.Arrays.binarySearch(bc.value, r._1) >= 0)
-              case None => it
-            }
-        }
-      }.toDF("doc_id", "fold_key", "impact")))
-  }
-
-  /** Fused doc_ids of ONE query term across all generations (`pairs` =
-    * its (gen, local term_id) per generation): doc_gaps-only decode,
-    * column pruning keeps tfs/dls/pos_blob unread — the cross-gen
-    * analog of QueryEngine.postingDocIds in one scan.
-    */
-  private def fusedDocIds(pairs: Seq[(Int, Long)]): DataFrame = {
-    import spark.implicits._
-    if (pairs.isEmpty) return Seq.empty[Long].toDF("doc_id")
-    val valid = pairs.toSet
-    val bcValid = spark.sparkContext.broadcast(valid)
-    val bcSeg = bcSegIdx // local alias: the closure must not capture `this`
-    fusedPostings.filter($"term_id".isin(pairs.map(_._2).distinct: _*))
-      .select(input_file_name().as("_file"), $"term_id", $"n_postings",
-        $"doc_gaps")
-      .as[(String, Long, Int, Array[Byte])]
-      .flatMap { case (file, termId, n, gaps) =>
-        val gi = bcSeg.value.getOrElse(Generations.genSegOf(file), -1)
-        if (!bcValid.value.contains((gi, termId))) Iterator.empty
-        else graft.core.ChunkCodec.decodeDocGaps(gaps, n).iterator
-      }.toDF("doc_id")
-  }
-
-  /** Fused (doc_id, positions) of ONE query term across all generations,
-    * optionally chunk-pruned to a sorted candidate array — the cross-gen
-    * analog of QueryEngine.positionedForCandidates in one scan, with
-    * exact (term_id, chunk_seq) survivor pairs (chunk_seq is a doc_id,
-    * so the pair stays globally unique across generations).
-    */
-  private def fusedPositioned(pairs: Seq[(Int, Long)],
-      bcCand: Option[org.apache.spark.broadcast.Broadcast[Array[Long]]])
-      : DataFrame = {
-    import spark.implicits._
-    if (pairs.isEmpty)
-      return Seq.empty[(Long, Seq[Int])].toDF("doc_id", "positions")
-    val valid = pairs.toSet
-    val bcValid = spark.sparkContext.broadcast(valid)
-    val bcSeg = bcSegIdx // local alias: the closure must not capture `this`
-    // _file captured in the scan stage, below any join — the same
-    // exchange-safety invariant as fusedFoldRows (input_file_name()
-    // returns "" above a shuffle)
-    val base = fusedPostings.filter($"term_id".isin(pairs.map(_._2).distinct: _*))
-    val withFile = base.select(
-      (input_file_name().as("_file") +: base.columns.toSeq.map(col)): _*)
-    val pruned = bcCand match {
-      case None => withFile
-      case Some(bc) =>
-        val knobs = engines.head
-        val metaPairs = withFile
-          .select($"_file", $"term_id", $"chunk_seq",
-            $"min_doc_id", $"max_doc_id")
-          .as[(String, Long, Long, Long, Long)]
-          .filter { c =>
-            val gi = bcSeg.value.getOrElse(Generations.genSegOf(c._1), -1)
-            bcValid.value.contains((gi, c._2)) &&
-              QueryEngine.rangeHasCandidate(c._4, c._5, bc.value)
-          }
-          .select($"term_id", $"chunk_seq")
-        // Driver-known survivor bound BEFORE any collect, the same
-        // contract as fusedFoldRows: per (gen, term_id) pair the chunks
-        // partition postings into disjoint doc ranges, so one candidate
-        // doc survives at most one chunk per pair — survivors ≤
-        // |candidates| × |pairs|. Above the cap (e.g. a near-
-        // phraseMaxCandidates anchor on a many-generation root) the
-        // pre-pass stays distributed as a left-semi join instead of
-        // collecting millions of boxed pairs onto the serving driver.
-        val survBound = bc.value.length.toDouble * pairs.size
-        if (survBound <= knobs.chunkMetaCollectCap) {
-          val survivors = metaPairs.as[(Long, Long)].collect()
-          if (survivors.length <= knobs.chunkInMaxLiterals)
-            withFile.filter(
-              $"chunk_seq".isin(survivors.map(_._2).distinct.toSeq: _*))
-          else
-            withFile.join(
-              broadcast(survivors.toSeq.toDF("term_id", "chunk_seq")),
-              Seq("term_id", "chunk_seq"), "left_semi")
-        } else
-          withFile.join(metaPairs.toDF("term_id", "chunk_seq"),
-            Seq("term_id", "chunk_seq"), "left_semi")
-    }
-    pruned
-      .select($"_file", $"term_id", $"min_doc_id", $"max_doc_id",
-        $"n_postings", $"doc_gaps", $"pos_blob")
-      .as[(String, Long, Long, Long, Int, Array[Byte], Array[Byte])]
-      .flatMap { case (file, termId, minD, maxD, n, gaps, posBlob) =>
-        // metadata-only range skip before decoding: the literal-IN
-        // branch over-selects foreign (term_id, chunk_seq) combos that
-        // share a chunk_seq value, and this drops most of them unread
-        val gi = bcSeg.value.getOrElse(Generations.genSegOf(file), -1)
-        if (!bcValid.value.contains((gi, termId)) ||
-            !bcCand.forall(bc =>
-              QueryEngine.rangeHasCandidate(minD, maxD, bc.value)))
-          Iterator.empty
-        else {
-          val ids = graft.core.ChunkCodec.decodeDocGaps(gaps, n)
-          val keep: Int => Boolean = bcCand match {
-            case Some(bc) =>
-              i => java.util.Arrays.binarySearch(bc.value, ids(i)) >= 0
-            case None => _ => true
-          }
-          lazy val poss = graft.core.ChunkCodec.decodePositions(posBlob, n)
-          Iterator.tabulate(n)(i => i).filter(keep)
-            .map(i => (ids(i), poss(i).toSeq))
-        }
-      }.toDF("doc_id", "positions")
-  }
-
-  /** Per-generation (gen, term_id) pairs of `t` under `st`'s probes. */
-  private def termPairs(st: GlobalStats, t: String): Seq[(Int, Long)] =
-    st.perGen.zipWithIndex.flatMap { case (d, gi) =>
-      d.get(t).map(e => (gi, e.term_id))
-    }
-
-  /** Fused cross-generation phrase match: ONE positional relation per
-    * phrase SLOT (multi-path scan across all generations) instead of one
-    * join chain per generation. Exactly the per-generation union's doc
-    * set: docs live in one generation, so the global doc_id join chain
-    * intersects within generations only, and a generation missing a
-    * term simply contributes no rows for its docs (the same docs its
-    * per-generation chain would drop). Anchor/ordering use GLOBAL df —
-    * an optimization choice, invisible in the (symmetric-intersection)
-    * result. Mirrors QueryEngine.phraseMatchFromEntries' two plans:
-    * candidate-pruned when the anchor's global df is sparse
-    * (positionalPruningPays against global n_docs), shuffle-join chain
-    * otherwise.
-    */
-  private def fusedPhraseMatch(phraseSeq: Seq[String],
-      st: GlobalStats): DataFrame = {
-    import spark.implicits._
-    require(phraseSeq.nonEmpty)
-    val empty = Seq.empty[Long].toDF("doc_id")
-    if (phraseSeq.exists(t => !st.globalDf.contains(t))) return empty
-    if (phraseSeq.size == 1)
-      return fusedDocIds(termPairs(st, phraseSeq.head)).distinct()
-    val knobs = engines.head
-    val idxByDf = phraseSeq.indices.sortBy(i => (st.globalDf(phraseSeq(i)), i))
-    val anchor = idxByDf.head
-    val anchorDf = st.globalDf(phraseSeq(anchor))
-
-    def consecutiveFilter(joined: DataFrame): DataFrame = {
-      val consecutive = exists(col(s"pos$anchor"), p =>
-        phraseSeq.indices.filter(_ != anchor)
-          .map(i => array_contains(col(s"pos$i"), p + (i - anchor)))
-          .reduce(_ && _))
-      joined.filter(consecutive).select($"doc_id").distinct()
-    }
-
-    if (anchorDf <= knobs.phraseMaxCandidates &&
-        anchorDf * knobs.positionalPruneDensity < nDocs) {
-      val cand = fusedDocIds(termPairs(st, phraseSeq(anchor)))
-        .distinct().as[Long].collect()
-      if (cand.isEmpty) return empty
-      java.util.Arrays.sort(cand)
-      val anchorCf = st.perGen
-        .flatMap(_.get(phraseSeq(anchor))).map(_.cf).sum
-      val hintFirst: DataFrame => DataFrame =
-        if (cand.length <= QueryEngine.PhraseBroadcastMaxCand &&
-            anchorCf <= QueryEngine.PhraseBroadcastMaxCf)
-          df => broadcast(df)
-        else identity _
-      val bcCand = spark.sparkContext.broadcast(cand)
-      val rels = idxByDf.map { i =>
-        fusedPositioned(termPairs(st, phraseSeq(i)), Some(bcCand))
-          .select($"doc_id", $"positions".as(s"pos$i"))
-      }
-      consecutiveFilter(rels.tail.foldLeft(hintFirst(rels.head))(
-        (a, b) => a.join(b, Seq("doc_id"), "inner")))
-    } else {
-      val rels = idxByDf.map { i =>
-        fusedPositioned(termPairs(st, phraseSeq(i)), None)
-          .select($"doc_id", $"positions".as(s"pos$i"))
-      }
-      consecutiveFilter(rels.reduceLeft((a, b) =>
-        a.join(b, Seq("doc_id"), "inner")))
-    }
-  }
-
-  /** Fused cross-generation conjunctive intersection, global-rarest-term
-    * first — same doc-set equivalence argument as [[fusedPhraseMatch]];
-    * broadcast hint only on the first (rarest) relation when its global
-    * df bound is broadcast-sized, later joins left to AQE (the
-    * single-index conjunctiveFromEntries rationale).
-    */
-  private def fusedConjunctive(terms: Seq[String],
-      st: GlobalStats): DataFrame = {
-    import spark.implicits._
-    val distinctTerms = terms.distinct
-    if (distinctTerms.exists(t => !st.globalDf.contains(t)))
-      return Seq.empty[Long].toDF("doc_id")
-    val byDf = distinctTerms.sortBy(t => (st.globalDf(t), t))
-    val docSets = byDf.map(t => fusedDocIds(termPairs(st, t)))
-    val first =
-      if (docSets.size > 1 &&
-          st.globalDf(byDf.head) <= QueryEngine.ConjBroadcastMaxDf)
-        broadcast(docSets.head)
-      else docSets.head
-    docSets.tail.foldLeft(first)((acc, next) =>
-      acc.join(next, Seq("doc_id"), "inner")).distinct()
-  }
-
-  /** Scoring rows for `ts` (optionally candidate-restricted) through the
-    * fused or per-generation path per [[fusedRead]] — the single seam
-    * every scoring consumer goes through.
-    */
-  private def scoringRows(st: GlobalStats, ts: Seq[String],
-      candOpt: Option[Array[Long]] = None): Option[DataFrame] =
-    if (fusedRead) fusedFoldRows(st, ts, candOpt)
-    else {
-      val rows = candOpt match {
-        case None => engines.zip(st.perGen)
-          .flatMap { case (e, d) => foldRows(st, d, ts, e.scoredPostings) }
-        case Some(cand) => engines.zip(st.perGen)
-          .flatMap { case (e, dict) =>
-            val present =
-              st.ordered.filter(t => ts.contains(t) && dict.contains(t))
-            if (present.isEmpty) None
-            else {
-              val totalChunks = present.map(t =>
-                (dict(t).df + graft.core.ChunkCodec.ChunkSize - 1) /
-                  graft.core.ChunkCodec.ChunkSize).sum.toDouble
-              foldRows(st, dict, present,
-                ids => e.candidatePrunedPostings(ids, cand, totalChunks))
-            }
-          }
-      }
-      if (rows.isEmpty) None else Some(rows.reduce(_ unionByName _))
-    }
-
-  def queryTerms(query: String): Seq[String] =
-    graft.core.Tokenizer.tokenizeQuery(query, lemmas).unigrams.map(_.term).distinct
-
-  /** Below this total global df the pruned path is skipped (mirrors
-    * QueryEngine.wandMinPostings); tests set 0 to force pruning.
-    */
-  var wandMinPostings: Long = 100000L
-
-  /** Tier-1 candidate cap — above it exact scoring is cheaper than the
-    * candidate broadcast. Guarded by one `limit(cap+1).collect()`: the
-    * over-cap case early-exits to the exact path after at most cap+1
-    * rows surface, without counting the full candidate set.
-    */
-  var wandCandidateCap: Long = 2000000L
-
-  /** Tier-1 candidate count above which cross-gen theta refinement runs
-    * (50·k floor); <= 0 forces it — test knob, as in QueryEngine.
-    */
-  var refineMinCandidates: Long = 20000L
-
-  /** Diagnostic: "pruned" | "exact" path taken by the last top-k call. */
-  var lastPath: String = ""
-
-  /** Per-query GLOBAL statistics for a term set: per-generation
-    * dictionary rows (ONE pushed dictionary probe per generation per
-    * set), summed global df, byte-order fold keys and global idf.
-    * Shared by the top-k, candidate-scoring and handleQuery paths so a
-    * term set is never re-probed per consumer.
-    */
-  private final class GlobalStats(terms: Seq[String]) {
-    val perGen: Seq[Map[String, DictRow]] =
-      engines.map(e => e.lookupTerms(terms).map(t => t.term -> t).toMap)
-    val globalDf: Map[String, Long] = terms.distinct.map { t =>
-      t -> perGen.map(_.get(t).map(_.df).getOrElse(0L)).sum
-    }.toMap.filter(_._2 > 0)
-    // byte-order fold — the order compacted dense term_ids encode, so
-    // folds are bit-identical to the compacted single index (and oracle)
-    val ordered: Seq[String] =
-      globalDf.keys.toSeq.sorted(graft.core.Tokenizer.utf8Ordering)
-    val foldKey: Map[String, Int] = ordered.zipWithIndex.toMap
-    val idf: Map[String, Double] =
-      ordered.map(t => t -> Bm25.idf(nDocs, globalDf(t))).toMap
-    def allPresent(ts: Seq[String]): Boolean = ts.forall(globalDf.contains)
-  }
-
-  /** (doc_id, fold_key, impact) rows for `ts` from one generation —
-    * `source` lets pruned paths swap in a candidate-pruned read.
-    */
-  private def foldRows(st: GlobalStats,
-      dict: Map[String, DictRow], ts: Seq[String],
-      source: Seq[Long] => Dataset[graft.query.ScoredPosting]): Option[DataFrame] = {
-    val present = st.ordered.filter(t => ts.contains(t) && dict.contains(t))
-    if (present.isEmpty) None
-    else {
-      val keyOf = present.map(t => dict(t).term_id -> st.foldKey(t)).toMap
-      val idfOf = present.map(t => dict(t).term_id -> st.idf(t)).toMap
-      val bcKey = spark.sparkContext.broadcast(keyOf)
-      val bcIdf = spark.sparkContext.broadcast(idfOf)
-      val avg = avgdl
-      // local copies: referencing the k1/bParam FIELDS inside the typed
-      // map below would capture `this` (unserializable engine)
-      val k1L = k1
-      val bL = bParam
-      // deletes are dropped at the FOLD-ROW level: theta, candidate
-      // selection and the final limit then all see survivors only, so
-      // pruned top-k stays exact over the live corpus (scores still use
-      // pre-delete global stats — the documented Lucene semantics)
-      Some(dropDeleted(source(present.map(dict(_).term_id))
-        .map(p => (p.doc_id, bcKey.value(p.term_id),
-          Bm25.impact(bcIdf.value(p.term_id), p.tf, p.dl, avg, k1L, bL)))
-        .toDF("doc_id", "fold_key", "impact")))
-    }
-  }
-
-  /** Per-doc fixed-order fold of (fold_key, impact) rows — same sorted
-    * per-doc fold as the single index's term_id order, so scores are
-    * bit-identical at any parallelism and to the compacted build.
-    */
-  private def aggScores(all: DataFrame): DataFrame =
-    all.groupBy($"doc_id")
-      .agg(aggregate(
-        sort_array(collect_list(struct($"fold_key", $"impact"))),
-        lit(0.0),
-        (acc, x) => acc + x.getField("impact")).as("score"))
-
-  private def emptyScores(): DataFrame =
-    Seq.empty[(Long, Double)].toDF("doc_id", "score")
-
-  /** Exact global BM25 scores for every matching doc (no limit) — the
-    * handleQuery exact-form scorer.
-    */
-  private def exactScoresAll(st: GlobalStats): DataFrame =
-    scoringRows(st, st.ordered).fold(emptyScores())(aggScores)
-
-  /** Exact global BM25 scores RESTRICTED to `cand` (a SORTED doc_id
-    * array), via each generation's candidate-pruned chunk machinery — a
-    * candidate's complete postings are included, so its score equals
-    * the all-docs fold bit-for-bit. Generation doc ranges are disjoint,
-    * so the whole candidate array is handed to every generation:
-    * foreign-range candidates simply match no chunk there.
-    */
-  private def scoresForCandidates(st: GlobalStats, cand: Array[Long]): DataFrame = {
-    if (st.ordered.isEmpty || cand.isEmpty) return emptyScores()
-    scoringRows(st, st.ordered, Some(cand)).fold(emptyScores())(aggScores)
-  }
-
-  /** BM25 top-k across generations, deterministic fold order by query-term
-    * rank in byte-order term sort (term_ids are generation-local, so the
-    * global fold key is the term's sorted position among the query terms).
-    *
-    * CROSS-GENERATION BLOCK-MAX: per-generation chunk max_impacts are
-    * computed under generation-LOCAL idf, but the tf/dl part (max_norm =
-    * max_impact / idf) is statistics-free — rescaling by the GLOBAL idf
-    * gives valid global per-term upper bounds, so the MaxScore
-    * essential/non-essential split and candidate-driven chunk skipping
-    * apply to hot multi-generation serving without compacting first.
-    * Exactness argument identical to the single-index wand(): every true
-    * top-k doc has an essential-postings entry, and essSum + Σ(non-ess
-    * max) >= θ retains it; results are bit-identical to the exact path
-    * (same impacts, same byte-order fold).
-    */
-  def bm25TopKForTerms(terms: Seq[String], k: Int): DataFrame = {
-    val st = new GlobalStats(terms.distinct)
-    if (st.ordered.isEmpty) emptyScores() else topKFromStats(st, k)
-  }
-
-  private def topKFromStats(st: GlobalStats, k: Int): DataFrame = {
-    val perGen = st.perGen
-    val globalDf = st.globalDf
-    val ordered = st.ordered
-    val idf = st.idf
-
-    def aggTopK(all: DataFrame): DataFrame =
-      aggScores(all).orderBy($"score".desc, $"doc_id".asc).limit(k)
-
-    def exactPath(): DataFrame = {
-      lastPath = "exact"
-      aggTopK(scoringRows(st, ordered).get)
-    }
-
-    if (globalDf.values.sum < wandMinPostings) return exactPath()
-
-    // ---- pruned path (cross-generation MaxScore)
-    val Eps = 1e-9
-    val globalMax: Map[String, Double] = ordered.map { t =>
-      val maxNorm = perGen.flatMap(_.get(t))
-        .map(e => e.max_impact / e.idf).foldLeft(0.0)(math.max)
-      t -> idf(t) * maxNorm
-    }.toMap
-    val best = ordered.maxBy(t => (globalMax(t), t))
-    // the best term's (largest) postings decode ONCE: the persisted fold
-    // rows serve both the theta pass and the essential union below —
-    // the cross-gen analog of wandImpl's bestPostings cache
-    val bestRows = scoringRows(st, Seq(best)).get
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val thetaRows = bestRows.select($"impact".as("value"))
-        .orderBy($"value".desc).limit(k).as[Double].collect()
-      val theta = if (thetaRows.length < k) 0.0 else thetaRows.last
-      if (theta <= 0.0) return exactPath()
-
-      // shared driver-side split (QueryEngine.nonEssentialSplit): one
-      // implementation with the single-index WAND, no copy drift
-      // theta - Eps: globalMax values are RESCALED bounds
-      // (max_impact / local_idf * global_idf), whose fp rounding can sit
-      // ~1 ulp below the true achievable impact — without the margin a
-      // term set could be split off as non-essential while its true
-      // cumulative max reaches theta (a hairline-pruned true top-k doc).
-      // The single-index path uses stored bounds verbatim and needs no
-      // margin; every other theta comparison here already carries Eps.
-      val nonEss = graft.query.QueryEngine.nonEssentialSplit(
-        ordered.sortBy(t => (globalMax(t), t)).map(t => t -> globalMax(t)),
-        theta - Eps)
-      val ess = ordered.filterNot(nonEss)
-      if (nonEss.isEmpty) return exactPath()
-      val cumNonEssMax = nonEss.toSeq.map(globalMax).sum
-
-      val essOther = ess.filterNot(_ == best)
-      val essRows = (Seq(bestRows) ++ scoringRows(st, essOther))
-        .reduce(_ unionByName _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // cap guard + materialization fused (the wandImpl / liveDocs
-        // pattern): one CollectLimit replaces the old persist + count()
-        // + cached collect(), and the over-cap case early-exits instead
-        // of counting the full set. Driver transfer stays a small
-        // multiple of cap+1 (scale-up waves, remaining-bounded tasks,
-        // doc_id-uniform partitions — see wandImpl's rationale).
-        // Downstream (refineTheta, the candIds filter) is
-        // order-insensitive.
-        val capI = math.min(wandCandidateCap, Int.MaxValue - 2L).toInt
-        val candPairs = essRows.groupBy($"doc_id")
-          .agg(sum($"impact").as("ess_sum"))
-          .filter($"ess_sum" + cumNonEssMax >= theta - Eps)
-          .as[(Long, Double)]
-          .limit(capI + 1).collect()
-        if (candPairs.isEmpty) {
-          lastPath = "pruned"
-          return Seq.empty[(Long, Double)].toDF("doc_id", "score")
-        }
-        if (candPairs.length > capI) {
-          val r = exactPath()
-          lastPath = "fallback-cap" // mirrors QueryEngine.lastWandPath
-          return r
-        }
-        lastPath = "pruned"
-
-        /** Candidate-pruned non-essential fold rows for `cand`. */
-        def nonEssRowsFor(cand: Array[Long]): Option[DataFrame] =
-          scoringRows(st, ordered.filter(nonEss), Some(cand))
-
-        // θ REFINEMENT — shared arithmetic in QueryEngine.refineTheta
-        // (same mid-df taming as wandImpl); the distributed job here
-        // unions the candidates' non-essential sums across generations.
-        val thetaEff = QueryEngine.refineTheta(candPairs, k, theta, Eps,
-          refineMinCandidates, { topCIds =>
-            nonEssRowsFor(topCIds) match {
-              case None => Map.empty[Long, Double]
-              case Some(rs) => rs
-                .groupBy($"doc_id").agg(sum($"impact").as("ne_sum"))
-                .as[(Long, Double)].collect().toMap
-            }
-          })
-
-        val candIds = candPairs.iterator
-          .filter { case (_, es) => es + cumNonEssMax >= thetaEff - Eps }
-          .map(_._1).toArray
-        if (candIds.isEmpty) {
-          return Seq.empty[(Long, Double)].toDF("doc_id", "score")
-        }
-        java.util.Arrays.sort(candIds)
-
-        val all = (Seq(essRows) ++ nonEssRowsFor(candIds).toSeq)
-          .reduce(_ unionByName _)
-        // eager: the persisted essRows must stay alive until collection
-        val rows = aggTopK(all).as[(Long, Double)].collect().toSeq
-        spark.createDataFrame(rows).toDF("doc_id", "score")
-      } finally essRows.unpersist(false)
-    } finally bestRows.unpersist(false)
-  }
-
-  def bm25TopK(query: String, k: Int): DataFrame =
-    bm25TopKForTerms(queryTerms(query), k)
-
-  /** Claimed-doc cap for handleQuery's pruned tier construction
-    * (mirrors QueryEngine.handleQueryClaimCap — same default, same
-    * measurement; -1 forces the exact form, values near Int.MaxValue
-    * are clamped before the +1).
-    */
-  var handleQueryClaimCap: Int = 300000
-
-  /** Per-engine adaptive-guess floor (mirrors
-    * QueryEngine.handleQueryGuessFloor; -1 = the TieredQuery.guessFloor
-    * process default).
-    */
-  var handleQueryGuessFloor: Int = -1
-
-  /** Diagnostic: "pruned" | "exact" form taken by the last handleQuery. */
-  var lastHandlePath: String = ""
-
-  /** The reference's tiered handle_query (src/search_engine/mod.rs:
-    * 118-206) across UNCOMPACTED generations — the hot-append serving
-    * entry point: tier 0 = exact-phrase docs (unigram-BM25-scored),
-    * tier 1 = docs containing EVERY query bigram as an indexed bigram
-    * term (bigram-BM25-scored), tier 2 = the disjunctive unigram
-    * matches; a doc keeps its HIGHEST tier, ordered (tier asc, score
-    * desc, doc_id asc), top-k.
-    *
-    * All scoring runs under GLOBAL statistics (summed df, doc-weighted
-    * avgdl, byte-order folds), so results are tier-, rank- and
-    * BIT-identical to QueryEngine.handleQuery over the same corpus
-    * compacted into one index (IncrementalSpec parity test) — an
-    * appended index serves the flagship query shape without compacting
-    * first. Structure mirrors the single-index pruned/exact dual form:
-    * claimed tier sets are collected only under the cap (limit-bounded
-    * BEFORE the collect), each claimed tier is scored only for ITS
-    * members through the per-generation candidate-pruned chunk
-    * machinery, and the unigram tier serves from the cross-generation
-    * block-max top-(k + |claimed|) with a broadcast anti-join — exact
-    * by the same counting argument (at most |claimed| of those rows are
-    * claimed, so >= k unclaimed survive). Dictionary probes: exactly
-    * one per generation for the unigram set and one per generation for
-    * the bigram set via [[GlobalStats]] — the phrase/conjunctive doc-id
-    * chains consume the SAME per-generation entries (FromEntries
-    * variants), matching the single-index engine's one-probe-per-set
-    * design. The tier
-    * composition itself lives in [[graft.query.TieredQuery]] — shared
-    * with QueryEngine.handleQuery; this method only wires the
-    * GLOBAL-STATISTICS scorers in.
-    */
-  def handleQuery(query: String, k: Int): DataFrame = {
-    import graft.query.TieredQuery
-    // phrase tier matches the FULL lemma sequence (duplicates kept:
-    // "to be or not to be" must not phrase-match "to be or not")
-    val parsed = graft.core.Tokenizer.tokenizeQuery(query, lemmas)
-    val phraseSeq = parsed.unigrams.map(_.term)
-    val terms = phraseSeq.distinct
-    // 3-column (doc_id, score, tier) contract even for a tokenless query
-    if (terms.isEmpty)
-      return emptyScores().withColumn("tier", org.apache.spark.sql.functions.lit(2))
-    val st = new GlobalStats(terms)
-    if (phraseSeq.size == 1) {
-      lastHandlePath = "pruned"
-      return TieredQuery.singleTerm(
-        n => if (st.ordered.isEmpty) emptyScores() else topKFromStats(st, n), k)
-    }
-    // phrase chain reuses the SAME per-generation dictionary entries
-    // GlobalStats already probed for scoring (FromEntries skips its own
-    // lookupTerms) — a generation missing any phrase term contributes
-    // empty, which is exactly phraseMatchFromEntries' missing-term path
-    // tier claims are delete-filtered too: a tombstoned phrase doc must
-    // neither appear in tier 0 nor count against the unigram tier's
-    // claimed set
-    val phraseDocs = dropDeleted(
-      if (fusedRead) fusedPhraseMatch(phraseSeq, st)
-      else engines.zip(st.perGen).map { case (e, dict) =>
-        e.phraseMatchFromEntries(phraseSeq, terms.flatMap(dict.get))
-      }.reduce(_ unionByName _))
-    val bigramTerms = parsed.bigrams.map(_.term).distinct
-    val bst =
-      if (bigramTerms.isEmpty) None else Some(new GlobalStats(bigramTerms))
-    // the bigram tier engages only when EVERY query bigram exists as an
-    // indexed term somewhere (global presence == compacted-dictionary
-    // presence); a generation missing any bigram contributes no docs
-    val bigramActive = bst.exists(_.allPresent(bigramTerms))
-    val conjDocs = if (bigramActive) Some(dropDeleted(
-      if (fusedRead) fusedConjunctive(bigramTerms, bst.get)
-      else engines.zip(bst.get.perGen).map { case (e, dict) =>
-        val es = bigramTerms.flatMap(dict.get)
-        if (es.size < bigramTerms.size) spark.emptyDataset[Long].toDF("doc_id")
-        else e.conjunctiveFromEntries(es)
-      }.reduce(_ unionByName _))) else None
-    TieredQuery.run(spark, TieredQuery.Scorers(
-      unigramsPresent = st.ordered.nonEmpty,
-      bigramActive = bigramActive,
-      phraseDocs = phraseDocs,
-      conjDocs = conjDocs,
-      topK = n => topKFromStats(st, n),
-      candScores = ids => scoresForCandidates(st, ids),
-      bigramCandScores = ids => scoresForCandidates(bst.get, ids),
-      exactScores = () => exactScoresAll(st),
-      bigramExactScores = () => exactScoresAll(bst.get),
-      empty = () => emptyScores()),
-      k, handleQueryClaimCap, p => lastHandlePath = p, handleQueryGuessFloor)
-  }
-
-  /** Filtered search across generations — the multi-generation form of
-    * QueryEngine.bm25ScoresFiltered: exact GLOBAL-statistics scores
-    * restricted to docs matching `pred` (evaluated against every
-    * generation's docs table; doc_id ranges are disjoint so the union
-    * is lossless). Same selectivity routing as the single engine,
-    * fused into one cap-limited collect (no separate count job):
-    * ≤ candidateCap matches go through the fused candidate-pruned
-    * chunk machinery; broader filters left-semi the fold rows before
-    * the per-doc aggregation.
-    */
-  def bm25ScoresFiltered(terms: Seq[String],
-      pred: org.apache.spark.sql.Column,
-      candidateCap: Int = 20000): DataFrame = {
-    val st = new GlobalStats(terms.distinct)
-    if (st.ordered.isEmpty) return emptyScores()
-    // tombstones narrow the allowed set up front, so the candidate-cap
-    // routing and the collected candidate array count survivors only.
-    // Routing + materialization in one cap-limited collect (the WAND
-    // tier-1 pattern): length > cap re-reads `allowed` distributed.
-    // The predicate scan is one multi-path read over all generations'
-    // docs tables (identical rows to the per-generation union — doc_ids
-    // are disjoint); the union form stays behind fusedRead = false.
-    val allowed = dropDeleted(
-      if (fusedRead) fusedDocs.filter(pred).select($"doc_id")
-      else engines.map(_.docs.filter(pred).select($"doc_id"))
-        .reduce(_ unionByName _))
-    val cap = math.min(candidateCap, Int.MaxValue - 2)
-    val cand = allowed.limit(cap + 1).as[Long].collect()
-    if (cand.isEmpty) emptyScores()
-    else if (cand.length <= cap) scoresForCandidates(st, cand.sorted)
-    else scoringRows(st, st.ordered).fold(emptyScores())(rows =>
-      aggScores(rows.join(allowed, Seq("doc_id"), "left_semi")))
-  }
-
-  /** BM25 top-k under a metadata predicate across generations. */
-  def bm25TopKFiltered(query: String, k: Int,
-      pred: org.apache.spark.sql.Column): DataFrame =
-    bm25ScoresFiltered(queryTerms(query), pred)
-      .orderBy($"score".desc, $"doc_id".asc).limit(k)
-
-  /** Prefix suggest across generations: per-generation pushed-StartsWith
-    * dictionary probes, dfs summed per term (= the compacted global df),
-    * then the (df desc, term asc) bounded heap.
-    */
-  def suggest(prefix: String, n: Int): DataFrame =
-    engines.map(_.dictionary.filter($"term".startsWith(prefix))
-        .select($"term", $"df"))
-      .reduce(_ unionByName _)
-      .groupBy($"term").agg(sum($"df").as("df"))
-      .orderBy($"df".desc, $"term".asc)
-      .limit(n)
-
-  /** One multi-path scan over every generation's docs table — the text
-    * side of fused snippet serving. Doc_ids are globally disjoint, so
-    * each doc appears exactly once.
-    */
-  private lazy val fusedDocs: DataFrame =
-    spark.read.parquet(gens.map(g => IndexPaths(g).docs): _*)
-
-  /** Snippets across generations. Fused (default): ONE positional
-    * relation spanning every (generation, query term) pair — a single
-    * chunk-metadata pre-pass and one decode pass feed the per-doc
-    * first_pos agg, and the text join reads all generations' docs
-    * tables as one multi-path pruned scan (pushed doc_id literals) —
-    * vs the per-generation union form (kept behind `fusedRead = false`),
-    * which paid one survivors-collect job per generation on the
-    * result-page path. Assembly shared with the single engine
-    * (QueryEngine.assembleSnippets), so the slice arithmetic cannot
-    * drift. `docIds` is k-bounded, so the candidate broadcast is tiny.
-    */
-  def snippetsFor(terms: Seq[String], docIds: Array[Long],
-      window: Int = 3): DataFrame = {
-    if (!fusedRead)
-      return engines.map(_.snippetsFor(terms, docIds, window))
-        .reduce(_ unionByName _)
-    val empty =
-      Seq.empty[(Long, Int, String)].toDF("doc_id", "first_pos", "snippet")
-    if (docIds.isEmpty) return empty
-    val st = new GlobalStats(terms.distinct)
-    val pairs = st.ordered.flatMap(t => termPairs(st, t))
-    if (pairs.isEmpty) return empty
-    val bc = spark.sparkContext.broadcast(docIds.sorted)
-    val firstPos = fusedPositioned(pairs, Some(bc))
-      // per-posting positions ascend, so element 1 is that posting's min
-      .select($"doc_id", element_at($"positions", 1).as("pos"))
-      .groupBy($"doc_id").agg(min($"pos").as("first_pos"))
-    val knobs = engines.head
-    val textSide =
-      if (docIds.length <= knobs.chunkInMaxLiterals)
-        fusedDocs.filter($"doc_id".isin(docIds.toSeq: _*))
-      else
-        fusedDocs.join(broadcast(docIds.toSeq.toDF("doc_id")),
-          Seq("doc_id"), "left_semi")
-    QueryEngine.assembleSnippets(firstPos, textSide, window)
-  }
-
-  /** Result-page serving across generations: global top-k + snippets.
-    * One top-k job — the k rows come back as a LocalRelation for the
-    * snippet join (see QueryEngine.searchWithSnippets).
-    */
-  def searchWithSnippets(query: String, k: Int, window: Int = 3): DataFrame = {
-    val terms = queryTerms(query)
-    QueryEngine.searchPage(spark, bm25TopKForTerms(terms, k),
-      ids => snippetsFor(terms, ids, window))
-  }
-
-  // Boolean / positional / fuzzy across generations: doc_id ranges are
-  // globally disjoint, so per-generation results union losslessly —
-  // term_ids are generation-LOCAL and never cross this boundary.
-
-  /** Conjunctive AND across all generations (a doc lives in exactly one
-    * generation, so the intersection distributes over the union).
-    */
-  def conjunctive(terms: Seq[String]): DataFrame =
-    dropDeleted(
-      if (fusedRead) fusedConjunctive(terms, new GlobalStats(terms.distinct))
-      else engines.map(_.conjunctive(terms)).reduce(_ unionByName _))
-
-  /** Phrase match across generations. */
-  def phraseMatch(terms: Seq[String]): DataFrame =
-    dropDeleted(
-      if (fusedRead) fusedPhraseMatch(terms, new GlobalStats(terms.distinct))
-      else engines.map(_.phraseMatch(terms)).reduce(_ unionByName _))
-
-  /** Directional proximity across generations — fused like
-    * [[fusedPhraseMatch]]: one positional relation per term spanning
-    * all generations, candidate-pruned by the globally rarer term when
-    * that pays, then the single-index explode-pair plan (pp2 > pp1,
-    * pp2 - pp1 <= k). Per-generation unions behind `fusedRead = false`.
-    */
-  def proximity(term1: String, term2: String, k: Int): DataFrame =
-    dropDeleted(
-      if (!fusedRead)
-        engines.map(_.proximity(term1, term2, k)).reduce(_ unionByName _)
-      else {
-        val st = new GlobalStats(Seq(term1, term2).distinct)
-        val empty = Seq.empty[(Long, Int, Int)].toDF("doc_id", "pos1", "pos2")
-        if (!st.globalDf.contains(term1) || !st.globalDf.contains(term2)) empty
-        else {
-          val knobs = engines.head
-          val minDf = math.min(st.globalDf(term1), st.globalDf(term2))
-          val bcCand =
-            if (minDf <= knobs.phraseMaxCandidates &&
-                minDf * knobs.positionalPruneDensity < nDocs) {
-              val rare =
-                if (st.globalDf(term1) <= st.globalDf(term2)) term1 else term2
-              val cand = fusedDocIds(termPairs(st, rare))
-                .distinct().as[Long].collect()
-              java.util.Arrays.sort(cand)
-              Some(spark.sparkContext.broadcast(cand))
-            } else None
-          if (bcCand.exists(_.value.isEmpty)) empty
-          else {
-            val p1 = fusedPositioned(termPairs(st, term1), bcCand)
-              .select($"doc_id", $"positions".as("ps1"))
-            val p2 = fusedPositioned(termPairs(st, term2), bcCand)
-              .select($"doc_id", $"positions".as("ps2"))
-            p1.join(p2, Seq("doc_id"), "inner")
-              .select($"doc_id", explode($"ps1").as("pos1"), $"ps2")
-              .select($"doc_id", $"pos1",
-                explode(filter($"ps2",
-                  p => p > $"pos1" && p - $"pos1" <= lit(k))).as("pos2"))
-          }
-        }
-      })
-
-  /** Fuzzy terms across generations: per-generation deletion-index
-    * probes, re-aggregated globally by term (df summed; generation-local
-    * term_ids dropped, as they have no global meaning).
-    */
-  def fuzzyTerms(q: String, d: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    engines.map(_.fuzzyTerms(q, d).select($"term", $"df"))
-      .reduce(_ unionByName _)
-      .groupBy($"term").agg(sum($"df").as("df"))
-  }
-
-  // DELIBERATELY NOT SERVED multi-generation: the two reference-
-  // archaeology scorers. tfIdfScores reproduces the scorer the
-  // reference REPLACED with BM25 (src/scoring/mod.rs:34-48), and
-  // vsmScores the cosine norm it ABANDONED entirely (helpers/
-  // mod.rs:191-218, commented out) — both live on the single-root
-  // QueryEngine for parity testing. A compaction-identical multi-gen
-  // vsm would need norms under GLOBAL df: norm_d = sqrt(Σ(tf·df)²)
-  // bakes df into every addend, so per-generation vsm_norms tables
-  // (generation-local df) cannot be rescaled post-hoc — it would take
-  // a norms table keyed to the generation SET, rebuilt on every
-  // append, for a scorer whose design the reference walked away from.
-  // Hot-append serving uses BM25 (bm25TopK / handleQuery above), which
-  // rescales exactly. Compact first to serve the historical scorers.
-}
-
 /** Merge all generations into one optimized index: the per-generation
   * SPIMI `segments` checkpoints (sorted runs with globally-disjoint
   * doc_ids) are unioned and re-merged through the standard chunk pipeline,
-  * with dictionary/statistics recomputed globally — after which block-max
-  * WAND and single-root QueryEngine apply again.
+  * with dictionary/statistics recomputed globally.
   */
 object Compactor {
 
@@ -1448,7 +423,7 @@ object Compactor {
     * exactly preserved — global df is an integer sum over generations
     * and the merged generation contributes the same integers, while the
     * reconstructed corpus length `round(avgdl*n_docs)` round-trips
-    * exactly (MultiGenEngine.avgdl). Purging inside a partial merge
+    * exactly (QueryEngine.meta). Purging inside a partial merge
     * would instead leave the root's statistics half pre-delete / half
     * post-delete and strand tombstone batches that still cover
     * un-merged generations; full [[compact]] remains the purger.
@@ -1469,7 +444,7 @@ object Compactor {
     * and later merges / full compactions treat it like any other
     * generation. BM25 constants come from the source metas (they are
     * baked into every chunk's block-max bound and must agree across the
-    * root anyway — MultiGenEngine enforces it); `conf.k1`/`conf.b` are
+    * root anyway — QueryEngine enforces it); `conf.k1`/`conf.b` are
     * ignored here.
     *
     * Like [[compact]] and gc, this is a MAINTENANCE op: one scheduled
@@ -1615,7 +590,7 @@ object Compactor {
     * already gone — deleting a mid-chain merge first and crashing
     * before its sources would orphan their replaced-ness and resurrect
     * them in genDirs. Idempotent. New readers never see replaced dirs
-    * (genDirs excludes them from the commit on), but a MultiGenEngine
+    * (genDirs excludes them from the commit on), but a QueryEngine
     * CONSTRUCTED before the merge still scans them — run gc on the
     * maintenance cadence, after serving sessions have rolled over.
     * Returns the deleted dirs.

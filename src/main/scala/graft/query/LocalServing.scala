@@ -36,40 +36,42 @@ final class TermPostings(val docIds: Array[Long], val tfs: Array[Int], val dls: 
   *
   * Every function reproduces its distributed counterpart bit for bit:
   * the same `Bm25.impact`, the per-doc fold from 0.0 in ASCENDING
-  * term_id order (what `sort_array(collect_list(struct(term_id,
+  * term_id order (what `sort_array(collect_list(struct(fold_key,
   * impact)))` folds), the (score desc, doc_id asc) tie-break, the
-  * anchor-offset phrase test of `phraseMatchFromEntries`, the exact
+  * anchor-offset phrase test of the distributed phrase plan, the exact
   * tier algebra of `TieredQuery.run` and the `split`/`slice` window of
-  * `QueryEngine.assembleSnippets`. Engine-independent, so any serving
-  * engine over the same postings layout can reuse it.
+  * `QueryEngine.assembleSnippets`. Over generations the engine passes
+  * its global entries (term_id = the UTF-8 fold key, global df and idf)
+  * and global meta, so the same functions serve every kind of root.
   */
 object LocalServing {
 
-  /** Decode collected chunk rows, grouped by term. */
-  def decode(rows: Seq[ChunkRow]): Map[Long, TermPostings] =
+  /** Decode collected chunk rows, grouped by term, keeping only the
+    * postings of docs passing `live` (tombstoned docs are dropped here).
+    */
+  def decode(rows: Seq[ChunkRow], live: Long => Boolean = _ => true): Map[Long, TermPostings] =
     rows.groupBy(_.term_id).map { case (termId, chunks) =>
-      val n = chunks.map(_.n_postings).sum
-      val ids = new Array[Long](n)
-      val tfs = new Array[Int](n)
-      val dls = new Array[Int](n)
       val withPos = chunks.forall(_.pos_blob != null)
-      val pos = if (withPos) new Array[Array[Int]](n) else null
-      var off = 0
+      val ids = Array.newBuilder[Long]
+      val tfs = Array.newBuilder[Int]
+      val dls = Array.newBuilder[Int]
+      val pos = Array.newBuilder[Array[Int]]
       chunks.foreach { c =>
-        System.arraycopy(ChunkCodec.decodeDocGaps(c.doc_gaps, c.n_postings), 0,
-          ids, off, c.n_postings)
-        if (withPos)
-          System.arraycopy(ChunkCodec.decodePositions(c.pos_blob, c.n_postings), 0,
-            pos, off, c.n_postings)
+        val cIds = ChunkCodec.decodeDocGaps(c.doc_gaps, c.n_postings)
+        val cPos = if (withPos) ChunkCodec.decodePositions(c.pos_blob, c.n_postings) else null
         var i = 0
         while (i < c.n_postings) {
-          tfs(off + i) = c.tfs(i)
-          dls(off + i) = c.dls(i)
+          if (live(cIds(i))) {
+            ids += cIds(i)
+            tfs += c.tfs(i)
+            dls += c.dls(i)
+            if (withPos) pos += cPos(i)
+          }
           i += 1
         }
-        off += c.n_postings
       }
-      termId -> new TermPostings(ids, tfs, dls, pos)
+      termId -> new TermPostings(ids.result(), tfs.result(), dls.result(),
+        if (withPos) pos.result() else null)
     }
 
   /** Exact BM25 score of every doc holding any of `entries` (restricted

@@ -10,7 +10,7 @@ import graft.index.{Generations, IndexConf}
 /** Structured Streaming ingest: new transcript files landing under a
   * directory are indexed incrementally — each micro-batch becomes one
   * immutable index generation (graft.index.Generations), queryable mid-
-  * stream via MultiGenEngine and compactable via Compactor.
+  * stream via QueryEngine and compactable via Compactor.
   *
   * The reference has no streaming (SURVEY.md §2.8); this is the Spark-
   * native extension of its mpsc-channel pipelining (src/indexer/
@@ -91,7 +91,7 @@ object StreamIngest {
     * per-checkpoint stream id keeps a restarted-from-scratch stream's
     * batch 0 from colliding with (and being swallowed by) a previous
     * stream's committed tombstone batch. Deletes take effect on the
-    * NEXT MultiGenEngine construction (engines resolve tombstones at
+    * NEXT QueryEngine construction (engines resolve tombstones at
     * startup, like Lucene reopening a reader after deleteDocuments).
     */
   def startDeletes(spark: SparkSession, inputDir: String, indexRoot: String,

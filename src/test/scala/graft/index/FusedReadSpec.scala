@@ -1,15 +1,21 @@
 package graft.index
 
+import org.apache.spark.sql.functions.col
+
 import graft.SparkSpecBase
+import graft.core.Tokenizer
 import graft.corpus.Transcripts
 import graft.oracle.Oracle
+import graft.query.QueryEngine
 
-/** The fused multi-generation postings read (one multi-path scan, gen
-  * recovered from the file path) vs the per-generation union form
-  * (fusedRead = false). Contract: bit-identical results on every
-  * scoring surface, on exact AND block-max-pruned paths, with
-  * tombstones, and on a MERGED root whose generation doc ranges are
-  * non-contiguous (the case that rules out interval-mapping).
+/** The multi-generation postings read (one multi-path scan, generation
+  * recovered from the file path) against the scalar oracle and against
+  * one index over the same corpus. Contract: bit-identical results on
+  * every serving surface, on the driver-local, exact AND block-max-pruned
+  * paths, with tombstones (the single index carries the same tombstone
+  * batch), and on a MERGED root whose generation doc ranges are
+  * non-contiguous (the case that rules out interval-mapping), where the
+  * same corpus compacted into one root is the reference.
   */
 class FusedReadSpec extends SparkSpecBase {
 
@@ -17,6 +23,7 @@ class FusedReadSpec extends SparkSpecBase {
   private val conf = IndexConf(numParts = 4, skewDfThreshold = 300, nSalts = 4)
   private lazy val allTurns = Transcripts.generateLocal(40L)
   private lazy val oracle = new Oracle(allTurns, lemmas)
+  private lazy val victims: Seq[Long] = oracle.bm25TopK("the of", 5).map(_._1).take(2)
 
   private lazy val root: String = {
     val dir = tmpDir("graft-fused")
@@ -25,20 +32,32 @@ class FusedReadSpec extends SparkSpecBase {
     val (b2, b3) = rest.splitAt(rest.size / 2)
     Seq(b1, b2, b3).foreach(b =>
       Generations.append(spark, spark.createDataset(b), dir, lemmas, conf))
-    val victims = oracle.bm25TopK("the of", 5).map(_._1).take(2)
     Generations.deleteDocs(spark, spark.createDataset(victims), dir)
     dir
   }
 
-  private def engines(r: String): (MultiGenEngine, MultiGenEngine) = {
-    val fused = new MultiGenEngine(spark, r, lemmas)
-    val legacy = new MultiGenEngine(spark, r, lemmas)
-    legacy.fusedRead = false
-    (fused, legacy)
+  /** The same corpus as ONE built index, carrying the same tombstones. */
+  private lazy val singleRoot: String = {
+    val dir = tmpDir("graft-fused-single")
+    import spark.implicits._
+    new IndexBuilder(spark, lemmas, conf).build(spark.createDataset(allTurns), dir)
+    Generations.deleteDocs(spark, spark.createDataset(victims), dir)
+    dir
   }
 
-  private def snap(m: MultiGenEngine): Map[String, Seq[Any]] = {
-    import org.apache.spark.sql.functions.col
+  /** An engine over `r`; `local = false` shuts the driver-local gate,
+    * `pruned` forces the block-max path and theta refinement.
+    */
+  private def engine(r: String, local: Boolean, pruned: Boolean = false): QueryEngine = {
+    val e = new QueryEngine(spark, r, lemmas)
+    if (!local) e.localMaxPostings = 0L
+    if (pruned) { e.wandMinPostings = 0L; e.refineMinCandidates = 0L }
+    e
+  }
+
+  private val snippetTerms = Seq("the", "of", "table")
+
+  private def snap(m: QueryEngine): Map[String, Seq[Any]] =
     Map(
       "bm25" -> m.bm25TopK("the of table", 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq,
@@ -59,13 +78,48 @@ class FusedReadSpec extends SparkSpecBase {
         .toSeq.sorted,
       "snippets" -> {
         val ids = m.bm25TopK("the of table", 5).collect().map(_.getLong(0))
-        m.snippetsFor(Seq("the", "of", "table"), ids)
+        m.snippetsFor(snippetTerms, ids)
           .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
           .toSeq.sortBy(_._1)
       },
       "search" -> m.searchWithSnippets("the of table", 5)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+
+  private def terms(q: String): Seq[String] =
+    Tokenizer.tokenizeQuery(q, lemmas).unigrams.map(_.term).distinct
+
+  /** The scalar oracle's answer to every [[snap]] surface over the docs
+    * not in `dead` (full-corpus statistics: the liveDocs contract).
+    */
+  private def oracleSnap(dead: Set[Long]): Map[String, Seq[Any]] = {
+    def top(q: String, k: Int, keep: Long => Boolean = _ => true): Seq[(Long, Double)] =
+      oracle.bm25TopKForTerms(terms(q), Int.MaxValue)
+        .filter { case (d, _) => !dead(d) && keep(d) }.take(k)
+    def live(ids: Set[Long]): Seq[Long] = ids.filterNot(dead).toSeq.sorted
+    def snippet(d: Long): Option[(Long, Int, String)] =
+      snippetTerms.flatMap(t => oracle.postings.get(t).flatMap(_.find(_._1 == d)))
+        .map(_._3.head).reduceOption(_ min _).map { p =>
+          val words = oracle.docsSorted((d - 1).toInt).text.split(" ", -1)
+          (d, p, words.slice(math.max(p - 3, 0), p + 4).mkString(" "))
+        }
+    Map(
+      "bm25" -> top("the of table", 10),
+      "handle" -> oracle.handleQuery("table scan", Int.MaxValue)
+        .filterNot(r => dead(r._1)).take(10),
+      "filtered" -> top("the of", 10, d => oracle.docLen(d) % 2 == 0),
+      "conj" -> live(oracle.conjunctive(Seq("the", "of"))),
+      "phrase" -> live(oracle.phraseMatch(Seq("the", "of"))),
+      "phrase1" -> live(oracle.phraseMatch(Seq(Transcripts.contentWords(5)))),
+      "conjMissing" -> Nil,
+      "prox" -> oracle.proximity("the", "of", 3).filterNot(r => dead(r._1)).sorted,
+      "snippets" -> top("the of table", 5).flatMap(r => snippet(r._1)).sortBy(_._1),
+      "search" -> top("the of table", 5))
   }
+
+  private def assertSnap(got: Map[String, Seq[Any]], want: Map[String, Seq[Any]],
+      label: String): Unit =
+    want.keys.foreach(k => assert(got(k) == want(k),
+      s"$label: '$k' diverged\n got=${got(k)}\nwant=${want(k)}"))
 
   test("genSegOf: per-range layout, URI schemes, degenerate paths") {
     assert(Generations.genSegOf(
@@ -75,106 +129,100 @@ class FusedReadSpec extends SparkSpecBase {
     assert(Generations.genSegOf("/no/postings-free/path.parquet") == "")
   }
 
-  test("fused == legacy on exact, pruned, tiered and filtered paths (with tombstones)") {
-    val (fused, legacy) = engines(root)
-    assert(fused.fusedRead && !legacy.fusedRead)
-    assert(snap(fused) == snap(legacy))
-
-    // force the block-max pruned path (candidate-pruned chunk reads)
-    fused.wandMinPostings = 0L
-    legacy.wandMinPostings = 0L
-    fused.refineMinCandidates = 0L
-    legacy.refineMinCandidates = 0L
-    val fTop = fused.bm25TopK("the of table", 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val lTop = legacy.bm25TopK("the of table", 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(fused.lastPath == "pruned", s"expected pruned, got ${fused.lastPath}")
-    assert(legacy.lastPath == "pruned")
-    assert(fTop == lTop)
+  test("3 generations == oracle == one index, on local, exact, pruned, tiered and filtered paths (with tombstones)") {
+    val want = oracleSnap(victims.toSet)
+    assert(want("bm25").nonEmpty && want("snippets").nonEmpty && want("prox").nonEmpty,
+      "fixture: empty surfaces make a weak test")
+    for (local <- Seq(true, false); pruned <- Seq(false, true)) {
+      val label = s"local=$local pruned=$pruned"
+      val got = snap(engine(root, local, pruned))
+      assertSnap(got, want, s"3-gen vs oracle, $label")
+      assertSnap(snap(engine(singleRoot, local, pruned)), got, s"one index vs 3-gen, $label")
+    }
+    // the forced form really is the block-max (candidate-pruned) read
+    val m = engine(root, local = false, pruned = true)
+    m.bm25TopK("the of table", 10).collect()
+    assert(m.lastWandPath == "pruned", s"expected pruned, got ${m.lastWandPath}")
   }
 
-  test("fused positional plans: forced candidate-pruned and forced shuffle both match legacy") {
-    def phr(m: MultiGenEngine): Seq[Long] =
-      m.phraseMatch(Seq("the", Transcripts.contentWords(5)))
-        .collect().map(_.getLong(0)).toSeq.sorted
-    for (density <- Seq(0L, 10000000000L)) {
-      val (fused, legacy) = engines(root)
-      (fused.engines ++ legacy.engines)
-        .foreach(_.positionalPruneDensity = density)
-      assert(phr(fused) == phr(legacy), s"density=$density diverged")
-      assert(phr(fused).nonEmpty || density > 0,
-        "forced-pruned phrase matched nothing — weak test")
+  test("positional plans: forced candidate-pruned and forced shuffle both match the oracle") {
+    val seq = Seq("the", Transcripts.contentWords(5))
+    val want = (oracle.phraseMatch(seq) -- victims).toSeq.sorted
+    assert(want.nonEmpty, "forced-pruned phrase matches nothing — weak test")
+    for (density <- Seq(0L, 10000000000L); r <- Seq(root, singleRoot)) {
+      val m = engine(r, local = false)
+      m.positionalPruneDensity = density
+      assert(m.phraseMatch(seq).collect().map(_.getLong(0)).toSeq.sorted == want,
+        s"density=$density diverged on $r")
     }
   }
 
-  test("pruned-path job count is FLAT in generation count (and legacy pays the fan-out tax)") {
+  test("pruned-path job count is FLAT in generation count") {
     // Spark JOB count is the deterministic, noise-free proxy for the
-    // per-query fixed cost the fused read removes: the per-generation
-    // union form runs one chunk-metadata collect job PER GENERATION on
-    // the candidate-pruned path, the fused form exactly one multi-path
-    // pre-pass — so fused jobs must not grow with generation count.
+    // per-query fixed cost the multi-path read removes: one
+    // chunk-metadata pre-pass for all generations, not one per
+    // generation — so jobs must not grow with generation count, and a
+    // generation set costs what one index does.
     import spark.implicits._
     val oneDir = tmpDir("graft-fused-onegen")
     Generations.append(spark, spark.createDataset(allTurns), oneDir, lemmas, conf)
-    val one = new MultiGenEngine(spark, oneDir, lemmas)
-    val (fused3, legacy3) = engines(root) // 3 generations + tombstones
+    val one = engine(oneDir, local = false)
+    val three = engine(root, local = false) // 3 generations + tombstones
+    val single = engine(singleRoot, local = false)
     val q = "the of table"
-    Seq(one, fused3, legacy3).foreach { m =>
+    Seq(one, three, single).foreach { m =>
       m.warmDictionariesLocal()
       m.wandMinPostings = 0L // force the candidate-pruned path
       m.bm25TopK(q, 10).collect() // warm: plans, liveDocs, file listings
-      assert(m.lastPath == "pruned")
+      assert(m.lastWandPath == "pruned")
     }
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+    val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
-    })
+    }
+    spark.sparkContext.addSparkListener(listener)
     def jobsOf(body: => Unit): Int = {
       Thread.sleep(300); jobs.set(0); body; Thread.sleep(300); jobs.get()
     }
-    val j1 = jobsOf(one.bm25TopK(q, 10).collect())
-    val j3f = jobsOf(fused3.bm25TopK(q, 10).collect())
-    val j3l = jobsOf(legacy3.bm25TopK(q, 10).collect())
-    assert(j3f == j1, s"fused jobs grew with generations: 1 gen=$j1, 3 gens=$j3f")
-    assert(j3l > j3f, s"expected the legacy per-gen form to pay extra jobs: " +
-      s"legacy=$j3l fused=$j3f")
+    try {
+      val j1 = jobsOf(one.bm25TopK(q, 10).collect())
+      val j3 = jobsOf(three.bm25TopK(q, 10).collect())
+      val jSingle = jobsOf(single.bm25TopK(q, 10).collect())
+      assert(j3 == j1, s"jobs grew with generations: 1 gen=$j1, 3 gens=$j3")
+      assert(j3 == jSingle, s"3 generations=$j3 jobs vs one index=$jSingle")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("over-cap survivors fallback (shuffled semi-join) still recovers generations") {
-    // chunkMetaCollectCap < 0 forces fusedFoldRows' over-cap branch: the
-    // chunk-metadata pre-pass is semi-joined distributed instead of
-    // collected. autoBroadcastJoinThreshold = -1 forces that un-hinted
-    // semi-join to SHUFFLE (explicit broadcast() hints elsewhere are
-    // unaffected) — the plan shape this branch exists for at 100-TB
-    // survivor counts. Generation recovery must survive the exchange:
-    // input_file_name() returns "" once rows cross a shuffle, so it has
-    // to be captured in the scan stage, below any join.
-    val (fused, legacy) = engines(root)
-    fused.engines.foreach(_.chunkMetaCollectCap = -1.0)
-    Seq(fused, legacy).foreach { m =>
-      m.wandMinPostings = 0L; m.refineMinCandidates = 0L
-    }
+    // chunkMetaCollectCap < 0 forces the candidate pre-pass's over-cap
+    // branch: the chunk-metadata pre-pass is semi-joined distributed
+    // instead of collected. autoBroadcastJoinThreshold = -1 forces that
+    // un-hinted semi-join to SHUFFLE (explicit broadcast() hints
+    // elsewhere are unaffected) — the plan shape this branch exists for
+    // at 100-TB survivor counts. Generation recovery must survive the
+    // exchange: input_file_name() returns "" once rows cross a shuffle,
+    // so it has to be captured in the scan stage, below any join.
+    val m = engine(root, local = false, pruned = true)
+    m.chunkMetaCollectCap = -1.0
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      import org.apache.spark.sql.functions.col
-      def probe(m: MultiGenEngine): Seq[Any] = Seq(
+      val f = Seq(
         m.bm25TopK("the of table", 10)
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq,
         m.bm25TopKFiltered("the of", 10, col("doc_len") % 2 === 0)
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
-      val f = probe(fused)
-      assert(fused.lastPath == "pruned", s"expected pruned, got ${fused.lastPath}")
-      assert(f == probe(legacy))
-      assert(f.head.asInstanceOf[Seq[Any]].nonEmpty, "empty top-k — weak test")
+      assert(m.lastWandPath == "pruned", s"expected pruned, got ${m.lastWandPath}")
+      val want = oracleSnap(victims.toSet)
+      assert(f == Seq(want("bm25"), want("filtered")))
+      assert(f.head.nonEmpty, "empty top-k — weak test")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("fused == legacy on a merged root (non-contiguous generation ranges)") {
-    // fresh root so the sibling test's engines are undisturbed
+  test("merged root (non-contiguous generation ranges) == compacted root == oracle") {
+    // fresh root so the sibling tests' root is undisturbed
     val dir = tmpDir("graft-fused-merged")
     import spark.implicits._
     val thirds = allTurns.grouped(math.max(1, allTurns.size / 3 + 1)).toSeq
@@ -185,11 +233,15 @@ class FusedReadSpec extends SparkSpecBase {
     val gens = Generations.genDirs(dir)
     Compactor.mergeGenerations(spark, dir, Seq(gens.head, gens.last),
       lemmas, conf)
-    val (fused, legacy) = engines(dir)
-    assert(fused.gens.size == 2)
-    assert(snap(fused) == snap(legacy))
-    fused.wandMinPostings = 0L
-    legacy.wandMinPostings = 0L
-    assert(snap(fused) == snap(legacy))
+    assert(new QueryEngine(spark, dir, lemmas).gens.size == 2)
+    val out = tmpDir("graft-fused-merged-compact")
+    Compactor.compact(spark, dir, out, lemmas, conf)
+    val want = oracleSnap(Set.empty)
+    for (local <- Seq(true, false); pruned <- Seq(false, true)) {
+      val label = s"local=$local pruned=$pruned"
+      val got = snap(engine(dir, local, pruned))
+      assertSnap(got, want, s"merged vs oracle, $label")
+      assertSnap(snap(engine(out, local, pruned)), got, s"compacted vs merged, $label")
+    }
   }
 }

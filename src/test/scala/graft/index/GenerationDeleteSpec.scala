@@ -67,8 +67,10 @@ class GenerationDeleteSpec extends SparkSpecBase {
     val multi = new MultiGenEngine(spark, root, lemmas)
     assert(multi.deletedIds.nonEmpty)
     val queries = Seq("the of", "alba corba", "kelba the sorro")
-    // exact path
-    queries.foreach { q =>
+    // exact path: driver-local (tombstones dropped at decode), then the
+    // distributed fold with the gate shut
+    for (gate <- Seq(multi.localMaxPostings, 0L); q <- queries) {
+      multi.localMaxPostings = gate
       val terms = multi.queryTerms(q)
       val got = multi.bm25TopK(q, 10).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -79,11 +81,11 @@ class GenerationDeleteSpec extends SparkSpecBase {
     // forced pruned path — theta/candidates must be survivor-only too
     multi.wandMinPostings = 0L
     queries.foreach { q =>
-      multi.lastPath = ""
+      multi.lastWandPath = ""
       val got = multi.bm25TopK(q, 10).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(got == oracleTopKLive(multi.queryTerms(q), 10),
-        s"pruned-path mismatch for '$q' (path=${multi.lastPath})")
+        s"pruned-path mismatch for '$q' (path=${multi.lastWandPath})")
     }
     // a deleted doc sat in the PRE-delete top-5, so ranks really moved
     val pre = oracle.bm25TopK("the of", 5).map(_._1)
@@ -285,7 +287,13 @@ class GenerationDeleteSpec extends SparkSpecBase {
     assert(got == want, s"filtered mismatch\n got=$got\nwant=$want")
     assert(got.forall(r => !deleted(r._1)))
     // the candidate and semi-join routes agree on the tombstoned root
-    val broad = multi.bm25ScoresFiltered(terms, pred, candidateCap = 0)
+    // (driver-local gate shut: both routes are distributed plans)
+    val dist = new MultiGenEngine(spark, root, lemmas)
+    dist.localMaxPostings = 0L
+    assert(dist.bm25TopKFiltered(q, 10, pred).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq == want,
+      "candidate route mismatch")
+    val broad = dist.bm25ScoresFiltered(terms, pred, candidateCap = 0)
       .orderBy(col("score").desc, col("doc_id").asc).limit(10).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(broad == want, s"semi-join route mismatch\n got=$broad\nwant=$want")

@@ -56,8 +56,9 @@ class IncrementalSpec extends SparkSpecBase {
   test("multi-gen BM25 with FORCED cross-generation block-max pruning: bit-identical") {
     val multi = new MultiGenEngine(spark, root, lemmas)
     multi.wandMinPostings = 0L // force the pruned path
+    multi.localMaxPostings = 0L // ...above the driver-local gate
     Seq("alba corba", "the of", "kelba the sorro", "the").foreach { q =>
-      multi.lastPath = ""
+      multi.lastWandPath = ""
       val got = multi.bm25TopK(q, 10).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val want = oracle.bm25TopK(q, 10)
@@ -65,16 +66,16 @@ class IncrementalSpec extends SparkSpecBase {
     }
     // at least one query must actually have taken the pruned path (not
     // degenerate-fallen-back to exact)
-    multi.lastPath = ""
+    multi.lastWandPath = ""
     multi.bm25TopK("the of", 10).collect()
-    assert(multi.lastPath == "pruned",
-      s"stopword query did not engage cross-gen pruning: ${multi.lastPath}")
+    assert(multi.lastWandPath == "pruned",
+      s"stopword query did not engage cross-gen pruning: ${multi.lastWandPath}")
     // and the cap fallback is exact too
     multi.wandCandidateCap = 1L
     val gotCap = multi.bm25TopK("the of", 10).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(multi.lastPath == "fallback-cap",
-      s"cap should force (and LABEL) the exact fallback: ${multi.lastPath}")
+    assert(multi.lastWandPath == "fallback-cap",
+      s"cap should force (and LABEL) the exact fallback: ${multi.lastWandPath}")
     assert(gotCap == oracle.bm25TopK("the of", 10))
     // forced theta refinement: the refined tier-2 cut must stay
     // rank-identical at ANY candidate count
@@ -129,7 +130,7 @@ class IncrementalSpec extends SparkSpecBase {
     val batch2 = allTurns.filterNot(_.conv_id < "conv-00000020")
     Generations.append(spark, spark.createDataset(batch1), dir, lemmas, bgConf)
     Generations.append(spark, spark.createDataset(batch2), dir, lemmas, bgConf)
-    val multi = new MultiGenEngine(spark, dir, lemmas).warmDictionaries()
+    val multi = new MultiGenEngine(spark, dir, lemmas).warmDictionary()
     val out = tmpDir("graft-incr-bg-compact")
     Compactor.compact(spark, dir, out, lemmas, bgConf)
     val single = new graft.query.QueryEngine(spark, out, lemmas)
@@ -141,18 +142,22 @@ class IncrementalSpec extends SparkSpecBase {
     val phraseQ = graft.core.Tokenizer.tokenize(t.text, lemmas)
       .take(3).map(_.term).mkString(" ")
     val queries = Seq(phraseQ, "alba corba", "the", "kelba zzzabsent")
-    queries.foreach { q =>
+    // driver-local gate open (the default), then shut: the distributed
+    // tiers must agree bit for bit too
+    for (gate <- Seq(multi.localMaxPostings, 0L); q <- queries) {
+      multi.localMaxPostings = gate
+      single.localMaxPostings = gate
       val got = multi.handleQuery(q, 10).collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
       val viaCompacted = single.handleQuery(q, 10).collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
       assert(got == viaCompacted,
-        s"multi-gen vs compacted handleQuery drift for '$q'\n got=$got\nwant=$viaCompacted")
+        s"multi-gen vs compacted handleQuery drift for '$q' (gate $gate)\n got=$got\nwant=$viaCompacted")
       val want = bgOracle.handleQuery(q, 10)
       assert(got == want,
-        s"multi-gen handleQuery vs oracle drift for '$q'\n got=$got\nwant=$want")
+        s"multi-gen handleQuery vs oracle drift for '$q' (gate $gate)\n got=$got\nwant=$want")
     }
-    // the phrase query exercised tier 0 on the PRUNED path
+    // the phrase query exercised tier 0 on the PRUNED path (gate shut)
     val phraseRes = multi.handleQuery(phraseQ, 10).collect()
     assert(multi.lastHandlePath == "pruned",
       s"expected the pruned form: ${multi.lastHandlePath}")
@@ -171,7 +176,7 @@ class IncrementalSpec extends SparkSpecBase {
   test("3-generation handleQuery: terms absent from most generations (probe-shared chains)") {
     import spark.implicits._
     // three generations where the query phrase exists ONLY in the last:
-    // the phrase/conjunctive chains (which reuse GlobalStats' per-
+    // the phrase/conjunctive chains (which reuse TermStats' per-
     // generation entries) must contribute EMPTY for generations missing
     // any term, and the result must still be bit-identical to the
     // scalar oracle over the concatenated corpus
@@ -191,7 +196,7 @@ class IncrementalSpec extends SparkSpecBase {
     Seq(batch1, batch2, batch3).foreach(b =>
       Generations.append(spark, spark.createDataset(b), dir, lemmas, bgConf))
     assert(Generations.genDirs(dir).size == 3)
-    val multi = new MultiGenEngine(spark, dir, lemmas).warmDictionaries()
+    val multi = new MultiGenEngine(spark, dir, lemmas).warmDictionary()
     val oracle3 = new Oracle(
       (batch1 ++ batch2 ++ batch3).sortBy(t => (t.conv_id, t.turn_idx)),
       lemmas, indexBigrams = true)

@@ -89,10 +89,10 @@ class DictLocalSpec extends SparkSpecBase {
     assert(rows(local.handleQuery(query, 10)) ==
       rows(plain.handleQuery(query, 10)))
     // pruned path too: force block-max engagement on the small corpus
-    plain.wandMinPostings = 0L
-    local.wandMinPostings = 0L
+    // (driver-local gate shut on both, so the block-max read runs)
+    Seq(plain, local).foreach { e => e.wandMinPostings = 0L; e.localMaxPostings = 0L }
     assert(rows(local.bm25TopK(query, 10)) == rows(plain.bm25TopK(query, 10)))
-    assert(local.lastPath == plain.lastPath,
-      s"serving mode changed the path: ${local.lastPath} vs ${plain.lastPath}")
+    assert(local.lastWandPath == plain.lastWandPath,
+      s"serving mode changed the path: ${local.lastWandPath} vs ${plain.lastWandPath}")
   }
 }

@@ -1,0 +1,78 @@
+package graft.query
+
+import org.apache.spark.sql.functions.col
+
+import graft.SparkSpecBase
+import graft.corpus.Transcripts
+import graft.index.{Generations, IndexBuilder, IndexConf}
+
+/** Spark jobs per warm query on the catalog-scale serving paths — the
+  * plans above the driver-local gate (`localMaxPostings = 0`) with
+  * block-max pruning forced (`wandMinPostings = 0`), which the benchmark
+  * corpus is too small to reach. Job count is the deterministic,
+  * noise-free proxy for per-query fixed cost: each job pays scheduler
+  * and task-launch latency regardless of data size. Each budget is the
+  * count the same query took before the single- and multi-generation
+  * engines were merged, for a single index and for a 3-generation root
+  * with tombstones alike. The index carries no bigrams, so handleQuery's
+  * overlapped bigram probe (a job on another thread) never runs and the
+  * count stays exact.
+  */
+class JobCountSpec extends SparkSpecBase with JobCounting {
+
+  private val lemmas = Transcripts.lemmas
+  private val conf = IndexConf(numParts = 4, skewDfThreshold = 300, nSalts = 4)
+  private lazy val allTurns = Transcripts.generateLocal(40L)
+  private val q = "the of table"
+  private val pred = col("role") === "user"
+
+  private lazy val singleRoot: String = {
+    import spark.implicits._
+    val dir = tmpDir("graft-jobs-single")
+    new IndexBuilder(spark, lemmas, conf).build(spark.createDataset(allTurns), dir)
+    dir
+  }
+
+  private lazy val genRoot: String = {
+    import spark.implicits._
+    val dir = tmpDir("graft-jobs-gens")
+    val (b1, rest) = allTurns.splitAt(allTurns.size / 3)
+    val (b2, b3) = rest.splitAt(rest.size / 2)
+    Seq(b1, b2, b3).foreach(b =>
+      Generations.append(spark, spark.createDataset(b), dir, lemmas, conf))
+    Generations.deleteDocs(spark, spark.createDataset(Seq(3L, 200L, 500L)), dir)
+    dir
+  }
+
+  /** kind -> (the warm call, its job budget). */
+  private def kinds(e: QueryEngine): Seq[(String, () => Unit, Int)] = {
+    val terms = e.queryTerms(q)
+    Seq(
+      ("bm25TopK pruned", () => { e.bm25TopK(q, 10).collect(); () }, 6),
+      ("bm25ScoresFiltered selective",
+        () => { e.bm25ScoresFiltered(terms, pred, candidateCap = 2000000).collect(); () }, 5),
+      ("bm25ScoresFiltered broad",
+        () => { e.bm25ScoresFiltered(terms, pred, candidateCap = 1).collect(); () }, 4),
+      ("searchWithSnippets", () => { e.searchWithSnippets(q, 10).collect(); () }, 13),
+      ("handleQuery", () => { e.handleQuery(q, 10).collect(); () }, 9))
+  }
+
+  for ((label, root) <- Seq(("single index", () => singleRoot),
+      ("3 generations with tombstones", () => genRoot)))
+    test(s"job budgets above the driver-local gate: $label") {
+      val e = new QueryEngine(spark, root(), lemmas)
+      e.warmDictionaryLocal()
+      e.localMaxPostings = 0L
+      e.wandMinPostings = 0L
+      kinds(e).foreach { case (kind, run, budget) =>
+        run() // first call resolves lazy state (file listings, codegen, liveDocs)
+        val n = jobsOf(run())
+        info(s"$kind: $n jobs (budget $budget)")
+        assert(n <= budget, s"$kind ran $n jobs, budget $budget")
+      }
+      e.bm25TopK(q, 10).collect()
+      assert(e.lastWandPath == "pruned", s"expected the pruned path, got ${e.lastWandPath}")
+      e.handleQuery(q, 10).collect()
+      assert(e.lastHandlePath == "pruned", s"expected the pruned tiers, got ${e.lastHandlePath}")
+    }
+}

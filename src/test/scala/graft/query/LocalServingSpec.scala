@@ -18,7 +18,7 @@ import graft.index.{IndexBuilder, IndexConf}
   * (`localMaxPostings = 0`), each kind stays within its Spark-job
   * budget, and one posting above the gate the distributed plan runs.
   */
-class LocalServingSpec extends SparkSpecBase {
+class LocalServingSpec extends SparkSpecBase with JobCounting {
 
   private val lemmas = Transcripts.lemmas
   // salted stopwords (df > 300) put several chunks per term on the
@@ -104,46 +104,6 @@ class LocalServingSpec extends SparkSpecBase {
     val terms = l.queryTerms(q)
     assert(byDoc(l.bm25ScoresFiltered(terms, pred)) == byDoc(d.bm25ScoresFiltered(terms, pred)),
       s"bm25ScoresFiltered drift for '$q' pred=$pred")
-  }
-
-  // ------------------------------------------------------------ job count
-
-  private final class JobsByGroup extends org.apache.spark.scheduler.SparkListener {
-    val counts = new java.util.concurrent.ConcurrentHashMap[String, Integer]
-    override def onJobStart(s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      Option(s.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        .foreach(g => counts.merge(g, 1, (a: Integer, b: Integer) => a + b))
-  }
-
-  private lazy val jobListener = {
-    val l = new JobsByGroup
-    spark.sparkContext.addSparkListener(l)
-    l
-  }
-
-  override def afterAll(): Unit = {
-    spark.sparkContext.removeSparkListener(jobListener)
-    super.afterAll()
-  }
-
-  /** Spark jobs `body` starts on this thread. The listener bus delivers
-    * in order, so once a sentinel job run afterwards is seen, every job
-    * of `body` has been counted.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = s"local-serving-${java.util.UUID.randomUUID()}"
-    jobListener
-    sc.setJobGroup(tag, tag)
-    try body finally sc.clearJobGroup()
-    val sentinel = s"$tag-sentinel"
-    sc.setJobGroup(sentinel, sentinel)
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    while (!jobListener.counts.containsKey(sentinel) && System.nanoTime() < deadline)
-      Thread.sleep(10)
-    assert(jobListener.counts.containsKey(sentinel), "listener never saw the sentinel job")
-    Option(jobListener.counts.get(tag)).fold(0)(_.intValue)
   }
 
   // ---------------------------------------------------------------- specs

@@ -8,8 +8,9 @@ import graft.oracle.Oracle
 /** Seeded randomized differential testing of the flagship entry point:
   * `handleQuery` must answer IDENTICALLY (tier/rank/bit-identical
   * scores) from every serving shape — a fresh single index, an
-  * uncompacted three-generation root, and the same root after a partial
-  * merge — and match the scalar oracle, for machine-generated queries
+  * uncompacted three-generation root (driver-local gate open and shut),
+  * the same root compacted into one index, and the same root after a
+  * partial merge — and match the scalar oracle, for machine-generated queries
   * that mix corpus terms, inflected forms, near-miss typos and absent
   * junk. Hand-picked oracle rows exercise the paths we thought of;
   * the seeded generator walks the ones we didn't (absent-term claim
@@ -62,18 +63,21 @@ class RandomizedParitySpec extends SparkSpecBase {
     val queries =
       RandomQueries.queries(vocab, new scala.util.Random(fuzzSeed), fuzzQueries)
 
-    val mPre = new MultiGenEngine(spark, root, lemmas).warmDictionaries()
+    val mPre = new MultiGenEngine(spark, root, lemmas).warmDictionary()
     assert(mPre.gens.size == 3)
-    // the per-generation union form rides along: every query also runs
-    // through fusedRead=false on the 3-gen root, so the randomized walk
-    // differentials the fused read too
-    val mPreLegacy = new MultiGenEngine(spark, root, lemmas).warmDictionaries()
-    mPreLegacy.fusedRead = false
+    // the distributed multi-generation plans ride along: every query
+    // also runs with the driver-local gate shut on the 3-gen root, and
+    // on the same corpus compacted into one root
+    val mPreDist = new MultiGenEngine(spark, root, lemmas).warmDictionary()
+    mPreDist.localMaxPostings = 0L
+    val compactedDir = tmpDir("graft-fuzzq-compacted")
+    Compactor.compact(spark, root, compactedDir, lemmas, conf)
+    val compacted = new QueryEngine(spark, compactedDir, lemmas)
     // partial merge AFTER mPre is constructed: mPre keeps serving the
     // retired (still-on-disk) sources — the documented reader contract
     val merged = Compactor.mergeGenerations(spark, root,
       mPre.gens.take(2), lemmas, conf)
-    val mPost = new MultiGenEngine(spark, root, lemmas).warmDictionaries()
+    val mPost = new MultiGenEngine(spark, root, lemmas).warmDictionary()
     assert(mPost.gens == Seq(s"$root/gen-00002", merged))
 
     queries.foreach { q =>
@@ -84,8 +88,10 @@ class RandomizedParitySpec extends SparkSpecBase {
       assert(s == want, s"single vs oracle drift for '$q'\n got=$s\nwant=$want")
       val pre = got(mPre.handleQuery(q, 10))
       assert(pre == want, s"3-gen vs oracle drift for '$q'\n got=$pre\nwant=$want")
-      val leg = got(mPreLegacy.handleQuery(q, 10))
-      assert(leg == want, s"3-gen legacy-read drift for '$q'\n got=$leg\nwant=$want")
+      val dist = got(mPreDist.handleQuery(q, 10))
+      assert(dist == want, s"3-gen distributed drift for '$q'\n got=$dist\nwant=$want")
+      val comp = got(compacted.handleQuery(q, 10))
+      assert(comp == pre, s"compacted vs 3-gen drift for '$q'\n got=$comp\nwant=$pre")
       val post = got(mPost.handleQuery(q, 10))
       assert(post == want, s"merged vs oracle drift for '$q'\n got=$post\nwant=$want")
     }
@@ -103,9 +109,13 @@ class RandomizedParitySpec extends SparkSpecBase {
     val (b2, b3) = rest.splitAt(rest.size / 2)
     Seq(b1, b2, b3).foreach(b =>
       Generations.append(spark, spark.createDataset(b), dir, lemmas, conf))
-    val multi = new MultiGenEngine(spark, dir, lemmas).warmDictionaries()
-    val legacy = new MultiGenEngine(spark, dir, lemmas).warmDictionaries()
-    legacy.fusedRead = false
+    val multi = new MultiGenEngine(spark, dir, lemmas).warmDictionary()
+    // the distributed plans (gate shut) and the compacted root ride along
+    val dist = new MultiGenEngine(spark, dir, lemmas).warmDictionary()
+    dist.localMaxPostings = 0L
+    val compactedDir = tmpDir("graft-fuzzq-serving-compacted")
+    Compactor.compact(spark, dir, compactedDir, lemmas, conf)
+    val compacted = new QueryEngine(spark, compactedDir, lemmas)
 
     val rnd = new scala.util.Random(fuzzSeed + 1)
     def word(): String = vocab(rnd.nextInt(vocab.size))
@@ -123,8 +133,10 @@ class RandomizedParitySpec extends SparkSpecBase {
           val s = rows(single.bm25TopKFiltered(q, k, pred))
           assert(rows(multi.bm25TopKFiltered(q, k, pred)) == s,
             s"filtered drift: '$q' k=$k mod=$m")
-          assert(rows(legacy.bm25TopKFiltered(q, k, pred)) == s,
-            s"filtered legacy drift: '$q' k=$k mod=$m")
+          assert(rows(dist.bm25TopKFiltered(q, k, pred)) == s,
+            s"filtered distributed drift: '$q' k=$k mod=$m")
+          assert(rows(compacted.bm25TopKFiltered(q, k, pred)) == s,
+            s"filtered compacted drift: '$q' k=$k mod=$m")
         case 1 => // result page with snippets at a random window
           val w = 1 + rnd.nextInt(5)
           def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -133,8 +145,10 @@ class RandomizedParitySpec extends SparkSpecBase {
           val s = rows(single.searchWithSnippets(q, k, w))
           assert(rows(multi.searchWithSnippets(q, k, w)) == s,
             s"snippets drift: '$q' k=$k w=$w")
-          assert(rows(legacy.searchWithSnippets(q, k, w)) == s,
-            s"snippets legacy drift: '$q' k=$k w=$w")
+          assert(rows(dist.searchWithSnippets(q, k, w)) == s,
+            s"snippets distributed drift: '$q' k=$k w=$w")
+          assert(rows(compacted.searchWithSnippets(q, k, w)) == s,
+            s"snippets compacted drift: '$q' k=$k w=$w")
         case _ => // typeahead on a random in-vocab prefix (or junk)
           val base = word()
           val prefix =

@@ -167,8 +167,12 @@ class ServingSpec extends SparkSpecBase {
     val single = scoreMap(engine.bm25ScoresFiltered(terms, pred))
     assert(single.nonEmpty)
     assert(scoreMap(multi.bm25ScoresFiltered(terms, pred)) == single)
+    // the candidate and semi-join routes, driver-local gate shut
+    val dist = new MultiGenEngine(spark, dir, Map.empty)
+    dist.localMaxPostings = 0L
+    assert(scoreMap(dist.bm25ScoresFiltered(terms, pred)) == single)
     assert(scoreMap(
-      multi.bm25ScoresFiltered(terms, pred, candidateCap = 0)) == single)
+      dist.bm25ScoresFiltered(terms, pred, candidateCap = 0)) == single)
 
     // snippets for ids spanning both generations
     val sortedIds = single.keys.toSeq.sorted
