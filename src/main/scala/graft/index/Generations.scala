@@ -161,11 +161,10 @@ object Generations {
     // write FIRST, decide from the written count: `docIds` may be an
     // expensive lazy plan (upsert/deleteWhere's multi-generation key
     // probe), and a pre-check `docIds.isEmpty` would execute that whole
-    // plan a second time. The count comes from the written parquet
-    // footers, not a re-execution.
-    docIds.distinct().toDF("doc_id")
-      .write.mode("overwrite").parquet(s"$dir/ids")
-    val n = spark.read.parquet(s"$dir/ids").count()
+    // plan a second time. The count is observed by the write itself —
+    // no re-execution and no re-read.
+    val n = IndexBuilder.writeCounted(docIds.distinct().toDF("doc_id"),
+      s"$dir/ids").rows
     // an empty batch never commits: it would put a permanent no-op
     // anti-join into every query plan of the root (replays of an empty
     // batch recompute empty and skip again — idempotent without a
@@ -366,14 +365,13 @@ object Compactor {
       // allowMissingColumns: a root whose generations straddle the
       // docs-schema ts addition (v6) compacts with null ts for the
       // older generations instead of failing the union
-      purge(gens.map(g => spark.read.parquet(IndexPaths(g).docs))
-        .reduce(_.unionByName(_, allowMissingColumns = true)))
-        .write.mode("overwrite").parquet(paths.docs)
-      builder.writeManifest(paths.docs, fp,
-        spark.read.parquet(paths.docs).count(),
-        (System.nanoTime() - t0) / 1000000)
+      val written = IndexBuilder.writeCounted(
+        purge(gens.map(g => spark.read.parquet(IndexPaths(g).docs))
+          .reduce(_.unionByName(_, allowMissingColumns = true))),
+        paths.docs, Seq("doc_len"))
+      builder.writeManifest(paths.docs, fp, written.rows,
+        (System.nanoTime() - t0) / 1000000, written.sumFields)
     }
-    val docs = spark.read.parquet(paths.docs)
 
     // segments: union of the generations' sorted runs, re-shuffled +
     // re-sorted by (term, salt, doc_id) — exactly the k-way merge
@@ -384,20 +382,14 @@ object Compactor {
     // writing is shared with fresh builds (writeStage2): identical
     // dictionary/postings/fuzzy layout guarantees, no drift, plus
     // per-term-range resume should a compaction die mid-write.
-    val segs = purge(gens.map(g =>
-        spark.read.option("recursiveFileLookup", "true")
-          .parquet(IndexPaths(g).segments))
+    val segs = purge(gens.map(g => builder.readSegments(IndexPaths(g).segments).toDF())
       .reduce(_ unionByName _)).as[SegmentRow]
       .repartition(conf.numParts, $"term", $"salt")
       .sortWithinPartitions($"term", $"salt", $"doc_id")
-    val agg = docs.agg(count(lit(1)), avg($"doc_len")).head()
-    val nDocs = agg.getLong(0)
-    val avgdl = agg.getDouble(1)
-    val dictDf = builder.writeStage2(segs, nDocs, avgdl, outDir, fp)
-    val nTerms = dictDf.count()
-    val nPostings = spark.read.option("recursiveFileLookup", "true")
-      .parquet(paths.postings)
-      .agg(sum($"n_postings")).head().getLong(0)
+    val (nDocs, docLenSum) = builder.rowsAndSum(paths.docs, "doc_len",
+      spark.read.parquet(paths.docs))
+    val avgdl = IndexBuilder.avgdl(docLenSum, nDocs)
+    val (nTerms, nPostings) = builder.writeStage2(segs, nDocs, avgdl, outDir, fp)
     val meta = IndexMeta(nDocs, avgdl, nTerms, nPostings, conf.k1, conf.b)
     IndexBuilder.writeAtomic(paths.meta,
       s"""{"n_docs":$nDocs,"avgdl":$avgdl,"n_terms":$nTerms,""" +
@@ -513,15 +505,16 @@ object Compactor {
       s"merge-${md.digest().map(b => f"$b%02x").mkString}-n${sources.size}"
     }
 
-    // docs: plain union (doc_ids already globally disjoint), no purge
+    // docs: plain union (doc_ids already globally disjoint), no purge;
+    // the write observes n_docs and Σdoc_len for the meta
     if (!builder.manifestComplete(paths.docs, fp)) {
       val t0 = System.nanoTime()
-      sources.map(g => spark.read.parquet(IndexPaths(g).docs))
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-        .write.mode("overwrite").parquet(paths.docs)
-      builder.writeManifest(paths.docs, fp,
-        spark.read.parquet(paths.docs).count(),
-        (System.nanoTime() - t0) / 1000000)
+      val written = IndexBuilder.writeCounted(
+        sources.map(g => spark.read.parquet(IndexPaths(g).docs))
+          .reduce(_.unionByName(_, allowMissingColumns = true)),
+        paths.docs, Seq("doc_len"))
+      builder.writeManifest(paths.docs, fp, written.rows,
+        (System.nanoTime() - t0) / 1000000, written.sumFields)
     }
 
     // segments: union re-shuffled into the stage-1 layout ((term, salt)
@@ -529,32 +522,24 @@ object Compactor {
     // the one corpus-scale shuffle a merge pays
     if (!builder.manifestComplete(paths.segments, fp)) {
       val t0 = System.nanoTime()
-      sources.map(g => spark.read.option("recursiveFileLookup", "true")
-          .parquet(IndexPaths(g).segments))
-        .reduce(_ unionByName _).as[SegmentRow]
-        .repartition(mconf.numParts, $"term", $"salt")
-        .sortWithinPartitions($"term", $"salt", $"doc_id")
-        .write.mode("overwrite").parquet(paths.segments)
-      builder.writeManifest(paths.segments, fp,
-        spark.read.parquet(paths.segments).count(),
+      val rows = IndexBuilder.writeCounted(
+        sources.map(g => builder.readSegments(IndexPaths(g).segments))
+          .reduce(_ unionByName _)
+          .repartition(mconf.numParts, $"term", $"salt")
+          .sortWithinPartitions($"term", $"salt", $"doc_id").toDF(),
+        paths.segments).rows
+      builder.writeManifest(paths.segments, fp, rows,
         (System.nanoTime() - t0) / 1000000)
     }
 
-    val docs = spark.read.parquet(paths.docs)
-    val agg = docs.agg(count(lit(1)), avg($"doc_len")).head()
-    val nDocs = agg.getLong(0)
-    val avgdl = agg.getDouble(1)
+    val (nDocs, docLenSum) = builder.rowsAndSum(paths.docs, "doc_len",
+      spark.read.parquet(paths.docs))
+    val avgdl = IndexBuilder.avgdl(docLenSum, nDocs)
     // stage 2 shares the fresh-build writer: the persisted merged
     // segments read back in stage-1 layout, chunked directly (no second
     // shuffle), with per-term-range resume
-    val dictDf = builder.writeStage2(
-      spark.read.option("recursiveFileLookup", "true")
-        .parquet(paths.segments).as[SegmentRow],
-      nDocs, avgdl, dir, fp)
-    val nTerms = builder.manifestRows(paths.dictionary)
-      .getOrElse(dictDf.count())
-    val nPostings = spark.read.parquet(paths.dictionary)
-      .agg(sum($"df")).head().getLong(0)
+    val (nTerms, nPostings) = builder.writeStage2(
+      builder.readSegments(paths.segments), nDocs, avgdl, dir, fp)
 
     // replaces BEFORE meta: the meta is the single commit point that
     // both publishes the merged generation and retires its sources

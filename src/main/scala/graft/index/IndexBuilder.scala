@@ -1,8 +1,9 @@
 package graft.index
 
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.{ChunkCodec, Tokenizer}
 import graft.corpus.Turn
@@ -83,7 +84,9 @@ final case class IndexPaths(root: String) {
   *
   * Every stage writes a `_manifest.json` with input fingerprint, row/byte
   * counts and wall time; a re-run with the same fingerprint skips the
-  * stage (resumability + lineage, BASELINE.json north_rule).
+  * stage (resumability + lineage, BASELINE.json north_rule). Row counts
+  * and the meta statistics are observed by the writes themselves
+  * ([[IndexBuilder.writeCounted]]): no stage re-reads what it just wrote.
   */
 class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     conf: IndexConf = IndexConf()) {
@@ -119,7 +122,7 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     // rebuild. Storage cost is one int64 column next to `text`.
     val ranked = RangeRank.withRank(
       turns.toDF().select("conv_id", "turn_idx", "role", "text", "ts"),
-      Seq("conv_id", "turn_idx"), "doc_id", conf.numParts)
+      Seq("conv_id", "turn_idx"), "doc_id", conf.numParts).df
     val offset = conf.docIdOffset
     ranked.as[(String, Int, String, String, java.sql.Timestamp, Long)]
       .map { case (conv, turn, role, text, ts, docId) =>
@@ -186,6 +189,33 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     salted
       .repartition(conf.numParts, $"term", $"salt")
       .sortWithinPartitions($"term", $"salt", $"doc_id")
+  }
+
+  /** High-df (skew) terms to salt, detected on a DOC SAMPLE — a full df
+    * pre-pass would tokenize the corpus twice; sampling errs toward
+    * salting slightly more terms, which is harmless (a few extra sub-128
+    * chunks), while missing a true heavy hitter only costs balance, never
+    * correctness. ~20k sampled docs suffice: a term at the skew threshold
+    * (df rate thr/N) is expected ~20000*thr/N times in the sample; the
+    * 0.5 cutoff factor absorbs sampling variance.
+    *
+    * A term's sample count is at most the number of sampled docs, itself
+    * at most `nDocs`: below the cutoff no term can qualify, so the
+    * sample job is skipped and the (provably empty) set returned.
+    */
+  private[index] def highDfTerms(docsWithText: DataFrame, nDocs: Long): Set[String] = {
+    val fraction = math.min(1.0, math.max(1e-6, 20000.0 / math.max(1L, nDocs)))
+    val cutoff = math.max(1L, (conf.skewDfThreshold * fraction * 0.5).toLong)
+    if (nDocs < cutoff) Set.empty
+    else {
+      val lem = bcLemmas
+      docsWithText.sample(withReplacement = false, fraction, 42L)
+        .select($"text").as[String]
+        .flatMap(t => Tokenizer.tokenize(t, lem.value).map(_.term).distinct)
+        .groupBy($"value").count()
+        .filter($"count" >= cutoff)
+        .select($"value").as[String].collect().toSet
+    }
   }
 
   // ------------------------------------------------------------- stage 2
@@ -281,7 +311,7 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     val maxLen = graft.core.Fuzzy.MaxTermLen + d
     val t0 = System.nanoTime()
     val dir = IndexPaths(root).fuzzy(d)
-    dictDf.select($"term", $"term_id", $"df")
+    val variants = dictDf.select($"term", $"term_id", $"df")
       // unigrams only: on a bigram-indexed root the dictionary also
       // holds space-joined pseudo-terms, which fuzzyTerms never serves
       // (filtered query-side too) — expanding their deletion
@@ -294,15 +324,14 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
       .toDF("variant", "term", "term_id", "df")
       .repartitionByRange(conf.numParts, $"variant")
       .sortWithinPartitions($"variant")
-      .write.mode("overwrite").parquet(dir)
+    val rows = IndexBuilder.writeCounted(variants, dir).rows
     val dictToken = IndexBuilder.tableToken(IndexPaths(root).dictionary)
     // n_files/bytes manifest: without it the serve-time manifestIntact
     // gate is VACUOUS for this dir (no manifest => trivially intact), so
     // a variant table that lost part files under surviving _SUCCESS +
-    // dict-token markers would silently DROP fuzzy matches. Row count is
-    // a parquet metadata-only count (row-group stats, no data read).
-    writeManifest(dir, dictToken, spark.read.parquet(dir).count(),
-      (System.nanoTime() - t0) / 1000000L)
+    // dict-token markers would silently DROP fuzzy matches. The row
+    // count is the one the write observed.
+    writeManifest(dir, dictToken, rows, (System.nanoTime() - t0) / 1000000L)
     // tie the variant table to the EXACT dictionary build it derives
     // from: a rebuild over a changed corpus rewrites the dictionary but
     // only fuzzy_d{fuzzyMaxDistance} — without the token, a stale
@@ -372,16 +401,15 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
       math.min(conf.numParts.toLong, nDocs / 2000000L + 1L)).toInt
     val t0 = System.nanoTime()
     val dir = IndexPaths(root).vsmNorms
-    vsmNormsDf(postingsDf, dictDf)
+    val rows = IndexBuilder.writeCounted(vsmNormsDf(postingsDf, dictDf)
       .repartitionByRange(parts, $"doc_id")
-      .sortWithinPartitions($"doc_id")
-      .write.mode("overwrite").parquet(dir)
+      .sortWithinPartitions($"doc_id"), dir).rows
     val dictToken = IndexBuilder.tableToken(IndexPaths(root).dictionary)
     // n_files/bytes manifest — QueryEngine.vsmNormsTable's
     // manifestIntact call was VACUOUS without one (truncated norms =
-    // missing docs in every vsmScores result); metadata-only count
-    writeManifest(dir, dictToken, spark.read.parquet(dir).count(),
-      (System.nanoTime() - t0) / 1000000L)
+    // missing docs in every vsmScores result); rows as the write
+    // observed them
+    writeManifest(dir, dictToken, rows, (System.nanoTime() - t0) / 1000000L)
     // same staleness guard as the fuzzy tables: tied to the exact
     // dictionary build (dictionary and postings rewrite together);
     // token written LAST as the serve-side commit marker. The format
@@ -408,18 +436,41 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
 
   /** Dense term_id in byte-order term sort via RangeRank + idf /
     * per-term global max_impact, over (term, df, cf, max_norm) stats.
+    * The result's `df` holds [[DictRow]]s; at or below RangeRank's small
+    * threshold it is ONE term-sorted partition (`single`).
     */
-  def finishDictionary(stats: DataFrame, nDocs: Long): Dataset[DictRow] = {
+  def finishDictionary(stats: DataFrame, nDocs: Long): RangeRank.Ranked = {
     val ranked = RangeRank.withRank(stats, Seq("term"), "term_id",
       conf.numParts, smallThreshold = 2000000L)
     val n = nDocs
-    ranked.select($"term", $"term_id", $"df", $"cf", $"max_norm")
+    ranked.copy(df = ranked.df.select($"term", $"term_id", $"df", $"cf", $"max_norm")
       .as[(String, Long, Long, Long, Double)]
       .map { case (term, termId, df, cf, maxNorm) =>
         val idf = Bm25.idf(n, df)
         DictRow(term, termId, df, cf, idf, idf * maxNorm)
-      }
+      }.toDF())
   }
+
+  /** Re-opens a table the builder wrote with `schema` (the schema it
+    * wrote, as parquet stores it: every column nullable), skipping the
+    * footer-inference job a schema-less read starts.
+    */
+  private def reopen(dir: String, schema: StructType,
+      recursive: Boolean = false): DataFrame =
+    spark.read.schema(StructType(schema.fields.map(_.copy(nullable = true))))
+      .option("recursiveFileLookup", recursive.toString).parquet(dir)
+
+  /** The dictionary table at `dir`, opened with the schema the builder
+    * writes.
+    */
+  private def readDictionary(dir: String): DataFrame =
+    reopen(dir, Encoders.product[DictRow].schema)
+
+  /** The segments table at `dir` (a single dir or slice dirs), opened
+    * with the schema the builder writes.
+    */
+  private[index] def readSegments(dir: String): Dataset[SegmentRow] =
+    reopen(dir, Encoders.product[SegmentRow].schema, recursive = true).as[SegmentRow]
 
   /** Term boundaries for `nRanges` stage-2 postings ranges, read from
     * the COMPLETED dictionary (terms at term_id r*width+1): range r =
@@ -444,19 +495,19 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
 
   /** One postings range: join chunk rows with their dictionary slice,
     * range-partition/sort by (term_id, chunk_seq), write to `dir`.
+    * Returns the rows written.
     */
   private def writePostingsRange(chunks: Dataset[RawChunk], dictDf: DataFrame,
-      dir: String, parts: Int): Unit = {
+      dir: String, parts: Int): Long = {
     val postings = chunks.toDF()
       .join(dictDf.select($"term", $"term_id", $"idf"), Seq("term"))
       .withColumn("max_impact", col("idf") * col("max_norm"))
       .select($"term_id", $"chunk_seq", $"min_doc_id", $"max_doc_id",
         $"n_postings", $"doc_gaps", $"tfs", $"dls", $"pos_blob", $"max_tf",
         $"max_impact")
-    postings
+    IndexBuilder.writeCounted(postings
       .repartitionByRange(parts, $"term_id", $"chunk_seq")
-      .sortWithinPartitions($"term_id", $"chunk_seq")
-      .write.mode("overwrite").parquet(dir)
+      .sortWithinPartitions($"term_id", $"chunk_seq"), dir).rows
   }
 
   /** Stage 2, shared by build() and Generations.compact so the layout
@@ -478,10 +529,12 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     * `segments` must be (term, salt)-grouped and (term, salt, doc_id)-
     * sorted within partitions (stage-1 layout; compaction re-shuffles
     * its generation union into this shape first). Returns the written
-    * dictionary.
+    * dictionary's (n_terms, n_postings): its manifest's `rows` and
+    * `df_sum` (observed when the dictionary was written), or one
+    * aggregate over it when an older manifest lacks `df_sum`.
     */
   def writeStage2(segments: Dataset[SegmentRow], nDocs: Long, avgdl: Double,
-      root: String, fp: String): DataFrame = {
+      root: String, fp: String): (Long, Long) = {
     val paths = IndexPaths(root)
 
     def restrict[T](ds: Dataset[T], lo: Option[String], hi: Option[String]): Dataset[T] =
@@ -518,12 +571,10 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
           val ts = System.nanoTime()
           val lo = if (r == 0) None else Some(bounds(r - 1))
           val hi = if (r == nR - 1) None else Some(bounds(r))
-          vtime(s"postings_write_range_$r") {
+          val rows = vtime(s"postings_write_range_$r") {
             writePostingsRange(chunksFor(lo, hi), restrict(dictDf, lo, hi),
               dir, parts) }
-          // distributed zero-column count — never per-footer driver IO
-          writeManifest(dir, rangeFp, spark.read.parquet(dir).count(),
-            (System.nanoTime() - ts) / 1000000)
+          writeManifest(dir, rangeFp, rows, (System.nanoTime() - ts) / 1000000)
         }
       }
       val totalRows = (0 until nR)
@@ -624,16 +675,22 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
         val rawChunks = chunkSorted(segments, avgdl)
         rawChunks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val dict = finishDictionary(dictStats(rawChunks), nDocs)
-        vtime("dict_write") {
-          dict.repartitionByRange(conf.numParts, $"term")
-            .sortWithinPartitions($"term")
-            .write.mode("overwrite").parquet(paths.dictionary) }
-        val rows = spark.read.parquet(paths.dictionary).count()
-        writeManifest(paths.dictionary, fp, rows,
-          (System.nanoTime() - t0) / 1000000)
-        val dictDf = spark.read.parquet(paths.dictionary)
+        val written = vtime("dict_write") {
+          if (dict.single)
+            // one term-sorted partition already: written as numParts
+            // term-contiguous files, with no range sample or re-shuffle
+            IndexBuilder.writeCounted(dict.df, paths.dictionary, Seq("df"),
+              maxRecordsPerFile = (dict.rows + conf.numParts - 1) / conf.numParts)
+          else
+            IndexBuilder.writeCounted(dict.df.repartitionByRange(conf.numParts, $"term")
+              .sortWithinPartitions($"term"), paths.dictionary, Seq("df"))
+        }
+        writeManifest(paths.dictionary, fp, written.rows,
+          (System.nanoTime() - t0) / 1000000,
+          written.sumFields)
+        val dictDf = readDictionary(paths.dictionary)
         postDictStages(dictDf,
-          () => writeRanges(dictDf, rows, (lo, hi) => restrict(rawChunks, lo, hi)))
+          () => writeRanges(dictDf, written.rows, (lo, hi) => restrict(rawChunks, lo, hi)))
         rawChunks.unpersist()
         dictDf
       } else {
@@ -641,7 +698,7 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
         // ranges' segments (the term-range predicate prunes the scan to
         // ~their row groups; stage-1 files are term-sorted within
         // partitions)
-        val dictDf = spark.read.parquet(paths.dictionary)
+        val dictDf = readDictionary(paths.dictionary)
         val nTerms = manifestRows(paths.dictionary).getOrElse(dictDf.count())
         postDictStages(dictDf, () =>
           if (!manifestComplete(paths.postings, fp))
@@ -649,7 +706,7 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
               chunkSorted(restrict(segments, lo, hi), avgdl)))
         dictDf
       }
-    dictDf
+    rowsAndSum(paths.dictionary, "df", dictDf)
   }
 
   /** Run `job(0..n-1)` on a small fixed pool — independent Spark jobs
@@ -689,19 +746,38 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
   // ------------------------------------------------------------ manifests
 
   /** Row count recorded in a stage's manifest, if one exists. Build
-    * stages write counts from DISTRIBUTED zero-column counts at stage
-    * completion; resumed/completed stages read them back here — there is
-    * deliberately NO per-parquet-footer driver loop anywhere (the old
-    * form opened every part file's footer serially on the driver at
-    * every stage completion and resume check: milliseconds at sandbox
-    * scale, minutes of serial driver time at 10^5-10^6 part files).
+    * stages record the row count their write observed
+    * ([[IndexBuilder.writeCounted]]); resumed/completed stages read it
+    * back here — there is deliberately NO re-read of a written table and
+    * NO per-parquet-footer driver loop anywhere (opening every part
+    * file's footer serially on the driver costs minutes at 10^5-10^6
+    * part files).
     */
-  private[index] def manifestRows(dir: String): Option[Long] = {
+  private[index] def manifestRows(dir: String): Option[Long] =
+    manifestLong(dir, "rows")
+
+  /** A numeric field of a stage's manifest, if the manifest exists and
+    * records it (quoted or bare).
+    */
+  private def manifestLong(dir: String, field: String): Option[Long] = {
     val f = s"$dir/_manifest.json"
     if (!Fs.exists(f)) None
-    else "\"rows\":(\\d+)".r.findFirstMatchIn(Fs.readString(f))
+    else s"\"$field\":\"?(\\d+)".r.findFirstMatchIn(Fs.readString(f))
       .map(_.group(1).toLong)
   }
+
+  /** (rows, sum of `column`) of a written table: its manifest's `rows`
+    * and `<column>_sum`, both observed by the write. A manifest written
+    * before the sum was recorded falls back to one aggregate over
+    * `table`, so older roots resume to the same values.
+    */
+  private[index] def rowsAndSum(dir: String, column: String,
+      table: => DataFrame): (Long, Long) =
+    (for (n <- manifestRows(dir); s <- manifestLong(dir, s"${column}_sum"))
+      yield (n, s)).getOrElse {
+      val r = table.agg(count(lit(1)), sum(col(column))).head()
+      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    }
 
   private[index] def writeManifest(dir: String, fingerprint: String, rows: Long,
       wallMs: Long, extra: Map[String, String] = Map.empty): Unit = {
@@ -785,53 +861,41 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     // lemmatize with the new one.
     val fp = s"v6-np${conf.numParts}-salt${conf.nSalts}-thr${conf.skewDfThreshold}-off${conf.docIdOffset}-bi${conf.indexBigrams}-fz${conf.fuzzyMaxDistance}-k1${conf.k1}-b${conf.b}-lm$lemmaFingerprint-in${inputFingerprint(turns)}"
 
-    // Stage 0: docs (doc_id assignment + doc lengths)
-    if (!manifestComplete(paths.docs, fp)) {
-      val t0 = System.nanoTime()
-      val docsWithText = buildDocs(turns)
-      vtime("docs_write") { docsWithText.write.mode("overwrite").parquet(paths.docs) }
-      val rows = spark.read.parquet(paths.docs).count()
-      writeManifest(paths.docs, fp, rows, (System.nanoTime() - t0) / 1000000)
-    }
-    val docsWithText = spark.read.parquet(paths.docs)
-    val agg = vtime("meta_agg") {
-      docsWithText.agg(count(lit(1)), avg($"doc_len")).head() }
-    val nDocs = agg.getLong(0)
-    // clear error instead of the NPE a null avg() would raise below —
-    // streaming callers (StreamIngest) skip empty micro-batches before
-    // reaching here; a batch caller indexing nothing is a caller bug
+    // Stage 0: docs (doc_id assignment + doc lengths). The write observes
+    // its row count and Σdoc_len; the manifest records both, so n_docs
+    // and avgdl never cost a pass over the docs table.
+    val docsWithText =
+      if (manifestComplete(paths.docs, fp)) spark.read.parquet(paths.docs)
+      else {
+        val t0 = System.nanoTime()
+        val docs = buildDocs(turns)
+        val written = vtime("docs_write") {
+          IndexBuilder.writeCounted(docs, paths.docs, Seq("doc_len")) }
+        writeManifest(paths.docs, fp, written.rows,
+          (System.nanoTime() - t0) / 1000000, written.sumFields)
+        reopen(paths.docs, docs.schema)
+      }
+    val (nDocs, docLenSum) = rowsAndSum(paths.docs, "doc_len", docsWithText)
+    // clear error instead of a NaN avgdl — streaming callers
+    // (StreamIngest) skip empty micro-batches before reaching here; a
+    // batch caller indexing nothing is a caller bug
     require(nDocs > 0L,
       s"empty input: refusing to build an index over zero turns at $root")
-    val avgdl = agg.getDouble(1)
+    val avgdl = IndexBuilder.avgdl(docLenSum, nDocs)
 
-    // Stage 1: SPIMI segments (sorted runs, salted for skew).
-    // High-df (skew) terms are detected on a DOC SAMPLE — a full df
-    // pre-pass would tokenize the corpus twice; sampling errs toward
-    // salting slightly more terms, which is harmless (a few extra
-    // sub-128 chunks), while missing a true heavy hitter only costs
-    // balance, never correctness.
+    // Stage 1: SPIMI segments (sorted runs, salted for skew; the salted
+    // set comes from highDfTerms' doc sample).
     val nSlices = if (conf.resumeSlices > 0) conf.resumeSlices
       else math.max(1L, math.min(64L, nDocs / 500000L)).toInt
     if (!manifestComplete(paths.segments, fp)) {
       val t0 = System.nanoTime()
-      // ~20k sampled docs suffice: a term at the skew threshold (df rate
-      // thr/N) is expected ~20000*thr/N times in the sample; the 0.5
-      // cutoff factor absorbs sampling variance (salting an extra
-      // borderline term is harmless).
-      val fraction = math.min(1.0, math.max(1e-6, 20000.0 / math.max(1L, nDocs)))
-      val cutoff = math.max(1L, (conf.skewDfThreshold * fraction * 0.5).toLong)
-      val lem = bcLemmas
-      val highDf = vtime("highdf_sample") {
-        docsWithText.sample(withReplacement = false, fraction, 42L)
-          .select($"text").as[String]
-          .flatMap(t => Tokenizer.tokenize(t, lem.value).map(_.term).distinct)
-          .groupBy($"value").count()
-          .filter($"count" >= cutoff)
-          .select($"value").as[String].collect().toSet }
-      if (nSlices <= 1) {
+      val highDf = vtime("highdf_sample") { highDfTerms(docsWithText, nDocs) }
+      // stage row count: observed by the single write, or the sum of the
+      // slice manifests when sliced
+      val rows = if (nSlices <= 1) {
         vtime("segments_write") {
-          buildSegments(docsWithText, nDocs, highDf)
-            .write.mode("overwrite").parquet(paths.segments) }
+          IndexBuilder.writeCounted(buildSegments(docsWithText, nDocs, highDf).toDF(),
+            paths.segments).rows }
       } else {
         // Per-partition resume: independent doc-range slices, each with
         // its own manifest — a kill mid-stage redoes only incomplete
@@ -864,22 +928,16 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
             val ts = System.nanoTime()
             val lo = conf.docIdOffset + 1L + i.toLong * sliceWidth
             val hi = lo + sliceWidth
-            vtime(s"segments_write_slice_$i") {
-              buildSegments(
+            val sliceRows = vtime(s"segments_write_slice_$i") {
+              IndexBuilder.writeCounted(buildSegments(
                 docsWithText.filter($"doc_id" >= lo && $"doc_id" < hi),
-                nDocs, highDf)
-                .write.mode("overwrite").parquet(dir) }
-            writeManifest(dir, sliceFp, spark.read.parquet(dir).count(),
-              (System.nanoTime() - ts) / 1000000)
+                nDocs, highDf).toDF(), dir).rows }
+            writeManifest(dir, sliceFp, sliceRows, (System.nanoTime() - ts) / 1000000)
           }
         }
-      }
-      // stage row count: sum of the slice manifests when sliced (already
-      // counted), one distributed zero-column count otherwise
-      val rows =
-        if (nSlices <= 1) spark.read.parquet(paths.segments).count()
-        else (0 until nSlices)
+        (0 until nSlices)
           .map(i => manifestRows(s"${paths.segments}/slice_$i").getOrElse(0L)).sum
+      }
       writeManifest(paths.segments, fp, rows, (System.nanoTime() - t0) / 1000000,
         Map("salted_terms" -> highDf.size.toString,
           "n_slices" -> nSlices.toString))
@@ -893,16 +951,9 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     // read, with no second shuffle. A group straddling a split seam
     // just yields an extra sub-128 seam chunk (chunk_seq = min_doc_id
     // keeps identities unique and ordered).
-    writeStage2(
-      spark.read.option("recursiveFileLookup", "true")
-        .parquet(paths.segments).as[SegmentRow],
-      nDocs, avgdl, root, fp)
-
-    val nTerms = manifestRows(paths.dictionary).getOrElse(
-      spark.read.parquet(paths.dictionary).count())
-    // total postings = sum of per-term document frequencies (tiny scan)
-    val nPostings = spark.read.parquet(paths.dictionary)
-      .agg(sum($"df")).head().getLong(0)
+    // n_terms and n_postings (= Σdf) come from the dictionary manifest.
+    val (nTerms, nPostings) =
+      writeStage2(readSegments(paths.segments), nDocs, avgdl, root, fp)
     val meta = IndexMeta(nDocs, avgdl, nTerms, nPostings, conf.k1, conf.b)
     IndexBuilder.writeAtomic(paths.meta,
       s"""{"n_docs":$nDocs,"avgdl":$avgdl,"n_terms":$nTerms,""" +
@@ -912,6 +963,40 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
 }
 
 object IndexBuilder {
+
+  /** What a write observed: its row count and the sums of some columns. */
+  private[index] final case class Written(rows: Long, sums: Map[String, Long]) {
+    /** The sums as manifest fields (`<column>_sum`). */
+    def sumFields: Map[String, String] =
+      sums.map { case (c, v) => s"${c}_sum" -> v.toString }
+  }
+
+  /** Writes `df` as parquet at `dir` (overwrite) and returns the rows it
+    * wrote and the sums of `sumCols`, observed by the write itself: an
+    * [[org.apache.spark.sql.Observation]] sits at the top of the plan,
+    * after its last exchange, so it adds no job, a range-sampling job
+    * below it never evaluates it, and only each partition's successful
+    * task attempt counts (retried tasks are not double-counted).
+    * `maxRecordsPerFile` > 0 caps the rows of each written file.
+    */
+  private[index] def writeCounted(df: DataFrame, dir: String,
+      sumCols: Seq[String] = Nil, maxRecordsPerFile: Long = 0L): Written = {
+    val obs = Observation()
+    val writer = df.observe(obs, count(lit(1)).as("rows"),
+      sumCols.map(c => sum(col(c)).as(c)): _*).write.mode("overwrite")
+    (if (maxRecordsPerFile > 0) writer.option("maxRecordsPerFile", maxRecordsPerFile)
+     else writer).parquet(dir)
+    val m = obs.get
+    Written(m("rows").asInstanceOf[Long],
+      sumCols.map(c => c -> Option(m(c)).fold(0L)(_.asInstanceOf[Long])).toMap)
+  }
+
+  /** Mean document length: Σdoc_len / n_docs — the value Spark's
+    * avg(doc_len) computes (integer sums are exact in a double below
+    * 2^53), and the expression the oracle uses.
+    */
+  private[index] def avgdl(docLenSum: Long, nDocs: Long): Double =
+    docLenSum.toDouble / nDocs
 
   /** Marker file inside a fuzzy_dD dir holding [[tableToken]] of the
     * dictionary it was derived from.

@@ -41,30 +41,40 @@ object RangeRank {
     0
   }
 
+  /** A ranked relation: `df` carries the rank column, `rows` is its row
+    * count, and `single` says the small-relation path produced it as ONE
+    * partition sorted by the key.
+    */
+  final case class Ranked(df: DataFrame, rows: Long, single: Boolean)
+
   /** Returns `df` with an extra LongType column `rankCol` = dense 1-based
-    * rank of the row under ascending `keyCols` order. Rows must be UNIQUE
-    * on keyCols (postings/doc identity guarantees this at call sites).
+    * rank of the row under ascending `keyCols` order, with its row count
+    * and partition shape. Rows must be UNIQUE on keyCols (postings/doc
+    * identity guarantees this at call sites).
     */
   def withRank(df: DataFrame, keyCols: Seq[String], rankCol: String,
       numParts: Int, sampleSeed: Long = 42L,
-      smallThreshold: Long = 0L): DataFrame = {
+      smallThreshold: Long = 0L): Ranked = {
     val spark = df.sparkSession
     val total = df.count()
-    if (total == 0) return df.withColumn(rankCol, lit(0L))
+    if (total == 0) return Ranked(df.withColumn(rankCol, lit(0L)), 0L, single = false)
 
     // Opt-in small-relation fast path (narrow rows only, e.g. the term
     // dictionary): a single sorted partition, skipping the sample +
-    // per-range count jobs. Above the threshold (or when rows are wide,
-    // like documents with text), the scalable boundary path runs.
+    // per-range count jobs. It stays ONE partition: a caller that wants
+    // several files bounds the file size at the write (maxRecordsPerFile),
+    // which keeps every file key-contiguous without a second shuffle.
+    // Above the threshold (or when rows are wide, like documents with
+    // text), the scalable boundary path runs.
     if (total <= smallThreshold) {
       val sortCols = keyCols.map(col)
       val sorted = df.repartition(1).sortWithinPartitions(sortCols: _*)
       val outSchema = sorted.schema.add(rankCol, org.apache.spark.sql.types.LongType)
       implicit val enc = Encoders.row(outSchema)
-      return sorted.mapPartitions { it =>
+      return Ranked(sorted.mapPartitions { it =>
         var counter = 0L
         it.map { r => counter += 1L; Row.fromSeq(r.toSeq :+ counter) }
-      }.repartition(numParts)
+      }, total, single = true)
     }
 
     // 1. explicit boundaries from a driver-collected sample
@@ -112,7 +122,7 @@ object RangeRank {
     val outSchema = parted.schema.add(rankCol, org.apache.spark.sql.types.LongType)
     implicit val enc = Encoders.row(outSchema)
     val partIdx = parted.schema.fieldIndex("__part")
-    parted.mapPartitions { it =>
+    Ranked(parted.mapPartitions { it =>
       var curPart = -1
       var counter = 0L
       it.map { r =>
@@ -121,6 +131,6 @@ object RangeRank {
         counter += 1L
         Row.fromSeq(r.toSeq :+ counter)
       }
-    }.drop("__part")
+    }.drop("__part"), total, single = false)
   }
 }

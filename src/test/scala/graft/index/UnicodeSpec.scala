@@ -89,7 +89,7 @@ class UnicodeSpec extends SparkSpecBase {
     val df = terms.toDF("term")
     // smallThreshold = 0 forces the sampled-boundary + offset path
     val ranked = RangeRank.withRank(df, Seq("term"), "rank", numParts = 8,
-      smallThreshold = 0L)
+      smallThreshold = 0L).df
       .collect().map(r => r.getAs[String]("term") -> r.getAs[Long]("rank"))
     val want = terms.sorted(graft.core.Tokenizer.utf8Ordering)
       .zipWithIndex.map { case (t, i) => t -> (i + 1L) }.toMap

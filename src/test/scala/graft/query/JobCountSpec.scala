@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions.col
 
 import graft.SparkSpecBase
 import graft.corpus.Transcripts
-import graft.index.{Generations, IndexBuilder, IndexConf}
+import graft.index.{Compactor, Generations, IndexBuilder, IndexConf}
 
 /** Spark jobs per warm query on the catalog-scale serving paths — the
   * plans above the driver-local gate (`localMaxPostings = 0`) with
@@ -17,6 +17,12 @@ import graft.index.{Generations, IndexBuilder, IndexConf}
   * with tombstones alike. The index carries no bigrams, so handleQuery's
   * overlapped bigram probe (a job on another thread) never runs and the
   * count stays exact.
+  *
+  * The index writes have budgets too: a build (one slice and two resume
+  * slices), an upsert, a delete and a two-generation merge over the same
+  * corpus. Each budget is the count the write takes with row counts and
+  * meta statistics observed by the writes themselves; the comment beside
+  * it gives the count when every stage re-read its output to count it.
   */
 class JobCountSpec extends SparkSpecBase with JobCounting {
 
@@ -75,4 +81,39 @@ class JobCountSpec extends SparkSpecBase with JobCounting {
       e.handleQuery(q, 10).collect()
       assert(e.lastHandlePath == "pruned", s"expected the pruned tiers, got ${e.lastHandlePath}")
     }
+
+  /** One write, measured from a cold start of its own Spark jobs. */
+  private def writeJobs(label: String, budget: Int)(write: => Unit): Unit = {
+    val n = jobsOf(write)
+    info(s"$label: $n jobs (budget $budget)")
+    assert(n <= budget, s"$label ran $n jobs, budget $budget")
+  }
+
+  for ((slices, budget) <- Seq((1, 27), (2, 29))) // re-reading: 53 and 58
+    test(s"job budget of IndexBuilder.build, resumeSlices = $slices") {
+      import spark.implicits._
+      val ds = spark.createDataset(allTurns)
+      val c = conf.copy(resumeSlices = slices)
+      writeJobs(s"build, $slices slice(s)", budget) {
+        new IndexBuilder(spark, lemmas, c).build(ds, tmpDir("graft-jobs-build"))
+      }
+    }
+
+  test("job budgets of Generations.upsert, deleteDocs and Compactor.mergeSmallest") {
+    import spark.implicits._
+    val root = tmpDir("graft-jobs-writes")
+    val (base, fresh) = allTurns.splitAt(allTurns.size / 2)
+    Generations.append(spark, spark.createDataset(base), root, lemmas, conf)
+    // new conversations plus corrected turns of live ones
+    val corrected = base.take(30).map(t => t.copy(text = t.text + " corrected"))
+    writeJobs("upsert", 34) { // re-reading: 63
+      Generations.upsert(spark, spark.createDataset(fresh ++ corrected), root, lemmas, conf)
+    }
+    writeJobs("deleteDocs", 2) { // re-reading: 5
+      Generations.deleteDocs(spark, spark.createDataset(Seq(5L, 50L, 500L)), root)
+    }
+    writeJobs("mergeSmallest", 21) { // re-reading: 49
+      Compactor.mergeSmallest(spark, root, 2, lemmas, conf)
+    }
+  }
 }
