@@ -469,20 +469,17 @@ object Bench {
     // candidates, the pruning-hostile shape) plus a stopword tail, with
     // the block-max path forced on, vs the direct path on the same query.
     val midQ = Seq(Transcripts.contentWords(2), "the", "of", "and")
-    engine.localMaxPostings = 0L
-    engine.wandMinPostings = 1L
+    val forced = engine.withConfig(_.copy(localMaxPostings = 0L, wandMinPostings = 1L))
     results("bm25_middf_wand_sec") = (1 to 2).map { _ =>
       val t0 = System.nanoTime()
-      engine.bm25TopKForTerms(midQ, 10, useWand = true).collect()
+      forced.bm25TopKForTerms(midQ, 10, useWand = true).collect()
       (System.nanoTime() - t0) / 1e9
     }.min
     results("bm25_middf_direct_sec") = (1 to 2).map { _ =>
       val t0 = System.nanoTime()
-      engine.bm25TopKForTerms(midQ, 10, useWand = false).collect()
+      forced.bm25TopKForTerms(midQ, 10, useWand = false).collect()
       (System.nanoTime() - t0) / 1e9
     }.min
-    engine.localMaxPostings = 20000L
-    engine.wandMinPostings = 100000L
 
     // ---- stopword-led phrase: exercises the ascending-df positional
     // join order (a query-order join would drag the stopword's full

@@ -499,26 +499,14 @@ object GraftQueries {
     // then the q07 rounded-score reorder for boundary stability.
     "q24_bm25_wand" -> ((s, dir) => {
       val eng = engineFor(s, dir)
-      // knobs restored after the EAGER wand pass (wand materializes
-      // internally, so the forced-pruning path has already run by the
-      // finally): the engine instance is cached per session now and a
-      // leaked localMaxPostings=0 would silently reroute every later
-      // query on the same engine
-      val (lmpBefore, wmpBefore) = (eng.localMaxPostings, eng.wandMinPostings)
-      eng.localMaxPostings = 0
-      eng.wandMinPostings = 1
+        .withConfig(_.copy(localMaxPostings = 0, wandMinPostings = 1))
       // buffer of 200: the rounded-score reorder below can only diverge
       // from the oracle if a single rounded-value tie group spans the
       // exact-score cut, i.e. >190 docs sharing one 4-decimal score at
       // the boundary
-      val top =
-        try eng.bm25TopKForTerms(Seq("the", "query", "join"), 200,
-          useWand = true)
-          .select(col("doc_id"), round(col("score"), 4).as("score"))
-        finally {
-          eng.localMaxPostings = lmpBefore
-          eng.wandMinPostings = wmpBefore
-        }
+      val top = eng.bm25TopKForTerms(Seq("the", "query", "join"), 200,
+        useWand = true)
+        .select(col("doc_id"), round(col("score"), 4).as("score"))
       withOrigDocId(eng, top)
         .orderBy(col("score").desc, col("doc_id").asc).limit(10)
         .select("doc_id", "score")

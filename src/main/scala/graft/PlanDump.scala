@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.corpus.Transcripts
 import graft.index.{IndexBuilder, IndexConf}
-import graft.query.QueryEngine
+import graft.query.{EngineConfig, QueryEngine}
 
 /** Writes docs/PLANS.md: `explain("formatted")` captures of the headline
   * physical plans, with the scale-relevant features annotated.
@@ -79,17 +79,18 @@ object PlanDump {
       "byte is decoded). Before the fusion this was one typed sub-plan " +
       "PER GENERATION and warm p50 grew near-linearly with fan-out " +
       "(3.73 s @8 gens -> 0.86 s, BENCH.md round-5 addendum).") {
-      val m = new graft.index.MultiGenEngine(spark, delRoot(), Transcripts.lemmas)
-      m.localMaxPostings = 0L // the distributed read, not the driver-local gate
-      m.bm25TopKForTerms(Seq("the", "of"), 10)
+      // the distributed read, not the driver-local gate
+      new graft.index.MultiGenEngine(spark, delRoot(), Transcripts.lemmas,
+        EngineConfig(localMaxPostings = 0L))
+        .bm25TopKForTerms(Seq("the", "of"), 10)
     }
     cap("Takedown-wave fallback (tombstones above liveDocsCap)",
       "Above the cap the filter becomes a distributed anti-join against " +
       "the del-* parquet (BroadcastHashJoin LeftAnti while the wave " +
       "fits the broadcast threshold — AQE-routed, shuffled beyond it).") {
-      val m = new graft.index.MultiGenEngine(spark, delRoot(), Transcripts.lemmas)
-      m.liveDocsCap = 0L
-      m.conjunctive(Seq("the"))
+      new graft.index.MultiGenEngine(spark, delRoot(), Transcripts.lemmas,
+        EngineConfig(liveDocsCap = 0L))
+        .conjunctive(Seq("the"))
     }
     cap("Exact dedup",
       "groupBy(content_hash) with map-side partial aggregation + join " +

@@ -184,7 +184,7 @@ object Generations {
     val gens = genDirs(root)
     require(gens.nonEmpty, s"no generations under $root")
     val ids = gens
-      .map(g => spark.read.parquet(IndexPaths(g).docs)
+      .map(g => IndexBuilder.readDocs(spark, IndexPaths(g).docs)
         .filter(pred).select("doc_id"))
       .reduce(_ unionByName _)
       .as[Long]
@@ -254,13 +254,14 @@ object Generations {
     * goes through the semi-join; the literal filter only prunes IO.
     * Batches with > [[upsertProbeMaxLiterals]] distinct conversations
     * fall back to the un-pruned semi-join (predicate trees that large
-    * stop paying, the chunkInMaxLiterals rationale).
+    * stop paying, the `EngineConfig.chunkInMaxLiterals` rationale).
     */
   private[index] def docIdsForKeys(spark: SparkSession, gens: Seq[String],
       keys: DataFrame): DataFrame = {
     import spark.implicits._
-    // clamped like handleQueryClaimCap: cap + 1 at Int.MaxValue would
-    // overflow to a negative limit and throw at analysis time
+    // clamped like `EngineConfig.handleQueryClaimCap`: cap + 1 at
+    // Int.MaxValue would overflow to a negative limit and throw at
+    // analysis time
     val cap = math.min(upsertProbeMaxLiterals, Int.MaxValue - 1)
     val convIds = keys.select($"conv_id").distinct()
       .limit(cap + 1).as[String].collect()
@@ -269,7 +270,7 @@ object Generations {
         df => df.filter($"conv_id".isin(convIds.toSeq: _*))
       else identity _
     gens
-      .map(g => prune(spark.read.parquet(IndexPaths(g).docs))
+      .map(g => prune(IndexBuilder.readDocs(spark, IndexPaths(g).docs))
         .join(keys, Seq("conv_id", "turn_idx"), "left_semi")
         .select("doc_id"))
       .reduce(_ unionByName _)
@@ -362,12 +363,11 @@ object Compactor {
     // manifested like every other stage so a resumed compaction skips it
     if (!builder.manifestComplete(paths.docs, fp)) {
       val t0 = System.nanoTime()
-      // allowMissingColumns: a root whose generations straddle the
-      // docs-schema ts addition (v6) compacts with null ts for the
-      // older generations instead of failing the union
+      // readDocs: a root whose generations straddle the docs-schema ts
+      // addition (v6) compacts with null ts for the older generations
       val written = IndexBuilder.writeCounted(
-        purge(gens.map(g => spark.read.parquet(IndexPaths(g).docs))
-          .reduce(_.unionByName(_, allowMissingColumns = true))),
+        purge(gens.map(g => IndexBuilder.readDocs(spark, IndexPaths(g).docs))
+          .reduce(_ unionByName _)),
         paths.docs, Seq("doc_len"))
       builder.writeManifest(paths.docs, fp, written.rows,
         (System.nanoTime() - t0) / 1000000, written.sumFields)
@@ -387,7 +387,7 @@ object Compactor {
       .repartition(conf.numParts, $"term", $"salt")
       .sortWithinPartitions($"term", $"salt", $"doc_id")
     val (nDocs, docLenSum) = builder.rowsAndSum(paths.docs, "doc_len",
-      spark.read.parquet(paths.docs))
+      IndexBuilder.readDocs(spark, paths.docs))
     val avgdl = IndexBuilder.avgdl(docLenSum, nDocs)
     val (nTerms, nPostings) = builder.writeStage2(segs, nDocs, avgdl, outDir, fp)
     val meta = IndexMeta(nDocs, avgdl, nTerms, nPostings, conf.k1, conf.b)
@@ -510,8 +510,8 @@ object Compactor {
     if (!builder.manifestComplete(paths.docs, fp)) {
       val t0 = System.nanoTime()
       val written = IndexBuilder.writeCounted(
-        sources.map(g => spark.read.parquet(IndexPaths(g).docs))
-          .reduce(_.unionByName(_, allowMissingColumns = true)),
+        sources.map(g => IndexBuilder.readDocs(spark, IndexPaths(g).docs))
+          .reduce(_ unionByName _),
         paths.docs, Seq("doc_len"))
       builder.writeManifest(paths.docs, fp, written.rows,
         (System.nanoTime() - t0) / 1000000, written.sumFields)
@@ -533,7 +533,7 @@ object Compactor {
     }
 
     val (nDocs, docLenSum) = builder.rowsAndSum(paths.docs, "doc_len",
-      spark.read.parquet(paths.docs))
+      IndexBuilder.readDocs(spark, paths.docs))
     val avgdl = IndexBuilder.avgdl(docLenSum, nDocs)
     // stage 2 shares the fresh-build writer: the persisted merged
     // segments read back in stage-1 layout, chunked directly (no second

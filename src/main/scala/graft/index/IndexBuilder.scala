@@ -128,8 +128,7 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
       .map { case (conv, turn, role, text, ts, docId) =>
         val dl = Tokenizer.tokenize(text, lem.value).length
         (docId + offset, conv, turn, role, dl, text, ts)
-      }.toDF("doc_id", "conv_id", "turn_idx", "role", "doc_len", "text",
-        "ts")
+      }.toDF(IndexBuilder.DocsSchema.fieldNames.toSeq: _*)
   }
 
   // ------------------------------------------------------------- stage 1
@@ -451,26 +450,18 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
       }.toDF())
   }
 
-  /** Re-opens a table the builder wrote with `schema` (the schema it
-    * wrote, as parquet stores it: every column nullable), skipping the
-    * footer-inference job a schema-less read starts.
-    */
-  private def reopen(dir: String, schema: StructType,
-      recursive: Boolean = false): DataFrame =
-    spark.read.schema(StructType(schema.fields.map(_.copy(nullable = true))))
-      .option("recursiveFileLookup", recursive.toString).parquet(dir)
-
   /** The dictionary table at `dir`, opened with the schema the builder
     * writes.
     */
   private def readDictionary(dir: String): DataFrame =
-    reopen(dir, Encoders.product[DictRow].schema)
+    IndexBuilder.reopen(spark, dir, Encoders.product[DictRow].schema)
 
   /** The segments table at `dir` (a single dir or slice dirs), opened
     * with the schema the builder writes.
     */
   private[index] def readSegments(dir: String): Dataset[SegmentRow] =
-    reopen(dir, Encoders.product[SegmentRow].schema, recursive = true).as[SegmentRow]
+    IndexBuilder.reopen(spark, dir, Encoders.product[SegmentRow].schema, recursive = true)
+      .as[SegmentRow]
 
   /** Term boundaries for `nRanges` stage-2 postings ranges, read from
     * the COMPLETED dictionary (terms at term_id r*width+1): range r =
@@ -865,7 +856,7 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     // its row count and Σdoc_len; the manifest records both, so n_docs
     // and avgdl never cost a pass over the docs table.
     val docsWithText =
-      if (manifestComplete(paths.docs, fp)) spark.read.parquet(paths.docs)
+      if (manifestComplete(paths.docs, fp)) IndexBuilder.readDocs(spark, paths.docs)
       else {
         val t0 = System.nanoTime()
         val docs = buildDocs(turns)
@@ -873,7 +864,7 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
           IndexBuilder.writeCounted(docs, paths.docs, Seq("doc_len")) }
         writeManifest(paths.docs, fp, written.rows,
           (System.nanoTime() - t0) / 1000000, written.sumFields)
-        reopen(paths.docs, docs.schema)
+        IndexBuilder.readDocs(spark, paths.docs)
       }
     val (nDocs, docLenSum) = rowsAndSum(paths.docs, "doc_len", docsWithText)
     // clear error instead of a NaN avgdl — streaming callers
@@ -963,6 +954,31 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
 }
 
 object IndexBuilder {
+
+  /** The docs table's columns as [[IndexBuilder.buildDocs]] writes them. */
+  val DocsSchema: StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("doc_id", LongType), StructField("conv_id", StringType),
+      StructField("turn_idx", IntegerType), StructField("role", StringType),
+      StructField("doc_len", IntegerType), StructField("text", StringType),
+      StructField("ts", TimestampType)))
+  }
+
+  /** Re-opens a table the builder wrote with `schema` (the schema it
+    * wrote, as parquet stores it: every column nullable), skipping the
+    * footer-inference job a schema-less read starts.
+    */
+  private[index] def reopen(spark: SparkSession, dir: String, schema: StructType,
+      recursive: Boolean = false): DataFrame =
+    spark.read.schema(StructType(schema.fields.map(_.copy(nullable = true))))
+      .option("recursiveFileLookup", recursive.toString).parquet(dir)
+
+  /** The docs table at `dir` (a single index or one generation), opened
+    * with [[DocsSchema]]. A table written before `ts` joined the schema
+    * reads it as null.
+    */
+  def readDocs(spark: SparkSession, dir: String): DataFrame =
+    reopen(spark, dir, DocsSchema)
 
   /** What a write observed: its row count and the sums of some columns. */
   private[index] final case class Written(rows: Long, sums: Map[String, Long]) {

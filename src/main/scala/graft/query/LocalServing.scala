@@ -29,9 +29,9 @@ final class TermPostings(val docIds: Array[Long], val tfs: Array[Int], val dls: 
 /** Driver-local query evaluation over decoded postings: pure functions,
   * no Spark. The engine collects the chunk rows of every term a call
   * needs in ONE job (when their total df fits under
-  * `localMaxPostings`) and answers from them here — the reference's
-  * one-process evaluation of phrase intersection and the three-tier
-  * handle_query (positional_intersect/mod.rs:11-35,
+  * `EngineConfig.localMaxPostings`) and answers from them here — the
+  * reference's one-process evaluation of phrase intersection and the
+  * three-tier handle_query (positional_intersect/mod.rs:11-35,
   * search_engine/mod.rs:118-206).
   *
   * Every function reproduces its distributed counterpart bit for bit:

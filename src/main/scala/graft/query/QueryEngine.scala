@@ -68,7 +68,7 @@ final class IndexReader(spark: SparkSession, val root: String) {
   private[query] def localDictionary: java.util.HashMap[String, DictRow] = dictLocalMap.get
 
   /** Materialize the dictionary as a driver hash map when `meta.n_terms`
-    * fits under `cap` (see [[QueryEngine.dictLocalCap]]), else fall back
+    * fits under `cap` (see [[EngineConfig.dictLocalCap]]), else fall back
     * to [[warmDictionary]]. Returns whether the map was installed.
     */
   def warmDictionaryLocal(cap: Long): Boolean = {
@@ -362,40 +362,42 @@ final class IndexReader(spark: SparkSession, val root: String) {
   *    TakeOrderedAndProject — a distributed bounded heap (the reference's
   *    BinaryHeap, src/scoring/mod.rs:6-31, with a deterministic tie-break).
   */
-class QueryEngine(spark: SparkSession, root: String,
-    lemmas: Map[String, String] = Map.empty) {
+class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
+    shared: QueryEngine.Shared, val conf: EngineConfig) {
   import spark.implicits._
 
+  /** An engine over `root` (a built index or a generations root) with
+    * the tuning values `conf`.
+    */
+  def this(spark: SparkSession, root: String, lemmas: Map[String, String] = Map.empty,
+      conf: EngineConfig = EngineConfig()) =
+    this(spark, lemmas, new QueryEngine.Shared(spark, root), conf)
+
+  /** An engine over the same root with the config `f(conf)`; this engine
+    * is unchanged. No Spark job runs: the new engine shares this one's
+    * readers (their warmed dictionaries and driver maps included), the
+    * tombstone relation and the multi-reader relations. Only the
+    * collected tombstone array, which depends on
+    * [[EngineConfig.liveDocsCap]], is collected again on first use.
+    */
+  def withConfig(f: EngineConfig => EngineConfig): QueryEngine =
+    new QueryEngine(spark, lemmas, shared, f(conf))
+
   /** The index directories served, in generation order. */
-  val gens: Seq[String] = Generations.servingDirs(root)
-  require(gens.nonEmpty,
-    s"$root holds neither index_meta.json nor complete gen-* directories")
-  val readers: Seq[IndexReader] = gens.map(new IndexReader(spark, _))
+  val gens: Seq[String] = shared.gens
+  val readers: Seq[IndexReader] = shared.readers
 
   /** The per-generation readers (each answers `lookupTerms` with its
     * own local rows).
     */
   def engines: Seq[IndexReader] = readers
 
-  // one set of BM25 constants across generations (chunk max_impacts are
-  // baked under them, and a global fold cannot mix two k1/b regimes)
-  require(readers.map(r => (r.meta.k1, r.meta.b)).distinct.size == 1,
-    s"generations disagree on BM25 constants: " +
-      readers.map(r => (r.meta.k1, r.meta.b)).distinct.mkString(","))
-
   /** Global statistics: a single index's own meta; over generations,
     * summed n_docs (and n_terms/n_postings, upper bounds), avgdl from
     * the summed corpus length — the same Long-sum / count expression a
     * single build computes, so it round-trips exactly.
     */
-  val meta: IndexMeta =
-    if (readers.size == 1) readers.head.meta
-    else {
-      val ms = readers.map(_.meta)
-      val n = ms.map(_.n_docs).sum
-      IndexMeta(n, ms.map(m => math.round(m.avgdl * m.n_docs)).sum.toDouble / n,
-        ms.map(_.n_terms).sum, ms.map(_.n_postings).sum, ms.head.k1, ms.head.b)
-    }
+  val meta: IndexMeta = shared.meta
   def nDocs: Long = meta.n_docs
   def avgdl: Double = meta.avgdl
 
@@ -405,34 +407,19 @@ class QueryEngine(spark: SparkSession, root: String,
     */
   private def single: IndexReader = {
     require(readers.size == 1,
-      s"$root holds ${readers.size} generations; this call needs one index (compact first)")
+      s"${shared.root} holds ${readers.size} generations; this call needs one index (compact first)")
     readers.head
   }
 
   def dictionary: DataFrame = single.dictionary
 
   /** Every reader's postings as one relation (a multi-path scan). */
-  lazy val postings: DataFrame =
-    if (readers.size == 1) readers.head.postings
-    else spark.read.option("recursiveFileLookup", "true")
-      .parquet(gens.map(g => IndexPaths(g).postings): _*)
+  def postings: DataFrame = shared.postings
 
   /** Every reader's docs table as one relation; doc_ids are globally
     * disjoint, so each doc appears exactly once.
     */
-  lazy val docs: DataFrame =
-    if (readers.size == 1) readers.head.docs
-    else spark.read.parquet(gens.map(g => IndexPaths(g).docs): _*)
-
-  /** Reader index of a postings file path; a closure, so executor code
-    * captures no engine.
-    */
-  private lazy val genOf: String => Int =
-    if (readers.size == 1) _ => 0
-    else {
-      val idx = gens.zipWithIndex.map { case (g, i) => g.split('/').last -> i }.toMap
-      f => idx.getOrElse(Generations.genSegOf(f), -1)
-    }
+  def docs: DataFrame = shared.docs
 
   // ------------------------------------------------------------ deletes
 
@@ -451,29 +438,16 @@ class QueryEngine(spark: SparkSession, root: String,
     * "fixes" it into a per-query df recount (which would need a
     * per-term deleted-df table rebuilt on every delete).
     */
-  val deletedIds: Option[DataFrame] = Generations.deletedDocs(spark, root)
-
-  /** Tombstone sets up to this size are collected ONCE at first use and
-    * served as a broadcast sorted array (the Lucene liveDocs form) —
-    * above it, takedown-wave scale, the per-query filter falls back to
-    * a distributed anti-join and the driver-local gate stays shut. The
-    * array is the right default: a measured 4.2M-turn probe with 420k
-    * tombstones paid a 2.2× median per-query latency through the
-    * anti-join (every fold rebuilds the broadcast hashed relation from
-    * the del-* parquet), vs ~parity for the one-time collected array
-    * probed by binary search inside the fold stage. 2M ids ≈ 16 MB
-    * broadcast, re-shipped per executor like any task broadcast.
-    */
-  var liveDocsCap: Long = 2000000L
+  val deletedIds: Option[DataFrame] = shared.deletedIds
 
   /** The collected liveDocs complement (sorted tombstoned ids), resolved
     * lazily on the first delete-filtered query: None when the root has
-    * no deletes OR the tombstone set outgrew [[liveDocsCap]].
+    * no deletes OR the tombstone set outgrew [[EngineConfig.liveDocsCap]].
     */
   private lazy val deletedLocal: Option[Broadcast[Array[Long]]] =
     deletedIds.flatMap { d =>
       // ONE job: collect cap+1 rows and decide from the length
-      val cap = math.min(liveDocsCap, Int.MaxValue - 2L).toInt
+      val cap = math.min(conf.liveDocsCap, Int.MaxValue - 2L).toInt
       val ids = d.limit(cap + 1).as[Long].collect()
       if (ids.length > cap) None
       else {
@@ -483,10 +457,10 @@ class QueryEngine(spark: SparkSession, root: String,
     }
 
   /** Drop tombstoned doc_ids from `df`; no-op (nothing added to the plan
-    * at all) on roots without deletes. Under [[liveDocsCap]] this is a
-    * binary-search filter against the broadcast sorted array — it fuses
-    * into the surrounding stage with no exchange; above the cap it is a
-    * distributed anti-join against the del-* parquet.
+    * at all) on roots without deletes. Under [[EngineConfig.liveDocsCap]]
+    * this is a binary-search filter against the broadcast sorted array —
+    * it fuses into the surrounding stage with no exchange; above the cap
+    * it is a distributed anti-join against the del-* parquet.
     */
   private def dropDeleted(df: DataFrame): DataFrame =
     deletedIds.fold(df) { d =>
@@ -501,7 +475,7 @@ class QueryEngine(spark: SparkSession, root: String,
 
   /** Driver-side liveness test for the local gate: everything on a root
     * without deletes, the collected tombstone array under
-    * [[liveDocsCap]], None (the gate stays shut) above it.
+    * [[EngineConfig.liveDocsCap]], None (the gate stays shut) above it.
     */
   private def liveLocally: Option[Long => Boolean] =
     if (deletedIds.isEmpty) Some(_ => true)
@@ -564,23 +538,6 @@ class QueryEngine(spark: SparkSession, root: String,
 
   // ---------------------------------------------------------- warming
 
-  /** Lexicon-row cap for [[warmDictionaryLocal]], per reader — gated on
-    * `meta.n_terms` (no job runs to decide). DRIVER SIZING (round-5
-    * verdict finding #5): a resident DictRow costs ~(2 x term chars +
-    * 40 B fields + ~64 B String/entry overhead) ≈ 120-150 B for the
-    * 10-30-char terms natural-language lexicons produce, so the 4M
-    * default budgets ~500-600 MB of driver heap — sized for this
-    * rig's 8 GB driver; set ~n_terms x 150 B <= 5-10% of driver heap
-    * when deploying (a standard 8-16 GB production driver keeps the
-    * default; a 2 GB driver should lower it to ~1M). The gate is a
-    * row count rather than bytes because the meta carries no
-    * term-length statistic — a corpus with pathological multi-KB
-    * "terms" (binary spill, no tokenizer cleaning) underestimates, so
-    * lower the cap there. A 100 TB corpus lexicon (~10^8 terms) fails
-    * the gate and lookups stay distributed pushed probes.
-    */
-  var dictLocalCap: Long = 4000000L
-
   /** Cache every reader's dictionary (always safe: lexicon-sized). */
   def warmDictionary(): this.type = {
     readers.foreach(_.warmDictionary())
@@ -588,16 +545,16 @@ class QueryEngine(spark: SparkSession, root: String,
   }
 
   /** Opt-in serving upgrade: each reader whose lexicon fits under
-    * [[dictLocalCap]] materializes its dictionary as a driver-side hash
-    * map, so every [[lookupTerms]] becomes hash probes instead of Spark
-    * jobs — per-query probe jobs (one PER GENERATION per term set) are
-    * the dominant fixed cost of multi-generation serving (BENCH.md
-    * round 5 fan-out anatomy). A reader above the cap falls back to
-    * a cached distributed probe. Returns whether every reader installed
-    * the map.
+    * [[EngineConfig.dictLocalCap]] materializes its dictionary as a
+    * driver-side hash map, so every [[lookupTerms]] becomes hash probes
+    * instead of Spark jobs — per-query probe jobs (one PER GENERATION
+    * per term set) are the dominant fixed cost of multi-generation
+    * serving (BENCH.md round 5 fan-out anatomy). A reader above the cap
+    * falls back to a cached distributed probe. Returns whether every
+    * reader installed the map.
     */
   def warmDictionaryLocal(): Boolean =
-    readers.map(_.warmDictionaryLocal(dictLocalCap)).forall(identity)
+    readers.map(_.warmDictionaryLocal(conf.dictLocalCap)).forall(identity)
 
   /** [[warmDictionaryLocal]], returning the engine. */
   def warmDictionariesLocal(): this.type = {
@@ -618,79 +575,15 @@ class QueryEngine(spark: SparkSession, root: String,
     this
   }
 
-  // ----------------------------------------------------- tuning knobs
-
-  /** Below this many total postings across the query's terms, block-max
-    * pruning costs more Spark jobs than it saves — score directly. WAND
-    * engages for stopword-scale terms, exactly where it pays off.
-    */
-  var wandMinPostings: Long = 100000L
-
-  /** The driver-local gate: when the total df of every term a call
-    * decodes (unigrams and bigrams together) is at most this, the call
-    * collects those terms' (term_id-pruned) chunk rows from every
-    * reader in ONE Spark job and answers on the driver through
-    * [[LocalServing]] — the exact same formulas, fold order and
-    * tie-breaks, so results are bit-identical (LocalServingSpec). It
-    * covers `bm25TopK`, `handleQuery`, `phraseMatch`,
-    * `searchWithSnippets` (plus one pushed `doc_id IN` job for the
-    * result text) and `bm25ScoresFiltered` / `bm25TopKFiltered` (plus
-    * one pushed job that runs the predicate over the docs those
-    * postings hold), on single and generation roots alike; tombstoned
-    * docs are dropped at decode (the gate stays shut above
-    * [[liveDocsCap]]). Driver memory is bounded by this many postings;
-    * the positional kinds (phrase, tiered, snippets) also ship
-    * `pos_blob`, whose size grows with the collected terms' cf. 0
-    * disables: every call then runs its distributed plan.
-    */
-  var localMaxPostings: Long = 20000L
+  // ------------------------------------------------------ plan choice
 
   private def servesLocally(entries: Seq[DictRow]): Boolean =
-    localMaxPostings > 0 && entries.iterator.map(_.df).sum <= localMaxPostings &&
+    conf.localMaxPostings > 0 &&
+      entries.iterator.map(_.df).sum <= conf.localMaxPostings &&
       liveLocally.isDefined
 
-  /** Above this many surviving chunks, chunk pruning switches from a
-    * literal `chunk_seq IN (...)` pushed filter to a broadcast LEFT SEMI
-    * join on (term_id, chunk_seq) — a 100k-literal filter makes Parquet
-    * row-group stats evaluation itself the bottleneck on a wide cluster.
-    * The same bound routes the snippet text lookup.
-    */
-  var chunkInMaxLiterals: Int = 1000
-
-  /** Above this fraction of surviving chunks, the scoring read skips the
-    * pruning join entirely (read everything; rely on the per-posting
-    * candidate filter). Tests raise it past 1.0 to force the join form
-    * at small corpus sizes where candidates are always chunk-dense.
-    */
-  var chunkPruneDenseFraction: Double = 0.9
-
-  /** Max tier-1 MaxScore candidates worth broadcasting for chunk
-    * skipping; above it the exact unpruned plan is cheaper. The guard is
-    * a `limit(cap + 1).collect()` — a CollectLimit whose driver transfer
-    * is BOUNDED BY THE CAP (cap+1 rows, ~tens of MB at the default),
-    * never the candidate relation's full size: an essential mid-df term
-    * (df ~ 10^9 at 10^12 docs) ships at most cap+1 of its rows before
-    * the fallback fires, and the success path collects the same rows
-    * anyway (routing + materialization in one job). Raising the knob
-    * raises the driver bill linearly — it is a driver-memory budget, not
-    * a free threshold. Tests lower it to force the fallback.
-    */
-  var wandCandidateCap: Long = 2000000L
-
-  /** Max chunk-metadata rows the candidate-pruning pre-pass may collect
-    * on the driver. The bound is checked with DRIVER-SIDE arithmetic
-    * (min(total chunks, candidates × (reader, term) pairs)) before any
-    * job runs; above it, survivors are computed distributed and applied
-    * as a left-semi join with no driver materialization.
-    */
-  var chunkMetaCollectCap: Double = 2e6
-
-  /** Tier-1 candidate count above which the theta-refinement pass runs
-    * (with a 50·k floor). <= 0 forces refinement on every pruned query —
-    * a test knob: the refined cut must stay rank-identical to the exact
-    * path at ANY candidate count for the pruning to be trustworthy.
-    */
-  var refineMinCandidates: Long = 20000L
+  private def positionalPruningPays(minDf: Long): Boolean =
+    minDf <= conf.phraseMaxCandidates && minDf * conf.positionalPruneDensity < meta.n_docs
 
   /** Diagnostic: which path the last top-k took — "local" (driver-local
     * gate), "pruned", "fallback-cap" (tier-1 over wandCandidateCap),
@@ -698,57 +591,16 @@ class QueryEngine(spark: SparkSession, root: String,
     */
   var lastWandPath: String = ""
 
-  /** Test/diagnostic hook: the pruned top-k is eager (returns a
-    * LocalRelation), so plan assertions on its RESULT are vacuous — with
-    * this flag set, the executed physical plan of the internal scoring
-    * DataFrame is recorded in [[lastWandPlan]] before collection.
+  /** Diagnostic: the executed physical plan of the last pruned top-k's
+    * internal scoring DataFrame, recorded when
+    * [[EngineConfig.captureWandPlan]] is set.
     */
-  var captureWandPlan: Boolean = false
   var lastWandPlan: String = ""
-
-  /** Claimed-doc cap for handleQuery's PRUNED tier construction: when
-    * the phrase + bigram-conjunctive doc sets are each within this
-    * bound they are collected and the unigram tier runs through the
-    * block-max top-k machinery; above it the full exact-scoring form
-    * runs (a query whose phrase matches millions of docs is scoring
-    * stopword-scale sets anyway). Driver memory bound: two collects of
-    * <= cap+1 longs (~2.4 MB each at the default). 300k measured ~20%
-    * faster than the exact form for a 125k-claimed stopword-led phrase
-    * at 4.2M docs (pruned+adaptive tier 2, bit-identical results —
-    * BENCH.md round 5). -1 forces the exact form.
-    */
-  var handleQueryClaimCap: Int = 300000
-
-  /** Per-engine adaptive-guess floor for handleQuery's unclaimed-top-k
-    * (round-5 verdict finding #4: the old object-level knob was shared
-    * by every engine in the JVM). -1 (default) falls back to
-    * `TieredQuery.guessFloor`, the process default / test hook.
-    */
-  var handleQueryGuessFloor: Int = -1
 
   /** Diagnostic: "local" | "pruned" | "exact" form taken by the last
     * handleQuery.
     */
   var lastHandlePath: String = ""
-
-  /** Max doc-intersection size for the candidate-pruned positional plan;
-    * above it (an all-stopword phrase over most of the corpus) the plan
-    * falls back to the shuffle-join form instead of a driver collect.
-    */
-  var phraseMaxCandidates: Long = 2000000L
-
-  /** The candidate-pruned positional plan only pays when the doc
-    * intersection is SPARSE relative to chunk doc-ranges — a candidate
-    * set of c docs touches ~1 - (1 - c/N)^width of a dense term's chunks
-    * (width ≈ N / (df/128)), so above ~N/density candidates nearly every
-    * chunk survives and the pre-passes are pure overhead. Below the
-    * ratio, positions of a stopword are read for a few % of its chunks.
-    * `positionalPruneDensity` = 0 forces the pruned plan (tests).
-    */
-  var positionalPruneDensity: Long = 256L
-
-  private def positionalPruningPays(minDf: Long): Boolean =
-    minDf <= phraseMaxCandidates && minDf * positionalPruneDensity < meta.n_docs
 
   // ------------------------------------------------------ postings reads
 
@@ -786,16 +638,17 @@ class QueryEngine(spark: SparkSession, root: String,
     * Survivors are collected only when the driver-known bound — a
     * candidate doc lies in at most one chunk per pair, so survivors <=
     * min(total chunks, candidates × pairs) — fits
-    * [[chunkMetaCollectCap]]; they then prune `withFile` through a
-    * pushed `chunk_seq IN` (up to [[chunkInMaxLiterals]]) or a broadcast
-    * left-semi join. Above the cap the pre-pass stays a distributed
-    * left-semi join with no driver materialization. Returns the pruned
+    * [[EngineConfig.chunkMetaCollectCap]]; they then prune `withFile`
+    * through a pushed `chunk_seq IN` (up to
+    * [[EngineConfig.chunkInMaxLiterals]]) or a broadcast left-semi join.
+    * Above the cap the pre-pass stays a distributed left-semi join with
+    * no driver materialization. Returns the pruned
     * rows and the collected survivor count (None when not collected).
     */
   private def candidateChunks(withFile: DataFrame, pairs: Seq[(Int, DictRow)],
       bcCand: Broadcast[Array[Long]]): (DataFrame, Option[Int]) = {
     val valid = pairs.map { case (gi, l) => (gi, l.term_id) }.toSet
-    val gi = genOf
+    val gi = shared.genOf
     val metaPairs = withFile
       .select($"_file", $"term_id", $"chunk_seq", $"min_doc_id", $"max_doc_id")
       .as[(String, Long, Long, Long, Long)]
@@ -803,13 +656,13 @@ class QueryEngine(spark: SparkSession, root: String,
         QueryEngine.rangeHasCandidate(c._4, c._5, bcCand.value))
       .select($"term_id", $"chunk_seq")
     val survBound = math.min(chunksOf(pairs), bcCand.value.length.toDouble * valid.size)
-    if (survBound > chunkMetaCollectCap)
+    if (survBound > conf.chunkMetaCollectCap)
       (withFile.join(metaPairs.toDF("term_id", "chunk_seq"), Seq("term_id", "chunk_seq"),
         "left_semi"), None)
     else {
       val survivors = metaPairs.as[(Long, Long)].collect()
       val pruned =
-        if (survivors.length <= chunkInMaxLiterals)
+        if (survivors.length <= conf.chunkInMaxLiterals)
           withFile.filter($"chunk_seq".isin(survivors.map(_._2).distinct.toSeq: _*))
         else
           withFile.join(broadcast(survivors.toSeq.toDF("term_id", "chunk_seq")),
@@ -837,11 +690,11 @@ class QueryEngine(spark: SparkSession, root: String,
     val rows = bcCand.fold(withFile) { bc =>
       val locals = pairs.map { case (gi, l, _) => (gi, l) }
       val (pruned, survivors) = candidateChunks(withFile, locals, bc)
-      if (survivors.exists(_ > chunkPruneDenseFraction * chunksOf(locals))) withFile
+      if (survivors.exists(_ > conf.chunkPruneDenseFraction * chunksOf(locals))) withFile
       else pruned
     }
     // local copies: the closure must not capture the engine
-    val gi = genOf
+    val gi = shared.genOf
     val (avg, k1, b) = (meta.avgdl, meta.k1, meta.b)
     Some(dropDeleted(rows
       .select($"_file", $"term_id", $"min_doc_id", $"max_doc_id",
@@ -870,7 +723,7 @@ class QueryEngine(spark: SparkSession, root: String,
   private def docIdsOf(pairs: Seq[(Int, DictRow)]): DataFrame = {
     if (pairs.isEmpty) return Seq.empty[Long].toDF("doc_id")
     val valid = pairs.map { case (g, l) => (g, l.term_id) }.toSet
-    val gi = genOf
+    val gi = shared.genOf
     postingsWithFile(pairs.map(_._2.term_id))
       .select($"_file", $"term_id", $"n_postings", $"doc_gaps")
       .as[(String, Long, Int, Array[Byte])]
@@ -888,7 +741,7 @@ class QueryEngine(spark: SparkSession, root: String,
       bcCand: Option[Broadcast[Array[Long]]]): DataFrame = {
     if (pairs.isEmpty) return Seq.empty[(Long, Seq[Int])].toDF("doc_id", "positions")
     val valid = pairs.map { case (g, l) => (g, l.term_id) }.toSet
-    val gi = genOf
+    val gi = shared.genOf
     val withFile = postingsWithFile(pairs.map(_._2.term_id))
     val pruned = bcCand.fold(withFile)(bc => candidateChunks(withFile, pairs, bc)._1)
     pruned
@@ -930,7 +783,7 @@ class QueryEngine(spark: SparkSession, root: String,
         if (readers.size == 1) (postings.filter($"term_id".isin(termIds: _*)), $"term_id")
         else {
           val key = pairs.map { case (g, l, e) => (g, l.term_id) -> e.term_id }.toMap
-          val gi = genOf
+          val gi = shared.genOf
           (postingsWithFile(termIds),
             udf((file: String, termId: Long) => key.getOrElse((gi(file), termId), -1L))
               .apply($"_file", $"term_id"))
@@ -992,7 +845,7 @@ class QueryEngine(spark: SparkSession, root: String,
   }
 
   /** The top-k dispatch: driver-local under the gate, block-max pruned
-    * above [[wandMinPostings]], else direct — identical results.
+    * above [[EngineConfig.wandMinPostings]], else direct — identical results.
     */
   private def topKFromEntries(st: TermStats, es: Seq[DictRow], k: Int,
       useWand: Boolean = true): DataFrame =
@@ -1002,7 +855,7 @@ class QueryEngine(spark: SparkSession, root: String,
       val ps = localPostings(st.pairs(es))
       spark.createDataFrame(LocalServing.topK(LocalServing.scores(es, ps, meta), k))
         .toDF("doc_id", "score")
-    } else if (useWand && es.map(_.df).sum >= wandMinPostings) maxScoreTopK(st, es, k)
+    } else if (useWand && es.map(_.df).sum >= conf.wandMinPostings) maxScoreTopK(st, es, k)
     else {
       lastWandPath = "exact"
       topK(exactScores(st, es), k)
@@ -1075,7 +928,7 @@ class QueryEngine(spark: SparkSession, root: String,
         // Downstream consumers (refineTheta, the candIds filter) are
         // order-insensitive, so the limit's row order cannot perturb
         // results.
-        val capI = math.min(wandCandidateCap, Int.MaxValue - 2L).toInt
+        val capI = math.min(conf.wandCandidateCap, Int.MaxValue - 2L).toInt
         val candPairs = essRows.groupBy($"doc_id")
           .agg(sum($"impact").as("ess_sum"))
           .filter($"ess_sum" + cumNonEssMax >= theta - Eps)
@@ -1096,7 +949,7 @@ class QueryEngine(spark: SparkSession, root: String,
         // the one distributed job (top-C candidates' non-essential sums)
         // is injected as the callback
         val thetaEff = QueryEngine.refineTheta(candPairs, k, theta, Eps,
-          refineMinCandidates, { topCIds =>
+          conf.refineMinCandidates, { topCIds =>
             foldRows(st, nonEssEs, Some(topCIds)).fold(Map.empty[Long, Double])(
               _.groupBy($"doc_id").agg(sum($"impact").as("ne_sum"))
                 .as[(Long, Double)].collect().toMap)
@@ -1108,7 +961,7 @@ class QueryEngine(spark: SparkSession, root: String,
         java.util.Arrays.sort(candIds)
         val out = topK(aggScores((Seq(essRows) ++ foldRows(st, nonEssEs, Some(candIds)))
           .reduce(_ unionByName _)), k)
-        if (captureWandPlan) lastWandPlan = out.queryExecution.executedPlan.toString
+        if (conf.captureWandPlan) lastWandPlan = out.queryExecution.executedPlan.toString
         // eager: the persisted rows must stay alive until collection
         spark.createDataFrame(out.as[(Long, Double)].collect().toSeq)
           .toDF("doc_id", "score")
@@ -1141,7 +994,7 @@ class QueryEngine(spark: SparkSession, root: String,
     * precedence), ordered (tier asc, score desc, doc_id asc), top-k.
     * One dictionary probe per reader serves each term set (unigrams,
     * bigrams) for scoring, the phrase chain and the conjunctive
-    * intersection. Under the [[localMaxPostings]] gate (unigram plus
+    * intersection. Under the [[EngineConfig.localMaxPostings]] gate (unigram plus
     * active bigram df) the tiers are computed on the driver by
     * [[LocalServing.tiered]] from one collect; above it the tier
     * composition is [[TieredQuery.run]] over this engine's scorers.
@@ -1196,7 +1049,7 @@ class QueryEngine(spark: SparkSession, root: String,
       exactScores = () => exactScores(st, entries),
       bigramExactScores = () => exactScores(bst, bigramEntries), // thread 2's bigram_scores
       empty = () => emptyScores()),
-      k, handleQueryClaimCap, p => lastHandlePath = p, handleQueryGuessFloor)
+      k, conf, p => lastHandlePath = p)
   }
 
   // ----------------------------------------------- filtered search (q51)
@@ -1225,7 +1078,7 @@ class QueryEngine(spark: SparkSession, root: String,
     * The predicate scan reads every reader's docs table as one
     * multi-path relation (column-pruned to doc_id + the predicate
     * columns) and ships at most cap+1 ids to the driver. Under the
-    * [[localMaxPostings]] gate neither plan runs: see `filteredScores`.
+    * [[EngineConfig.localMaxPostings]] gate neither plan runs: see `filteredScores`.
     */
   def bm25ScoresFiltered(terms: Seq[String], pred: Column,
       candidateCap: Int = 20000): DataFrame =
@@ -1243,7 +1096,7 @@ class QueryEngine(spark: SparkSession, root: String,
     * driver-local gate the decoded postings bound the candidates: one
     * collect of the terms' chunk rows, then the predicate runs only
     * over the docs those postings hold (one pushed `doc_id IN` job,
-    * at most `localMaxPostings` rows), and the allowed docs are scored
+    * at most `conf.localMaxPostings` rows), and the allowed docs are scored
     * and ranked on the driver. The cap-limited candidate probe below
     * is skipped there: a CollectLimit scans the docs table in
     * incremental jobs until it sees cap+1 rows or the table ends.
@@ -1323,11 +1176,11 @@ class QueryEngine(spark: SparkSession, root: String,
   /** The docs rows of `docIds`: the text side must be PRUNED, not just
     * broadcast-joined (with the k-row side broadcast the probe would
     * still SCAN every text row) — a pushed doc_id IN for up to
-    * [[chunkInMaxLiterals]] ids prunes the doc_id-sorted docs parquet
+    * [[EngineConfig.chunkInMaxLiterals]] ids prunes the doc_id-sorted docs parquet
     * to O(k) row groups; above that a broadcast semi-join.
     */
   private def textFor(docIds: Array[Long]): DataFrame =
-    if (docIds.length <= chunkInMaxLiterals)
+    if (docIds.length <= conf.chunkInMaxLiterals)
       docs.filter($"doc_id".isin(docIds.toSeq: _*))
     else
       docs.join(broadcast(docIds.toSeq.toDF("doc_id")),
@@ -1382,7 +1235,7 @@ class QueryEngine(spark: SparkSession, root: String,
     */
   def suggest(prefix: String, n: Int): DataFrame =
     if (dictLocalInstalled)
-      LocalServing.suggest(suggestTerms, prefix, n).toDF("term", "df")
+      LocalServing.suggest(shared.suggestTerms, prefix, n).toDF("term", "df")
     else {
       val hits = readers.map(_.dictionary.filter($"term".startsWith(prefix))
         .select($"term", $"df")).reduce(_ unionByName _)
@@ -1390,18 +1243,6 @@ class QueryEngine(spark: SparkSession, root: String,
         .orderBy($"df".desc, $"term".asc)
         .limit(n)
     }
-
-  /** The readers' driver lexicons merged (df summed per term) in UTF-8
-    * term order — the dictionary Parquet's own order — so a prefix is
-    * one binary-searched range: [[suggest]] then runs no Spark job.
-    * Built on the first suggest call, not at warm-up.
-    */
-  private lazy val suggestTerms: Array[DictRow] = {
-    val merged = new java.util.HashMap[String, DictRow]()
-    readers.foreach(_.localDictionary.values.forEach(r =>
-      merged.merge(r.term, r, (a, b) => a.copy(df = a.df + b.df))))
-    merged.values.toArray(new Array[DictRow](0)).sortBy(_.term)(Tokenizer.utf8Ordering)
-  }
 
   // ------------------------------------------------- boolean / positional
 
@@ -1456,7 +1297,7 @@ class QueryEngine(spark: SparkSession, root: String,
 
   /** Docs where `terms` occur at consecutive positions (reference
     * src/positional_intersect/mod.rs:11-35; a one-term phrase is that
-    * term's doc set). Under the [[localMaxPostings]] gate: one collect
+    * term's doc set). Under the [[EngineConfig.localMaxPostings]] gate: one collect
     * and [[LocalServing.phraseDocs]]; above it [[phraseDocs]].
     */
   def phraseMatch(terms: Seq[String]): DataFrame = {
@@ -1485,7 +1326,7 @@ class QueryEngine(spark: SparkSession, root: String,
     * of the reference's min-df seeding,
     * src/query_processor/query_processor.rs:62-69). Two plans:
     * candidate-pruned when the anchor is sparse (see
-    * [[positionalPruneDensity]]), shuffle-join chain otherwise.
+    * [[EngineConfig.positionalPruneDensity]]), shuffle-join chain otherwise.
     */
   private def phraseDocs(phraseSeq: Seq[String], st: TermStats): DataFrame = {
     val empty = Seq.empty[Long].toDF("doc_id")
@@ -1651,6 +1492,66 @@ class QueryEngine(spark: SparkSession, root: String,
 }
 
 object QueryEngine {
+
+  /** The state every engine over `root` shares, whatever its config:
+    * the readers (with their warmed dictionaries and driver maps), the
+    * global statistics, the tombstone relation and the multi-reader
+    * relations.
+    */
+  private final class Shared(spark: SparkSession, val root: String) {
+    val gens: Seq[String] = Generations.servingDirs(root)
+    require(gens.nonEmpty,
+      s"$root holds neither index_meta.json nor complete gen-* directories")
+    val readers: Seq[IndexReader] = gens.map(new IndexReader(spark, _))
+
+    // one set of BM25 constants across generations (chunk max_impacts are
+    // baked under them, and a global fold cannot mix two k1/b regimes)
+    require(readers.map(r => (r.meta.k1, r.meta.b)).distinct.size == 1,
+      s"generations disagree on BM25 constants: " +
+        readers.map(r => (r.meta.k1, r.meta.b)).distinct.mkString(","))
+
+    val meta: IndexMeta =
+      if (readers.size == 1) readers.head.meta
+      else {
+        val ms = readers.map(_.meta)
+        val n = ms.map(_.n_docs).sum
+        IndexMeta(n, ms.map(m => math.round(m.avgdl * m.n_docs)).sum.toDouble / n,
+          ms.map(_.n_terms).sum, ms.map(_.n_postings).sum, ms.head.k1, ms.head.b)
+      }
+
+    lazy val postings: DataFrame =
+      if (readers.size == 1) readers.head.postings
+      else spark.read.option("recursiveFileLookup", "true")
+        .parquet(gens.map(g => IndexPaths(g).postings): _*)
+
+    lazy val docs: DataFrame =
+      if (readers.size == 1) readers.head.docs
+      else spark.read.parquet(gens.map(g => IndexPaths(g).docs): _*)
+
+    /** Reader index of a postings file path; a closure, so executor code
+      * captures no engine.
+      */
+    lazy val genOf: String => Int =
+      if (readers.size == 1) _ => 0
+      else {
+        val idx = gens.zipWithIndex.map { case (g, i) => g.split('/').last -> i }.toMap
+        f => idx.getOrElse(Generations.genSegOf(f), -1)
+      }
+
+    val deletedIds: Option[DataFrame] = Generations.deletedDocs(spark, root)
+
+    /** The readers' driver lexicons merged (df summed per term) in UTF-8
+      * term order — the dictionary Parquet's own order — so a prefix is
+      * one binary-searched range: `suggest` then runs no Spark job.
+      * Built on the first suggest call, not at warm-up.
+      */
+    lazy val suggestTerms: Array[DictRow] = {
+      val merged = new java.util.HashMap[String, DictRow]()
+      readers.foreach(_.localDictionary.values.forEach(r =>
+        merged.merge(r.term, r, (a, b) => a.copy(df = a.df + b.df))))
+      merged.values.toArray(new Array[DictRow](0)).sortBy(_.term)(Tokenizer.utf8Ordering)
+    }
+  }
 
   /** Broadcast-hint bounds of the join chains. A conjunctive chain hints its first (rarest)
     * relation when that term's df is at most [[ConjBroadcastMaxDf]];
@@ -1831,16 +1732,6 @@ object QueryEngine {
   */
 private[graft] object TieredQuery {
 
-  /** First-guess width floor for the adaptive unclaimed-top-k below
-    * (the `min(|claimed|, max(floor, 4k))` slack added to k). Test
-    * knob: 0 forces tiny guesses so the escalation path is coverable
-    * on small corpora. This object-level var is the JVM-wide DEFAULT
-    * only — engines carry a per-instance override
-    * (`handleQueryGuessFloor`, round-5 verdict finding #4) so two
-    * concurrently-served roots with different settings cannot race.
-    */
-  private[graft] var guessFloor: Int = 50
-
   /** Count of adaptive rounds that found < k unclaimed docs and had to
     * re-run at the worst-case top-(k + |claimed|) width. An operational
     * metric: a climbing value means queries whose claimed (phrase/
@@ -1884,35 +1775,74 @@ private[graft] object TieredQuery {
     tiers.orderBy(col("tier").asc, col("score").desc, col("doc_id").asc)
       .limit(k).select("doc_id", "score", "tier")
 
+  /** Prefix of the Spark job tag each overlapped probe runs under. */
+  private[graft] val ProbeTagPrefix = "graft-probe-"
+
+  /** A driver collect run on its own thread under its own Spark job tag,
+    * so an early exit can cancel its jobs instead of leaving them to run
+    * to completion on the executors. Job tags are thread-local
+    * properties that threads created by the tagged thread copy. The
+    * thread is therefore a plain one that ends with the collect, not a
+    * pooled one: a fork-join pool worker that blocks inside Spark (a
+    * broadcast wait) makes the pool start compensating workers, which
+    * would keep the tag for every later job they run (ProbeCancelSpec).
+    */
+  private final class TaggedCollect(sc: org.apache.spark.SparkContext,
+      body: () => Array[Long]) {
+    private val tag = ProbeTagPrefix + java.util.UUID.randomUUID()
+    private val done = scala.concurrent.Promise[Array[Long]]()
+    locally {
+      val t = new Thread(() => {
+        sc.addJobTag(tag)
+        try done.success(body())
+        catch { case e: Throwable => done.failure(e) }
+        finally sc.removeJobTag(tag)
+        ()
+      }, "graft-bigram-probe")
+      t.setDaemon(true)
+      t.start()
+    }
+
+    def result(): Array[Long] =
+      scala.concurrent.Await.result(done.future, scala.concurrent.duration.Duration.Inf)
+
+    /** Cancels the tagged jobs and returns once the collect has ended.
+      * The cancel is re-sent until then: a job the probe thread submits
+      * after one cancel is caught by the next.
+      */
+    def cancel(): Unit =
+      while (!done.isCompleted) {
+        sc.cancelJobsWithTag(tag)
+        scala.util.Try(scala.concurrent.Await.ready(done.future,
+          scala.concurrent.duration.Duration(20, "ms")))
+      }
+  }
+
   /** Single-term queries have no phrase/bigram tiers: the unigram top-k
     * IS the answer, labeled tier 2.
     */
   def singleTerm(topK: Int => DataFrame, k: Int): DataFrame =
     finish(topK(k).withColumn("tier", lit(2)), k)
 
-  def run(spark: SparkSession, s: Scorers, k: Int, claimCap: Int,
-      setPath: String => Unit, guessFloorOverride: Int = -1): DataFrame = {
+  /** The tier composition under `conf`'s claim cap
+    * ([[EngineConfig.handleQueryClaimCap]]) and adaptive-guess floor
+    * ([[EngineConfig.guessFloor]]).
+    */
+  def run(spark: SparkSession, s: Scorers, k: Int, conf: EngineConfig,
+      setPath: String => Unit): DataFrame = {
     import spark.implicits._
-    // per-engine floor when the caller set one (>= 0); the object var
-    // stays the process default and the test hook
-    val floor = if (guessFloorOverride >= 0) guessFloorOverride else guessFloor
     // Clamped: limit(cap + 1) with cap = Int.MaxValue (a natural way to
     // "disable" the cap) would overflow to a negative limit and throw.
-    val cap = math.min(claimCap, Int.MaxValue - 1)
+    val cap = math.min(conf.handleQueryClaimCap, Int.MaxValue - 1)
     // The bigram-conjunctive probe overlaps the phrase probe (guide
     // §2.6; the reference itself runs its strategies on separate
     // threads, search_engine/mod.rs:147-206): both are independent
     // cap-bounded collects, and running them sequentially paid two
     // driver round-trips back to back. Launched BEFORE the phrase
-    // collect; on the phrase-fill early exit below the in-flight probe
-    // completes unused — a bounded (cap+1-row) collect on executors the
-    // exit leaves idle, never a correctness input. Engines without an
-    // active bigram tier (conjDocs = None) launch nothing.
-    val conjF = s.conjDocs.map { c =>
-      scala.concurrent.Future(c.select(col("doc_id"))
-        .limit(cap + 1).as[Long].collect())(
-        scala.concurrent.ExecutionContext.global)
-    }
+    // collect; the phrase-fill early exit below cancels it. Engines
+    // without an active bigram tier (conjDocs = None) launch nothing.
+    val conjProbe = s.conjDocs.map(c => new TaggedCollect(spark.sparkContext,
+      () => c.select(col("doc_id")).limit(cap + 1).as[Long].collect()))
     val phraseIds = s.phraseDocs.select(col("doc_id"))
       .limit(cap + 1).as[Long].collect()
     // Early exit when the phrase tier alone fills k: finish() orders
@@ -1926,11 +1856,11 @@ private[graft] object TieredQuery {
         phraseIds.length <= cap) {
       setPath("pruned")
       phraseFillExits.incrementAndGet()
+      conjProbe.foreach(_.cancel())
       java.util.Arrays.sort(phraseIds)
       return finish(s.candScores(phraseIds).withColumn("tier", lit(0)), k)
     }
-    val conjIds = conjF.map(f => scala.concurrent.Await.result(f,
-      scala.concurrent.duration.Duration.Inf)).getOrElse(Array.empty[Long])
+    val conjIds = conjProbe.map(_.result()).getOrElse(Array.empty[Long])
     if (s.unigramsPresent && phraseIds.length <= cap && conjIds.length <= cap) {
       setPath("pruned")
       java.util.Arrays.sort(phraseIds)
@@ -1957,7 +1887,7 @@ private[graft] object TieredQuery {
       // Each round collects its (<= width) rows once, so the common
       // case is ONE sharply-pruned pass; the pathological case costs
       // one extra pass, bounded by the old construction's cost.
-      val guess = k + math.min(claimedIds.length, math.max(floor, 4 * k))
+      val guess = k + math.min(claimedIds.length, math.max(conf.guessFloor, 4 * k))
       val tier2 =
         if (guess >= k + claimedIds.length) {
           // small claimed set: the guess already IS the worst-case

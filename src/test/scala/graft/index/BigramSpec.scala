@@ -3,7 +3,7 @@ package graft.index
 import graft.SparkSpecBase
 import graft.core.Tokenizer
 import graft.corpus.Transcripts
-import graft.query.QueryEngine
+import graft.query.{EngineConfig, QueryEngine}
 
 /** Bigram indexing (reference tokenizer.rs:211-217, commented intent):
   * the invariant is that the doc set of an indexed bigram term equals the
@@ -124,22 +124,22 @@ class BigramSpec extends SparkSpecBase {
   }
 
   test("handleQuery pruned and exact forms are identical (pruned engages by default)") {
-    def run(q: String): Seq[(Long, Double, Int)] =
-      engine.handleQuery(q, 20).collect()
+    def run(e: QueryEngine, q: String): Seq[(Long, Double, Int)] =
+      e.handleQuery(q, 20).collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
-    engine.localMaxPostings = 0L // the distributed forms under test
-    try Seq("the big join", "kelba sorro the", "alba the corba").foreach { q =>
-      engine.handleQueryClaimCap = 100000
-      val pruned = run(q)
-      assert(engine.lastHandlePath == "pruned",
+    // the distributed forms under test
+    val prunedE = engine.withConfig(_.copy(localMaxPostings = 0L, handleQueryClaimCap = 100000))
+    // force the full-scoring form
+    val exactE = prunedE.withConfig(_.copy(handleQueryClaimCap = -1))
+    Seq("the big join", "kelba sorro the", "alba the corba").foreach { q =>
+      val pruned = run(prunedE, q)
+      assert(prunedE.lastHandlePath == "pruned",
         s"default cap should take the pruned form for '$q'")
-      engine.handleQueryClaimCap = -1 // force the full-scoring form
-      val exact = run(q)
-      assert(engine.lastHandlePath == "exact")
-      engine.handleQueryClaimCap = 100000
+      val exact = run(exactE, q)
+      assert(exactE.lastHandlePath == "exact")
       assert(pruned == exact, s"tier construction drift for '$q'\n " +
         s"pruned=$pruned\n exact=$exact")
-    } finally engine.localMaxPostings = 20000L
+    }
   }
 
   test("handleQuery without indexed bigrams leaves the middle tier empty") {
@@ -181,21 +181,18 @@ class BigramSpec extends SparkSpecBase {
     import spark.implicits._
     new IndexBuilder(spark, Map.empty, IndexConf(numParts = 2, indexBigrams = true))
       .build(spark.createDataset(custom), dir)
-    val e = new QueryEngine(spark, dir, Map.empty)
-    e.localMaxPostings = 0L // the distributed tier construction under test
-    val floorBefore = TieredQuery.guessFloor
-    TieredQuery.guessFloor = 0
-    try {
-      val before = TieredQuery.adaptiveEscalations.get()
-      val got = e.handleQuery("zebra quartz nickel", 1).collect()
-        .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
-      assert(TieredQuery.adaptiveEscalations.get() == before + 1,
-        "all-claimed top slots must trigger the worst-case escalation")
-      val want = new graft.oracle.Oracle(custom, Map.empty, indexBigrams = true)
-        .handleQuery("zebra quartz nickel", 1)
-      assert(got == want, s"escalated path drifts from oracle: got=$got want=$want")
-      assert(got.forall(_._3 == 1), "all results must come from the bigram tier")
-    } finally TieredQuery.guessFloor = floorBefore
+    // the distributed tier construction under test
+    val e = new QueryEngine(spark, dir, Map.empty,
+      EngineConfig(localMaxPostings = 0L, guessFloor = 0))
+    val before = TieredQuery.adaptiveEscalations.get()
+    val got = e.handleQuery("zebra quartz nickel", 1).collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
+    assert(TieredQuery.adaptiveEscalations.get() == before + 1,
+      "all-claimed top slots must trigger the worst-case escalation")
+    val want = new graft.oracle.Oracle(custom, Map.empty, indexBigrams = true)
+      .handleQuery("zebra quartz nickel", 1)
+    assert(got == want, s"escalated path drifts from oracle: got=$got want=$want")
+    assert(got.forall(_._3 == 1), "all results must come from the bigram tier")
   }
 
   test("adaptive unclaimed-top-k skips escalation when the match universe is exhausted") {
@@ -216,21 +213,19 @@ class BigramSpec extends SparkSpecBase {
     import spark.implicits._
     new IndexBuilder(spark, Map.empty, IndexConf(numParts = 2, indexBigrams = true))
       .build(spark.createDataset(custom), dir)
-    val e = new QueryEngine(spark, dir, Map.empty)
-    e.localMaxPostings = 0L // the distributed tier construction under test
-    val floorBefore = TieredQuery.guessFloor
-    TieredQuery.guessFloor = 0 // guess = k + min(9, 4k) = 10 < k + 9 = 11
-    try {
-      val before = TieredQuery.adaptiveEscalations.get()
-      val got = e.handleQuery("zebra quartz nickel", 2).collect()
-        .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
-      assert(TieredQuery.adaptiveEscalations.get() == before,
-        "exhausted match universe must not trigger the full-width escalation")
-      val want = new graft.oracle.Oracle(custom, Map.empty, indexBigrams = true)
-        .handleQuery("zebra quartz nickel", 2)
-      assert(got == want, s"exhausted path drifts from oracle: got=$got want=$want")
-      assert(got.forall(_._3 == 1), "all results must come from the bigram tier")
-    } finally TieredQuery.guessFloor = floorBefore
+    // the distributed tier construction under test;
+    // guess = k + min(9, 4k) = 10 < k + 9 = 11
+    val e = new QueryEngine(spark, dir, Map.empty,
+      EngineConfig(localMaxPostings = 0L, guessFloor = 0))
+    val before = TieredQuery.adaptiveEscalations.get()
+    val got = e.handleQuery("zebra quartz nickel", 2).collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
+    assert(TieredQuery.adaptiveEscalations.get() == before,
+      "exhausted match universe must not trigger the full-width escalation")
+    val want = new graft.oracle.Oracle(custom, Map.empty, indexBigrams = true)
+      .handleQuery("zebra quartz nickel", 2)
+    assert(got == want, s"exhausted path drifts from oracle: got=$got want=$want")
+    assert(got.forall(_._3 == 1), "all results must come from the bigram tier")
   }
 
   test("guess floor is per-engine: two engines with different floors coexist") {
@@ -241,8 +236,8 @@ class BigramSpec extends SparkSpecBase {
     // all top slots claimed) while an engine at the DEFAULT floor on
     // the same index must not (floor 50 covers the whole claimed set,
     // so the non-adaptive worst-case-width branch runs) — and both
-    // must return identical results. The object-level var is untouched
-    // throughout.
+    // must return identical results. Both derive from one parent
+    // engine with `withConfig`; the parent's config is untouched.
     val ts0 = new java.sql.Timestamp(60000000L)
     val custom = (0 until 8).map { i =>
       Turn(f"g$i%03d", 0, "user",
@@ -252,12 +247,10 @@ class BigramSpec extends SparkSpecBase {
     import spark.implicits._
     new IndexBuilder(spark, Map.empty, IndexConf(numParts = 2, indexBigrams = true))
       .build(spark.createDataset(custom), dir)
-    val eTiny = new QueryEngine(spark, dir, Map.empty)
-    eTiny.handleQueryGuessFloor = 0
-    val eDefault = new QueryEngine(spark, dir, Map.empty)
+    val parent = new QueryEngine(spark, dir, Map.empty)
     // the distributed tier construction under test
-    Seq(eTiny, eDefault).foreach(_.localMaxPostings = 0L)
-    val globalBefore = TieredQuery.guessFloor
+    val eTiny = parent.withConfig(_.copy(localMaxPostings = 0L, guessFloor = 0))
+    val eDefault = parent.withConfig(_.copy(localMaxPostings = 0L))
     def run(e: QueryEngine): Seq[(Long, Double, Int)] =
       e.handleQuery("zebra quartz nickel", 1).collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
@@ -269,8 +262,8 @@ class BigramSpec extends SparkSpecBase {
     assert(TieredQuery.adaptiveEscalations.get() == before + 1,
       "default-floor engine must not escalate")
     assert(gotTiny == gotDefault, "per-engine floors must not change results")
-    assert(TieredQuery.guessFloor == globalBefore,
-      "per-engine overrides must not touch the process default")
+    assert(parent.conf == EngineConfig(),
+      "derived engines must not touch the parent's config")
   }
 
   test("phrase-fills-k early exit: tier-0-only answer, identical to the exact form") {
@@ -291,10 +284,11 @@ class BigramSpec extends SparkSpecBase {
     import spark.implicits._
     new IndexBuilder(spark, Map.empty, IndexConf(numParts = 2, indexBigrams = true))
       .build(spark.createDataset(custom), dir)
-    val e = new QueryEngine(spark, dir, Map.empty)
-    e.localMaxPostings = 0L // the distributed tier construction under test
-    def run(k: Int): Seq[(Long, Double, Int)] =
-      e.handleQuery("zebra quartz", k).collect()
+    // the distributed tier construction under test
+    val e = new QueryEngine(spark, dir, Map.empty, EngineConfig(localMaxPostings = 0L))
+    val exactE = e.withConfig(_.copy(handleQueryClaimCap = -1)) // force the exact form
+    def run(k: Int, eng: QueryEngine = e): Seq[(Long, Double, Int)] =
+      eng.handleQuery("zebra quartz", k).collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
     Seq(1, 4, 8).foreach { k =>
       val before = TieredQuery.phraseFillExits.get()
@@ -302,10 +296,8 @@ class BigramSpec extends SparkSpecBase {
       assert(TieredQuery.phraseFillExits.get() == before + 1,
         s"phrase tier holds 8 >= $k docs: the early exit must fire")
       assert(fast.forall(_._3 == 0), s"k=$k: all rows must be tier 0")
-      e.handleQueryClaimCap = -1 // force the exact form
-      val exact = run(k)
-      e.handleQueryClaimCap = 300000
-      assert(e.lastHandlePath == "exact")
+      val exact = run(k, exactE)
+      assert(exactE.lastHandlePath == "exact")
       assert(fast == exact, s"k=$k early exit drifts from exact:\n " +
         s"fast=$fast\n exact=$exact")
     }
@@ -316,9 +308,7 @@ class BigramSpec extends SparkSpecBase {
     val full = run(10)
     assert(TieredQuery.phraseFillExits.get() == before,
       "k=10 > 8 phrase docs: the early exit must not fire")
-    e.handleQueryClaimCap = -1
-    val exact = run(10)
-    e.handleQueryClaimCap = 300000
+    val exact = run(10, exactE)
     assert(full == exact, s"k=10 full construction drifts from exact:\n " +
       s"full=$full\n exact=$exact")
   }

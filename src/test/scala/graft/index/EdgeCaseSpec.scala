@@ -51,16 +51,13 @@ class EdgeCaseSpec extends SparkSpecBase {
   }
 
   test("BM25 over degenerate corpus rank-identical to oracle (all paths)") {
-    engine.localMaxPostings = 0L
-    engine.wandMinPostings = 0L
+    val forced = engine.withConfig(_.copy(localMaxPostings = 0L, wandMinPostings = 0L))
     Seq("solo", "repeat", "solo repeat", "words again").foreach { q =>
       val want = oracle.bm25TopK(q, 5)
-      val got = engine.bm25TopK(q, 5).collect()
+      val got = forced.bm25TopK(q, 5).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(got == want, s"edge top-k mismatch for '$q'\n got=$got\nwant=$want")
     }
-    engine.localMaxPostings = 20000L
-    engine.wandMinPostings = 100000L
     val local = engine.bm25TopK("solo repeat", 5).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(local == oracle.bm25TopK("solo repeat", 5))

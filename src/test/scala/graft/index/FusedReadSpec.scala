@@ -6,7 +6,7 @@ import graft.SparkSpecBase
 import graft.core.Tokenizer
 import graft.corpus.Transcripts
 import graft.oracle.Oracle
-import graft.query.QueryEngine
+import graft.query.{EngineConfig, QueryEngine}
 
 /** The multi-generation postings read (one multi-path scan, generation
   * recovered from the file path) against the scalar oracle and against
@@ -48,12 +48,11 @@ class FusedReadSpec extends SparkSpecBase {
   /** An engine over `r`; `local = false` shuts the driver-local gate,
     * `pruned` forces the block-max path and theta refinement.
     */
-  private def engine(r: String, local: Boolean, pruned: Boolean = false): QueryEngine = {
-    val e = new QueryEngine(spark, r, lemmas)
-    if (!local) e.localMaxPostings = 0L
-    if (pruned) { e.wandMinPostings = 0L; e.refineMinCandidates = 0L }
-    e
-  }
+  private def engine(r: String, local: Boolean, pruned: Boolean = false): QueryEngine =
+    new QueryEngine(spark, r, lemmas).withConfig { c =>
+      val gated = if (local) c else c.copy(localMaxPostings = 0L)
+      if (pruned) gated.copy(wandMinPostings = 0L, refineMinCandidates = 0L) else gated
+    }
 
   private val snippetTerms = Seq("the", "of", "table")
 
@@ -150,8 +149,7 @@ class FusedReadSpec extends SparkSpecBase {
     val want = (oracle.phraseMatch(seq) -- victims).toSeq.sorted
     assert(want.nonEmpty, "forced-pruned phrase matches nothing — weak test")
     for (density <- Seq(0L, 10000000000L); r <- Seq(root, singleRoot)) {
-      val m = engine(r, local = false)
-      m.positionalPruneDensity = density
+      val m = engine(r, local = false).withConfig(_.copy(positionalPruneDensity = density))
       assert(m.phraseMatch(seq).collect().map(_.getLong(0)).toSeq.sorted == want,
         s"density=$density diverged on $r")
     }
@@ -166,13 +164,14 @@ class FusedReadSpec extends SparkSpecBase {
     import spark.implicits._
     val oneDir = tmpDir("graft-fused-onegen")
     Generations.append(spark, spark.createDataset(allTurns), oneDir, lemmas, conf)
-    val one = engine(oneDir, local = false)
-    val three = engine(root, local = false) // 3 generations + tombstones
-    val single = engine(singleRoot, local = false)
+    // force the candidate-pruned path
+    val forced: EngineConfig => EngineConfig = _.copy(wandMinPostings = 0L)
+    val one = engine(oneDir, local = false).withConfig(forced)
+    val three = engine(root, local = false).withConfig(forced) // 3 generations + tombstones
+    val single = engine(singleRoot, local = false).withConfig(forced)
     val q = "the of table"
     Seq(one, three, single).foreach { m =>
       m.warmDictionariesLocal()
-      m.wandMinPostings = 0L // force the candidate-pruned path
       m.bm25TopK(q, 10).collect() // warm: plans, liveDocs, file listings
       assert(m.lastWandPath == "pruned")
     }
@@ -205,7 +204,7 @@ class FusedReadSpec extends SparkSpecBase {
     // exchange: input_file_name() returns "" once rows cross a shuffle,
     // so it has to be captured in the scan stage, below any join.
     val m = engine(root, local = false, pruned = true)
-    m.chunkMetaCollectCap = -1.0
+      .withConfig(_.copy(chunkMetaCollectCap = -1.0))
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {

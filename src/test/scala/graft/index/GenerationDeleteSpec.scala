@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpecBase
 import graft.corpus.Transcripts
 import graft.oracle.Oracle
-import graft.query.QueryEngine
+import graft.query.{EngineConfig, QueryEngine}
 
 /** Document deletion (tombstones) on an incremental root — Lucene
   * liveDocs semantics: deleted docs vanish from every result path
@@ -69,23 +69,23 @@ class GenerationDeleteSpec extends SparkSpecBase {
     val queries = Seq("the of", "alba corba", "kelba the sorro")
     // exact path: driver-local (tombstones dropped at decode), then the
     // distributed fold with the gate shut
-    for (gate <- Seq(multi.localMaxPostings, 0L); q <- queries) {
-      multi.localMaxPostings = gate
-      val terms = multi.queryTerms(q)
-      val got = multi.bm25TopK(q, 10).collect()
+    for (gate <- Seq(multi.conf.localMaxPostings, 0L); q <- queries) {
+      val e = multi.withConfig(_.copy(localMaxPostings = gate))
+      val terms = e.queryTerms(q)
+      val got = e.bm25TopK(q, 10).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val want = oracleTopKLive(terms, 10)
       assert(got == want, s"exact-path mismatch for '$q'\n got=$got\nwant=$want")
       assert(got.forall(r => !deleted(r._1)))
     }
     // forced pruned path — theta/candidates must be survivor-only too
-    multi.wandMinPostings = 0L
+    val pruned = multi.withConfig(_.copy(localMaxPostings = 0L, wandMinPostings = 0L))
     queries.foreach { q =>
-      multi.lastWandPath = ""
-      val got = multi.bm25TopK(q, 10).collect()
+      pruned.lastWandPath = ""
+      val got = pruned.bm25TopK(q, 10).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(got == oracleTopKLive(multi.queryTerms(q), 10),
-        s"pruned-path mismatch for '$q' (path=${multi.lastWandPath})")
+      assert(got == oracleTopKLive(pruned.queryTerms(q), 10),
+        s"pruned-path mismatch for '$q' (path=${pruned.lastWandPath})")
     }
     // a deleted doc sat in the PRE-delete top-5, so ranks really moved
     val pre = oracle.bm25TopK("the of", 5).map(_._1)
@@ -103,8 +103,7 @@ class GenerationDeleteSpec extends SparkSpecBase {
     assert(!livePlan.contains("LeftAnti"),
       s"default path should filter, not join:\n$livePlan")
     // takedown-wave fallback: a cap of 0 forces the distributed anti-join
-    val wave = new MultiGenEngine(spark, root, lemmas)
-    wave.liveDocsCap = 0L
+    val wave = new MultiGenEngine(spark, root, lemmas, EngineConfig(liveDocsCap = 0L))
     val wavePlan = wave.conjunctive(Seq("the"))
       .queryExecution.optimizedPlan.toString
     assert(wavePlan.contains("LeftAnti"),
@@ -113,13 +112,14 @@ class GenerationDeleteSpec extends SparkSpecBase {
     val q = "the of"
     assert(live.bm25TopK(q, 10).collect().toSeq ==
       wave.bm25TopK(q, 10).collect().toSeq)
-    wave.wandMinPostings = 0L // pruned top-k through the anti-join too
+    // pruned top-k through the anti-join too
+    val wavePruned = wave.withConfig(_.copy(wandMinPostings = 0L))
     assert(live.bm25TopK(q, 10).collect().toSeq ==
-      wave.bm25TopK(q, 10).collect().toSeq)
+      wavePruned.bm25TopK(q, 10).collect().toSeq)
     assert(live.handleQuery(q, 10).collect().toSeq ==
-      wave.handleQuery(q, 10).collect().toSeq)
+      wavePruned.handleQuery(q, 10).collect().toSeq)
     assert(live.conjunctive(Seq("the", "of")).collect().map(_.getLong(0)).toSet ==
-      wave.conjunctive(Seq("the", "of")).collect().map(_.getLong(0)).toSet)
+      wavePruned.conjunctive(Seq("the", "of")).collect().map(_.getLong(0)).toSet)
   }
 
   test("boolean/positional results and handleQuery tiers exclude tombstones") {
@@ -288,8 +288,7 @@ class GenerationDeleteSpec extends SparkSpecBase {
     assert(got.forall(r => !deleted(r._1)))
     // the candidate and semi-join routes agree on the tombstoned root
     // (driver-local gate shut: both routes are distributed plans)
-    val dist = new MultiGenEngine(spark, root, lemmas)
-    dist.localMaxPostings = 0L
+    val dist = new MultiGenEngine(spark, root, lemmas, EngineConfig(localMaxPostings = 0L))
     assert(dist.bm25TopKFiltered(q, 10, pred).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq == want,
       "candidate route mismatch")

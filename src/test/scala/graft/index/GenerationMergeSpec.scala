@@ -136,4 +136,44 @@ class GenerationMergeSpec extends SparkSpecBase {
     val ids = m.bm25TopK("the of", 5).collect().map(_.getLong(0)).toSeq
     assert(ids == oracle.bm25TopK("the of", 5).map(_._1))
   }
+
+  test("a generation whose docs table predates ts reads, merges and compacts with null ts") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val dir = tmpDir("graft-merge-no-ts")
+    val (b1, b2) = allTurns.splitAt(allTurns.size / 2)
+    Seq(b1, b2).foreach(b =>
+      Generations.append(spark, spark.createDataset(b), dir, lemmas, conf))
+    // the schema readDocs opens with is the one a build writes
+    val written = spark.read.parquet(IndexPaths(Generations.genDirs(dir)(1)).docs).schema
+    assert(written == org.apache.spark.sql.types.StructType(
+      IndexBuilder.DocsSchema.fields.map(_.copy(nullable = true))))
+    // rewrite the first generation's docs files without ts, as they were
+    // written before ts joined the docs schema (manifest and marker kept)
+    val docsDir = IndexPaths(Generations.genDirs(dir).head).docs
+    val noTs = s"${tmpDir("graft-no-ts-docs")}/docs"
+    spark.read.parquet(docsDir).drop("ts").write.parquet(noTs)
+    def parts(d: String) = new java.io.File(d).listFiles()
+      .filter(f => f.getName.startsWith("part-") || f.getName.startsWith(".part-"))
+    parts(docsDir).foreach(f => assert(f.delete()))
+    parts(noTs).foreach(f => copyTree(f, new java.io.File(docsDir, f.getName)))
+    assert(!spark.read.parquet(docsDir).columns.contains("ts"))
+
+    val old = IndexBuilder.readDocs(spark, docsDir)
+    assert(old.columns.toSeq == IndexBuilder.DocsSchema.fieldNames.toSeq)
+    assert(old.filter(col("ts").isNotNull).count() == 0)
+    def nullTs(docs: String) = IndexBuilder.readDocs(spark, docs)
+      .filter(col("ts").isNull).count()
+
+    val out = tmpDir("graft-no-ts-compacted")
+    Compactor.compact(spark, dir, out, lemmas, conf)
+    assert(nullTs(IndexPaths(out).docs) == b1.size)
+
+    val merged = Compactor.mergeGenerations(spark, dir, Generations.genDirs(dir), lemmas, conf)
+    assert(nullTs(IndexPaths(merged).docs) == b1.size)
+    assert(IndexBuilder.readDocs(spark, IndexPaths(merged).docs).count() == allTurns.size)
+
+    Generations.deleteWhere(spark, dir, col("ts").isNull)
+    assert(Generations.deletedDocs(spark, dir).get.count() == b1.size)
+  }
 }

@@ -3,7 +3,7 @@ package graft.index
 import graft.SparkSpecBase
 import graft.corpus.Transcripts
 import graft.oracle.Oracle
-import graft.query.QueryEngine
+import graft.query.{EngineConfig, QueryEngine}
 
 /** Incremental indexing: generation appends, multi-generation querying
   * with globally-consistent BM25, compaction, and streaming ingest. The
@@ -54,9 +54,9 @@ class IncrementalSpec extends SparkSpecBase {
   }
 
   test("multi-gen BM25 with FORCED cross-generation block-max pruning: bit-identical") {
-    val multi = new MultiGenEngine(spark, root, lemmas)
-    multi.wandMinPostings = 0L // force the pruned path
-    multi.localMaxPostings = 0L // ...above the driver-local gate
+    // force the pruned path above the driver-local gate
+    val multi = new MultiGenEngine(spark, root, lemmas,
+      EngineConfig(wandMinPostings = 0L, localMaxPostings = 0L))
     Seq("alba corba", "the of", "kelba the sorro", "the").foreach { q =>
       multi.lastWandPath = ""
       val got = multi.bm25TopK(q, 10).collect()
@@ -71,18 +71,17 @@ class IncrementalSpec extends SparkSpecBase {
     assert(multi.lastWandPath == "pruned",
       s"stopword query did not engage cross-gen pruning: ${multi.lastWandPath}")
     // and the cap fallback is exact too
-    multi.wandCandidateCap = 1L
-    val gotCap = multi.bm25TopK("the of", 10).collect()
+    val capped = multi.withConfig(_.copy(wandCandidateCap = 1L))
+    val gotCap = capped.bm25TopK("the of", 10).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(multi.lastWandPath == "fallback-cap",
-      s"cap should force (and LABEL) the exact fallback: ${multi.lastWandPath}")
+    assert(capped.lastWandPath == "fallback-cap",
+      s"cap should force (and LABEL) the exact fallback: ${capped.lastWandPath}")
     assert(gotCap == oracle.bm25TopK("the of", 10))
     // forced theta refinement: the refined tier-2 cut must stay
     // rank-identical at ANY candidate count
-    multi.wandCandidateCap = 2000000L
-    multi.refineMinCandidates = 0L
+    val refined = multi.withConfig(_.copy(refineMinCandidates = 0L))
     Seq("alba corba", "the of", "kelba the sorro", "the").foreach { q =>
-      val got = multi.bm25TopK(q, 10).collect()
+      val got = refined.bm25TopK(q, 10).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(got == oracle.bm25TopK(q, 10),
         s"refined multi-gen mismatch for '$q'")
@@ -144,12 +143,11 @@ class IncrementalSpec extends SparkSpecBase {
     val queries = Seq(phraseQ, "alba corba", "the", "kelba zzzabsent")
     // driver-local gate open (the default), then shut: the distributed
     // tiers must agree bit for bit too
-    for (gate <- Seq(multi.localMaxPostings, 0L); q <- queries) {
-      multi.localMaxPostings = gate
-      single.localMaxPostings = gate
-      val got = multi.handleQuery(q, 10).collect()
+    for (gate <- Seq(multi.conf.localMaxPostings, 0L); q <- queries) {
+      val got = multi.withConfig(_.copy(localMaxPostings = gate)).handleQuery(q, 10).collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
-      val viaCompacted = single.handleQuery(q, 10).collect()
+      val viaCompacted = single.withConfig(_.copy(localMaxPostings = gate))
+        .handleQuery(q, 10).collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
       assert(got == viaCompacted,
         s"multi-gen vs compacted handleQuery drift for '$q' (gate $gate)\n got=$got\nwant=$viaCompacted")
@@ -158,19 +156,19 @@ class IncrementalSpec extends SparkSpecBase {
         s"multi-gen handleQuery vs oracle drift for '$q' (gate $gate)\n got=$got\nwant=$want")
     }
     // the phrase query exercised tier 0 on the PRUNED path (gate shut)
-    val phraseRes = multi.handleQuery(phraseQ, 10).collect()
-    assert(multi.lastHandlePath == "pruned",
-      s"expected the pruned form: ${multi.lastHandlePath}")
+    val shut = multi.withConfig(_.copy(localMaxPostings = 0L))
+    val phraseRes = shut.handleQuery(phraseQ, 10).collect()
+    assert(shut.lastHandlePath == "pruned",
+      s"expected the pruned form: ${shut.lastHandlePath}")
     assert(phraseRes.exists(_.getInt(2) == 0), "expected a tier-0 hit")
     // and the forced EXACT form agrees bit-for-bit too
-    multi.handleQueryClaimCap = -1
-    val gotExact = multi.handleQuery(phraseQ, 10).collect()
+    val exact = shut.withConfig(_.copy(handleQueryClaimCap = -1))
+    val gotExact = exact.handleQuery(phraseQ, 10).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
-    assert(multi.lastHandlePath == "exact",
-      s"claim cap -1 must force the exact form: ${multi.lastHandlePath}")
+    assert(exact.lastHandlePath == "exact",
+      s"claim cap -1 must force the exact form: ${exact.lastHandlePath}")
     assert(gotExact == bgOracle.handleQuery(phraseQ, 10),
       "multi-gen exact-form handleQuery drifts from oracle")
-    multi.handleQueryClaimCap = 100000
   }
 
   test("3-generation handleQuery: terms absent from most generations (probe-shared chains)") {
@@ -220,9 +218,8 @@ class IncrementalSpec extends SparkSpecBase {
     val out = tmpDir("graft-compact")
     val meta = Compactor.compact(spark, root, out, lemmas, conf)
     assert(meta.n_docs == oracle.nDocs)
-    val eng = new QueryEngine(spark, out, lemmas)
-    eng.wandMinPostings = 0L
-    eng.localMaxPostings = 0L
+    val eng = new QueryEngine(spark, out, lemmas,
+      EngineConfig(wandMinPostings = 0L, localMaxPostings = 0L))
     Seq("alba corba", "the of", "kelba the sorro").foreach { q =>
       val got = eng.bm25TopK(q, 10).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq

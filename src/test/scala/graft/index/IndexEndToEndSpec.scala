@@ -3,7 +3,7 @@ package graft.index
 import graft.SparkSpecBase
 import graft.corpus.Transcripts
 import graft.oracle.Oracle
-import graft.query.QueryEngine
+import graft.query.{EngineConfig, QueryEngine}
 
 /** End-to-end golden tests: the distributed index + query engine must be
   * RANK-IDENTICAL (doc_ids AND bit-identical Double scores) to the scalar
@@ -103,6 +103,10 @@ class IndexEndToEndSpec extends SparkSpecBase {
     "kelba sorro",
     "fraba")
 
+  /** The distributed plans with block-max WAND engaged at any df. */
+  private lazy val distributed =
+    engine.withConfig(_.copy(localMaxPostings = 0L, wandMinPostings = 0L))
+
   test("BM25 top-k rank-identical to oracle on all three paths (local, WAND, direct)") {
     queries.foreach { q =>
       val want = oracle.bm25TopK(q, 10)
@@ -111,111 +115,76 @@ class IndexEndToEndSpec extends SparkSpecBase {
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(local == want, s"local-path mismatch for '$q'\n got=$local\nwant=$want")
       // paths 2+3: distributed, block-max WAND forced on and off
-      engine.localMaxPostings = 0L
-      engine.wandMinPostings = 0L
       Seq(true, false).foreach { useWand =>
-        val got = engine.bm25TopK(q, 10, useWand = useWand)
+        val got = distributed.bm25TopK(q, 10, useWand = useWand)
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
         assert(got == want, s"top-k mismatch for '$q' (wand=$useWand)\n got=$got\nwant=$want")
       }
-      engine.localMaxPostings = 20000L
-      engine.wandMinPostings = 100000L
     }
   }
 
   test("WAND with broadcast semi-join chunk pruning: identical results") {
-    engine.localMaxPostings = 0L
-    engine.wandMinPostings = 0L
-    engine.chunkInMaxLiterals = 0 // force the semi-join form...
-    engine.chunkPruneDenseFraction = 1.1 // ...even when chunks are dense
-    try {
-      queries.foreach { q =>
-        val want = oracle.bm25TopK(q, 10)
-        val df = engine.bm25TopK(q, 10, useWand = true)
-        val got = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        assert(got == want, s"semi-join wand mismatch for '$q'\n got=$got\nwant=$want")
-      }
-      // and the executed scoring plan actually contains the broadcast
-      // semi-join for at least one query that reaches the pruned branch
-      // (captured INSIDE wand — the returned result is a LocalRelation,
-      // so asserting on ITS plan would be vacuous)
-      engine.captureWandPlan = true
-      val anySemi = queries.exists { q =>
-        engine.lastWandPlan = ""
-        engine.bm25TopK(q, 10, useWand = true).collect()
-        engine.lastWandPlan.contains("LeftSemi")
-      }
-      engine.captureWandPlan = false
-      assert(anySemi, "no query exercised the broadcast semi-join pruning")
-    } finally {
-      engine.localMaxPostings = 20000L
-      engine.wandMinPostings = 100000L
-      engine.chunkInMaxLiterals = 1000
-      engine.chunkPruneDenseFraction = 0.9
+    val semi = distributed.withConfig(_.copy(
+      chunkInMaxLiterals = 0, // force the semi-join form...
+      chunkPruneDenseFraction = 1.1)) // ...even when chunks are dense
+    queries.foreach { q =>
+      val want = oracle.bm25TopK(q, 10)
+      val df = semi.bm25TopK(q, 10, useWand = true)
+      val got = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(got == want, s"semi-join wand mismatch for '$q'\n got=$got\nwant=$want")
     }
+    // and the executed scoring plan actually contains the broadcast
+    // semi-join for at least one query that reaches the pruned branch
+    // (captured INSIDE wand — the returned result is a LocalRelation,
+    // so asserting on ITS plan would be vacuous)
+    val capturing = semi.withConfig(_.copy(captureWandPlan = true))
+    val anySemi = queries.exists { q =>
+      capturing.lastWandPlan = ""
+      capturing.bm25TopK(q, 10, useWand = true).collect()
+      capturing.lastWandPlan.contains("LeftSemi")
+    }
+    assert(anySemi, "no query exercised the broadcast semi-join pruning")
   }
 
   test("WAND forced theta refinement: rank-identical at any candidate count") {
-    engine.localMaxPostings = 0L
-    engine.wandMinPostings = 0L
-    engine.refineMinCandidates = 0L // refine on EVERY pruned query
-    try {
-      queries.foreach { q =>
-        val want = oracle.bm25TopK(q, 10)
-        val got = engine.bm25TopK(q, 10, useWand = true)
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        assert(got == want, s"refined wand mismatch for '$q'\n got=$got\nwant=$want")
-      }
-    } finally {
-      engine.localMaxPostings = 20000L
-      engine.wandMinPostings = 100000L
-      engine.refineMinCandidates = 20000L
+    // refine on EVERY pruned query
+    val refined = distributed.withConfig(_.copy(refineMinCandidates = 0L))
+    queries.foreach { q =>
+      val want = oracle.bm25TopK(q, 10)
+      val got = refined.bm25TopK(q, 10, useWand = true)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(got == want, s"refined wand mismatch for '$q'\n got=$got\nwant=$want")
     }
   }
 
   test("WAND tier-1 cap: fallback engages before any driver-side candidate collect") {
-    engine.localMaxPostings = 0L
-    engine.wandMinPostings = 0L
-    engine.wandCandidateCap = 1L // any real query exceeds this
-    try {
-      queries.foreach { q =>
-        val want = oracle.bm25TopK(q, 10)
-        engine.lastWandPath = ""
-        val got = engine.bm25TopK(q, 10, useWand = true)
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        assert(got == want, s"cap-fallback mismatch for '$q'\n got=$got\nwant=$want")
-        // every multi-candidate query must take the fallback without
-        // reaching the "pruned" (collected) path; degenerate ones may
-        // resolve as exact/empty, but NONE may report "pruned".
-        assert(engine.lastWandPath != "pruned",
-          s"'$q' collected candidates despite cap=1 (path=${engine.lastWandPath})")
-      }
-      engine.lastWandPath = ""
-      engine.bm25TopK("the of and", 10, useWand = true).collect()
-      assert(engine.lastWandPath == "fallback-cap",
-        s"stopword query should exceed cap=1, path=${engine.lastWandPath}")
-    } finally {
-      engine.localMaxPostings = 20000L
-      engine.wandMinPostings = 100000L
-      engine.wandCandidateCap = 2000000L
+    val capped = distributed.withConfig(_.copy(wandCandidateCap = 1L)) // any real query exceeds this
+    queries.foreach { q =>
+      val want = oracle.bm25TopK(q, 10)
+      capped.lastWandPath = ""
+      val got = capped.bm25TopK(q, 10, useWand = true)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(got == want, s"cap-fallback mismatch for '$q'\n got=$got\nwant=$want")
+      // every multi-candidate query must take the fallback without
+      // reaching the "pruned" (collected) path; degenerate ones may
+      // resolve as exact/empty, but NONE may report "pruned".
+      assert(capped.lastWandPath != "pruned",
+        s"'$q' collected candidates despite cap=1 (path=${capped.lastWandPath})")
     }
+    capped.lastWandPath = ""
+    capped.bm25TopK("the of and", 10, useWand = true).collect()
+    assert(capped.lastWandPath == "fallback-cap",
+      s"stopword query should exceed cap=1, path=${capped.lastWandPath}")
   }
 
   test("WAND distributed survivor pruning (no metadata collect): identical results") {
-    engine.localMaxPostings = 0L
-    engine.wandMinPostings = 0L
-    engine.chunkMetaCollectCap = 0.0 // force the no-collect semi-join path
-    try {
-      queries.foreach { q =>
-        val want = oracle.bm25TopK(q, 10)
-        val got = engine.bm25TopK(q, 10, useWand = true)
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        assert(got == want, s"distributed-survivor mismatch for '$q'\n got=$got\nwant=$want")
-      }
-    } finally {
-      engine.localMaxPostings = 20000L
-      engine.wandMinPostings = 100000L
-      engine.chunkMetaCollectCap = 2e6
+    // force the no-collect semi-join path
+    val noCollect = distributed.withConfig(_.copy(chunkMetaCollectCap = 0.0))
+    queries.foreach { q =>
+      val want = oracle.bm25TopK(q, 10)
+      val got = noCollect.bm25TopK(q, 10, useWand = true)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(got == want, s"distributed-survivor mismatch for '$q'\n got=$got\nwant=$want")
     }
   }
 
@@ -389,27 +358,24 @@ class IndexEndToEndSpec extends SparkSpecBase {
     val phrases = sample.map { t =>
       graft.core.Tokenizer.tokenize(t.text, lemmas).take(3).map(_.term)
     }.filter(ts => ts.distinct.length == 3) ++ Seq(Seq("the", "of"))
-    engine.localMaxPostings = 0L // the distributed phrase plans under test
-    try phrases.take(6).foreach { ts =>
+    val forcePruned: EngineConfig => EngineConfig = _.copy(positionalPruneDensity = 0L)
+    val forceShuffle: EngineConfig => EngineConfig = _.copy(phraseMaxCandidates = 0L)
+    // the distributed phrase plans under test
+    val shut = engine.withConfig(_.copy(localMaxPostings = 0L))
+    val prunedE = shut.withConfig(forcePruned)
+    val shuffleE = prunedE.withConfig(forceShuffle)
+    phrases.take(6).foreach { ts =>
       val want = oracle.phraseMatch(ts)
-      engine.positionalPruneDensity = 0L // force the pruned plan
-      val pruned = engine.phraseMatch(ts).collect().map(_.getLong(0)).toSet
-      engine.phraseMaxCandidates = 0L // force the shuffle plan
-      val shuffled = engine.phraseMatch(ts).collect().map(_.getLong(0)).toSet
-      engine.phraseMaxCandidates = 2000000L
-      engine.positionalPruneDensity = 256L
+      val pruned = prunedE.phraseMatch(ts).collect().map(_.getLong(0)).toSet
+      val shuffled = shuffleE.phraseMatch(ts).collect().map(_.getLong(0)).toSet
       assert(pruned == want, s"pruned phrase plan mismatch for $ts")
       assert(shuffled == want, s"shuffle phrase plan mismatch for $ts")
-    } finally engine.localMaxPostings = 20000L
+    }
     val wantP = oracle.proximity("the", "of", 3).toSet
-    engine.positionalPruneDensity = 0L
-    val prunedP = engine.proximity("the", "of", 3)
+    val prunedP = engine.withConfig(forcePruned).proximity("the", "of", 3)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-    engine.positionalPruneDensity = 256L
-    engine.phraseMaxCandidates = 0L
-    val shuffledP = engine.proximity("the", "of", 3)
+    val shuffledP = engine.withConfig(forceShuffle).proximity("the", "of", 3)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-    engine.phraseMaxCandidates = 2000000L
     assert(prunedP == wantP)
     assert(shuffledP == wantP)
   }
@@ -676,6 +642,7 @@ class IndexEndToEndSpec extends SparkSpecBase {
     // bounds are only sound when query impacts use the same k1/b the
     // chunk max_norms were built under)
     val eng = new QueryEngine(spark, dir, lemmas)
+    val pruning = eng.withConfig(_.copy(wandMinPostings = 0L)) // force pruning
     val scalar = new graft.oracle.Oracle(
       Transcripts.generateLocal(10L), lemmas, b = 0.25)
     Seq("the alba", "kelba sorro the").foreach { q =>
@@ -683,8 +650,7 @@ class IndexEndToEndSpec extends SparkSpecBase {
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(exact == scalar.bm25TopK(q, 5),
         s"custom-constant exact scoring diverges from scalar for '$q'")
-      eng.wandMinPostings = 0L // force pruning
-      val pruned = eng.bm25TopK(q, 5).collect()
+      val pruned = pruning.bm25TopK(q, 5).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(pruned == exact, s"custom-constant WAND diverges for '$q'")
     }

@@ -58,8 +58,7 @@ class DictLocalSpec extends SparkSpecBase {
 
   test("n_terms above dictLocalCap: gate refuses, falls back to distributed probes") {
     val plain = new QueryEngine(spark, indexDir, lemmas)
-    val capped = new QueryEngine(spark, indexDir, lemmas)
-    capped.dictLocalCap = 1L
+    val capped = new QueryEngine(spark, indexDir, lemmas, EngineConfig(dictLocalCap = 1L))
     assert(!capped.warmDictionaryLocal(), "gate must refuse a 1-row cap")
     assert(!capped.dictLocalInstalled)
     val terms = plain.queryTerms(query)
@@ -90,9 +89,11 @@ class DictLocalSpec extends SparkSpecBase {
       rows(plain.handleQuery(query, 10)))
     // pruned path too: force block-max engagement on the small corpus
     // (driver-local gate shut on both, so the block-max read runs)
-    Seq(plain, local).foreach { e => e.wandMinPostings = 0L; e.localMaxPostings = 0L }
-    assert(rows(local.bm25TopK(query, 10)) == rows(plain.bm25TopK(query, 10)))
-    assert(local.lastWandPath == plain.lastWandPath,
-      s"serving mode changed the path: ${local.lastWandPath} vs ${plain.lastWandPath}")
+    val forced: EngineConfig => EngineConfig =
+      _.copy(wandMinPostings = 0L, localMaxPostings = 0L)
+    val (plainP, localP) = (plain.withConfig(forced), local.withConfig(forced))
+    assert(rows(localP.bm25TopK(query, 10)) == rows(plainP.bm25TopK(query, 10)))
+    assert(localP.lastWandPath == plainP.lastWandPath,
+      s"serving mode changed the path: ${localP.lastWandPath} vs ${plainP.lastWandPath}")
   }
 }

@@ -50,9 +50,7 @@ class LocalServingSpec extends SparkSpecBase with JobCounting {
 
   /** The distributed plans: gate off, Parquet dictionary probes. */
   private def distEngine(root: String, lem: Map[String, String]): QueryEngine = {
-    val e = new QueryEngine(spark, root, lem)
-    e.localMaxPostings = 0L
-    e
+    new QueryEngine(spark, root, lem, EngineConfig(localMaxPostings = 0L))
   }
 
   private lazy val local = localEngine(dir, lemmas)
@@ -222,20 +220,21 @@ class LocalServingSpec extends SparkSpecBase with JobCounting {
       (if (bigrams.nonEmpty && bi.size == bigrams.size) bi.map(_.df).sum else 0L)
     val seq = phraseSeq(q, lemmas)
     val e = localEngine(dir, lemmas)
-    e.localMaxPostings = sumDf // at the gate: local
-    val atGate = tiered(e.handleQuery(q, 10))
-    assert(e.lastHandlePath == "local")
-    assert(jobsOf(e.handleQuery(q, 10).collect()) <= 1)
-    e.localMaxPostings = sumDf - 1 // one posting above it: distributed
-    val above = tiered(e.handleQuery(q, 10))
-    assert(e.lastHandlePath == "pruned" || e.lastHandlePath == "exact",
-      s"path above the gate: ${e.lastHandlePath}")
-    assert(jobsOf(e.handleQuery(q, 10).collect()) > 1)
+    val atGateE = e.withConfig(_.copy(localMaxPostings = sumDf)) // at the gate: local
+    val atGate = tiered(atGateE.handleQuery(q, 10))
+    assert(atGateE.lastHandlePath == "local")
+    assert(jobsOf(atGateE.handleQuery(q, 10).collect()) <= 1)
+    // one posting above it: distributed
+    val aboveE = e.withConfig(_.copy(localMaxPostings = sumDf - 1))
+    val above = tiered(aboveE.handleQuery(q, 10))
+    assert(aboveE.lastHandlePath == "pruned" || aboveE.lastHandlePath == "exact",
+      s"path above the gate: ${aboveE.lastHandlePath}")
+    assert(jobsOf(aboveE.handleQuery(q, 10).collect()) > 1)
     assert(above == atGate)
     // phraseMatch decodes the unigrams only
-    e.localMaxPostings = uni.map(_.df).sum - 1
-    val phraseAbove = docSet(e.phraseMatch(seq))
-    assert(jobsOf(e.phraseMatch(seq).collect()) > 1)
+    val phraseE = e.withConfig(_.copy(localMaxPostings = uni.map(_.df).sum - 1))
+    val phraseAbove = docSet(phraseE.phraseMatch(seq))
+    assert(jobsOf(phraseE.phraseMatch(seq).collect()) > 1)
     assert(phraseAbove == docSet(local.phraseMatch(seq)))
   }
 

@@ -68,8 +68,8 @@ class RandomizedParitySpec extends SparkSpecBase {
     // the distributed multi-generation plans ride along: every query
     // also runs with the driver-local gate shut on the 3-gen root, and
     // on the same corpus compacted into one root
-    val mPreDist = new MultiGenEngine(spark, root, lemmas).warmDictionary()
-    mPreDist.localMaxPostings = 0L
+    val mPreDist = new MultiGenEngine(spark, root, lemmas,
+      EngineConfig(localMaxPostings = 0L)).warmDictionary()
     val compactedDir = tmpDir("graft-fuzzq-compacted")
     Compactor.compact(spark, root, compactedDir, lemmas, conf)
     val compacted = new QueryEngine(spark, compactedDir, lemmas)
@@ -111,8 +111,8 @@ class RandomizedParitySpec extends SparkSpecBase {
       Generations.append(spark, spark.createDataset(b), dir, lemmas, conf))
     val multi = new MultiGenEngine(spark, dir, lemmas).warmDictionary()
     // the distributed plans (gate shut) and the compacted root ride along
-    val dist = new MultiGenEngine(spark, dir, lemmas).warmDictionary()
-    dist.localMaxPostings = 0L
+    val dist = new MultiGenEngine(spark, dir, lemmas,
+      EngineConfig(localMaxPostings = 0L)).warmDictionary()
     val compactedDir = tmpDir("graft-fuzzq-serving-compacted")
     Compactor.compact(spark, dir, compactedDir, lemmas, conf)
     val compacted = new QueryEngine(spark, compactedDir, lemmas)

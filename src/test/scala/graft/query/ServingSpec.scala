@@ -26,12 +26,12 @@ class ServingSpec extends SparkSpecBase {
   test("filtered scores: candidate path == semi-join path == brute force, bit-identical") {
     val terms = Seq("the", Transcripts.contentWords(5))
     val pred = col("doc_len") % 3 === 0 // ~1/3 of docs, no doc_id bias
-    engine.localMaxPostings = 0L // the distributed routes under test
-    val (viaCandidates, viaJoin) = try (scoreMap(
-      engine.bm25ScoresFiltered(terms, pred)), // small corpus -> candidate path
-      scoreMap(
-      engine.bm25ScoresFiltered(terms, pred, candidateCap = 0))) // forced semi-join
-    finally engine.localMaxPostings = 20000L
+    // the distributed routes under test
+    val dist = engine.withConfig(_.copy(localMaxPostings = 0L))
+    val viaCandidates = scoreMap(
+      dist.bm25ScoresFiltered(terms, pred)) // small corpus -> candidate path
+    val viaJoin = scoreMap(
+      dist.bm25ScoresFiltered(terms, pred, candidateCap = 0)) // forced semi-join
     val allowed = engine.docs.filter(pred).select(col("doc_id"))
     val brute = scoreMap(
       engine.bm25Scores(terms).join(allowed, Seq("doc_id"), "left_semi"))
@@ -168,8 +168,7 @@ class ServingSpec extends SparkSpecBase {
     assert(single.nonEmpty)
     assert(scoreMap(multi.bm25ScoresFiltered(terms, pred)) == single)
     // the candidate and semi-join routes, driver-local gate shut
-    val dist = new MultiGenEngine(spark, dir, Map.empty)
-    dist.localMaxPostings = 0L
+    val dist = new MultiGenEngine(spark, dir, Map.empty, EngineConfig(localMaxPostings = 0L))
     assert(scoreMap(dist.bm25ScoresFiltered(terms, pred)) == single)
     assert(scoreMap(
       dist.bm25ScoresFiltered(terms, pred, candidateCap = 0)) == single)
