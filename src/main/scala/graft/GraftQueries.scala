@@ -504,8 +504,7 @@ object GraftQueries {
       // from the oracle if a single rounded-value tie group spans the
       // exact-score cut, i.e. >190 docs sharing one 4-decimal score at
       // the boundary
-      val top = eng.bm25TopKForTerms(Seq("the", "query", "join"), 200,
-        useWand = true)
+      val top = eng.bm25TopKForTerms(Seq("the", "query", "join"), 200)
         .select(col("doc_id"), round(col("score"), 4).as("score"))
       withOrigDocId(eng, top)
         .orderBy(col("score").desc, col("doc_id").asc).limit(10)
@@ -639,16 +638,13 @@ object GraftQueries {
       // directories: submit them from two threads (guide §2.6 —
       // overlap independent jobs) so the cheap plain-JSON write
       // back-fills executors the bz2 compression tail leaves idle.
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val wBz2 = Future(articles.write.mode("overwrite")
-          .option("compression", "bzip2").json(s"${auxDir(dir)}/q37_wiki_bz2"))
-        val wPlain = Future(articles.write.mode("overwrite")
-          .json(s"${auxDir(dir)}/q37_wiki_plain"))
-        Await.result(wBz2, Duration.Inf)
-        Await.result(wPlain, Duration.Inf)
+      // The builder's fixed pool awaits both before rethrowing, and its
+      // threads end with the call, so no job property outlives it.
+      IndexBuilder.concurrently(s, 2) {
+        case 0 => articles.write.mode("overwrite")
+          .option("compression", "bzip2").json(s"${auxDir(dir)}/q37_wiki_bz2")
+        case _ => articles.write.mode("overwrite")
+          .json(s"${auxDir(dir)}/q37_wiki_plain")
       }
       val arts = graft.corpus.WikiSource.readArticles(s,
         s"${auxDir(dir)}/q37_wiki_bz2")

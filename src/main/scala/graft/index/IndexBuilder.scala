@@ -76,7 +76,7 @@ final case class IndexPaths(root: String) {
   *
   * Spark-first shape — each reference control boundary becomes a shuffle:
   *
-  *   transcripts --flatMap tokenize--> TermDoc rows            (producer)
+  *   transcripts --flatMap tokenize + salt--> SegmentRow rows  (producer)
   *     --repartition(term, salt) + sortWithinPartitions-->
   *   segments checkpoint (sorted runs + manifest = SPIMI spills)
   *     --re-sort + streaming per-term chunker (mapPartitions)-->
@@ -132,23 +132,6 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
   }
 
   // ------------------------------------------------------------- stage 1
-
-  /** Tokenize into per-(term, doc) postings. One turn is one document, so
-    * per-doc position grouping happens inside the flatMap (the reference
-    * groups per doc at src/indexer/indexer.rs:118-124) — zero shuffles.
-    */
-  def tokenizeDocs(docsWithText: DataFrame): Dataset[TermDoc] = {
-    val lem = bcLemmas
-    docsWithText.select($"doc_id", $"doc_len", $"text")
-      .as[(Long, Int, String)]
-      .flatMap { case (docId, dl, text) =>
-        val toks = Tokenizer.tokenize(text, lem.value)
-        // group positions per term, insertion order = ascending positions
-        val byTerm = scala.collection.mutable.LinkedHashMap.empty[String, scala.collection.mutable.ArrayBuffer[Int]]
-        toks.foreach(t => byTerm.getOrElseUpdate(t.term, scala.collection.mutable.ArrayBuffer.empty) += t.position)
-        byTerm.iterator.map { case (term, ps) => TermDoc(term, docId, dl, ps.length, ps.toArray) }
-      }
-  }
 
   /** SPIMI stage: salt high-df terms by doc_id RANGE (so per-salt chunks
     * concatenate in global doc order), shuffle on (term, salt), sort runs,
@@ -556,7 +539,7 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
         if (!keep) Fs.deleteRecursive(s"${paths.postings}/$name")
       }
       val parts = math.max(1, conf.numParts / nR)
-      concurrently(nR) { r =>
+      IndexBuilder.concurrently(spark, nR) { r =>
         val dir = s"${paths.postings}/range_$r"
         if (!manifestComplete(dir, rangeFp)) {
           val ts = System.nanoTime()
@@ -649,7 +632,7 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     // free. Running dict_by_len serially after the ranges measured
     // ~5-7% of bench-scale build wall (round-5 A/B pairs).
     def postDictStages(dictDf: DataFrame, rangesJob: () => Unit): Unit =
-      concurrently(3) {
+      IndexBuilder.concurrently(spark, 3) {
         case 0 => rangesJob()
         case 1 => writeDictByLen(dictDf)
         case _ => writeFuzzyIfStale(dictDf)
@@ -699,40 +682,6 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
       }
     rowsAndSum(paths.dictionary, "df", dictDf)
   }
-
-  /** Run `job(0..n-1)` on a small fixed pool — independent Spark jobs
-    * whose stages the scheduler interleaves into free task slots, so
-    * per-slice/per-range resume granularity costs no wall-clock vs a
-    * single job (measured: SEQUENTIAL slices halved c32 build
-    * throughput at 4.2M docs; concurrent slices restore it).
-    */
-  private def concurrently(n: Int)(job: Int => Unit): Unit =
-    if (n <= 1) (0 until n).foreach(job)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(n, 4))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try {
-        val futures = (0 until n).map(i => scala.concurrent.Future {
-          // getActiveSession is thread-local: hand the builder's
-          // session to the pool thread so the jobs' Fs/conf calls
-          // resolve against the same Hadoop configuration
-          org.apache.spark.sql.SparkSession.setActiveSession(spark)
-          job(i)
-        })
-        // Await EVERY job before returning OR rethrowing: a fail-fast
-        // Future.sequence would propagate the first failure while
-        // sibling stage jobs were still writing into the same index
-        // root — a caller's immediate retry (the resume pattern) would
-        // then race the orphaned writers' mode("overwrite") commits
-        // into the same dirs. Failures after the first are subsumed.
-        val outcomes = futures.map(f => scala.util.Try(
-          scala.concurrent.Await.result(f,
-            scala.concurrent.duration.Duration.Inf)))
-        outcomes.foreach(_.get)
-      } finally pool.shutdown()
-      ()
-    }
 
   // ------------------------------------------------------------ manifests
 
@@ -911,9 +860,9 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
         // double-counted ranges otherwise). The parent segments manifest
         // keeps the plain fp; geometry only matters while slices resume.
         val sliceFp = s"$fp-sl$nSlices"
-        // Slices run CONCURRENTLY (see concurrently()); each writes its
+        // Slices run CONCURRENTLY (see IndexBuilder.concurrently); each writes its
         // own dir + manifest — thread-safe by layout.
-        concurrently(nSlices) { i =>
+        IndexBuilder.concurrently(spark, nSlices) { i =>
           val dir = s"${paths.segments}/slice_$i"
           if (!manifestComplete(dir, sliceFp)) {
             val ts = System.nanoTime()
@@ -954,6 +903,43 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
 }
 
 object IndexBuilder {
+
+  /** Run `job(0..n-1)` on a small fixed pool — independent Spark jobs
+    * whose stages the scheduler interleaves into free task slots, so
+    * per-slice/per-range resume granularity costs no wall-clock vs a
+    * single job (measured: SEQUENTIAL slices halved c32 build
+    * throughput at 4.2M docs; concurrent slices restore it). The pool's
+    * threads end with the call, so the Spark job properties they copy
+    * from the caller die with them; workers of Scala's global pool
+    * would carry them into every later job they run (ProbeCancelSpec).
+    */
+  private[graft] def concurrently(spark: SparkSession, n: Int)(job: Int => Unit): Unit =
+    if (n <= 1) (0 until n).foreach(job)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(n, 4))
+      implicit val ec: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.fromExecutorService(pool)
+      try {
+        val futures = (0 until n).map(i => scala.concurrent.Future {
+          // getActiveSession is thread-local: hand the builder's
+          // session to the pool thread so the jobs' Fs/conf calls
+          // resolve against the same Hadoop configuration
+          org.apache.spark.sql.SparkSession.setActiveSession(spark)
+          job(i)
+        })
+        // Await EVERY job before returning OR rethrowing: a fail-fast
+        // Future.sequence would propagate the first failure while
+        // sibling stage jobs were still writing into the same index
+        // root — a caller's immediate retry (the resume pattern) would
+        // then race the orphaned writers' mode("overwrite") commits
+        // into the same dirs. Failures after the first are subsumed.
+        val outcomes = futures.map(f => scala.util.Try(
+          scala.concurrent.Await.result(f,
+            scala.concurrent.duration.Duration.Inf)))
+        outcomes.foreach(_.get)
+      } finally pool.shutdown()
+      ()
+    }
 
   /** The docs table's columns as [[IndexBuilder.buildDocs]] writes them. */
   val DocsSchema: StructType = {

@@ -17,18 +17,6 @@ final case class DocRow(
     role: String,
     doc_len: Int)
 
-/** Per-(term, doc) posting produced by the tokenize stage: positions are
-  * raw whitespace-token indices, sorted ascending (reference Posting,
-  * src/dictionary/mod.rs:3-6). `dl` (doc length) rides along so query-time
-  * BM25 needs no join against `docs`.
-  */
-final case class TermDoc(
-    term: String,
-    doc_id: Long,
-    dl: Int,
-    tf: Int,
-    positions: Array[Int])
-
 /** Stage-1 SPIMI segment row (the spill-run analog, reference
   * src/spimi.rs:148-179). `salt` partitions a high-df term's postings by
   * contiguous doc_id RANGE so that per-salt chunks concatenate in global

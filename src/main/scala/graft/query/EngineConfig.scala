@@ -7,11 +7,20 @@ package graft.query
   * leaves the first one unchanged. No value changes a query's result:
   * each picks a plan (driver-local, pruned, exact) or bounds driver
   * memory, and the specs pin the plans bit-identical.
+  *
+  * A value is a field only for one of three reasons, named in its
+  * scaladoc: a caller outside the specs sets it; it is a driver-memory
+  * budget a deployment sizes; or it is a threshold whose other side no
+  * spec-sized corpus reaches, so a spec lowers it to test that side.
+  * Every other plan choice is a constant rule on sizes the engine
+  * already knows (e.g. [[QueryEngine.PositionalPruneDensity]],
+  * [[TieredQuery.GuessFloor]]).
   */
 final case class EngineConfig(
 
-    /** Tombstone sets up to this size are collected ONCE at first use and
-      * served as a broadcast sorted array (the Lucene liveDocs form) —
+    /** DRIVER BUDGET (PlanDump sets it). Tombstone sets up to this size
+      * are collected ONCE at first use and served as a broadcast sorted
+      * array (the Lucene liveDocs form) —
       * above it, takedown-wave scale, the per-query filter falls back to
       * a distributed anti-join and the driver-local gate stays shut. The
       * array is the right default: a measured 4.2M-turn probe with 420k
@@ -23,8 +32,9 @@ final case class EngineConfig(
       */
     liveDocsCap: Long = 2000000L,
 
-    /** Lexicon-row cap for [[QueryEngine.warmDictionaryLocal]], per
-      * reader — gated on `meta.n_terms` (no job runs to decide). DRIVER
+    /** DRIVER BUDGET. Lexicon-row cap for
+      * [[QueryEngine.warmDictionaryLocal]], per reader — gated on
+      * `meta.n_terms` (no job runs to decide). DRIVER
       * SIZING (round-5 verdict finding #5): a resident DictRow costs
       * ~(2 x term chars + 40 B fields + ~64 B String/entry overhead) ≈
       * 120-150 B for the 10-30-char terms natural-language lexicons
@@ -41,13 +51,16 @@ final case class EngineConfig(
       */
     dictLocalCap: Long = 4000000L,
 
-    /** Below this many total postings across the query's terms, block-max
-      * pruning costs more Spark jobs than it saves — score directly. WAND
-      * engages for stopword-scale terms, exactly where it pays off.
+    /** CALLERS: q24 and Bench force the block-max path with 1; the exact
+      * fold is `Long.MaxValue`. Below this many total postings across the
+      * query's terms, block-max pruning costs more Spark jobs than it
+      * saves — score directly. WAND engages for stopword-scale terms,
+      * exactly where it pays off.
       */
     wandMinPostings: Long = 100000L,
 
-    /** The driver-local gate: when the total df of every term a call
+    /** DRIVER BUDGET (q24, Bench and PlanDump shut it with 0). The
+      * driver-local gate: when the total df of every term a call
       * decodes (unigrams and bigrams together) is at most this, the call
       * collects those terms' (term_id-pruned) chunk rows from every
       * reader in ONE Spark job and answers on the driver through
@@ -66,7 +79,9 @@ final case class EngineConfig(
       */
     localMaxPostings: Long = 20000L,
 
-    /** Above this many surviving chunks, chunk pruning switches from a
+    /** UNREACHED AT SPEC SCALE: the broadcast side needs more than 1,000
+      * surviving chunks, which no spec corpus has, so specs set 0. Above
+      * this many surviving chunks, chunk pruning switches from a
       * literal `chunk_seq IN (...)` pushed filter to a broadcast LEFT SEMI
       * join on (term_id, chunk_seq) — a 100k-literal filter makes Parquet
       * row-group stats evaluation itself the bottleneck on a wide cluster.
@@ -74,15 +89,20 @@ final case class EngineConfig(
       */
     chunkInMaxLiterals: Int = 1000,
 
-    /** Above this fraction of surviving chunks, the scoring read skips the
-      * pruning join entirely (read everything; rely on the per-posting
-      * candidate filter). Tests raise it past 1.0 to force the join form
-      * at small corpus sizes where candidates are always chunk-dense.
+    /** UNREACHED AT SPEC SCALE: spec candidates are always chunk-dense, so
+      * the one spec of the pruned scoring read sets 1.1. Above this
+      * fraction of surviving chunks, the scoring read skips the pruning
+      * (read everything; rely on the per-posting candidate filter).
+      * Kept by the gate-shut A/B (BENCH.md, "Serving forks above the
+      * driver-local gate", row "dense skip"): always taking the pruned
+      * read (1.1) ran one more job on the mid-df query at 100k and 420k
+      * turns (2 more per query set) and was no faster.
       */
     chunkPruneDenseFraction: Double = 0.9,
 
-    /** Max tier-1 MaxScore candidates worth broadcasting for chunk
-      * skipping; above it the exact unpruned plan is cheaper. The guard is
+    /** DRIVER BUDGET. Max tier-1 MaxScore candidates worth broadcasting
+      * for chunk skipping; above it the exact unpruned plan is cheaper.
+      * The guard is
       * a `limit(cap + 1).collect()` — a CollectLimit whose driver transfer
       * is BOUNDED BY THE CAP (cap+1 rows, ~tens of MB at the default),
       * never the candidate relation's full size: an essential mid-df term
@@ -94,24 +114,29 @@ final case class EngineConfig(
       */
     wandCandidateCap: Long = 2000000L,
 
-    /** Max chunk-metadata rows the candidate-pruning pre-pass may collect
-      * on the driver. The bound is checked with DRIVER-SIDE arithmetic
+    /** DRIVER BUDGET. Max chunk-metadata rows the candidate-pruning
+      * pre-pass may collect on the driver. The bound is checked with DRIVER-SIDE arithmetic
       * (min(total chunks, candidates × (reader, term) pairs)) before any
-      * job runs; above it, survivors are computed distributed and applied
-      * as a left-semi join with no driver materialization.
+      * job runs; above it the terms' chunks are read unpruned, with no
+      * driver materialization (BENCH.md, "Serving forks above the
+      * driver-local gate", row "over-cap read").
       */
     chunkMetaCollectCap: Double = 2e6,
 
-    /** Tier-1 candidate count above which the theta-refinement pass runs
-      * (with a 50·k floor). <= 0 forces refinement on every pruned query —
-      * a test setting: the refined cut must stay rank-identical to the
-      * exact path at ANY candidate count for the pruning to be
-      * trustworthy.
+    /** UNREACHED AT SPEC SCALE: spec corpora never reach 20,000 tier-1
+      * candidates, so specs set 0 to refine on every pruned query (the
+      * refined cut must stay rank-identical to the exact path at ANY
+      * candidate count). Tier-1 candidate count above which the
+      * theta-refinement pass runs (with a 50·k floor). Kept by the
+      * gate-shut A/B (BENCH.md, "Serving forks above the driver-local
+      * gate", row "θ-refine gate"): refining from the 50·k floor alone
+      * (1) ran 3–4 more jobs on the mid-df query (15 more per query set
+      * at 420k turns) and was slower at 420k turns.
       */
     refineMinCandidates: Long = 20000L,
 
-    /** Claimed-doc cap for handleQuery's PRUNED tier construction: when
-      * the phrase + bigram-conjunctive doc sets are each within this
+    /** DRIVER BUDGET. Claimed-doc cap for handleQuery's PRUNED tier
+      * construction: when the phrase + bigram-conjunctive doc sets are each within this
       * bound they are collected and the unigram tier runs through the
       * block-max top-k machinery; above it the full exact-scoring form
       * runs (a query whose phrase matches millions of docs is scoring
@@ -123,33 +148,9 @@ final case class EngineConfig(
       */
     handleQueryClaimCap: Int = 300000,
 
-    /** Max doc-intersection size for the candidate-pruned positional plan;
+    /** DRIVER BUDGET. Max doc-intersection size for the candidate-pruned
+      * positional plan, whose candidates are collected on the driver;
       * above it (an all-stopword phrase over most of the corpus) the plan
       * falls back to the shuffle-join form instead of a driver collect.
       */
-    phraseMaxCandidates: Long = 2000000L,
-
-    /** The candidate-pruned positional plan only pays when the doc
-      * intersection is SPARSE relative to chunk doc-ranges — a candidate
-      * set of c docs touches ~1 - (1 - c/N)^width of a dense term's chunks
-      * (width ≈ N / (df/128)), so above ~N/density candidates nearly every
-      * chunk survives and the pre-passes are pure overhead. Below the
-      * ratio, positions of a stopword are read for a few % of its chunks.
-      * `positionalPruneDensity` = 0 forces the pruned plan (tests).
-      */
-    positionalPruneDensity: Long = 256L,
-
-    /** First-guess width floor for handleQuery's adaptive unclaimed-top-k
-      * (the `min(|claimed|, max(floor, 4k))` slack added to k, see
-      * [[TieredQuery.run]]). 0 forces tiny guesses so the escalation path
-      * is coverable on small corpora.
-      */
-    guessFloor: Int = 50,
-
-    /** Test/diagnostic hook: the pruned top-k is eager (returns a
-      * LocalRelation), so plan assertions on its RESULT are vacuous — with
-      * this flag set, the executed physical plan of the internal scoring
-      * DataFrame is recorded in [[QueryEngine.lastWandPlan]] before
-      * collection.
-      */
-    captureWandPlan: Boolean = false)
+    phraseMaxCandidates: Long = 2000000L)

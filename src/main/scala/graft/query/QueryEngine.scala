@@ -583,19 +583,14 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
       liveLocally.isDefined
 
   private def positionalPruningPays(minDf: Long): Boolean =
-    minDf <= conf.phraseMaxCandidates && minDf * conf.positionalPruneDensity < meta.n_docs
+    minDf <= conf.phraseMaxCandidates &&
+      minDf * QueryEngine.PositionalPruneDensity < meta.n_docs
 
   /** Diagnostic: which path the last top-k took — "local" (driver-local
     * gate), "pruned", "fallback-cap" (tier-1 over wandCandidateCap),
     * "empty" (no candidate survived tier 1) or "exact".
     */
   var lastWandPath: String = ""
-
-  /** Diagnostic: the executed physical plan of the last pruned top-k's
-    * internal scoring DataFrame, recorded when
-    * [[EngineConfig.captureWandPlan]] is set.
-    */
-  var lastWandPlan: String = ""
 
   /** Diagnostic: "local" | "pruned" | "exact" form taken by the last
     * handleQuery.
@@ -607,8 +602,7 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
   /** `postings` rows of the (local) `termIds` with `_file` captured in
     * the scan stage, BELOW any join: input_file_name() is only defined
     * while the task reads the file and returns "" once rows cross an
-    * exchange, so evaluating it above the over-cap SHUFFLED semi-join
-    * would zero out reader recovery (test-pinned in FusedReadSpec).
+    * exchange, so evaluating it above one would zero out reader recovery.
     * Catalyst still prunes unused columns through this projection. One
     * reader needs no path, and a constant keeps the projection
     * deterministic, so later filters (chunk_seq IN) still push into the
@@ -641,26 +635,26 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     * [[EngineConfig.chunkMetaCollectCap]]; they then prune `withFile`
     * through a pushed `chunk_seq IN` (up to
     * [[EngineConfig.chunkInMaxLiterals]]) or a broadcast left-semi join.
-    * Above the cap the pre-pass stays a distributed left-semi join with
-    * no driver materialization. Returns the pruned
-    * rows and the collected survivor count (None when not collected).
+    * Above the cap `withFile` is read unpruned, as the dense skip reads
+    * it: the callers' range re-check and candidate filter still drop
+    * every foreign posting, and the gate-shut A/B in BENCH.md measured
+    * this read faster, in fewer jobs, than a distributed semi-join with
+    * the survivor pre-pass. Returns the pruned rows and the collected
+    * survivor count (None when not collected).
     */
   private def candidateChunks(withFile: DataFrame, pairs: Seq[(Int, DictRow)],
       bcCand: Broadcast[Array[Long]]): (DataFrame, Option[Int]) = {
     val valid = pairs.map { case (gi, l) => (gi, l.term_id) }.toSet
-    val gi = shared.genOf
-    val metaPairs = withFile
-      .select($"_file", $"term_id", $"chunk_seq", $"min_doc_id", $"max_doc_id")
-      .as[(String, Long, Long, Long, Long)]
-      .filter(c => valid((gi(c._1), c._2)) &&
-        QueryEngine.rangeHasCandidate(c._4, c._5, bcCand.value))
-      .select($"term_id", $"chunk_seq")
     val survBound = math.min(chunksOf(pairs), bcCand.value.length.toDouble * valid.size)
-    if (survBound > conf.chunkMetaCollectCap)
-      (withFile.join(metaPairs.toDF("term_id", "chunk_seq"), Seq("term_id", "chunk_seq"),
-        "left_semi"), None)
+    if (survBound > conf.chunkMetaCollectCap) (withFile, None)
     else {
-      val survivors = metaPairs.as[(Long, Long)].collect()
+      val gi = shared.genOf
+      val survivors = withFile
+        .select($"_file", $"term_id", $"chunk_seq", $"min_doc_id", $"max_doc_id")
+        .as[(String, Long, Long, Long, Long)]
+        .filter(c => valid((gi(c._1), c._2)) &&
+          QueryEngine.rangeHasCandidate(c._4, c._5, bcCand.value))
+        .select($"term_id", $"chunk_seq").as[(Long, Long)].collect()
       val pruned =
         if (survivors.length <= conf.chunkInMaxLiterals)
           withFile.filter($"chunk_seq".isin(survivors.map(_._2).distinct.toSeq: _*))
@@ -702,7 +696,7 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
       .as[(String, Long, Long, Long, Int, Array[Byte], Seq[Int], Seq[Int])]
       .flatMap { case (file, termId, minD, maxD, n, gaps, tfs, dls) =>
         // chunk-level range re-check before touching the blobs — the
-        // dense-skip branch arrives unpruned
+        // dense-skip and over-cap reads arrive unpruned
         val rangeOk = bcCand.forall(bc => QueryEngine.rangeHasCandidate(minD, maxD, bc.value))
         (if (rangeOk) info.get((gi(file), termId)) else None) match {
           case None => Iterator.empty
@@ -751,7 +745,8 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
       .flatMap { case (file, termId, minD, maxD, n, gaps, posBlob) =>
         // metadata-only range skip before decoding: the literal-IN
         // branch over-selects foreign (term_id, chunk_seq) combos that
-        // share a chunk_seq value, and this drops most of them unread
+        // share a chunk_seq value, the over-cap read is unpruned, and
+        // this drops most of their chunks unread
         if (!valid((gi(file), termId)) ||
             !bcCand.forall(bc => QueryEngine.rangeHasCandidate(minD, maxD, bc.value)))
           Iterator.empty
@@ -831,31 +826,30 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
   private def emptyScores(): DataFrame =
     Seq.empty[(Long, Double)].toDF("doc_id", "score")
 
-  /** Disjunctive (free-text) BM25 top-k. `useWand = true` applies the
-    * block-max pruning when the posting volume warrants it; every path
-    * returns identical results (proof sketch on [[maxScoreTopK]];
-    * asserted in tests).
+  /** Disjunctive (free-text) BM25 top-k. Block-max pruning applies
+    * when the posting volume reaches [[EngineConfig.wandMinPostings]];
+    * every path returns identical results (proof sketch on
+    * [[maxScoreTopK]]; asserted in tests).
     */
-  def bm25TopK(query: String, k: Int, useWand: Boolean = true): DataFrame =
-    bm25TopKForTerms(queryTerms(query), k, useWand)
+  def bm25TopK(query: String, k: Int): DataFrame =
+    bm25TopKForTerms(queryTerms(query), k)
 
-  def bm25TopKForTerms(terms: Seq[String], k: Int, useWand: Boolean = true): DataFrame = {
+  def bm25TopKForTerms(terms: Seq[String], k: Int): DataFrame = {
     val st = new TermStats(terms)
-    topKFromEntries(st, st.entries, k, useWand)
+    topKFromEntries(st, st.entries, k)
   }
 
   /** The top-k dispatch: driver-local under the gate, block-max pruned
     * above [[EngineConfig.wandMinPostings]], else direct — identical results.
     */
-  private def topKFromEntries(st: TermStats, es: Seq[DictRow], k: Int,
-      useWand: Boolean = true): DataFrame =
+  private def topKFromEntries(st: TermStats, es: Seq[DictRow], k: Int): DataFrame =
     if (es.isEmpty) emptyScores()
     else if (servesLocally(es)) {
       lastWandPath = "local"
       val ps = localPostings(st.pairs(es))
       spark.createDataFrame(LocalServing.topK(LocalServing.scores(es, ps, meta), k))
         .toDF("doc_id", "score")
-    } else if (useWand && es.map(_.df).sum >= conf.wandMinPostings) maxScoreTopK(st, es, k)
+    } else if (es.map(_.df).sum >= conf.wandMinPostings) maxScoreTopK(st, es, k)
     else {
       lastWandPath = "exact"
       topK(exactScores(st, es), k)
@@ -961,7 +955,6 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
         java.util.Arrays.sort(candIds)
         val out = topK(aggScores((Seq(essRows) ++ foldRows(st, nonEssEs, Some(candIds)))
           .reduce(_ unionByName _)), k)
-        if (conf.captureWandPlan) lastWandPlan = out.queryExecution.executedPlan.toString
         // eager: the persisted rows must stay alive until collection
         spark.createDataFrame(out.as[(Long, Double)].collect().toSeq)
           .toDF("doc_id", "score")
@@ -1049,7 +1042,7 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
       exactScores = () => exactScores(st, entries),
       bigramExactScores = () => exactScores(bst, bigramEntries), // thread 2's bigram_scores
       empty = () => emptyScores()),
-      k, conf, p => lastHandlePath = p)
+      k, conf.handleQueryClaimCap, p => lastHandlePath = p)
   }
 
   // ----------------------------------------------- filtered search (q51)
@@ -1326,7 +1319,7 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     * of the reference's min-df seeding,
     * src/query_processor/query_processor.rs:62-69). Two plans:
     * candidate-pruned when the anchor is sparse (see
-    * [[EngineConfig.positionalPruneDensity]]), shuffle-join chain otherwise.
+    * [[QueryEngine.PositionalPruneDensity]]), shuffle-join chain otherwise.
     */
   private def phraseDocs(phraseSeq: Seq[String], st: TermStats): DataFrame = {
     val empty = Seq.empty[Long].toDF("doc_id")
@@ -1563,6 +1556,17 @@ object QueryEngine {
   val ConjBroadcastMaxDf: Long = 1000000L
   val PhraseBroadcastMaxCand: Int = 200000
   val PhraseBroadcastMaxCf: Long = 2000000L
+
+  /** The candidate-pruned positional plan only pays when the doc
+    * intersection is SPARSE relative to chunk doc-ranges — a candidate
+    * set of c docs touches ~1 - (1 - c/N)^width of a dense term's chunks
+    * (width ≈ N / (df/128)), so above ~N/density candidates nearly every
+    * chunk survives and the pre-passes are pure overhead. Below the
+    * ratio, positions of a stopword are read for a few % of its chunks.
+    * A phrase anchor of df d takes the pruned plan when d × density <
+    * n_docs (and d <= [[EngineConfig.phraseMaxCandidates]]).
+    */
+  val PositionalPruneDensity: Long = 256L
 
   /** The result-page schema [[searchPage]]'s left join produces. */
   val SearchPageSchema: org.apache.spark.sql.types.StructType = {
@@ -1824,16 +1828,20 @@ private[graft] object TieredQuery {
   def singleTerm(topK: Int => DataFrame, k: Int): DataFrame =
     finish(topK(k).withColumn("tier", lit(2)), k)
 
-  /** The tier composition under `conf`'s claim cap
-    * ([[EngineConfig.handleQueryClaimCap]]) and adaptive-guess floor
-    * ([[EngineConfig.guessFloor]]).
+  /** First-guess width floor for the adaptive unclaimed-top-k: the
+    * `min(|claimed|, max(GuessFloor, 4k))` slack added to k in [[run]].
     */
-  def run(spark: SparkSession, s: Scorers, k: Int, conf: EngineConfig,
+  val GuessFloor: Int = 50
+
+  /** The tier composition under the claim cap
+    * ([[EngineConfig.handleQueryClaimCap]]).
+    */
+  def run(spark: SparkSession, s: Scorers, k: Int, claimCap: Int,
       setPath: String => Unit): DataFrame = {
     import spark.implicits._
     // Clamped: limit(cap + 1) with cap = Int.MaxValue (a natural way to
     // "disable" the cap) would overflow to a negative limit and throw.
-    val cap = math.min(conf.handleQueryClaimCap, Int.MaxValue - 1)
+    val cap = math.min(claimCap, Int.MaxValue - 1)
     // The bigram-conjunctive probe overlaps the phrase probe (guide
     // §2.6; the reference itself runs its strategies on separate
     // threads, search_engine/mod.rs:147-206): both are independent
@@ -1887,7 +1895,7 @@ private[graft] object TieredQuery {
       // Each round collects its (<= width) rows once, so the common
       // case is ONE sharply-pruned pass; the pathological case costs
       // one extra pass, bounded by the old construction's cost.
-      val guess = k + math.min(claimedIds.length, math.max(conf.guessFloor, 4 * k))
+      val guess = k + math.min(claimedIds.length, math.max(GuessFloor, 4 * k))
       val tier2 =
         if (guess >= k + claimedIds.length) {
           // small claimed set: the guess already IS the worst-case

@@ -18,4 +18,17 @@ class SparkEntrySpec extends SparkSpecBase {
     assume(new java.io.File("/root/testdata/sf0.001/documents.parquet").exists())
     assert(SparkEntry.entry(spark).count() > 0)
   }
+
+  test("q37 writes both wiki dumps concurrently and reads back one row per document") {
+    import spark.implicits._
+    // a documents table of the catalog's shape (doc_id, text)
+    val dir = tmpDir("graft-q37")
+    val texts = graft.corpus.Transcripts.generateLocal(5L).map(_.text)
+    texts.zipWithIndex.map { case (t, i) => (i + 1L, t) }.toDF("doc_id", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    val ids = SparkEntry.queries("q37_wiki_ingest")(spark, dir)
+      .select("id").collect().map(_.getString(0))
+    assert(ids.length == texts.size, "q37 must read back one article per document")
+    assert(ids.distinct.length == ids.length, "an article was read twice")
+  }
 }

@@ -164,16 +164,18 @@ class BigramSpec extends SparkSpecBase {
   test("adaptive unclaimed-top-k escalates when every top unigram doc is claimed (exact)") {
     import graft.corpus.Turn
     import graft.query.TieredQuery
-    // 8 GAP docs: both query bigrams ("zebra quartz", "quartz nickel")
+    // 60 GAP docs: both query bigrams ("zebra quartz", "quartz nickel")
     // appear but never the full phrase — so the phrase tier is EMPTY
     // (the phrase-fills-k early exit cannot fire) and every claimed doc
-    // is bigram-conjunctive. Every disjunctive unigram match is such a
-    // claimed doc, so the first adaptive guess (forced tiny via
-    // guessFloor = 0) finds ZERO unclaimed rows and must escalate to
-    // the worst-case top-(k + |claimed|) width — and the final answer
-    // must still match the scalar oracle bit-for-bit (tier 2 empty).
+    // is bigram-conjunctive. 60 claimed docs exceed the guess floor
+    // (TieredQuery.GuessFloor = 50), so at k = 1 the adaptive branch
+    // runs with a first guess of 1 + 50 = 51 < 1 + 60. Every disjunctive
+    // unigram match is a claimed doc, so that guess finds ZERO unclaimed
+    // rows and must escalate to the worst-case top-(k + |claimed|)
+    // width — and the final answer must still match the scalar oracle
+    // bit-for-bit (tier 2 empty).
     val ts0 = new java.sql.Timestamp(60000000L)
-    val custom = (0 until 8).map { i =>
+    val custom = (0 until 60).map { i =>
       Turn(f"c$i%03d", 0, "user",
         s"zebra quartz fill$i quartz nickel word$i", "", ts0)
     } :+ Turn("c999", 0, "user", "unrelated filler text", "", ts0)
@@ -182,8 +184,7 @@ class BigramSpec extends SparkSpecBase {
     new IndexBuilder(spark, Map.empty, IndexConf(numParts = 2, indexBigrams = true))
       .build(spark.createDataset(custom), dir)
     // the distributed tier construction under test
-    val e = new QueryEngine(spark, dir, Map.empty,
-      EngineConfig(localMaxPostings = 0L, guessFloor = 0))
+    val e = new QueryEngine(spark, dir, Map.empty, EngineConfig(localMaxPostings = 0L))
     val before = TieredQuery.adaptiveEscalations.get()
     val got = e.handleQuery("zebra quartz nickel", 1).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
@@ -198,14 +199,15 @@ class BigramSpec extends SparkSpecBase {
   test("adaptive unclaimed-top-k skips escalation when the match universe is exhausted") {
     import graft.corpus.Turn
     import graft.query.TieredQuery
-    // 9 GAP docs (both bigrams, never the phrase — see the escalation
+    // 51 GAP docs (both bigrams, never the phrase — see the escalation
     // test above), ALL bigram-claimed, and no other doc matches any
-    // query unigram: the first adaptive round's topK(width=10) comes
-    // back SHORT (9 rows) with zero unclaimed — proof the universe is
-    // exhausted, so the worst-case full-width re-run is provably
-    // useless and must be skipped (the counter must NOT move).
+    // query unigram: at k = 2 the first adaptive round's
+    // topK(width = 2 + 50 = 52) comes back SHORT (51 rows) with zero
+    // unclaimed — proof the universe is exhausted, so the worst-case
+    // full-width re-run is provably useless and must be skipped (the
+    // counter must NOT move).
     val ts0 = new java.sql.Timestamp(60000000L)
-    val custom = (0 until 9).map { i =>
+    val custom = (0 until 51).map { i =>
       Turn(f"x$i%03d", 0, "user",
         s"zebra quartz fill$i quartz nickel word$i", "", ts0)
     } :+ Turn("x999", 0, "user", "unrelated filler text", "", ts0)
@@ -214,9 +216,8 @@ class BigramSpec extends SparkSpecBase {
     new IndexBuilder(spark, Map.empty, IndexConf(numParts = 2, indexBigrams = true))
       .build(spark.createDataset(custom), dir)
     // the distributed tier construction under test;
-    // guess = k + min(9, 4k) = 10 < k + 9 = 11
-    val e = new QueryEngine(spark, dir, Map.empty,
-      EngineConfig(localMaxPostings = 0L, guessFloor = 0))
+    // guess = k + min(51, max(50, 4k)) = 52 < k + 51 = 53
+    val e = new QueryEngine(spark, dir, Map.empty, EngineConfig(localMaxPostings = 0L))
     val before = TieredQuery.adaptiveEscalations.get()
     val got = e.handleQuery("zebra quartz nickel", 2).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
@@ -226,44 +227,6 @@ class BigramSpec extends SparkSpecBase {
       .handleQuery("zebra quartz nickel", 2)
     assert(got == want, s"exhausted path drifts from oracle: got=$got want=$want")
     assert(got.forall(_._3 == 1), "all results must come from the bigram tier")
-  }
-
-  test("guess floor is per-engine: two engines with different floors coexist") {
-    import graft.corpus.Turn
-    import graft.query.TieredQuery
-    // same gap-doc corpus as the escalation test: claimed = 8 docs. An
-    // engine with a per-instance floor of 0 must escalate (tiny guess,
-    // all top slots claimed) while an engine at the DEFAULT floor on
-    // the same index must not (floor 50 covers the whole claimed set,
-    // so the non-adaptive worst-case-width branch runs) — and both
-    // must return identical results. Both derive from one parent
-    // engine with `withConfig`; the parent's config is untouched.
-    val ts0 = new java.sql.Timestamp(60000000L)
-    val custom = (0 until 8).map { i =>
-      Turn(f"g$i%03d", 0, "user",
-        s"zebra quartz fill$i quartz nickel word$i", "", ts0)
-    } :+ Turn("g999", 0, "user", "unrelated filler text", "", ts0)
-    val dir = tmpDir("graft-perengine-floor")
-    import spark.implicits._
-    new IndexBuilder(spark, Map.empty, IndexConf(numParts = 2, indexBigrams = true))
-      .build(spark.createDataset(custom), dir)
-    val parent = new QueryEngine(spark, dir, Map.empty)
-    // the distributed tier construction under test
-    val eTiny = parent.withConfig(_.copy(localMaxPostings = 0L, guessFloor = 0))
-    val eDefault = parent.withConfig(_.copy(localMaxPostings = 0L))
-    def run(e: QueryEngine): Seq[(Long, Double, Int)] =
-      e.handleQuery("zebra quartz nickel", 1).collect()
-        .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
-    val before = TieredQuery.adaptiveEscalations.get()
-    val gotTiny = run(eTiny)
-    assert(TieredQuery.adaptiveEscalations.get() == before + 1,
-      "floor-0 engine must escalate")
-    val gotDefault = run(eDefault)
-    assert(TieredQuery.adaptiveEscalations.get() == before + 1,
-      "default-floor engine must not escalate")
-    assert(gotTiny == gotDefault, "per-engine floors must not change results")
-    assert(parent.conf == EngineConfig(),
-      "derived engines must not touch the parent's config")
   }
 
   test("phrase-fills-k early exit: tier-0-only answer, identical to the exact form") {

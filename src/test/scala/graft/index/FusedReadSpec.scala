@@ -145,13 +145,26 @@ class FusedReadSpec extends SparkSpecBase {
   }
 
   test("positional plans: forced candidate-pruned and forced shuffle both match the oracle") {
-    val seq = Seq("the", Transcripts.contentWords(5))
-    val want = (oracle.phraseMatch(seq) -- victims).toSeq.sorted
-    assert(want.nonEmpty, "forced-pruned phrase matches nothing — weak test")
-    for (density <- Seq(0L, 10000000000L); r <- Seq(root, singleRoot)) {
-      val m = engine(r, local = false).withConfig(_.copy(positionalPruneDensity = density))
-      assert(m.phraseMatch(seq).collect().map(_.getLong(0)).toSeq.sorted == want,
-        s"density=$density diverged on $r")
+    // The inputs pick the plan: a phrase whose rarest term has df d takes
+    // the candidate-pruned plan when d × PositionalPruneDensity < n_docs;
+    // a stopword anchor ("the of"), or phraseMaxCandidates = 0, takes
+    // the shuffle-join plan.
+    def prunes(ts: Seq[String]): Boolean =
+      ts.map(oracle.df).min * QueryEngine.PositionalPruneDensity < oracle.nDocs
+    def want(ts: Seq[String]): Seq[Long] = (oracle.phraseMatch(ts) -- victims).toSeq.sorted
+    // "the" then a rare term at the next position, matching a live doc
+    val rareSeq = allTurns.iterator.flatMap(t =>
+      Tokenizer.tokenize(t.text, lemmas).sliding(2).collect {
+        case Seq(a, b) if a.term == "the" && b.position == a.position + 1 => Seq(a.term, b.term)
+      }).find(ts => prunes(ts) && want(ts).nonEmpty)
+    assert(rareSeq.isDefined, "fixture: no live 'the <rare>' phrase takes the pruned plan")
+    val stopSeq = Seq("the", "of")
+    assert(!prunes(stopSeq) && want(stopSeq).nonEmpty, "fixture: 'the of' must take the shuffle plan")
+    for (ts <- Seq(rareSeq.get, stopSeq); shuffle <- Seq(false, true); r <- Seq(root, singleRoot)) {
+      val m = engine(r, local = false)
+        .withConfig(c => if (shuffle) c.copy(phraseMaxCandidates = 0L) else c)
+      assert(m.phraseMatch(ts).collect().map(_.getLong(0)).toSeq.sorted == want(ts),
+        s"$ts (pruned plan: ${prunes(ts) && !shuffle}) diverged on $r")
     }
   }
 
@@ -194,15 +207,14 @@ class FusedReadSpec extends SparkSpecBase {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("over-cap survivors fallback (shuffled semi-join) still recovers generations") {
+  test("over-cap survivors fallback (unpruned read) still recovers generations") {
     // chunkMetaCollectCap < 0 forces the candidate pre-pass's over-cap
-    // branch: the chunk-metadata pre-pass is semi-joined distributed
-    // instead of collected. autoBroadcastJoinThreshold = -1 forces that
-    // un-hinted semi-join to SHUFFLE (explicit broadcast() hints
-    // elsewhere are unaffected) — the plan shape this branch exists for
-    // at 100-TB survivor counts. Generation recovery must survive the
-    // exchange: input_file_name() returns "" once rows cross a shuffle,
-    // so it has to be captured in the scan stage, below any join.
+    // branch: no survivor collect, every chunk of the terms is read and
+    // the candidate filter runs per posting. autoBroadcastJoinThreshold
+    // = -1 makes every un-hinted join SHUFFLE (explicit broadcast()
+    // hints are unaffected). Generation recovery must survive: the
+    // reader of each chunk comes from its file path, which
+    // input_file_name() returns only in the scan stage.
     val m = engine(root, local = false, pruned = true)
       .withConfig(_.copy(chunkMetaCollectCap = -1.0))
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

@@ -3,7 +3,7 @@ package graft.index
 import graft.SparkSpecBase
 import graft.corpus.Transcripts
 import graft.oracle.Oracle
-import graft.query.{EngineConfig, QueryEngine}
+import graft.query.QueryEngine
 
 /** End-to-end golden tests: the distributed index + query engine must be
   * RANK-IDENTICAL (doc_ids AND bit-identical Double scores) to the scalar
@@ -107,6 +107,9 @@ class IndexEndToEndSpec extends SparkSpecBase {
   private lazy val distributed =
     engine.withConfig(_.copy(localMaxPostings = 0L, wandMinPostings = 0L))
 
+  /** The distributed exact fold: block-max WAND never engages. */
+  private lazy val direct = distributed.withConfig(_.copy(wandMinPostings = Long.MaxValue))
+
   test("BM25 top-k rank-identical to oracle on all three paths (local, WAND, direct)") {
     queries.foreach { q =>
       val want = oracle.bm25TopK(q, 10)
@@ -115,10 +118,10 @@ class IndexEndToEndSpec extends SparkSpecBase {
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(local == want, s"local-path mismatch for '$q'\n got=$local\nwant=$want")
       // paths 2+3: distributed, block-max WAND forced on and off
-      Seq(true, false).foreach { useWand =>
-        val got = distributed.bm25TopK(q, 10, useWand = useWand)
+      Seq("wand" -> distributed, "direct" -> direct).foreach { case (path, e) =>
+        val got = e.bm25TopK(q, 10)
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        assert(got == want, s"top-k mismatch for '$q' (wand=$useWand)\n got=$got\nwant=$want")
+        assert(got == want, s"top-k mismatch for '$q' ($path)\n got=$got\nwant=$want")
       }
     }
   }
@@ -129,21 +132,34 @@ class IndexEndToEndSpec extends SparkSpecBase {
       chunkPruneDenseFraction = 1.1)) // ...even when chunks are dense
     queries.foreach { q =>
       val want = oracle.bm25TopK(q, 10)
-      val df = semi.bm25TopK(q, 10, useWand = true)
+      val df = semi.bm25TopK(q, 10)
       val got = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(got == want, s"semi-join wand mismatch for '$q'\n got=$got\nwant=$want")
     }
-    // and the executed scoring plan actually contains the broadcast
-    // semi-join for at least one query that reaches the pruned branch
-    // (captured INSIDE wand — the returned result is a LocalRelation,
-    // so asserting on ITS plan would be vacuous)
-    val capturing = semi.withConfig(_.copy(captureWandPlan = true))
-    val anySemi = queries.exists { q =>
-      capturing.lastWandPlan = ""
-      capturing.bm25TopK(q, 10, useWand = true).collect()
-      capturing.lastWandPlan.contains("LeftSemi")
+    // and some executed plan actually contains the broadcast semi-join
+    // (the pruned top-k returns a LocalRelation, so asserting on ITS plan
+    // would be vacuous: a listener sees the internal scoring action's)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
     }
-    assert(anySemi, "no query exercised the broadcast semi-join pruning")
+    spark.listenerManager.register(listener)
+    try {
+      queries.foreach(q => semi.bm25TopK(q, 10).collect())
+      // listener events arrive asynchronously and in order: once the
+      // sentinel action is seen, every earlier action has been too
+      spark.range(1).selectExpr("id AS plan_sentinel").collect()
+      val deadline = System.nanoTime() + 60000000000L
+      while (!plans.toArray.exists(_.toString.contains("plan_sentinel")) &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    assert(plans.asScala.exists(_.contains("plan_sentinel")), "listener never saw the sentinel")
+    assert(plans.asScala.exists(_.contains("LeftSemi")),
+      "no query exercised the broadcast semi-join pruning")
   }
 
   test("WAND forced theta refinement: rank-identical at any candidate count") {
@@ -151,7 +167,7 @@ class IndexEndToEndSpec extends SparkSpecBase {
     val refined = distributed.withConfig(_.copy(refineMinCandidates = 0L))
     queries.foreach { q =>
       val want = oracle.bm25TopK(q, 10)
-      val got = refined.bm25TopK(q, 10, useWand = true)
+      val got = refined.bm25TopK(q, 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(got == want, s"refined wand mismatch for '$q'\n got=$got\nwant=$want")
     }
@@ -162,7 +178,7 @@ class IndexEndToEndSpec extends SparkSpecBase {
     queries.foreach { q =>
       val want = oracle.bm25TopK(q, 10)
       capped.lastWandPath = ""
-      val got = capped.bm25TopK(q, 10, useWand = true)
+      val got = capped.bm25TopK(q, 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(got == want, s"cap-fallback mismatch for '$q'\n got=$got\nwant=$want")
       // every multi-candidate query must take the fallback without
@@ -172,17 +188,17 @@ class IndexEndToEndSpec extends SparkSpecBase {
         s"'$q' collected candidates despite cap=1 (path=${capped.lastWandPath})")
     }
     capped.lastWandPath = ""
-    capped.bm25TopK("the of and", 10, useWand = true).collect()
+    capped.bm25TopK("the of and", 10).collect()
     assert(capped.lastWandPath == "fallback-cap",
       s"stopword query should exceed cap=1, path=${capped.lastWandPath}")
   }
 
-  test("WAND distributed survivor pruning (no metadata collect): identical results") {
-    // force the no-collect semi-join path
+  test("WAND over the survivor-collect cap (unpruned chunk read): identical results") {
+    // chunkMetaCollectCap = 0: no survivor collect, the chunks are read unpruned
     val noCollect = distributed.withConfig(_.copy(chunkMetaCollectCap = 0.0))
     queries.foreach { q =>
       val want = oracle.bm25TopK(q, 10)
-      val got = noCollect.bm25TopK(q, 10, useWand = true)
+      val got = noCollect.bm25TopK(q, 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(got == want, s"distributed-survivor mismatch for '$q'\n got=$got\nwant=$want")
     }
@@ -351,33 +367,48 @@ class IndexEndToEndSpec extends SparkSpecBase {
   }
 
   test("phrase/proximity: pruned and shuffle positional plans agree with the oracle") {
-    // force BOTH plans over the same queries (stopword-containing phrases
-    // included) by toggling the candidate-collect cap: 0 => always the
-    // shuffle-join plan; huge + relaxed gate is the default pruned plan.
-    val sample = turnsLocal.filter(_.text.split(" ").length > 5).take(10)
-    val phrases = sample.map { t =>
-      graft.core.Tokenizer.tokenize(t.text, lemmas).take(3).map(_.term)
-    }.filter(ts => ts.distinct.length == 3) ++ Seq(Seq("the", "of"))
-    val forcePruned: EngineConfig => EngineConfig = _.copy(positionalPruneDensity = 0L)
-    val forceShuffle: EngineConfig => EngineConfig = _.copy(phraseMaxCandidates = 0L)
+    // The inputs pick the plan: a phrase whose rarest term has df d takes
+    // the candidate-pruned plan when d × PositionalPruneDensity < n_docs
+    // (d <= 4 on this ~1,200-doc corpus); a denser anchor (a stopword
+    // phrase) takes the shuffle-join plan, and phraseMaxCandidates = 0
+    // sends every phrase there. Both sides must be populated.
+    def prunes(ts: Seq[String]): Boolean =
+      ts.map(oracle.df).min * QueryEngine.PositionalPruneDensity < oracle.nDocs
+    // 3-token windows at consecutive positions: each occurs in its doc
+    val windows = turnsLocal.iterator.flatMap(t =>
+      graft.core.Tokenizer.tokenize(t.text, lemmas).sliding(3)
+        .filter(w => w.size == 3 && w.last.position - w.head.position == 2)
+        .map(_.map(_.term)))
+      .filter(_.distinct.size == 3)
+    val (rare, dense) = windows.take(2000).toSeq.partition(prunes)
+    val phrases = rare.take(3) ++ dense.take(3) ++ Seq(Seq("the", "of"))
+    assert(phrases.count(prunes) == 3 && phrases.count(!prunes(_)) == 4,
+      s"fixture: expected 3 pruned-plan and 4 shuffle-plan phrases, got ${phrases.map(prunes)}")
     // the distributed phrase plans under test
     val shut = engine.withConfig(_.copy(localMaxPostings = 0L))
-    val prunedE = shut.withConfig(forcePruned)
-    val shuffleE = prunedE.withConfig(forceShuffle)
-    phrases.take(6).foreach { ts =>
+    val shuffleE = shut.withConfig(_.copy(phraseMaxCandidates = 0L))
+    phrases.foreach { ts =>
       val want = oracle.phraseMatch(ts)
-      val pruned = prunedE.phraseMatch(ts).collect().map(_.getLong(0)).toSet
+      assert(want.nonEmpty, s"phrase $ts should match at least its source doc")
+      val viaInput = shut.phraseMatch(ts).collect().map(_.getLong(0)).toSet
       val shuffled = shuffleE.phraseMatch(ts).collect().map(_.getLong(0)).toSet
-      assert(pruned == want, s"pruned phrase plan mismatch for $ts")
-      assert(shuffled == want, s"shuffle phrase plan mismatch for $ts")
+      val plan = if (prunes(ts)) "pruned" else "shuffle"
+      assert(viaInput == want, s"$plan phrase plan mismatch for $ts")
+      assert(shuffled == want, s"forced shuffle phrase plan mismatch for $ts")
     }
-    val wantP = oracle.proximity("the", "of", 3).toSet
-    val prunedP = engine.withConfig(forcePruned).proximity("the", "of", 3)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-    val shuffledP = engine.withConfig(forceShuffle).proximity("the", "of", 3)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-    assert(prunedP == wantP)
-    assert(shuffledP == wantP)
+    // proximity takes the same plans: a pair holding a rare phrase's
+    // rarest term prunes, "the of" shuffles
+    val r = rare.head
+    val i = math.max(1, r.indexOf(r.minBy(oracle.df)))
+    Seq((r(i - 1), r(i)), ("the", "of")).foreach { case (t1, t2) =>
+      assert(prunes(Seq(t1, t2)) == (t1 != "the"), s"fixture: ($t1, $t2) on the wrong plan")
+      val want = oracle.proximity(t1, t2, 3).toSet
+      Seq(shut, shuffleE).foreach { e =>
+        val got = e.proximity(t1, t2, 3)
+          .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
+        assert(got == want, s"proximity mismatch for ($t1, $t2)")
+      }
+    }
   }
 
   test("proximity is directional (pp2 > pp1) and matches oracle") {
@@ -638,20 +669,24 @@ class IndexEndToEndSpec extends SparkSpecBase {
     assert(maxImpactA != maxImpactB,
       "postings were not rebuilt after the BM25 constants changed")
     // and QUERY-side scoring must use the index's constants, not the
-    // defaults — on both the exact and the forced-WAND path (block-max
-    // bounds are only sound when query impacts use the same k1/b the
-    // chunk max_norms were built under)
+    // defaults — on both the distributed exact fold and the forced-WAND
+    // path (block-max bounds are only sound when query impacts use the
+    // same k1/b the chunk max_norms were built under). The driver-local
+    // gate is shut on both, or LocalServing would answer them.
     val eng = new QueryEngine(spark, dir, lemmas)
-    val pruning = eng.withConfig(_.copy(wandMinPostings = 0L)) // force pruning
+    val exactE = eng.withConfig(_.copy(localMaxPostings = 0L, wandMinPostings = Long.MaxValue))
+    val pruning = eng.withConfig(_.copy(localMaxPostings = 0L, wandMinPostings = 0L))
     val scalar = new graft.oracle.Oracle(
       Transcripts.generateLocal(10L), lemmas, b = 0.25)
     Seq("the alba", "kelba sorro the").foreach { q =>
-      val exact = eng.bm25TopK(q, 5, useWand = false).collect()
+      val exact = exactE.bm25TopK(q, 5).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(exactE.lastWandPath == "exact", s"'$q' took ${exactE.lastWandPath}")
       assert(exact == scalar.bm25TopK(q, 5),
         s"custom-constant exact scoring diverges from scalar for '$q'")
       val pruned = pruning.bm25TopK(q, 5).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(pruning.lastWandPath != "local", s"'$q' was served driver-locally")
       assert(pruned == exact, s"custom-constant WAND diverges for '$q'")
     }
   }

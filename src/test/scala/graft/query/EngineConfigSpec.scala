@@ -85,11 +85,20 @@ class EngineConfigSpec extends SparkSpecBase with JobCounting {
       s"derived engine's first query ran $firstJobs jobs, the warm parent $warmJobs")
   }
 
-  test("QueryEngine's public setters are the three diagnostic slots; TieredQuery has none") {
+  test("EngineConfig's fields are the driver budgets, caller-set and spec-unreachable thresholds") {
+    // adding a field needs this edit: the scaladoc must say why it is one
+    assert(EngineConfig().productElementNames.toSeq == Seq(
+      "liveDocsCap", "dictLocalCap", "wandMinPostings", "localMaxPostings",
+      "chunkInMaxLiterals", "chunkPruneDenseFraction", "wandCandidateCap",
+      "chunkMetaCollectCap", "refineMinCandidates", "handleQueryClaimCap",
+      "phraseMaxCandidates"))
+  }
+
+  test("QueryEngine's public setters are the two diagnostic slots; TieredQuery has none") {
     def setters(c: Class[_], ms: Class[_] => Array[java.lang.reflect.Method]): Set[String] =
       ms(c).map(_.getName).filter(_.endsWith("_$eq")).toSet
     assert(setters(classOf[QueryEngine], _.getMethods) ==
-      Set("lastWandPath_$eq", "lastHandlePath_$eq", "lastWandPlan_$eq"))
+      Set("lastWandPath_$eq", "lastHandlePath_$eq"))
     assert(setters(TieredQuery.getClass, _.getDeclaredMethods).isEmpty)
     assert(setters(classOf[EngineConfig], _.getDeclaredMethods).isEmpty)
   }
