@@ -189,7 +189,7 @@ object GraftQueries {
       val out = twoGenRootFor(spark, dir, "twogendel")
       import spark.implicits._
       val delIds = graft.index.Generations.genDirs(out)
-        .map(g => spark.read.parquet(graft.index.IndexPaths(g).docs)
+        .map(g => graft.index.IndexBuilder.readDocs(spark, graft.index.IndexPaths(g).docs)
           .filter(expr("cast(substring(conv_id, 6) as long) % 7 = 3"))
           .select("doc_id"))
         .reduce(_ unionByName _).as[Long]

@@ -145,7 +145,8 @@ object IndexCli {
 
   private def turnsFrom(spark: SparkSession, o: Map[String, String]) = {
     val in = o.getOrElse("in", throw new IllegalArgumentException(s"--in required\n$usage"))
-    spark.read.parquet(in).as(org.apache.spark.sql.Encoders.product[Turn])
+    val turn = org.apache.spark.sql.Encoders.product[Turn]
+    spark.read.schema(turn.schema).parquet(in).as(turn)
   }
 
   private def req(o: Map[String, String], k: String): String =

@@ -150,6 +150,14 @@ object Generations {
     deleteDocsAt(spark, docIds, root, f"$root/del-$next%05d")
   }
 
+  /** The columns of a tombstone batch's `ids` table as [[deleteDocsAt]]
+    * writes them.
+    */
+  val DeletedIdsSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("doc_id", LongType)))
+  }
+
   /** Tombstone at an EXPLICIT directory — idempotent (a committed batch
     * is a replay and is skipped): the exactly-once seam for a
     * foreachBatch delete stream, mirroring [[appendAt]].
@@ -163,8 +171,8 @@ object Generations {
     // probe), and a pre-check `docIds.isEmpty` would execute that whole
     // plan a second time. The count is observed by the write itself —
     // no re-execution and no re-read.
-    val n = IndexBuilder.writeCounted(docIds.distinct().toDF("doc_id"),
-      s"$dir/ids").rows
+    val n = IndexBuilder.writeCounted(
+      docIds.distinct().toDF(DeletedIdsSchema.fieldNames.toSeq: _*), s"$dir/ids").rows
     // an empty batch never commits: it would put a permanent no-op
     // anti-join into every query plan of the root (replays of an empty
     // batch recompute empty and skip again — idempotent without a
@@ -195,16 +203,33 @@ object Generations {
     * None when the root has no deletes — so the no-delete serving path
     * stays join-free.
     */
-  def deletedDocs(spark: SparkSession, root: String): Option[DataFrame] = {
-    val dirs = delDirs(root)
+  def deletedDocs(spark: SparkSession, root: String): Option[DataFrame] =
+    deletedDocs(spark, delDirs(root))
+
+  /** The union `deletedDocs` gives for a root, over the tombstone
+    * batches `dirs`.
+    */
+  def deletedDocs(spark: SparkSession, dirs: Seq[String]): Option[DataFrame] =
     if (dirs.isEmpty) None
     // a single batch is already distinct (deleteDocsAt writes
     // docIds.distinct()) — skip the read-side shuffle that every
     // engine construction would otherwise pay between compactions
-    else if (dirs.size == 1) Some(spark.read.parquet(s"${dirs.head}/ids"))
-    else Some(dirs.map(d => spark.read.parquet(s"$d/ids"))
-      .reduce(_ unionByName _).distinct())
-  }
+    else if (dirs.size == 1) Some(batchIds(spark, dirs))
+    else Some(batchIds(spark, dirs).distinct())
+
+  /** The ids of the tombstone batches `dirs` as one relation: an id
+    * tombstoned by several batches appears once per batch.
+    */
+  private[graft] def batchIds(spark: SparkSession, dirs: Seq[String]): DataFrame =
+    IndexBuilder.reopen(spark, dirs.map(d => s"$d/ids"), DeletedIdsSchema)
+
+  /** The id count batch `dir` recorded at commit (`del_meta.json`), or
+    * Int.MaxValue, more than any driver collects, when the marker does
+    * not hold one.
+    */
+  private[graft] def batchSize(dir: String): Long =
+    "\"n_ids\":(\\d+)".r.findFirstMatchIn(Fs.readString(s"$dir/del_meta.json"))
+      .map(_.group(1).toLong).getOrElse(Int.MaxValue.toLong)
 
   /** Replace-or-insert (Lucene updateDocument): tombstone any LIVE docs
     * carrying the incoming (conv_id, turn_idx) keys, then append the

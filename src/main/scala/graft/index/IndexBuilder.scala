@@ -303,7 +303,7 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
       .flatMap { case (t, id, df) =>
         graft.core.Fuzzy.deleteVariants(t, d, maxLen).iterator
           .map(v => (v, t, id, df)) }
-      .toDF("variant", "term", "term_id", "df")
+      .toDF(IndexBuilder.FuzzySchema.fieldNames.toSeq: _*)
       .repartitionByRange(conf.numParts, $"variant")
       .sortWithinPartitions($"variant")
     val rows = IndexBuilder.writeCounted(variants, dir).rows
@@ -437,13 +437,13 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     * writes.
     */
   private def readDictionary(dir: String): DataFrame =
-    IndexBuilder.reopen(spark, dir, Encoders.product[DictRow].schema)
+    IndexBuilder.reopen(spark, Seq(dir), IndexBuilder.DictionarySchema)
 
   /** The segments table at `dir` (a single dir or slice dirs), opened
     * with the schema the builder writes.
     */
   private[index] def readSegments(dir: String): Dataset[SegmentRow] =
-    IndexBuilder.reopen(spark, dir, Encoders.product[SegmentRow].schema, recursive = true)
+    IndexBuilder.reopen(spark, Seq(dir), IndexBuilder.SegmentsSchema, recursive = true)
       .as[SegmentRow]
 
   /** Term boundaries for `nRanges` stage-2 postings ranges, read from
@@ -941,6 +941,10 @@ object IndexBuilder {
       ()
     }
 
+  // The schema of every index table, as its writer produces it. Readers
+  // open the tables with these (see `reopen`); TableSchemaSpec checks
+  // each against what parquet infers from freshly written files.
+
   /** The docs table's columns as [[IndexBuilder.buildDocs]] writes them. */
   val DocsSchema: StructType = {
     import org.apache.spark.sql.types._
@@ -950,21 +954,51 @@ object IndexBuilder {
       StructField("ts", TimestampType)))
   }
 
-  /** Re-opens a table the builder wrote with `schema` (the schema it
-    * wrote, as parquet stores it: every column nullable), skipping the
-    * footer-inference job a schema-less read starts.
+  /** The dictionary table's columns as `finishDictionary` writes them. */
+  val DictionarySchema: StructType = Encoders.product[DictRow].schema
+
+  /** The postings table's columns as `writePostingsRange` writes them. */
+  val PostingsSchema: StructType = Encoders.product[ChunkRow].schema
+
+  /** The segments table's columns as stage 1 writes them. */
+  val SegmentsSchema: StructType = Encoders.product[SegmentRow].schema
+
+  /** A fuzzy_dD table's columns as `writeFuzzyIndex` writes them. */
+  val FuzzySchema: StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("variant", StringType), StructField("term", StringType),
+      StructField("term_id", LongType), StructField("df", LongType)))
+  }
+
+  /** The dict_by_len table's columns as the build writes them. */
+  val DictByLenSchema: StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("cp_len", IntegerType), StructField("term", StringType),
+      StructField("term_id", LongType), StructField("df", LongType)))
+  }
+
+  /** The vsm_norms table's columns as `writeVsmNorms` writes them. */
+  val VsmNormsSchema: StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("doc_id", LongType), StructField("vsm_norm", DoubleType)))
+  }
+
+  /** Re-opens the tables at `dirs` (one relation over them all), which
+    * a writer of this package produced with `schema`, skipping the
+    * footer-inference job a schema-less read starts. A column a file
+    * lacks reads as null.
     */
-  private[index] def reopen(spark: SparkSession, dir: String, schema: StructType,
+  private[graft] def reopen(spark: SparkSession, dirs: Seq[String], schema: StructType,
       recursive: Boolean = false): DataFrame =
     spark.read.schema(StructType(schema.fields.map(_.copy(nullable = true))))
-      .option("recursiveFileLookup", recursive.toString).parquet(dir)
+      .option("recursiveFileLookup", recursive.toString).parquet(dirs: _*)
 
-  /** The docs table at `dir` (a single index or one generation), opened
-    * with [[DocsSchema]]. A table written before `ts` joined the schema
-    * reads it as null.
+  /** The docs tables at `dirs` (single indexes or generations) as one
+    * relation, opened with [[DocsSchema]]. A table written before `ts`
+    * joined the schema reads it as null.
     */
-  def readDocs(spark: SparkSession, dir: String): DataFrame =
-    reopen(spark, dir, DocsSchema)
+  def readDocs(spark: SparkSession, dirs: String*): DataFrame =
+    reopen(spark, dirs, DocsSchema)
 
   /** What a write observed: its row count and the sums of some columns. */
   private[index] final case class Written(rows: Long, sums: Map[String, Long]) {

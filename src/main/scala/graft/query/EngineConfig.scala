@@ -19,8 +19,9 @@ package graft.query
 final case class EngineConfig(
 
     /** DRIVER BUDGET (PlanDump sets it). Tombstone sets up to this size
-      * are collected ONCE at first use and served as a broadcast sorted
-      * array (the Lucene liveDocs form) —
+      * are collected ONCE (at warm-up, in one scan job when the
+      * batches' recorded sizes sum to at most this) and served as a
+      * broadcast sorted array (the Lucene liveDocs form) —
       * above it, takedown-wave scale, the per-query filter falls back to
       * a distributed anti-join and the driver-local gate stays shut. The
       * array is the right default: a measured 4.2M-turn probe with 420k

@@ -25,13 +25,15 @@ final class IndexReader(spark: SparkSession, val root: String) {
 
   private val paths = IndexPaths(root)
   val meta: IndexMeta = IndexBuilder.readMeta(root)
-  val dictionary: DataFrame = spark.read.parquet(paths.dictionary)
+  // every table opens with the schema its writer produced: no Spark job
+  val dictionary: DataFrame =
+    IndexBuilder.reopen(spark, Seq(paths.dictionary), IndexBuilder.DictionarySchema)
   // recursive: postings live in per-term-range subdirs (stage-2 resume
   // granularity); ranges are disjoint in term_id, so pushed term_id
   // predicates prune whole range dirs' row groups exactly as before
-  val postings: DataFrame = spark.read
-    .option("recursiveFileLookup", "true").parquet(paths.postings)
-  val docs: DataFrame = spark.read.parquet(paths.docs)
+  val postings: DataFrame = IndexBuilder.reopen(spark, Seq(paths.postings),
+    IndexBuilder.PostingsSchema, recursive = true)
+  val docs: DataFrame = IndexBuilder.readDocs(spark, paths.docs)
 
   /** Driver-side lookup of the query terms' dictionary entries — a
     * handful of rows. Served from the [[warmDictionaryLocal]] hash map
@@ -197,7 +199,7 @@ final class IndexReader(spark: SparkSession, val root: String) {
       // orElse re-probes only when nothing was found above — i.e. when
       // the backfill (which writes at exactly d) may have just run
       found.orElse(Option(d).filter(valid))
-        .map(dd => spark.read.parquet(paths.fuzzy(dd)))
+        .map(dd => IndexBuilder.reopen(spark, Seq(paths.fuzzy(dd)), IndexBuilder.FuzzySchema))
     })
 
   /** Fuzzy term lookup: all dictionary terms within Levenshtein distance d
@@ -282,7 +284,7 @@ final class IndexReader(spark: SparkSession, val root: String) {
   private lazy val dictByLen: Option[DataFrame] = {
     val dir = paths.dictByLen
     if (derivedTableValid(dir, IndexBuilder.tableToken(paths.dictionary)))
-      Some(spark.read.parquet(dir))
+      Some(IndexBuilder.reopen(spark, Seq(dir), IndexBuilder.DictByLenSchema))
     else None
   }
 
@@ -317,7 +319,7 @@ final class IndexReader(spark: SparkSession, val root: String) {
           }
         }
     }
-    if (valid) spark.read.parquet(dir)
+    if (valid) IndexBuilder.reopen(spark, Seq(dir), IndexBuilder.VsmNormsSchema)
     else
       // read-only root: the WRITER's computation (one shared home, no
       // drift), PERSISTED — without the cache every vsmScores action
@@ -376,9 +378,10 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
   /** An engine over the same root with the config `f(conf)`; this engine
     * is unchanged. No Spark job runs: the new engine shares this one's
     * readers (their warmed dictionaries and driver maps included), the
-    * tombstone relation and the multi-reader relations. Only the
-    * collected tombstone array, which depends on
-    * [[EngineConfig.liveDocsCap]], is collected again on first use.
+    * tombstone relation, the multi-reader relations and the tombstone
+    * array collected when the batches' recorded sizes fit a
+    * [[EngineConfig.liveDocsCap]]. The new engine applies its own cap:
+    * above the recorded sizes it decides from the distinct count again.
     */
   def withConfig(f: EngineConfig => EngineConfig): QueryEngine =
     new QueryEngine(spark, lemmas, shared, f(conf))
@@ -441,18 +444,25 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
   val deletedIds: Option[DataFrame] = shared.deletedIds
 
   /** The collected liveDocs complement (sorted tombstoned ids), resolved
-    * lazily on the first delete-filtered query: None when the root has
-    * no deletes OR the tombstone set outgrew [[EngineConfig.liveDocsCap]].
+    * by [[warmDictionaryLocal]] or else on the first delete-filtered
+    * query: None when the root has no deletes OR the tombstone set
+    * outgrew [[EngineConfig.liveDocsCap]].
     */
-  private lazy val deletedLocal: Option[Broadcast[Array[Long]]] =
+  private[query] lazy val deletedLocal: Option[Broadcast[Array[Long]]] =
     deletedIds.flatMap { d =>
-      // ONE job: collect cap+1 rows and decide from the length
       val cap = math.min(conf.liveDocsCap, Int.MaxValue - 2L).toInt
-      val ids = d.limit(cap + 1).as[Long].collect()
-      if (ids.length > cap) None
+      // the batches' recorded sizes fit: every id, one scan job, shared
+      // by every engine over the root
+      if (shared.tombstoneBound <= cap) Some(shared.tombstones)
       else {
-        java.util.Arrays.sort(ids)
-        Some(spark.sparkContext.broadcast(ids))
+        // batches overlap or the set is too large: collect cap+1
+        // distinct rows and decide from the length
+        val ids = d.limit(cap + 1).as[Long].collect()
+        if (ids.length > cap) None
+        else {
+          java.util.Arrays.sort(ids)
+          Some(spark.sparkContext.broadcast(ids))
+        }
       }
     }
 
@@ -552,9 +562,15 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     * serving (BENCH.md round 5 fan-out anatomy). A reader above the cap
     * falls back to a cached distributed probe. Returns whether every
     * reader installed the map.
+    *
+    * The tombstoned ids are collected here too, so the first query
+    * after a (re)open runs only its own jobs.
     */
-  def warmDictionaryLocal(): Boolean =
-    readers.map(_.warmDictionaryLocal(conf.dictLocalCap)).forall(identity)
+  def warmDictionaryLocal(): Boolean = {
+    val installed = readers.map(_.warmDictionaryLocal(conf.dictLocalCap)).forall(identity)
+    deletedLocal
+    installed
+  }
 
   /** [[warmDictionaryLocal]], returning the engine. */
   def warmDictionariesLocal(): this.type = {
@@ -1514,12 +1530,12 @@ object QueryEngine {
 
     lazy val postings: DataFrame =
       if (readers.size == 1) readers.head.postings
-      else spark.read.option("recursiveFileLookup", "true")
-        .parquet(gens.map(g => IndexPaths(g).postings): _*)
+      else IndexBuilder.reopen(spark, gens.map(g => IndexPaths(g).postings),
+        IndexBuilder.PostingsSchema, recursive = true)
 
     lazy val docs: DataFrame =
       if (readers.size == 1) readers.head.docs
-      else spark.read.parquet(gens.map(g => IndexPaths(g).docs): _*)
+      else IndexBuilder.readDocs(spark, gens.map(g => IndexPaths(g).docs): _*)
 
     /** Reader index of a postings file path; a closure, so executor code
       * captures no engine.
@@ -1531,7 +1547,28 @@ object QueryEngine {
         f => idx.getOrElse(Generations.genSegOf(f), -1)
       }
 
-    val deletedIds: Option[DataFrame] = Generations.deletedDocs(spark, root)
+    private val delDirs: Seq[String] = Generations.delDirs(root)
+
+    val deletedIds: Option[DataFrame] = Generations.deletedDocs(spark, delDirs)
+
+    /** The batches' recorded id counts summed: an upper bound on the
+      * distinct tombstoned ids, read from their markers (no job).
+      */
+    val tombstoneBound: Long = delDirs.map(Generations.batchSize).sum
+
+    /** Every batch's ids collected in ONE plain scan job (no shuffle),
+      * de-duplicated and sorted on the driver. Taken only when
+      * [[tombstoneBound]] fits an engine's liveDocsCap.
+      */
+    lazy val tombstones: Broadcast[Array[Long]] = {
+      import spark.implicits._
+      val ids = Generations.batchIds(spark, delDirs).as[Long].collect()
+      java.util.Arrays.sort(ids)
+      // keep one copy of an id several batches tombstoned, in place
+      var n = 0
+      ids.foreach { id => if (n == 0 || ids(n - 1) != id) { ids(n) = id; n += 1 } }
+      spark.sparkContext.broadcast(java.util.Arrays.copyOf(ids, n))
+    }
 
     /** The readers' driver lexicons merged (df summed per term) in UTF-8
       * term order — the dictionary Parquet's own order — so a prefix is

@@ -24,6 +24,15 @@ import graft.index.{Compactor, Generations, IndexBuilder, IndexConf}
   * meta statistics observed by the writes themselves and generation
   * docs tables opened with the builder's schema; the comment beside it
   * gives the count when every stage re-read its output to count it.
+  *
+  * Opening an engine has budgets as well: every index table opens with
+  * the schema its writer produced, and the warm-up collects the
+  * tombstones, so an open plus `warmDictionaryLocal` runs one job per
+  * dictionary (plus one for the tombstones) and the first query runs
+  * only its own. With every table's schema inferred from its files and
+  * the tombstones collected by the first query, the same opens took 4
+  * jobs (single index) and 13 (3 generations with tombstones), the
+  * first bm25TopK 3 and planning the first fuzzyTerms 1.
   */
 class JobCountSpec extends SparkSpecBase with JobCounting {
 
@@ -81,6 +90,31 @@ class JobCountSpec extends SparkSpecBase with JobCounting {
       e.handleQuery(q, 10).collect()
       assert(e.lastHandlePath == "pruned", s"expected the pruned tiers, got ${e.lastHandlePath}")
     }
+
+  test("job budgets of an engine open, its warm-up and its first queries") {
+    def opened(root: String): (QueryEngine, Int) = {
+      var e: QueryEngine = null
+      val n = jobsOf { e = new QueryEngine(spark, root, lemmas); e.warmDictionaryLocal() }
+      (e, n)
+    }
+    val (_, single) = opened(singleRoot)
+    info(s"single index, open + warm: $single jobs (budget 1)")
+    assert(single <= 1, s"single-index open + warm ran $single jobs, budget 1")
+    val (e, gens) = opened(genRoot)
+    info(s"3 generations with tombstones, open + warm: $gens jobs (budget 4)")
+    assert(gens <= 4, s"3-generation open + warm ran $gens jobs, budget 4")
+    val first = jobsOf(e.bm25TopK(q, 10).collect())
+    assert(e.lastWandPath == "local", s"expected the driver-local path, got ${e.lastWandPath}")
+    val warm = jobsOf(e.bm25TopK(q, 10).collect())
+    info(s"first bm25TopK after the warm-up: $first jobs; warm: $warm (budget 1)")
+    assert(warm <= 1, s"warm bm25TopK ran $warm jobs, budget 1")
+    assert(first == warm, s"first bm25TopK ran $first jobs, a warm one $warm")
+    // the variant table opens with its schema: no footer-inference job
+    val f = new QueryEngine(spark, singleRoot, lemmas)
+    val plan = jobsOf(f.fuzzyTerms("tabel", 1))
+    info(s"first fuzzyTerms on a fresh engine, planning: $plan jobs (budget 0)")
+    assert(plan == 0, s"planning the first fuzzyTerms ran $plan jobs")
+  }
 
   /** One write, measured from a cold start of its own Spark jobs. */
   private def writeJobs(label: String, budget: Int)(write: => Unit): Unit = {
