@@ -259,13 +259,6 @@ object Generations {
     append(spark, turns, root, lemmas, conf)
   }
 
-  /** Above this many distinct conv_ids in an upsert batch, the key probe
-    * stays a plain semi-join instead of pushing an In(conv_id, ...)
-    * literal list into every docs scan (the same literal-pushdown
-    * comfort zone as QueryEngine's snippet text lookup).
-    */
-  var upsertProbeMaxLiterals: Int = 1000
-
   /** Doc_ids matching the (conv_id, turn_idx) `keys` across the
     * generations' docs tables. The key batch is driver-sized by
     * construction (it ships WITH the upsert), so its distinct conv_ids
@@ -277,21 +270,16 @@ object Generations {
     * turn_idx over EVERY generation, an O(corpus) read on the takedown
     * path at 10^12 turns. The exact (conv_id, turn_idx) match still
     * goes through the semi-join; the literal filter only prunes IO.
-    * Batches with > [[upsertProbeMaxLiterals]] distinct conversations
-    * fall back to the un-pruned semi-join (predicate trees that large
-    * stop paying, the `EngineConfig.chunkInMaxLiterals` rationale).
+    * Batches with more than `maxLiterals` distinct conversations fall
+    * back to the un-pruned semi-join ([[MaxInLiterals]]).
     */
   private[index] def docIdsForKeys(spark: SparkSession, gens: Seq[String],
-      keys: DataFrame): DataFrame = {
+      keys: DataFrame, maxLiterals: Int = MaxInLiterals): DataFrame = {
     import spark.implicits._
-    // clamped like `EngineConfig.handleQueryClaimCap`: cap + 1 at
-    // Int.MaxValue would overflow to a negative limit and throw at
-    // analysis time
-    val cap = math.min(upsertProbeMaxLiterals, Int.MaxValue - 1)
     val convIds = keys.select($"conv_id").distinct()
-      .limit(cap + 1).as[String].collect()
+      .limit(maxLiterals + 1).as[String].collect()
     val prune: DataFrame => DataFrame =
-      if (convIds.length <= cap)
+      if (convIds.length <= maxLiterals)
         df => df.filter($"conv_id".isin(convIds.toSeq: _*))
       else identity _
     gens

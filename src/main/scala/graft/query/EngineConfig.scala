@@ -14,7 +14,11 @@ package graft.query
   * spec-sized corpus reaches, so a spec lowers it to test that side.
   * Every other plan choice is a constant rule on sizes the engine
   * already knows (e.g. [[QueryEngine.PositionalPruneDensity]],
-  * [[TieredQuery.GuessFloor]]).
+  * [[TieredQuery.GuessFloor]], [[graft.index.MaxInLiterals]]). A read
+  * restricted to candidate docs is not a choice either: it reads the
+  * terms' chunks and skips, undecoded, every chunk whose doc range holds
+  * no candidate (BENCH.md, "Candidate reads without the survivor
+  * pre-pass").
   */
 final case class EngineConfig(
 
@@ -80,27 +84,6 @@ final case class EngineConfig(
       */
     localMaxPostings: Long = 20000L,
 
-    /** UNREACHED AT SPEC SCALE: the broadcast side needs more than 1,000
-      * surviving chunks, which no spec corpus has, so specs set 0. Above
-      * this many surviving chunks, chunk pruning switches from a
-      * literal `chunk_seq IN (...)` pushed filter to a broadcast LEFT SEMI
-      * join on (term_id, chunk_seq) — a 100k-literal filter makes Parquet
-      * row-group stats evaluation itself the bottleneck on a wide cluster.
-      * The same bound routes the snippet text lookup.
-      */
-    chunkInMaxLiterals: Int = 1000,
-
-    /** UNREACHED AT SPEC SCALE: spec candidates are always chunk-dense, so
-      * the one spec of the pruned scoring read sets 1.1. Above this
-      * fraction of surviving chunks, the scoring read skips the pruning
-      * (read everything; rely on the per-posting candidate filter).
-      * Kept by the gate-shut A/B (BENCH.md, "Serving forks above the
-      * driver-local gate", row "dense skip"): always taking the pruned
-      * read (1.1) ran one more job on the mid-df query at 100k and 420k
-      * turns (2 more per query set) and was no faster.
-      */
-    chunkPruneDenseFraction: Double = 0.9,
-
     /** DRIVER BUDGET. Max tier-1 MaxScore candidates worth broadcasting
       * for chunk skipping; above it the exact unpruned plan is cheaper.
       * The guard is
@@ -114,15 +97,6 @@ final case class EngineConfig(
       * a free threshold. Tests lower it to force the fallback.
       */
     wandCandidateCap: Long = 2000000L,
-
-    /** DRIVER BUDGET. Max chunk-metadata rows the candidate-pruning
-      * pre-pass may collect on the driver. The bound is checked with DRIVER-SIDE arithmetic
-      * (min(total chunks, candidates × (reader, term) pairs)) before any
-      * job runs; above it the terms' chunks are read unpruned, with no
-      * driver materialization (BENCH.md, "Serving forks above the
-      * driver-local gate", row "over-cap read").
-      */
-    chunkMetaCollectCap: Double = 2e6,
 
     /** UNREACHED AT SPEC SCALE: spec corpora never reach 20,000 tier-1
       * candidates, so specs set 0 to refine on every pruned query (the

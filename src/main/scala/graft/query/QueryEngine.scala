@@ -5,7 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{ChunkCodec, Tokenizer}
-import graft.index.{Bm25, DictRow, Generations, IndexBuilder, IndexMeta, IndexPaths}
+import graft.index.{Bm25, DictRow, Generations, IndexBuilder, IndexMeta, IndexPaths,
+  MaxInLiterals}
 
 /** Decoded posting for query-side scoring. */
 final case class ScoredPosting(term_id: Long, doc_id: Long, tf: Int, dl: Int)
@@ -620,65 +621,12 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     * while the task reads the file and returns "" once rows cross an
     * exchange, so evaluating it above one would zero out reader recovery.
     * Catalyst still prunes unused columns through this projection. One
-    * reader needs no path, and a constant keeps the projection
-    * deterministic, so later filters (chunk_seq IN) still push into the
-    * Parquet scan — input_file_name() is nondeterministic and blocks that.
+    * reader needs no path and projects a constant.
     */
   private def postingsWithFile(termIds: Seq[Long]): DataFrame = {
     val base = postings.filter($"term_id".isin(termIds.distinct: _*))
     val file = if (readers.size == 1) lit("") else input_file_name()
     base.select((file.as("_file") +: base.columns.toSeq.map(col)): _*)
-  }
-
-  /** Σ ceil(df/ChunkSize) over the pairs' local rows — approximate
-    * (salting and split seams add sub-size chunks), fine for the
-    * skip-vs-scan heuristics it feeds.
-    */
-  private def chunksOf(pairs: Seq[(Int, DictRow)]): Double =
-    pairs.map { case (_, l) =>
-      (l.df + ChunkCodec.ChunkSize - 1) / ChunkCodec.ChunkSize }.sum.toDouble
-
-  /** The candidate-chunk survivor pre-pass shared by the scoring and
-    * positional reads: the chunk-metadata columns of `withFile` (no blob
-    * bytes), restricted to the valid (reader, term_id) pairs, find the
-    * chunks whose [min_doc_id, max_doc_id] holds a candidate (the
-    * reference's skip pointer, src/indexer/block.rs:73-86, driven by a
-    * candidate set). chunk_seq is a doc_id and doc ranges are disjoint,
-    * so (term_id, chunk_seq) stays a unique key across readers.
-    * Survivors are collected only when the driver-known bound — a
-    * candidate doc lies in at most one chunk per pair, so survivors <=
-    * min(total chunks, candidates × pairs) — fits
-    * [[EngineConfig.chunkMetaCollectCap]]; they then prune `withFile`
-    * through a pushed `chunk_seq IN` (up to
-    * [[EngineConfig.chunkInMaxLiterals]]) or a broadcast left-semi join.
-    * Above the cap `withFile` is read unpruned, as the dense skip reads
-    * it: the callers' range re-check and candidate filter still drop
-    * every foreign posting, and the gate-shut A/B in BENCH.md measured
-    * this read faster, in fewer jobs, than a distributed semi-join with
-    * the survivor pre-pass. Returns the pruned rows and the collected
-    * survivor count (None when not collected).
-    */
-  private def candidateChunks(withFile: DataFrame, pairs: Seq[(Int, DictRow)],
-      bcCand: Broadcast[Array[Long]]): (DataFrame, Option[Int]) = {
-    val valid = pairs.map { case (gi, l) => (gi, l.term_id) }.toSet
-    val survBound = math.min(chunksOf(pairs), bcCand.value.length.toDouble * valid.size)
-    if (survBound > conf.chunkMetaCollectCap) (withFile, None)
-    else {
-      val gi = shared.genOf
-      val survivors = withFile
-        .select($"_file", $"term_id", $"chunk_seq", $"min_doc_id", $"max_doc_id")
-        .as[(String, Long, Long, Long, Long)]
-        .filter(c => valid((gi(c._1), c._2)) &&
-          QueryEngine.rangeHasCandidate(c._4, c._5, bcCand.value))
-        .select($"term_id", $"chunk_seq").as[(Long, Long)].collect()
-      val pruned =
-        if (survivors.length <= conf.chunkInMaxLiterals)
-          withFile.filter($"chunk_seq".isin(survivors.map(_._2).distinct.toSeq: _*))
-        else
-          withFile.join(broadcast(survivors.toSeq.toDF("term_id", "chunk_seq")),
-            Seq("term_id", "chunk_seq"), "left_semi")
-      (pruned, Some(survivors.length))
-    }
   }
 
   /** (doc_id, fold_key, impact) rows for the global entries `es` across
@@ -696,23 +644,16 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     val info: Map[(Int, Long), (Long, Double)] =
       pairs.map { case (gi, l, e) => (gi, l.term_id) -> (e.term_id, e.idf) }.toMap
     val bcCand = cand.map(spark.sparkContext.broadcast(_))
-    val withFile = postingsWithFile(pairs.map(_._2.term_id))
-    val rows = bcCand.fold(withFile) { bc =>
-      val locals = pairs.map { case (gi, l, _) => (gi, l) }
-      val (pruned, survivors) = candidateChunks(withFile, locals, bc)
-      if (survivors.exists(_ > conf.chunkPruneDenseFraction * chunksOf(locals))) withFile
-      else pruned
-    }
     // local copies: the closure must not capture the engine
     val gi = shared.genOf
     val (avg, k1, b) = (meta.avgdl, meta.k1, meta.b)
-    Some(dropDeleted(rows
+    Some(dropDeleted(postingsWithFile(pairs.map(_._2.term_id))
       .select($"_file", $"term_id", $"min_doc_id", $"max_doc_id",
         $"n_postings", $"doc_gaps", $"tfs", $"dls")
       .as[(String, Long, Long, Long, Int, Array[Byte], Seq[Int], Seq[Int])]
       .flatMap { case (file, termId, minD, maxD, n, gaps, tfs, dls) =>
-        // chunk-level range re-check before touching the blobs — the
-        // dense-skip and over-cap reads arrive unpruned
+        // chunk skip before touching the blobs: a chunk whose doc range
+        // holds no candidate is never decoded
         val rangeOk = bcCand.forall(bc => QueryEngine.rangeHasCandidate(minD, maxD, bc.value))
         (if (rangeOk) info.get((gi(file), termId)) else None) match {
           case None => Iterator.empty
@@ -744,25 +685,21 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
   }
 
   /** (doc_id, positions) of the (reader, local term_id) `pairs`,
-    * optionally chunk-pruned to a sorted candidate array through
-    * [[candidateChunks]].
+    * optionally restricted to a sorted candidate array: a chunk whose doc
+    * range holds no candidate is skipped undecoded.
     */
   private def positioned(pairs: Seq[(Int, DictRow)],
       bcCand: Option[Broadcast[Array[Long]]]): DataFrame = {
     if (pairs.isEmpty) return Seq.empty[(Long, Seq[Int])].toDF("doc_id", "positions")
     val valid = pairs.map { case (g, l) => (g, l.term_id) }.toSet
     val gi = shared.genOf
-    val withFile = postingsWithFile(pairs.map(_._2.term_id))
-    val pruned = bcCand.fold(withFile)(bc => candidateChunks(withFile, pairs, bc)._1)
-    pruned
+    postingsWithFile(pairs.map(_._2.term_id))
       .select($"_file", $"term_id", $"min_doc_id", $"max_doc_id",
         $"n_postings", $"doc_gaps", $"pos_blob")
       .as[(String, Long, Long, Long, Int, Array[Byte], Array[Byte])]
       .flatMap { case (file, termId, minD, maxD, n, gaps, posBlob) =>
-        // metadata-only range skip before decoding: the literal-IN
-        // branch over-selects foreign (term_id, chunk_seq) combos that
-        // share a chunk_seq value, the over-cap read is unpruned, and
-        // this drops most of their chunks unread
+        // metadata-only range skip before decoding (the reference's skip
+        // pointer, src/indexer/block.rs:73-86, driven by a candidate set)
         if (!valid((gi(file), termId)) ||
             !bcCand.forall(bc => QueryEngine.rangeHasCandidate(minD, maxD, bc.value)))
           Iterator.empty
@@ -1104,8 +1041,8 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
   /** [[bm25ScoresFiltered]], top-k'd when `k` is given. Under the
     * driver-local gate the decoded postings bound the candidates: one
     * collect of the terms' chunk rows, then the predicate runs only
-    * over the docs those postings hold (one pushed `doc_id IN` job,
-    * at most `conf.localMaxPostings` rows), and the allowed docs are scored
+    * over the docs those postings hold (one [[textFor]] job, at most
+    * `conf.localMaxPostings` rows), and the allowed docs are scored
     * and ranked on the driver. The cap-limited candidate probe below
     * is skipped there: a CollectLimit scans the docs table in
     * incremental jobs until it sees cap+1 rows or the table ends.
@@ -1147,10 +1084,9 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     * (positions come from the POSITIONAL INDEX — the text is never
     * re-tokenized), `snippet` = the ±window tokens around it from the
     * stored document text. ONE positional relation spans every
-    * (reader, term) pair: a single chunk-metadata pre-pass (only chunks
-    * whose doc range contains a result doc are read — for top-k-sized
-    * inputs that is O(k) chunks per term) and one decode pass feed the
-    * per-doc first_pos agg; the text side is k rows of the doc_id-sorted
+    * (reader, term) pair: one read of the terms' chunks, decoding only
+    * those whose doc range contains a result doc, feeds the per-doc
+    * first_pos agg; the text side is k rows of the doc_id-sorted
     * docs parquet (row-group pruned), the withDocMeta shape.
     *
     * Both `slice` ends clamp at the document boundary, so windows at
@@ -1185,11 +1121,11 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
   /** The docs rows of `docIds`: the text side must be PRUNED, not just
     * broadcast-joined (with the k-row side broadcast the probe would
     * still SCAN every text row) — a pushed doc_id IN for up to
-    * [[EngineConfig.chunkInMaxLiterals]] ids prunes the doc_id-sorted docs parquet
-    * to O(k) row groups; above that a broadcast semi-join.
+    * [[graft.index.MaxInLiterals]] ids prunes the doc_id-sorted docs
+    * parquet to O(k) row groups; above that a broadcast semi-join.
     */
   private def textFor(docIds: Array[Long]): DataFrame =
-    if (docIds.length <= conf.chunkInMaxLiterals)
+    if (docIds.length <= MaxInLiterals)
       docs.filter($"doc_id".isin(docIds.toSeq: _*))
     else
       docs.join(broadcast(docIds.toSeq.toDF("doc_id")),
@@ -1197,7 +1133,7 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
 
   /** Serving wrapper: BM25 top-k with snippets in one call — the
     * result-page shape (doc_id, score, first_pos, snippet). The top-k
-    * ids are collected (k-bounded) to drive the chunk-pruned snippet
+    * ids are collected (k-bounded) to drive the chunk-skipping snippet
     * pass; left join so a result doc is never dropped by the snippet
     * stage. Under the driver-local gate: one collect of the terms'
     * chunk rows (positions included) ranks and anchors on the driver,
@@ -1360,9 +1296,9 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
       // Candidate-pruned plan: the RAREST term's doc set is a superset
       // of every phrase match, so it alone drives the pruning — one tiny
       // doc_gaps-only job (no positional blobs), then every other term's
-      // positions are fetched only for chunks containing those docs. A
-      // stopword in the phrase never has its (huge) positional data read
-      // outside the rare term's neighborhoods; the inner join below
+      // positions are decoded only for chunks containing those docs. A
+      // stopword in the phrase never has its (huge) positional data
+      // decoded outside the rare term's neighborhoods; the inner join below
       // performs the actual intersection.
       val cand = docIdsOf(st.locals(Seq(anchorEntry.term))).distinct().as[Long].collect()
       if (cand.isEmpty) return empty
@@ -1598,8 +1534,8 @@ object QueryEngine {
     * intersection is SPARSE relative to chunk doc-ranges — a candidate
     * set of c docs touches ~1 - (1 - c/N)^width of a dense term's chunks
     * (width ≈ N / (df/128)), so above ~N/density candidates nearly every
-    * chunk survives and the pre-passes are pure overhead. Below the
-    * ratio, positions of a stopword are read for a few % of its chunks.
+    * chunk survives and the candidate job is pure overhead. Below the
+    * ratio, positions of a stopword are decoded for a few % of its chunks.
     * A phrase anchor of df d takes the pruned plan when d × density <
     * n_docs (and d <= [[EngineConfig.phraseMaxCandidates]]).
     */

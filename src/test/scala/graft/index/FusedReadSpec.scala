@@ -207,16 +207,14 @@ class FusedReadSpec extends SparkSpecBase {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("over-cap survivors fallback (unpruned read) still recovers generations") {
-    // chunkMetaCollectCap < 0 forces the candidate pre-pass's over-cap
-    // branch: no survivor collect, every chunk of the terms is read and
-    // the candidate filter runs per posting. autoBroadcastJoinThreshold
-    // = -1 makes every un-hinted join SHUFFLE (explicit broadcast()
-    // hints are unaffected). Generation recovery must survive: the
-    // reader of each chunk comes from its file path, which
-    // input_file_name() returns only in the scan stage.
+  test("candidate read under shuffled joins still recovers generations") {
+    // The candidate read scans every chunk of the terms, skips those
+    // whose doc range holds no candidate and filters per posting.
+    // autoBroadcastJoinThreshold = -1 makes every un-hinted join SHUFFLE
+    // (explicit broadcast() hints are unaffected). Generation recovery
+    // must survive: the reader of each chunk comes from its file path,
+    // which input_file_name() returns only in the scan stage.
     val m = engine(root, local = false, pruned = true)
-      .withConfig(_.copy(chunkMetaCollectCap = -1.0))
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {

@@ -314,14 +314,10 @@ class GenerationDeleteSpec extends SparkSpecBase {
     assert(plan.contains("In(conv_id") || plan.contains("EqualTo(conv_id"),
       s"expected a pushed conv_id filter on the docs scan:\n$plan")
     // correctness unchanged vs the un-pruned semi-join
-    val old = Generations.upsertProbeMaxLiterals
-    try {
-      Generations.upsertProbeMaxLiterals = 0 // force the fallback
-      val fallback = Generations.docIdsForKeys(spark, gens, keys)
-      assert(!fallback.queryExecution.executedPlan.toString.contains("In(conv_id"))
-      assert(pruned.collect().map(_.getLong(0)).sorted.toSeq ==
-        fallback.collect().map(_.getLong(0)).sorted.toSeq)
-    } finally Generations.upsertProbeMaxLiterals = old
+    val fallback = Generations.docIdsForKeys(spark, gens, keys, maxLiterals = 0)
+    assert(!fallback.queryExecution.executedPlan.toString.contains("In(conv_id"))
+    assert(pruned.collect().map(_.getLong(0)).sorted.toSeq ==
+      fallback.collect().map(_.getLong(0)).sorted.toSeq)
   }
 
   test("streaming takedowns: doc_id files become tombstone batches, replay-safe") {

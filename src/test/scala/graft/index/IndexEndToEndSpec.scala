@@ -117,7 +117,8 @@ class IndexEndToEndSpec extends SparkSpecBase {
       val local = engine.bm25TopK(q, 10).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(local == want, s"local-path mismatch for '$q'\n got=$local\nwant=$want")
-      // paths 2+3: distributed, block-max WAND forced on and off
+      // paths 2+3: distributed, block-max WAND forced on and off; the
+      // candidate reads scan the terms' chunks and skip by doc range
       Seq("wand" -> distributed, "direct" -> direct).foreach { case (path, e) =>
         val got = e.bm25TopK(q, 10)
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -126,19 +127,11 @@ class IndexEndToEndSpec extends SparkSpecBase {
     }
   }
 
-  test("WAND with broadcast semi-join chunk pruning: identical results") {
-    val semi = distributed.withConfig(_.copy(
-      chunkInMaxLiterals = 0, // force the semi-join form...
-      chunkPruneDenseFraction = 1.1)) // ...even when chunks are dense
-    queries.foreach { q =>
-      val want = oracle.bm25TopK(q, 10)
-      val df = semi.bm25TopK(q, 10)
-      val got = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(got == want, s"semi-join wand mismatch for '$q'\n got=$got\nwant=$want")
-    }
-    // and some executed plan actually contains the broadcast semi-join
-    // (the pruned top-k returns a LocalRelation, so asserting on ITS plan
-    // would be vacuous: a listener sees the internal scoring action's)
+  /** `body`'s result with the executed plans of every action it runs:
+    * the driver-local kinds return a LocalRelation, so their own plan
+    * would be vacuous.
+    */
+  private def withPlans[A](body: => A): (A, Seq[String]) = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
@@ -147,19 +140,45 @@ class IndexEndToEndSpec extends SparkSpecBase {
           e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    try {
-      queries.foreach(q => semi.bm25TopK(q, 10).collect())
+    val result = try {
+      val r = body
       // listener events arrive asynchronously and in order: once the
       // sentinel action is seen, every earlier action has been too
       spark.range(1).selectExpr("id AS plan_sentinel").collect()
       val deadline = System.nanoTime() + 60000000000L
       while (!plans.toArray.exists(_.toString.contains("plan_sentinel")) &&
           System.nanoTime() < deadline) Thread.sleep(10)
+      r
     } finally spark.listenerManager.unregister(listener)
     import scala.jdk.CollectionConverters._
-    assert(plans.asScala.exists(_.contains("plan_sentinel")), "listener never saw the sentinel")
-    assert(plans.asScala.exists(_.contains("LeftSemi")),
-      "no query exercised the broadcast semi-join pruning")
+    val all = plans.asScala.toSeq
+    assert(all.exists(_.contains("plan_sentinel")), "listener never saw the sentinel")
+    (result, all.filterNot(_.contains("plan_sentinel")))
+  }
+
+  test("driver-local filtered text lookup on both sides of MaxInLiterals") {
+    import org.apache.spark.sql.functions.col
+    val pred = col("role") === "user"
+    val gateShut = engine.withConfig(_.copy(localMaxPostings = 0L))
+    // (query, whether its terms' postings hold more than MaxInLiterals docs)
+    Seq("albae corba" -> false, "the of and" -> true).foreach { case (q, over) =>
+      val held = direct.bm25TopK(q, 1000000).count()
+      assert((held > MaxInLiterals) == over,
+        s"'$q' holds $held docs, expected ${if (over) "more" else "at most"} than $MaxInLiterals")
+      val (got, plans) = withPlans(engine.bm25TopKFiltered(q, 10, pred).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+      // the driver-local path folds on the driver: no plan aggregates
+      assert(!plans.exists(_.contains("HashAggregate")),
+        s"'$q' left the driver-local path:\n${plans.mkString("\n")}")
+      val want = gateShut.bm25TopKFiltered(q, 10, pred).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(got.nonEmpty, s"'$q': empty filtered top-k — weak test")
+      assert(got == want, s"'$q' filtered mismatch vs the gate-shut plan\n got=$got\nwant=$want")
+      val pushed = plans.exists(_.contains("In(doc_id"))
+      val semi = plans.exists(_.contains("LeftSemi"))
+      if (over) assert(semi && !pushed, s"'$q': expected a broadcast semi-join:\n${plans.mkString("\n")}")
+      else assert(pushed && !semi, s"'$q': expected a pushed In(doc_id:\n${plans.mkString("\n")}")
+    }
   }
 
   test("WAND forced theta refinement: rank-identical at any candidate count") {
@@ -191,17 +210,6 @@ class IndexEndToEndSpec extends SparkSpecBase {
     capped.bm25TopK("the of and", 10).collect()
     assert(capped.lastWandPath == "fallback-cap",
       s"stopword query should exceed cap=1, path=${capped.lastWandPath}")
-  }
-
-  test("WAND over the survivor-collect cap (unpruned chunk read): identical results") {
-    // chunkMetaCollectCap = 0: no survivor collect, the chunks are read unpruned
-    val noCollect = distributed.withConfig(_.copy(chunkMetaCollectCap = 0.0))
-    queries.foreach { q =>
-      val want = oracle.bm25TopK(q, 10)
-      val got = noCollect.bm25TopK(q, 10)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(got == want, s"distributed-survivor mismatch for '$q'\n got=$got\nwant=$want")
-    }
   }
 
   test("SymSpell fuzzy index: parity with full-dictionary levenshtein scan (d=1,2)") {

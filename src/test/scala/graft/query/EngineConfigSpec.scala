@@ -89,8 +89,7 @@ class EngineConfigSpec extends SparkSpecBase with JobCounting {
     // adding a field needs this edit: the scaladoc must say why it is one
     assert(EngineConfig().productElementNames.toSeq == Seq(
       "liveDocsCap", "dictLocalCap", "wandMinPostings", "localMaxPostings",
-      "chunkInMaxLiterals", "chunkPruneDenseFraction", "wandCandidateCap",
-      "chunkMetaCollectCap", "refineMinCandidates", "handleQueryClaimCap",
+      "wandCandidateCap", "refineMinCandidates", "handleQueryClaimCap",
       "phraseMaxCandidates"))
   }
 
