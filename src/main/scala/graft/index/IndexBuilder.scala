@@ -694,17 +694,7 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     * part files).
     */
   private[index] def manifestRows(dir: String): Option[Long] =
-    manifestLong(dir, "rows")
-
-  /** A numeric field of a stage's manifest, if the manifest exists and
-    * records it (quoted or bare).
-    */
-  private def manifestLong(dir: String, field: String): Option[Long] = {
-    val f = s"$dir/_manifest.json"
-    if (!Fs.exists(f)) None
-    else s"\"$field\":\"?(\\d+)".r.findFirstMatchIn(Fs.readString(f))
-      .map(_.group(1).toLong)
-  }
+    IndexBuilder.manifestLong(dir, "rows")
 
   /** (rows, sum of `column`) of a written table: its manifest's `rows`
     * and `<column>_sum`, both observed by the write. A manifest written
@@ -713,7 +703,7 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     */
   private[index] def rowsAndSum(dir: String, column: String,
       table: => DataFrame): (Long, Long) =
-    (for (n <- manifestRows(dir); s <- manifestLong(dir, s"${column}_sum"))
+    (for (n <- manifestRows(dir); s <- IndexBuilder.manifestLong(dir, s"${column}_sum"))
       yield (n, s)).getOrElse {
       val r = table.agg(count(lit(1)), sum(col(column))).head()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
@@ -903,6 +893,20 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
 }
 
 object IndexBuilder {
+
+  /** A numeric field of a stage's manifest, if the manifest exists and
+    * records it (quoted or bare).
+    */
+  private[index] def manifestLong(dir: String, field: String): Option[Long] = {
+    val f = s"$dir/_manifest.json"
+    if (!Fs.exists(f)) None
+    else s"\"$field\":\"?(\\d+)".r.findFirstMatchIn(Fs.readString(f))
+      .map(_.group(1).toLong)
+  }
+
+  /** The Parquet bytes a table's manifest recorded when it was written. */
+  private[graft] def manifestBytes(dir: String): Option[Long] =
+    manifestLong(dir, "bytes")
 
   /** Run `job(0..n-1)` on a small fixed pool — independent Spark jobs
     * whose stages the scheduler interleaves into free task slots, so

@@ -67,8 +67,11 @@ final case class EngineConfig(
     /** DRIVER BUDGET (q24, Bench and PlanDump shut it with 0). The
       * driver-local gate: when the total df of every term a call
       * decodes (unigrams and bigrams together) is at most this, the call
-      * collects those terms' (term_id-pruned) chunk rows from every
-      * reader in ONE Spark job and answers on the driver through
+      * takes those terms' chunk rows from every reader (from the
+      * resident postings, when the readers' recorded postings bytes fit
+      * a share of the driver heap, else by a term_id-pruned collect in
+      * ONE Spark job; see `QueryEngine.residentBudget`) and answers on
+      * the driver through
       * [[LocalServing]] — the exact same formulas, fold order and
       * tie-breaks, so results are bit-identical (LocalServingSpec). It
       * covers `bm25TopK`, `handleQuery`, `phraseMatch`,
@@ -77,9 +80,9 @@ final case class EngineConfig(
       * one pushed job that runs the predicate over the docs those
       * postings hold), on single and generation roots alike; tombstoned
       * docs are dropped at decode (the gate stays shut above
-      * [[liveDocsCap]]). Driver memory is bounded by this many postings;
-      * the positional kinds (phrase, tiered, snippets) also ship
-      * `pos_blob`, whose size grows with the collected terms' cf. 0
+      * [[liveDocsCap]]). A call's decoded postings are bounded by this
+      * many; collected per call, the positional kinds (phrase, tiered,
+      * snippets) also ship `pos_blob`, whose size grows with the collected terms' cf. 0
       * disables: every call then runs its distributed plan.
       */
     localMaxPostings: Long = 20000L,

@@ -3,12 +3,13 @@ package graft.query
 import graft.core.{ChunkCodec, Tokenizer}
 import graft.index.{Bm25, DictRow, IndexMeta}
 
-/** One postings chunk row as the driver-local paths collect it: the
-  * `postings` table's decode columns, with `pos_blob` null when the
-  * call does not need positions for that term.
+/** One postings chunk row as the driver-local paths read it (from
+  * [[ResidentPostings]] or one collect): the `postings` table's decode
+  * columns, with `pos_blob` null when the call does not need positions
+  * for that term.
   */
 final case class ChunkRow(term_id: Long, n_postings: Int, doc_gaps: Array[Byte],
-    tfs: Seq[Int], dls: Seq[Int], pos_blob: Array[Byte])
+    tfs: Array[Int], dls: Array[Int], pos_blob: Array[Byte])
 
 /** One term's postings decoded on the driver, its chunks concatenated.
   * `positions` is null when the positional column was not collected;
@@ -27,9 +28,11 @@ final class TermPostings(val docIds: Array[Long], val tfs: Array[Int], val dls: 
 }
 
 /** Driver-local query evaluation over decoded postings: pure functions,
-  * no Spark. The engine collects the chunk rows of every term a call
-  * needs in ONE job (when their total df fits under
-  * `EngineConfig.localMaxPostings`) and answers from them here — the
+  * no Spark. When the total df of every term a call needs fits under
+  * `EngineConfig.localMaxPostings`, the engine reads those terms' chunk
+  * rows from its [[ResidentPostings]] (when the root's postings fit
+  * the driver heap's resident budget) or collects them in ONE job, and
+  * answers from them here — the
   * reference's one-process evaluation of phrase intersection and the
   * three-tier handle_query (positional_intersect/mod.rs:11-35,
   * search_engine/mod.rs:118-206).

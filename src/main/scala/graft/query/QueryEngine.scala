@@ -2,6 +2,7 @@ package graft.query
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 import graft.core.{ChunkCodec, Tokenizer}
@@ -366,7 +367,7 @@ final class IndexReader(spark: SparkSession, val root: String) {
   *    BinaryHeap, src/scoring/mod.rs:6-31, with a deterministic tie-break).
   */
 class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
-    shared: QueryEngine.Shared, val conf: EngineConfig) {
+    shared: QueryEngine.Shared, val conf: EngineConfig, residentBudget: Long) {
   import spark.implicits._
 
   /** An engine over `root` (a built index or a generations root) with
@@ -374,7 +375,8 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     */
   def this(spark: SparkSession, root: String, lemmas: Map[String, String] = Map.empty,
       conf: EngineConfig = EngineConfig()) =
-    this(spark, lemmas, new QueryEngine.Shared(spark, root), conf)
+    this(spark, lemmas, new QueryEngine.Shared(spark, root), conf,
+      QueryEngine.residentBudget(Runtime.getRuntime.maxMemory))
 
   /** An engine over the same root with the config `f(conf)`; this engine
     * is unchanged. No Spark job runs: the new engine shares this one's
@@ -385,7 +387,14 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     * above the recorded sizes it decides from the distinct count again.
     */
   def withConfig(f: EngineConfig => EngineConfig): QueryEngine =
-    new QueryEngine(spark, lemmas, shared, f(conf))
+    new QueryEngine(spark, lemmas, shared, f(conf), residentBudget)
+
+  /** This engine with the resident postings budget `bytes` in place of
+    * the one derived from the driver heap (0 shuts it), sharing its
+    * state as [[withConfig]] does.
+    */
+  private[query] def withResidentBudget(bytes: Long): QueryEngine =
+    new QueryEngine(spark, lemmas, shared, conf, bytes)
 
   /** The index directories served, in generation order. */
   val gens: Seq[String] = shared.gens
@@ -714,36 +723,64 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
       }.toDF("doc_id", "positions")
   }
 
-  /** ONE job: the chunk rows of `pairs` from every reader, decoded on
-    * the driver under their global entries' term_ids, tombstoned docs
-    * dropped. `pos_blob` is shipped only for the entries in `posIds`.
+  /** Whether this engine reads driver-local calls' chunk rows from the
+    * shared [[ResidentPostings]]: the postings bytes the readers'
+    * manifests record, summed, fit its resident budget (by default
+    * [[QueryEngine.residentBudget]] of the driver's max heap).
+    */
+  private lazy val holdsResident: Boolean =
+    residentBudget > 0 && shared.postingsBytes <= residentBudget
+
+  /** Heap bytes of the postings this engine's root holds on the driver
+    * (shared with every engine over it); 0 until loaded.
+    */
+  private[query] def residentBytes: Long = shared.residentBytes
+
+  /** The chunk rows of `pairs` from every reader, decoded on the driver
+    * under their global entries' term_ids, tombstoned docs dropped.
+    * `pos_blob` is kept only for the entries in `posIds`. With
+    * [[holdsResident]] the rows come from the driver arrays, which the
+    * first such call loads in one job; otherwise, or while another call
+    * is loading them, ONE job collects them.
     * Callers have checked [[servesLocally]].
     */
   private def localPostings(pairs: Seq[(Int, DictRow, DictRow)],
       posIds: Set[Long] = Set.empty): Map[Long, TermPostings] =
     if (pairs.isEmpty) Map.empty
-    else {
-      val termIds = pairs.map(_._2.term_id).distinct
-      // the entry's term_id of each row, -1 for a row of a term another
-      // reader asked for. One reader's entries carry its own term_ids, so
-      // it skips the path lookup (measured ~10 ms a call on a small index)
-      val (rows, k) =
-        if (readers.size == 1) (postings.filter($"term_id".isin(termIds: _*)), $"term_id")
-        else {
-          val key = pairs.map { case (g, l, e) => (g, l.term_id) -> e.term_id }.toMap
-          val gi = shared.genOf
-          (postingsWithFile(termIds),
-            udf((file: String, termId: Long) => key.getOrElse((gi(file), termId), -1L))
-              .apply($"_file", $"term_id"))
-        }
-      val pos =
-        if (posIds.isEmpty) lit(null).cast("binary")
-        else when(k.isin(posIds.toSeq: _*), $"pos_blob")
-      LocalServing.decode(rows
-        .select(k.as("term_id"), $"n_postings", $"doc_gaps", $"tfs", $"dls", pos.as("pos_blob"))
-        .filter($"term_id" >= 0)
-        .as[ChunkRow].collect().toSeq, liveLocally.get)
+    else (if (holdsResident) shared.resident else None) match {
+      case Some(held) =>
+        LocalServing.decode(pairs.flatMap { case (g, l, e) =>
+          held(g).rows(l.term_id, e.term_id, posIds(e.term_id))
+        }, liveLocally.get)
+      case None => collectPostings(pairs, posIds)
     }
+
+  /** [[localPostings]] without resident postings: ONE job collects the
+    * chunk rows of `pairs` from every reader.
+    */
+  private def collectPostings(pairs: Seq[(Int, DictRow, DictRow)],
+      posIds: Set[Long]): Map[Long, TermPostings] = {
+    val termIds = pairs.map(_._2.term_id).distinct
+    // the entry's term_id of each row, -1 for a row of a term another
+    // reader asked for. One reader's entries carry its own term_ids, so
+    // it skips the path lookup (measured ~10 ms a call on a small index)
+    val (rows, k) =
+      if (readers.size == 1) (postings.filter($"term_id".isin(termIds: _*)), $"term_id")
+      else {
+        val key = pairs.map { case (g, l, e) => (g, l.term_id) -> e.term_id }.toMap
+        val gi = shared.genOf
+        (postingsWithFile(termIds),
+          udf((file: String, termId: Long) => key.getOrElse((gi(file), termId), -1L))
+            .apply($"_file", $"term_id"))
+      }
+    val pos =
+      if (posIds.isEmpty) lit(null).cast("binary")
+      else when(k.isin(posIds.toSeq: _*), $"pos_blob")
+    LocalServing.decode(rows
+      .select(k.as("term_id"), $"n_postings", $"doc_gaps", $"tfs", $"dls", pos.as("pos_blob"))
+      .filter($"term_id" >= 0)
+      .as[ChunkRow].collect().toSeq, liveLocally.get)
+  }
 
   // -------------------------------------------------------------- scoring
 
@@ -942,7 +979,8 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     * bigrams) for scoring, the phrase chain and the conjunctive
     * intersection. Under the [[EngineConfig.localMaxPostings]] gate (unigram plus
     * active bigram df) the tiers are computed on the driver by
-    * [[LocalServing.tiered]] from one collect; above it the tier
+    * [[LocalServing.tiered]] from the terms' chunk rows
+    * ([[localPostings]]); above it the tier
     * composition is [[TieredQuery.run]] over this engine's scorers.
     * Over generations every tier scores under global statistics, so
     * results are tier-, rank- and BIT-identical to the same corpus
@@ -1039,8 +1077,8 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     filteredScores(new TermStats(queryTerms(query)), pred, 20000, Some(k))
 
   /** [[bm25ScoresFiltered]], top-k'd when `k` is given. Under the
-    * driver-local gate the decoded postings bound the candidates: one
-    * collect of the terms' chunk rows, then the predicate runs only
+    * driver-local gate the decoded postings bound the candidates: the
+    * terms' chunk rows ([[localPostings]]), then the predicate runs only
     * over the docs those postings hold (one [[textFor]] job, at most
     * `conf.localMaxPostings` rows), and the allowed docs are scored
     * and ranked on the driver. The cap-limited candidate probe below
@@ -1135,8 +1173,8 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     * result-page shape (doc_id, score, first_pos, snippet). The top-k
     * ids are collected (k-bounded) to drive the chunk-skipping snippet
     * pass; left join so a result doc is never dropped by the snippet
-    * stage. Under the driver-local gate: one collect of the terms'
-    * chunk rows (positions included) ranks and anchors on the driver,
+    * stage. Under the driver-local gate: the terms' chunk rows
+    * (positions included) rank and anchor on the driver,
     * and one pushed `doc_id IN` job fetches the k texts.
     */
   def searchWithSnippets(query: String, k: Int, window: Int = 3): DataFrame = {
@@ -1242,8 +1280,8 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
 
   /** Docs where `terms` occur at consecutive positions (reference
     * src/positional_intersect/mod.rs:11-35; a one-term phrase is that
-    * term's doc set). Under the [[EngineConfig.localMaxPostings]] gate: one collect
-    * and [[LocalServing.phraseDocs]]; above it [[phraseDocs]].
+    * term's doc set). Under the [[EngineConfig.localMaxPostings]] gate: the
+    * terms' chunk rows and [[LocalServing.phraseDocs]]; above it [[phraseDocs]].
     */
   def phraseMatch(terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty)
@@ -1438,6 +1476,28 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
 
 object QueryEngine {
 
+  /** Live driver heap a resident load may take above where it starts,
+    * per postings byte the manifests record. On a 1,300-conversation
+    * `Transcripts` index (20,221,829 recorded bytes, 438,892 chunk rows,
+    * 41,981,501 bytes of arrays held after) the load completed in a
+    * 500 MiB heap that held 199 MB before it, so within 16 bytes a
+    * recorded byte; a full collection every 20 ms during three loads
+    * read 12–16. Spark's collect holds its own copies of the rows, so
+    * this is several times what stays held (2.1).
+    */
+  private[query] val ResidentLoadBytesPerRecordedByte = 16L
+
+  /** The recorded postings bytes an engine holds on the driver when its
+    * max heap is `maxHeap`: a load then takes at most an eighth of the
+    * heap and leaves about 1.6% of it held (25 MB recorded on a 3 GiB
+    * heap).
+    */
+  private[query] def residentBudget(maxHeap: Long): Long =
+    maxHeap / 8 / ResidentLoadBytesPerRecordedByte
+
+  /** The description of the job that loads the resident postings. */
+  private[query] val ResidentLoadDescription = "graft: load resident postings"
+
   /** The state every engine over `root` shares, whatever its config:
     * the readers (with their warmed dictionaries and driver maps), the
     * global statistics, the tombstone relation and the multi-reader
@@ -1482,6 +1542,59 @@ object QueryEngine {
         val idx = gens.zipWithIndex.map { case (g, i) => g.split('/').last -> i }.toMap
         f => idx.getOrElse(Generations.genSegOf(f), -1)
       }
+
+    /** The postings bytes the readers' manifests record, summed (no
+      * job); Long.MaxValue when a reader's manifest records none.
+      */
+    lazy val postingsBytes: Long = {
+      val recorded = gens.map(g => IndexBuilder.manifestBytes(IndexPaths(g).postings))
+      if (recorded.forall(_.isDefined)) recorded.flatten.sum else Long.MaxValue
+    }
+
+    private val residentLock = new java.util.concurrent.locks.ReentrantLock
+    @volatile private var residentHeld: Seq[ResidentPostings] = null
+
+    /** Every reader's chunk rows on the driver, indexed like `readers`:
+      * loaded by the first caller in ONE scan job over every reader's
+      * postings (each row's reader recovered from its file path, as
+      * `genOf` does for the per-call reads). None while another caller
+      * is loading them: a concurrent call collects its own rows rather
+      * than wait. A failed load leaves nothing held, so the next call
+      * loads again.
+      */
+    def resident: Option[Seq[ResidentPostings]] =
+      Option(residentHeld).orElse {
+        if (!residentLock.tryLock()) None
+        else try {
+          if (residentHeld == null) residentHeld = loadResident()
+          Some(residentHeld)
+        } finally residentLock.unlock()
+      }
+
+    /** Heap bytes of the resident arrays; 0 until they are loaded. */
+    def residentBytes: Long = Option(residentHeld).fold(0L)(_.map(_.bytes).sum)
+
+    /** ONE scan job, described [[ResidentLoadDescription]]. The rows
+      * are collected as Spark's binary rows and packed from those, so no
+      * per-row object is deserialized on the driver.
+      */
+    private def loadResident(): Seq[ResidentPostings] = {
+      val gi = genOf
+      val reader = if (readers.size == 1) lit(0) else udf(gi).apply(input_file_name())
+      val qe = postings
+        .select(reader, col("term_id"), col("chunk_seq"), col("n_postings"), col("doc_gaps"),
+          col("tfs"), col("dls"), col("pos_blob"), length(col("doc_gaps")),
+          length(col("pos_blob")))
+        .toDF(ResidentPostings.Columns: _*)
+        .queryExecution
+      val sc = spark.sparkContext
+      val description = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(ResidentLoadDescription)
+      val chunks = try SQLExecution.withNewExecutionId(qe, Some("collect"))(
+        qe.executedPlan.executeCollect())
+      finally sc.setJobDescription(description)
+      ResidentPostings.packAll(chunks, readers.size)
+    }
 
     private val delDirs: Seq[String] = Generations.delDirs(root)
 

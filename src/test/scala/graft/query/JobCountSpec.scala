@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions.col
 
 import graft.SparkSpecBase
 import graft.corpus.Transcripts
-import graft.index.{Compactor, Generations, IndexBuilder, IndexConf}
+import graft.index.{Compactor, Generations, IndexBuilder, IndexConf, IndexPaths}
 
 /** Spark jobs per warm query on the catalog-scale serving paths — the
   * plans above the driver-local gate (`localMaxPostings = 0`) with
@@ -35,6 +35,13 @@ import graft.index.{Compactor, Generations, IndexBuilder, IndexConf}
   * the tombstones collected by the first query, the same opens took 4
   * jobs (single index) and 13 (3 generations with tombstones), the
   * first bm25TopK 3 and planning the first fuzzyTerms 1.
+  *
+  * Under the resident postings budget the first driver-local
+  * call loads every generation's chunk rows in one job, and later
+  * driver-local calls run none for postings: 0 jobs for bm25TopK,
+  * handleQuery and phraseMatch, 1 (the text lookup) for snippets and
+  * filtered search. With each call collecting its own chunk rows, the
+  * budget shut, every driver-local bm25TopK ran 1 job, the first too.
   */
 class JobCountSpec extends SparkSpecBase with JobCounting {
 
@@ -43,6 +50,9 @@ class JobCountSpec extends SparkSpecBase with JobCounting {
   private lazy val allTurns = Transcripts.generateLocal(40L)
   private val q = "the of table"
   private val pred = col("role") === "user"
+  // two consecutive tokens of a live doc: a phrase that matches
+  private lazy val phrase: Seq[String] =
+    graft.core.Tokenizer.tokenize(allTurns(10).text, lemmas).take(2).map(_.term)
 
   private lazy val singleRoot: String = {
     import spark.implicits._
@@ -96,9 +106,13 @@ class JobCountSpec extends SparkSpecBase with JobCounting {
     }
 
   test("job budgets of an engine open, its warm-up and its first queries") {
-    def opened(root: String): (QueryEngine, Int) = {
+    def opened(root: String, budget: Option[Long] = None): (QueryEngine, Int) = {
       var e: QueryEngine = null
-      val n = jobsOf { e = new QueryEngine(spark, root, lemmas); e.warmDictionaryLocal() }
+      val n = jobsOf {
+        val o = new QueryEngine(spark, root, lemmas)
+        e = budget.fold(o)(o.withResidentBudget)
+        e.warmDictionaryLocal()
+      }
       (e, n)
     }
     val (_, single) = opened(singleRoot)
@@ -107,17 +121,122 @@ class JobCountSpec extends SparkSpecBase with JobCounting {
     val (e, gens) = opened(genRoot)
     info(s"3 generations with tombstones, open + warm: $gens jobs (budget 4)")
     assert(gens <= 4, s"3-generation open + warm ran $gens jobs, budget 4")
-    val first = jobsOf(e.bm25TopK(q, 10).collect())
+    // resident postings: the first gated call loads every generation's
+    // chunk rows in one job, and later driver-local calls run only the
+    // text lookup some kinds need
+    val (first, loads) =
+      describedJobsOf(QueryEngine.ResidentLoadDescription)(e.bm25TopK(q, 10).collect())
     assert(e.lastWandPath == "local", s"expected the driver-local path, got ${e.lastWandPath}")
-    val warm = jobsOf(e.bm25TopK(q, 10).collect())
-    info(s"first bm25TopK after the warm-up: $first jobs; warm: $warm (budget 1)")
-    assert(warm <= 1, s"warm bm25TopK ran $warm jobs, budget 1")
-    assert(first == warm, s"first bm25TopK ran $first jobs, a warm one $warm")
+    info(s"first bm25TopK after the warm-up (loads the resident postings): $first jobs")
+    assert(first == 1 && loads == 1,
+      s"first bm25TopK ran $first jobs ($loads loads), expected the one load job")
+    residentKinds(e).foreach { case (kind, run, budget) =>
+      run()
+      val n = jobsOf(run())
+      info(s"warm $kind on resident postings: $n jobs (budget $budget)")
+      assert(n == budget, s"warm $kind ran $n jobs, expected $budget")
+    }
+    // the budget shut: each driver-local call collects its chunk rows
+    val (s, _) = opened(genRoot, Some(0L))
+    val sFirst = jobsOf(s.bm25TopK(q, 10).collect())
+    assert(s.lastWandPath == "local", s"expected the driver-local path, got ${s.lastWandPath}")
+    val sWarm = jobsOf(s.bm25TopK(q, 10).collect())
+    info(s"resident budget shut: first bm25TopK $sFirst jobs; warm: $sWarm (budget 1)")
+    assert(sWarm <= 1, s"warm bm25TopK ran $sWarm jobs, budget 1")
+    assert(sFirst == sWarm, s"first bm25TopK ran $sFirst jobs, a warm one $sWarm")
     // the variant table opens with its schema: no footer-inference job
     val f = new QueryEngine(spark, singleRoot, lemmas)
     val plan = jobsOf(f.fuzzyTerms("tabel", 1))
     info(s"first fuzzyTerms on a fresh engine, planning: $plan jobs (budget 0)")
     assert(plan == 0, s"planning the first fuzzyTerms ran $plan jobs")
+  }
+
+  /** kind -> (a driver-local call, its jobs on resident postings). */
+  private def residentKinds(e: QueryEngine): Seq[(String, () => Unit, Int)] = Seq(
+    ("bm25TopK", () => { e.bm25TopK(q, 10).collect(); () }, 0),
+    ("handleQuery", () => { e.handleQuery(q, 10).collect(); () }, 0),
+    ("phraseMatch", () => { e.phraseMatch(phrase).collect(); () }, 0),
+    ("searchWithSnippets", () => { e.searchWithSnippets(q, 10).collect(); () }, 1),
+    ("bm25TopKFiltered", () => { e.bm25TopKFiltered(q, 10, pred).collect(); () }, 1))
+
+  private def answers(e: QueryEngine): (Seq[(Long, Double)], Seq[String], Seq[Long]) =
+    (e.bm25TopK(q, 10).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq,
+      e.handleQuery(q, 10).collect().map(_.toString).toSeq,
+      e.phraseMatch(phrase).collect().map(_.getLong(0)).sorted.toSeq)
+
+  test("resident postings gate on the generations' recorded bytes summed") {
+    val recorded = Generations.servingDirs(genRoot)
+      .map(g => IndexBuilder.manifestBytes(IndexPaths(g).postings).get)
+    assert(recorded.size == 3)
+    val e = new QueryEngine(spark, genRoot, lemmas)
+    e.warmDictionaryLocal()
+    // every generation fits alone; only the sum is over the budget
+    val above = e.withResidentBudget(recorded.sum - 1)
+    assert(recorded.max <= recorded.sum - 1)
+    above.bm25TopK(q, 10).collect()
+    Seq(("bm25TopK", () => { above.bm25TopK(q, 10).collect(); () }),
+      ("handleQuery", () => { above.handleQuery(q, 10).collect(); () }),
+      ("phraseMatch", () => { above.phraseMatch(phrase).collect(); () }))
+      .foreach { case (kind, run) =>
+        val n = jobsOf(run())
+        info(s"$kind one byte above the resident budget: $n jobs (the per-call collect)")
+        assert(n == 1, s"$kind above the resident budget ran $n jobs")
+      }
+    assert(above.lastWandPath == "local")
+    assert(above.residentBytes == 0)
+    val at = e.withResidentBudget(recorded.sum)
+    assert(jobsOf(at.bm25TopK(q, 10).collect()) == 1, "at the budget: the load job")
+    info(s"recorded postings bytes ${recorded.sum}, held on the driver ${at.residentBytes}")
+    assert(at.residentBytes > 0)
+    assert(jobsOf(at.handleQuery(q, 10).collect()) == 0)
+    assert(answers(at) == answers(above))
+    assert(answers(at)._3.nonEmpty, s"the phrase $phrase matched nothing")
+  }
+
+  test("concurrent first calls share one load; a failed load is retried") {
+    val e = new QueryEngine(spark, genRoot, lemmas)
+    e.warmDictionaryLocal()
+    val sibling = e.withConfig(_.copy(localMaxPostings = 30000L))
+    val tops = new Array[Seq[(Long, Double)]](2)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val (n, loads) = describedJobsOf(QueryEngine.ResidentLoadDescription) {
+      // the threads inherit the job group, so the count covers both
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val threads = Seq(e, sibling).zipWithIndex.map { case (eng, i) =>
+        new Thread(() =>
+          try {
+            go.await()
+            tops(i) = eng.bm25TopK(q, 10).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+          } catch { case t: Throwable => errors.add(t) })
+      }
+      threads.foreach(_.start())
+      go.countDown()
+      threads.foreach(_.join())
+    }
+    assert(errors.isEmpty, s"a concurrent first call failed: ${errors.peek()}")
+    // a call that finds the load under way collects its own rows
+    info(s"two concurrent first calls: $n jobs, $loads of them the load")
+    assert(loads == 1, s"two concurrent first calls ran $loads loads, expected one")
+    assert(n <= 2, s"two concurrent first calls ran $n jobs, expected a load and at most a collect")
+    assert(tops(0) == tops(1))
+    val shut = new QueryEngine(spark, genRoot, lemmas).withResidentBudget(0L)
+    shut.warmDictionaryLocal()
+    assert(answers(e) == answers(shut))
+
+    // a load whose scan fails holds nothing; the next call loads again
+    val fresh = new QueryEngine(spark, genRoot, lemmas)
+    fresh.warmDictionaryLocal()
+    fresh.postings // list the files before one goes missing
+    val part = java.nio.file.Files.walk(java.nio.file.Paths.get(genRoot))
+      .filter(p => p.toString.contains("/postings/") && p.toString.endsWith(".parquet"))
+      .findFirst().get()
+    val aside = java.nio.file.Paths.get(s"${tmpDir("graft-jobs-aside")}/part.parquet")
+    java.nio.file.Files.move(part, aside)
+    try intercept[Exception](fresh.bm25TopK(q, 10).collect())
+    finally java.nio.file.Files.move(aside, part)
+    assert(jobsOf(fresh.bm25TopK(q, 10).collect()) == 1, "the retried load")
+    assert(jobsOf(fresh.bm25TopK(q, 10).collect()) == 0)
+    assert(answers(fresh) == answers(shut))
   }
 
   /** One write, measured from a cold start of its own Spark jobs. */

@@ -11,8 +11,13 @@ trait JobCounting extends SparkSpecBase {
   private final class JobsByGroup extends org.apache.spark.scheduler.SparkListener {
     val counts = new java.util.concurrent.ConcurrentHashMap[String, Integer]
     override def onJobStart(s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      Option(s.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        .foreach(g => counts.merge(g, 1, (a: Integer, b: Integer) => a + b))
+      Option(s.properties).foreach { p =>
+        Option(p.getProperty("spark.jobGroup.id")).foreach { g =>
+          counts.merge(g, 1, (a: Integer, b: Integer) => a + b)
+          counts.merge(s"$g/${p.getProperty("spark.job.description")}", 1,
+            (a: Integer, b: Integer) => a + b)
+        }
+      }
   }
 
   private lazy val jobListener = {
@@ -30,7 +35,17 @@ trait JobCounting extends SparkSpecBase {
     * in order, so once a sentinel job run afterwards is seen, every job
     * of `body` has been counted.
     */
-  protected def jobsOf(body: => Unit): Int = {
+  protected def jobsOf(body: => Unit): Int = countJobs(body)(None)
+
+  /** (all, described): the Spark jobs `body` starts on this thread (and
+    * the threads it starts), and those of them described `description`.
+    */
+  protected def describedJobsOf(description: String)(body: => Unit): (Int, Int) = {
+    val n = countJobs(body)
+    (n(None), n(Some(description)))
+  }
+
+  private def countJobs(body: => Unit): Option[String] => Int = {
     val sc = spark.sparkContext
     val tag = s"jobs-${java.util.UUID.randomUUID()}"
     jobListener
@@ -43,6 +58,6 @@ trait JobCounting extends SparkSpecBase {
     while (!jobListener.counts.containsKey(sentinel) && System.nanoTime() < deadline)
       Thread.sleep(10)
     assert(jobListener.counts.containsKey(sentinel), "listener never saw the sentinel job")
-    Option(jobListener.counts.get(tag)).fold(0)(_.intValue)
+    d => Option(jobListener.counts.get(d.fold(tag)(x => s"$tag/$x"))).fold(0)(_.intValue)
   }
 }

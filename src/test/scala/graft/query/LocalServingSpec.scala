@@ -13,9 +13,10 @@ import graft.index.{IndexBuilder, IndexConf}
 /** The driver-local serving gate: under `localMaxPostings`, handleQuery,
   * phraseMatch, searchWithSnippets, bm25ScoresFiltered/bm25TopKFiltered
   * and (with the dictionary warmed into the driver) suggest answer from
-  * one collect of the terms' chunk rows. The contract under test: every
-  * answer is bit-identical to the distributed plans
-  * (`localMaxPostings = 0`), each kind stays within its Spark-job
+  * the terms' chunk rows: held on the driver under the resident budget
+  * (the default), or collected per call with that budget shut. The contract under test: every answer, on both
+  * sides of the resident budget, is bit-identical to the distributed
+  * plans (`localMaxPostings = 0`), each kind stays within its Spark-job
   * budget, and one posting above the gate the distributed plan runs.
   */
 class LocalServingSpec extends SparkSpecBase with JobCounting {
@@ -54,6 +55,7 @@ class LocalServingSpec extends SparkSpecBase with JobCounting {
   }
 
   private lazy val local = localEngine(dir, lemmas)
+  private lazy val collected = local.withResidentBudget(0L)
   private lazy val dist = distEngine(dir, lemmas)
 
   // ---------------------------------------------------- canonical answers
@@ -134,7 +136,7 @@ class LocalServingSpec extends SparkSpecBase with JobCounting {
       val k = 1 + rnd.nextInt(12)
       val m = 2 + rnd.nextInt(3)
       val pred = col("doc_len") % m === rnd.nextInt(m)
-      assertParity(local, dist, lemmas, q, k, 1 + rnd.nextInt(5), pred)
+      Seq(local, collected).foreach(assertParity(_, dist, lemmas, q, k, 1 + rnd.nextInt(5), pred))
       tiers ++= tiered(local.handleQuery(q, 50)).map(_._3)
     }
     assert(tiers == Set(0, 1, 2), s"the walk reached tiers $tiers only")
@@ -158,7 +160,8 @@ class LocalServingSpec extends SparkSpecBase with JobCounting {
     val l = localEngine(miniDir, Map.empty)
     val d = distEngine(miniDir, Map.empty)
     val all = lit(true)
-    Seq(
+    for (e <- Seq(l, l.withResidentBudget(0L));
+        (q, k, w, pred) <- Seq(
       ("to be or not to be", 10, 3, all), // duplicate terms keep positions
       ("zzjunk target", 10, 3, all), // a term absent from the dictionary
       ("target", 10, 3, all), // single term; "aa target bb" clamps both ends
@@ -167,7 +170,7 @@ class LocalServingSpec extends SparkSpecBase with JobCounting {
       ("target aa", 1000, 2, col("role") === "user"),
       ("target", 10, 3, lit(false)), // a filter that matches no doc
       ("to be", 5, 2, col("doc_len") < 0)
-    ).foreach { case (q, k, w, pred) => assertParity(l, d, Map.empty, q, k, w, pred) }
+    )) assertParity(e, d, Map.empty, q, k, w, pred)
 
     val tiers = tiered(l.handleQuery("to be or not to be", 10)).map(r => r._1 -> r._3).toMap
     assert(tiers(2L) == 0 && tiers(1L) == 2, s"phrase tier must hold the full sequence: $tiers")
@@ -191,23 +194,28 @@ class LocalServingSpec extends SparkSpecBase with JobCounting {
     assert(phraseSeq(q, lemmas).size >= 2)
     val pred = col("role") === "user"
     val seq = phraseSeq(q, lemmas)
-    // first calls resolve lazy state (file listings, codegen) uncounted
-    local.handleQuery(q, 10).collect()
-    local.searchWithSnippets(q, 10).collect()
-    local.bm25TopKFiltered(q, 10, pred).collect()
-    local.phraseMatch(seq).collect()
-    local.suggest("t", 10).collect()
-    val hq = jobsOf(local.handleQuery(q, 10).collect())
-    assert(local.lastHandlePath == "local")
-    assert(hq <= 1, s"handleQuery ran $hq jobs")
-    val pm = jobsOf(local.phraseMatch(seq).collect())
-    assert(pm <= 1, s"phraseMatch ran $pm jobs")
-    val sn = jobsOf(local.searchWithSnippets(q, 10).collect())
-    assert(sn <= 2, s"searchWithSnippets ran $sn jobs")
-    val fl = jobsOf(local.bm25TopKFiltered(q, 10, pred).collect())
-    assert(fl <= 2, s"bm25TopKFiltered ran $fl jobs")
-    val sg = jobsOf(local.suggest("t", 10).collect())
-    assert(sg == 0, s"suggest with the driver dictionary ran $sg jobs")
+    // resident postings: only the text lookups of snippets and filtered
+    // search run a job; collected per call: one more each
+    for ((e, chunkJobs) <- Seq((local, 0), (collected, 1))) {
+      // first calls resolve lazy state (file listings, codegen, the
+      // resident load) uncounted
+      e.handleQuery(q, 10).collect()
+      e.searchWithSnippets(q, 10).collect()
+      e.bm25TopKFiltered(q, 10, pred).collect()
+      e.phraseMatch(seq).collect()
+      e.suggest("t", 10).collect()
+      val hq = jobsOf(e.handleQuery(q, 10).collect())
+      assert(e.lastHandlePath == "local")
+      assert(hq == chunkJobs, s"handleQuery ran $hq jobs")
+      val pm = jobsOf(e.phraseMatch(seq).collect())
+      assert(pm == chunkJobs, s"phraseMatch ran $pm jobs")
+      val sn = jobsOf(e.searchWithSnippets(q, 10).collect())
+      assert(sn == chunkJobs + 1, s"searchWithSnippets ran $sn jobs")
+      val fl = jobsOf(e.bm25TopKFiltered(q, 10, pred).collect())
+      assert(fl == chunkJobs + 1, s"bm25TopKFiltered ran $fl jobs")
+      val sg = jobsOf(e.suggest("t", 10).collect())
+      assert(sg == 0, s"suggest with the driver dictionary ran $sg jobs")
+    }
   }
 
   test("one posting above the gate the distributed plans run, with the same answers") {

@@ -10,7 +10,9 @@ import graft.oracle.Oracle
   * scores) from every serving shape — a fresh single index, an
   * uncompacted three-generation root (driver-local gate open and shut),
   * the same root compacted into one index, and the same root after a
-  * partial merge — and match the scalar oracle, for machine-generated queries
+  * partial merge, each driver-local one with its postings held on the
+  * driver and collected per call (the resident budget open and
+  * shut) — and match the scalar oracle, for machine-generated queries
   * that mix corpus terms, inflected forms, near-miss typos and absent
   * junk. Hand-picked oracle rows exercise the paths we thought of;
   * the seeded generator walks the ones we didn't (absent-term claim
@@ -79,11 +81,13 @@ class RandomizedParitySpec extends SparkSpecBase {
       mPre.gens.take(2), lemmas, conf)
     val mPost = new MultiGenEngine(spark, root, lemmas).warmDictionary()
     assert(mPost.gens == Seq(s"$root/gen-00002", merged))
+    def collected(e: QueryEngine): QueryEngine = e.withResidentBudget(0L)
+    val (singleC, mPreC, mPostC) = (collected(single), collected(mPre), collected(mPost))
 
+    def got(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double, Int)] =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
     queries.foreach { q =>
       val want = oracle.handleQuery(q, 10)
-      def got(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double, Int)] =
-        df.collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
       val s = got(single.handleQuery(q, 10))
       assert(s == want, s"single vs oracle drift for '$q'\n got=$s\nwant=$want")
       val pre = got(mPre.handleQuery(q, 10))
@@ -94,6 +98,27 @@ class RandomizedParitySpec extends SparkSpecBase {
       assert(comp == pre, s"compacted vs 3-gen drift for '$q'\n got=$comp\nwant=$pre")
       val post = got(mPost.handleQuery(q, 10))
       assert(post == want, s"merged vs oracle drift for '$q'\n got=$post\nwant=$want")
+      Seq(("single", singleC), ("3-gen", mPreC), ("merged", mPostC)).foreach { case (shape, e) =>
+        val c = got(e.handleQuery(q, 10))
+        assert(c == want, s"$shape, postings collected per call, vs oracle drift for '$q'")
+      }
+    }
+
+    // the merged root with a tombstone batch that hits the answers: both
+    // sides of the resident budget equal the distributed plans
+    import spark.implicits._
+    val dead = queries.take(8).flatMap(q => oracle.handleQuery(q, 10).map(_._1)).distinct.take(20)
+    Generations.deleteDocs(spark, spark.createDataset(dead), root)
+    val tomb = new MultiGenEngine(spark, root, lemmas)
+    assert(tomb.warmDictionaryLocal())
+    val tombDist = tomb.withConfig(_.copy(localMaxPostings = 0L))
+    queries.foreach { q =>
+      val want = got(tombDist.handleQuery(q, 10))
+      assert(want.forall(r => !dead.contains(r._1)), s"a tombstoned doc served for '$q'")
+      Seq(("resident", tomb), ("collected", collected(tomb))).foreach { case (side, e) =>
+        val t = got(e.handleQuery(q, 10))
+        assert(t == want, s"tombstoned root, $side postings, drift for '$q'\n got=$t\nwant=$want")
+      }
     }
   }
 
@@ -116,6 +141,8 @@ class RandomizedParitySpec extends SparkSpecBase {
     val compactedDir = tmpDir("graft-fuzzq-serving-compacted")
     Compactor.compact(spark, dir, compactedDir, lemmas, conf)
     val compacted = new QueryEngine(spark, compactedDir, lemmas)
+    // the resident postings budget shut: each driver-local call collects
+    val collected = multi.withResidentBudget(0L)
 
     val rnd = new scala.util.Random(fuzzSeed + 1)
     def word(): String = vocab(rnd.nextInt(vocab.size))
@@ -135,6 +162,8 @@ class RandomizedParitySpec extends SparkSpecBase {
             s"filtered drift: '$q' k=$k mod=$m")
           assert(rows(dist.bm25TopKFiltered(q, k, pred)) == s,
             s"filtered distributed drift: '$q' k=$k mod=$m")
+          assert(rows(collected.bm25TopKFiltered(q, k, pred)) == s,
+            s"filtered collected drift: '$q' k=$k mod=$m")
           assert(rows(compacted.bm25TopKFiltered(q, k, pred)) == s,
             s"filtered compacted drift: '$q' k=$k mod=$m")
         case 1 => // result page with snippets at a random window
@@ -147,6 +176,8 @@ class RandomizedParitySpec extends SparkSpecBase {
             s"snippets drift: '$q' k=$k w=$w")
           assert(rows(dist.searchWithSnippets(q, k, w)) == s,
             s"snippets distributed drift: '$q' k=$k w=$w")
+          assert(rows(collected.searchWithSnippets(q, k, w)) == s,
+            s"snippets collected drift: '$q' k=$k w=$w")
           assert(rows(compacted.searchWithSnippets(q, k, w)) == s,
             s"snippets compacted drift: '$q' k=$k w=$w")
         case _ => // typeahead on a random in-vocab prefix (or junk)
