@@ -10,11 +10,13 @@ import graft.query.QueryEngine
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}
   *
   * The queries map carries, beyond the per-catalog-query seconds:
-  *  - index_build_turns_per_sec_c8 / _c32: SPIMI+merge build throughput
-  *    over the same deterministic synthetic transcript corpus at two
-  *    parallelism levels (the sandbox stand-in for N vs 4N executors,
-  *    BASELINE.json scaling rule);
-  *  - scaling_efficiency: thr(4N) / (4 * thr(N));
+  *  - index_build_turns_per_sec_c<L>: SPIMI+merge build throughput
+  *    over the same deterministic synthetic transcript corpus at each
+  *    level L of 2, N/4 and N cores, N = SPARK_GRAFT_CPUS (c2/c8/c32 at
+  *    N = 32, c1/c2/c4 at N = 4; the sandbox stand-in for N vs 4N
+  *    executors, BASELINE.json scaling rule);
+  *  - scaling_efficiency_<a>_to_<b>: thr(b) / ((b / a) * thr(a)) for
+  *    each pair of adjacent levels;
   *  - bm25_p50_sec / bm25_p95_sec: warm-index query latency over the
   *    frozen reference query set (k=10, WAND on).
   */
@@ -229,110 +231,11 @@ object Bench {
     }
   }
 
-  /** Dev measurement mode (SPARK_GRAFT_BENCH_MERGE=1; unset in driver
-    * runs): tiered-merge economics on a hot-append root. Stages the
-    * bench corpus as SPARK_GRAFT_BENCH_MERGE_GENS (default 8) equal
-    * conv-range appends, then prints one JSON line with: the appends'
-    * total build cost; warm multi-gen BM25 p50 at full generation
-    * fan-out; `Compactor.mergeSmallest` over HALF the generations
-    * (merge_sec) + p50 at the reduced fan-out + top-10 id parity with
-    * pre-merge (the bit-identity contract, counted in the artifact);
-    * and the full `compact` rewrite (compact_sec) + the single-index
-    * p50 floor — the numbers behind docs/SCALE.md's merge-cadence
-    * paragraph.
-    */
-  private def mergeBench(cpus: Int, nConvs: Long): Unit = {
-    val spark = newSession(cpus)
-    val turnsPath = s"/dev/shm/graft/bench_turns_$nConvs"
-    if (!new java.io.File(s"$turnsPath/_SUCCESS").exists())
-      Transcripts.generate(spark, nConvs, partitions = cpus * 4)
-        .write.mode("overwrite").parquet(turnsPath)
-    val turns = spark.read.parquet(turnsPath)
-      .as(org.apache.spark.sql.Encoders.product[graft.corpus.Turn])
-    val nGens = sys.env.getOrElse("SPARK_GRAFT_BENCH_MERGE_GENS", "8").toInt
-    val root = "/dev/shm/graft/bench_merge_root"
-    rmrf(root)
-    val conf = IndexConf(numParts = math.max(cpus, 8),
-      skewDfThreshold = 20000L, nSalts = 8)
-    def cut(i: Int) = f"conv-${i.toLong * nConvs / nGens}%08d"
-    var t0 = System.nanoTime()
-    (0 until nGens).foreach { i =>
-      val lo = cut(i)
-      val hi = cut(i + 1)
-      graft.index.Generations.append(spark,
-        turns.filter(t => t.conv_id >= lo && t.conv_id < hi),
-        root, Transcripts.lemmas, conf)
-    }
-    val appendSec = (System.nanoTime() - t0) / 1e9
-    // best-of-2 p50 over the frozen query set; top-10 ids kept for parity
-    def p50(f: String => org.apache.spark.sql.DataFrame)
-        : (Double, Seq[Seq[Long]]) = {
-      val res = referenceQueries.map { q =>
-        (1 to 2).map { _ =>
-          val t = System.nanoTime()
-          val ids = f(q).collect().map(_.getLong(0)).toSeq
-          ((System.nanoTime() - t) / 1e9, ids)
-        }.minBy(_._1)
-      }
-      val lat = res.map(_._1).sorted
-      (lat(lat.length / 2), res.map(_._2))
-    }
-    // dict_local=1 (default): driver-hash-map dictionaries — the serving
-    // configuration (kills the per-generation probe jobs); 0 = the
-    // pre-round-5 cached-distributed-probe form, kept for paired A/B
-    val dictLocal =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_MERGE_LOCALDICT", "1") == "1"
-    def warmMulti(m: graft.index.MultiGenEngine): graft.index.MultiGenEngine =
-      if (dictLocal) m.warmDictionariesLocal() else m.warmDictionary()
-    val mPre = warmMulti(
-      new graft.index.MultiGenEngine(spark, root, Transcripts.lemmas))
-    val (p50Pre, idsPre) = p50(q => mPre.bm25TopK(q, 10))
-    // tiered facade p50 at the same fan-out: the phrase/conjunctive
-    // tiers still union per-generation POSITIONAL plans, so this
-    // isolates what the scoring fusion did not cover
-    val (hqPre, _) = p50(q => mPre.handleQuery(q, 10))
-    t0 = System.nanoTime()
-    graft.index.Compactor.mergeSmallest(spark, root, nGens / 2,
-      Transcripts.lemmas, conf)
-    val mergeSec = (System.nanoTime() - t0) / 1e9
-    graft.index.Compactor.gcReplaced(root)
-    val mPost = warmMulti(
-      new graft.index.MultiGenEngine(spark, root, Transcripts.lemmas))
-    val (p50Post, idsPost) = p50(q => mPost.bm25TopK(q, 10))
-    val (hqPost, _) = p50(q => mPost.handleQuery(q, 10))
-    val parity = idsPre.zip(idsPost).count { case (a, b) => a == b }
-    val full = "/dev/shm/graft/bench_merge_full"
-    rmrf(full)
-    t0 = System.nanoTime()
-    graft.index.Compactor.compact(spark, root, full, Transcripts.lemmas, conf)
-    val compactSec = (System.nanoTime() - t0) / 1e9
-    val eng = new QueryEngine(spark, full, Transcripts.lemmas)
-    if (dictLocal) eng.warmDictionaryLocal() else eng.warmDictionary()
-    val (p50Single, _) = p50(q => eng.bm25TopK(q, 10))
-    val (hqSingle, _) = p50(q => eng.handleQuery(q, 10))
-    println(s"""{"metric":"merge_bench","gens":$nGens,""" +
-      s""""append_total_sec":$appendSec,"merge_sec":$mergeSec,""" +
-      s""""compact_sec":$compactSec,"gens_after_merge":${mPost.gens.size},""" +
-      s""""bm25_p50_pre_sec":$p50Pre,"bm25_p50_post_sec":$p50Post,""" +
-      s""""bm25_p50_single_sec":$p50Single,""" +
-      s""""hq_p50_pre_sec":$hqPre,"hq_p50_post_sec":$hqPost,""" +
-      s""""hq_p50_single_sec":$hqSingle,""" +
-      s""""dict_local":${if (dictLocal) 1 else 0},""" +
-      s""""rank_parity":"$parity/${referenceQueries.size}"}""")
-    spark.stop()
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val lowCpus = math.max(1, cpus / 4)
     val nConvs = sys.env.getOrElse("SPARK_GRAFT_BENCH_CONVS", "20000").toLong
-    if (sys.env.contains("SPARK_GRAFT_BENCH_MERGE")) {
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get("/dev/shm/graft/spark-local"))
-      mergeBench(cpus, nConvs)
-      return
-    }
     // dev knobs (unset in driver runs): restrict build levels / skip stages
     val levelsOverride = sys.env.get("SPARK_GRAFT_BENCH_LEVELS")
       .map(_.split(",").map(_.trim.toInt).toSeq)

@@ -205,7 +205,8 @@ object Dedup {
     * groupBy(min), members joined to their rep, self-edges dropped,
     * DISTINCT taken on bare (id, rep) BEFORE any signature joins back
     * for verification (so no per-bucket self-join exists anywhere in
-    * the plan — the property PLANS.md pins). Every stage is linear in
+    * the plan — PlanSpec "star edges join members to a per-bucket
+    * aggregate, never a bucket self-join"). Every stage is linear in
     * bucket size; `maxBucket` = Int.MaxValue (the callers' default)
     * adds no cap stage at all.
     */

@@ -22,7 +22,9 @@ package graft.query
   */
 final case class EngineConfig(
 
-    /** DRIVER BUDGET (PlanDump sets it). Tombstone sets up to this size
+    /** DRIVER BUDGET (a deployment sizes it; no main sets it, and
+      * GenerationDeleteSpec and TombstoneWarmSpec set it to test both
+      * sides). Tombstone sets up to this size
       * are collected ONCE (at warm-up, in one scan job when the
       * batches' recorded sizes sum to at most this) and served as a
       * broadcast sorted array (the Lucene liveDocs form) —
@@ -64,7 +66,7 @@ final case class EngineConfig(
       */
     wandMinPostings: Long = 100000L,
 
-    /** DRIVER BUDGET (q24, Bench and PlanDump shut it with 0). The
+    /** DRIVER BUDGET (q24 and Bench shut it with 0). The
       * driver-local gate: when the total df of every term a call
       * decodes (unigrams and bigrams together) is at most this, the call
       * takes those terms' chunk rows from every reader (from the
