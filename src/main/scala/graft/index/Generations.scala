@@ -290,124 +290,121 @@ object Generations {
   }
 }
 
-/** Merge all generations into one optimized index: the per-generation
-  * SPIMI `segments` checkpoints (sorted runs with globally-disjoint
-  * doc_ids) are unioned and re-merged through the standard chunk pipeline,
-  * with dictionary/statistics recomputed globally.
+/** Merges of generations. [[Compactor.mergeGenerations]] merges a
+  * subset of a root's generations into one new generation;
+  * [[Compactor.compact]] merges every live generation into one index
+  * outside the root and purges tombstones on the way. Both write
+  * through [[Compactor.mergeInto]]: the sources' SPIMI `segments`
+  * checkpoints (sorted runs with globally-disjoint doc_ids) are unioned,
+  * re-shuffled into the stage-1 layout and persisted, then finished by
+  * the same stage-2 writer and meta a fresh build uses
+  * ([[IndexBuilder.finish]]), with dictionary/statistics recomputed
+  * over the merged corpus.
   */
 object Compactor {
 
+  /** Full compaction: every live generation of `root`, with its
+    * tombstones purged, merged into one index at `outDir`. The docs and
+    * segments are filtered before the merge, so the compacted index
+    * recomputes N/avgdl/df/cf and every chunk block-max over the
+    * surviving corpus only — after compaction the output is
+    * indistinguishable (statistics included) from an index that never
+    * contained the deleted docs, except that surviving doc_ids keep
+    * their original values (gaps allowed; totalDocs of the old root
+    * still counts them, so ids are never reused). BM25 constants come
+    * from `conf`. Re-compacting the same generations and tombstones
+    * into the same `outDir` resumes every completed stage, docs and
+    * segments included; more deletes, other generations or another
+    * conf rebuild.
+    */
   def compact(spark: SparkSession, root: String, outDir: String,
       lemmas: Map[String, String], conf: IndexConf = IndexConf()): IndexMeta = {
-    import spark.implicits._
     val gens = Generations.genDirs(root)
     require(gens.nonEmpty, s"no generations under $root")
+    mergeInto(spark, gens, outDir, Generations.delDirs(root), Nil, lemmas, conf)
+  }
+
+  /** Order-free identity of a merge's inputs: md5 over each file in
+    * `markers` — the sources' index_meta.json (which carry the per-gen
+    * build fingerprints) and the purged tombstone batches' del_meta.json
+    * — by path and content, plus the layout-relevant conf. Names alone
+    * are not identity: a re-merge into the same dir after the sources
+    * were regenerated, with changed BM25 constants (baked into every
+    * chunk's max_norm) or after more deletes landed must NOT reuse the
+    * stage manifests. Fails fast on an unreadable marker: listings only
+    * return dirs whose marker EXISTS, so a read failure means an
+    * incomplete or racing source, and folding a constant in would hash
+    * two differently-broken source sets identically.
+    */
+  private def sourceFingerprint(markers: Seq[String], nSources: Int,
+      conf: IndexConf): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def upd(s: String): Unit =
+      md.update(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    markers.foreach { f =>
+      upd(f); upd("\n")
+      upd(try Fs.readString(f)
+          catch {
+            case scala.util.control.NonFatal(e) =>
+              throw new IllegalStateException(
+                s"unreadable $f — source incomplete or concurrently " +
+                  s"modified; refusing to fingerprint a merge over it", e)
+          })
+    }
+    upd(s"np${conf.numParts}-k1${conf.k1}-b${conf.b}-fz${conf.fuzzyMaxDistance}")
+    s"merge-${md.digest().map(b => f"$b%02x").mkString}-n$nSources"
+  }
+
+  /** The one merged-index writer: `sources`' docs and segments unioned
+    * into `dir`, minus the doc_ids of the tombstone batches `purged`,
+    * the segments re-shuffled by (term, salt) and re-sorted by (term,
+    * salt, doc_id) — exactly the k-way merge (disjoint doc ranges make
+    * it a merge, not a re-group — reference src/spimi.rs:50-121) — and
+    * persisted, so the output carries its own sorted runs and later
+    * merges treat it like any other generation. Every stage resumes
+    * under one source-set fingerprint, which covers `purged` (empty
+    * when nothing is purged, so a plain merge is valid regardless of
+    * delete batches landing before, during or after it). A non-empty
+    * `replaces` is written to `replaces.json` BEFORE the meta: the meta
+    * is the single commit point that both publishes the merged
+    * generation and retires its sources.
+    */
+  private def mergeInto(spark: SparkSession, sources: Seq[String], dir: String,
+      purged: Seq[String], replaces: Seq[String], lemmas: Map[String, String],
+      conf: IndexConf): IndexMeta = {
+    import spark.implicits._
     val builder = new IndexBuilder(spark, lemmas, conf)
-
-    val paths = IndexPaths(outDir)
-    Fs.mkdirs(outDir)
-
-    // The fingerprint is deterministic in the input generation set + the
-    // conf, so re-compacting the same generations into the same outDir
-    // resumes every stage (docs copy included — at 100 TB the docs table
-    // is the bulk of corpus bytes, and a compaction killed mid-stage-2
-    // must not re-copy it); a DIFFERENT generation set or conf writes a
-    // different fp and rebuilds.
-    val fp = {
-      // md5 over (generation name + its index_meta.json content) plus
-      // the scoring/layout-relevant conf. Names alone are not identity:
-      // a re-compaction into the same outDir after the generations were
-      // regenerated (metas carry the per-gen build fingerprints) or
-      // with changed BM25 constants (baked into every chunk's max_norm)
-      // must NOT reuse the stage manifests — it would serve postings
-      // whose block-max bounds no longer match the meta being written.
-      val md = java.security.MessageDigest.getInstance("MD5")
-      def upd(s: String): Unit =
-        md.update(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      gens.sorted.foreach { g =>
-        upd(g); upd("\n")
-        // fail fast on an unreadable generation meta: genDirs only lists
-        // generations whose meta EXISTS, so a read failure here means an
-        // incomplete/racing generation — folding a constant in (the old
-        // form) would hash two differently-broken generation sets
-        // identically and resume stale stage manifests over them.
-        upd(try Fs.readString(IndexPaths(g).meta)
-            catch {
-              case scala.util.control.NonFatal(e) =>
-                throw new IllegalStateException(
-                  s"unreadable generation meta for $g — generation " +
-                    s"incomplete or concurrently modified; refusing to " +
-                    s"fingerprint a compaction over it", e)
-            })
-      }
-      // tombstone batches are part of compaction identity: compacting
-      // the same generations after MORE deletes landed must rebuild,
-      // not resume the pre-delete stage manifests. Same fail-fast as
-      // generation metas — a del dir without a readable marker is not
-      // in delDirs at all (marker written last, atomically).
-      Generations.delDirs(root).foreach { d =>
-        upd(d); upd("\n")
-        upd(try Fs.readString(s"$d/del_meta.json")
-            catch {
-              case scala.util.control.NonFatal(e) =>
-                throw new IllegalStateException(
-                  s"unreadable tombstone marker for $d — delete batch " +
-                    s"incomplete or concurrently modified; refusing to " +
-                    s"fingerprint a compaction over it", e)
-            })
-      }
-      upd(s"np${conf.numParts}-salt${conf.nSalts}-k1${conf.k1}-b${conf.b}" +
-        s"-bi${conf.indexBigrams}-fz${conf.fuzzyMaxDistance}")
-      s"compact-${md.digest().map(b => f"$b%02x").mkString}-n${gens.size}"
+    val paths = IndexPaths(dir)
+    Fs.mkdirs(dir)
+    val fp = sourceFingerprint(sources.sorted.map(IndexPaths(_).meta) ++
+      purged.map(d => s"$d/del_meta.json"), sources.size, conf)
+    val deleted = Generations.deletedDocs(spark, purged)
+    def union(table: String => DataFrame): DataFrame = {
+      val all = sources.map(table).reduce(_ unionByName _)
+      deleted.fold(all)(d => all.join(d, Seq("doc_id"), "left_anti")
+        .select(all.columns.toSeq.map(col): _*))
     }
-
-    // tombstones purge HERE: docs and segments are filtered before the
-    // merge, so the compacted index recomputes N/avgdl/df/cf and every
-    // chunk block-max over the surviving corpus only — after compaction
-    // the output is indistinguishable (statistics included) from an
-    // index that never contained the deleted docs, except that surviving
-    // doc_ids keep their original values (gaps allowed; totalDocs of the
-    // old root still counts them, so ids are never reused).
-    val deleted = Generations.deletedDocs(spark, root)
-    def purge(df: DataFrame): DataFrame =
-      deleted.fold(df)(d => df.join(d, Seq("doc_id"), "left_anti"))
-
-    // docs: union of per-generation docs tables (doc_ids already global),
-    // manifested like every other stage so a resumed compaction skips it
-    if (!builder.manifestComplete(paths.docs, fp)) {
-      val t0 = System.nanoTime()
-      // readDocs: a root whose generations straddle the docs-schema ts
-      // addition (v6) compacts with null ts for the older generations
-      val written = IndexBuilder.writeCounted(
-        purge(gens.map(g => IndexBuilder.readDocs(spark, IndexPaths(g).docs))
-          .reduce(_ unionByName _)),
-        paths.docs, Seq("doc_len"))
-      builder.writeManifest(paths.docs, fp, written.rows,
-        (System.nanoTime() - t0) / 1000000, written.sumFields)
+    // docs: doc_ids are already globally disjoint; the write observes
+    // n_docs and Σdoc_len for the meta. readDocs: sources that straddle
+    // the docs-schema ts addition (v6) merge with null ts for the older
+    // ones.
+    builder.stage(paths.docs, fp) {
+      IndexBuilder.writeCounted(
+        union(g => IndexBuilder.readDocs(spark, IndexPaths(g).docs)),
+        paths.docs, Seq("doc_len")).fields
     }
-
-    // segments: union of the generations' sorted runs, re-shuffled +
-    // re-sorted by (term, salt, doc_id) — exactly the k-way merge
-    // (disjoint doc ranges make it a merge, not a re-group — reference
-    // src/positional_intersect/mod.rs:108-131 / J1). The term-range
-    // filters of writeStage2's per-range resume push BELOW the
-    // repartition, so each range shuffles only its own rows. Stage-2
-    // writing is shared with fresh builds (writeStage2): identical
-    // dictionary/postings/fuzzy layout guarantees, no drift, plus
-    // per-term-range resume should a compaction die mid-write.
-    val segs = purge(gens.map(g => builder.readSegments(IndexPaths(g).segments).toDF())
-      .reduce(_ unionByName _)).as[SegmentRow]
-      .repartition(conf.numParts, $"term", $"salt")
-      .sortWithinPartitions($"term", $"salt", $"doc_id")
-    val (nDocs, docLenSum) = builder.rowsAndSum(paths.docs, "doc_len",
-      IndexBuilder.readDocs(spark, paths.docs))
-    val avgdl = IndexBuilder.avgdl(docLenSum, nDocs)
-    val (nTerms, nPostings) = builder.writeStage2(segs, nDocs, avgdl, outDir, fp)
-    val meta = IndexMeta(nDocs, avgdl, nTerms, nPostings, conf.k1, conf.b)
-    IndexBuilder.writeAtomic(paths.meta,
-      s"""{"n_docs":$nDocs,"avgdl":$avgdl,"n_terms":$nTerms,""" +
-      s""""n_postings":$nPostings,"k1":${conf.k1},"b":${conf.b},"fingerprint":"compacted"}""")
-    meta
+    // segments: the one corpus-scale shuffle a merge pays
+    builder.stage(paths.segments, fp) {
+      (IndexBuilder.writeCounted(
+        union(g => builder.readSegments(IndexPaths(g).segments).toDF())
+          .repartition(conf.numParts, $"term", $"salt")
+          .sortWithinPartitions($"term", $"salt", $"doc_id"),
+        paths.segments).rows, Map.empty)
+    }
+    builder.finish(dir, fp, commit =
+      if (replaces.nonEmpty)
+        IndexBuilder.writeAtomic(s"$dir/replaces.json",
+          s"""{"replaces":[${replaces.map("\"" + _ + "\"").mkString(",")}]}"""))
   }
 
   // ------------------------------------------------- partial (tiered) merge
@@ -433,24 +430,21 @@ object Compactor {
     * post-delete and strand tombstone batches that still cover
     * un-merged generations; full [[compact]] remains the purger.
     *
-    * Commit protocol: the merged generation is built like any index
-    * (resumable stage manifests under a source-set fingerprint — a
-    * killed merge re-run into the same dir skips completed stages),
-    * then `replaces.json` (the source names) is written, then
-    * `index_meta.json`. The meta is the single commit point:
-    * `Generations.genDirs` excludes the sources the moment it appears,
-    * so no reader ever lists a doc twice, and a crash anywhere earlier
-    * leaves an invisible partial with the sources still serving.
-    * Source dirs stay on disk until [[gcReplaced]] removes them.
+    * Commit protocol: the merged generation is written by [[mergeInto]]
+    * like any index (resumable stage manifests under a source-set
+    * fingerprint — a killed merge re-run into the same dir skips
+    * completed stages), then `replaces.json` (the source names) is
+    * written, then `index_meta.json`. The meta is the single commit
+    * point: `Generations.genDirs` excludes the sources the moment it
+    * appears, so no reader ever lists a doc twice, and a crash anywhere
+    * earlier leaves an invisible partial with the sources still
+    * serving. Source dirs stay on disk until [[gcReplaced]] removes
+    * them.
     *
-    * The sources' segments checkpoints are re-shuffled into the stage-1
-    * layout and PERSISTED under the merged generation (the k-way merge,
-    * reference src/spimi.rs:50-121), so it carries its own sorted runs
-    * and later merges / full compactions treat it like any other
-    * generation. BM25 constants come from the source metas (they are
-    * baked into every chunk's block-max bound and must agree across the
-    * root anyway — QueryEngine enforces it); `conf.k1`/`conf.b` are
-    * ignored here.
+    * BM25 constants come from the source metas (they are baked into
+    * every chunk's block-max bound and must agree across the root
+    * anyway — QueryEngine enforces it); `conf.k1`/`conf.b` are ignored
+    * here.
     *
     * Like [[compact]] and gc, this is a MAINTENANCE op: one scheduled
     * writer per root at a time (appends/streaming ingest may land new
@@ -473,7 +467,6 @@ object Compactor {
   def mergeGenerationsAt(spark: SparkSession, root: String,
       sources: Seq[String], dir: String, lemmas: Map[String, String],
       conf: IndexConf = IndexConf()): String = {
-    import spark.implicits._
     if (Fs.exists(IndexPaths(dir).meta)) return dir
     require(sources.size >= 2,
       s"merge needs >=2 source generations, got ${sources.size}")
@@ -488,81 +481,10 @@ object Compactor {
         metas.map(m => (m.k1, m.b)).distinct.mkString(","))
     // effective conf: k1/b pinned to the sources' build constants (see
     // scaladoc); everything else (numParts, stage2Ranges, fuzzy d) is
-    // the caller's choice and fingerprinted below
+    // the caller's choice and fingerprinted by mergeInto
     val mconf = conf.copy(k1 = metas.head.k1, b = metas.head.b)
-    val builder = new IndexBuilder(spark, lemmas, mconf)
-    val paths = IndexPaths(dir)
-    Fs.mkdirs(dir)
-
-    // identity = the source generation set (names + metas, which carry
-    // the per-gen build fingerprints) + the layout-relevant conf.
-    // Tombstones are deliberately NOT part of merge identity — nothing
-    // is purged, so a merge is valid regardless of delete batches
-    // landing before/during/after it.
-    val fp = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      def upd(s: String): Unit =
-        md.update(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      sources.sorted.foreach { g =>
-        upd(g); upd("\n")
-        upd(try Fs.readString(IndexPaths(g).meta)
-            catch {
-              case scala.util.control.NonFatal(e) =>
-                throw new IllegalStateException(
-                  s"unreadable generation meta for $g — refusing to " +
-                    s"fingerprint a merge over it", e)
-            })
-      }
-      upd(s"np${mconf.numParts}-k1${mconf.k1}-b${mconf.b}" +
-        s"-fz${mconf.fuzzyMaxDistance}")
-      s"merge-${md.digest().map(b => f"$b%02x").mkString}-n${sources.size}"
-    }
-
-    // docs: plain union (doc_ids already globally disjoint), no purge;
-    // the write observes n_docs and Σdoc_len for the meta
-    if (!builder.manifestComplete(paths.docs, fp)) {
-      val t0 = System.nanoTime()
-      val written = IndexBuilder.writeCounted(
-        sources.map(g => IndexBuilder.readDocs(spark, IndexPaths(g).docs))
-          .reduce(_ unionByName _),
-        paths.docs, Seq("doc_len"))
-      builder.writeManifest(paths.docs, fp, written.rows,
-        (System.nanoTime() - t0) / 1000000, written.sumFields)
-    }
-
-    // segments: union re-shuffled into the stage-1 layout ((term, salt)
-    // partitions, (term, salt, doc_id)-sorted files) and persisted —
-    // the one corpus-scale shuffle a merge pays
-    if (!builder.manifestComplete(paths.segments, fp)) {
-      val t0 = System.nanoTime()
-      val rows = IndexBuilder.writeCounted(
-        sources.map(g => builder.readSegments(IndexPaths(g).segments))
-          .reduce(_ unionByName _)
-          .repartition(mconf.numParts, $"term", $"salt")
-          .sortWithinPartitions($"term", $"salt", $"doc_id").toDF(),
-        paths.segments).rows
-      builder.writeManifest(paths.segments, fp, rows,
-        (System.nanoTime() - t0) / 1000000)
-    }
-
-    val (nDocs, docLenSum) = builder.rowsAndSum(paths.docs, "doc_len",
-      IndexBuilder.readDocs(spark, paths.docs))
-    val avgdl = IndexBuilder.avgdl(docLenSum, nDocs)
-    // stage 2 shares the fresh-build writer: the persisted merged
-    // segments read back in stage-1 layout, chunked directly (no second
-    // shuffle), with per-term-range resume
-    val (nTerms, nPostings) = builder.writeStage2(
-      builder.readSegments(paths.segments), nDocs, avgdl, dir, fp)
-
-    // replaces BEFORE meta: the meta is the single commit point that
-    // both publishes the merged generation and retires its sources
-    IndexBuilder.writeAtomic(s"$dir/replaces.json",
-      s"""{"replaces":[${sources.map(s =>
-        "\"" + s.split('/').last + "\"").mkString(",")}]}""")
-    IndexBuilder.writeAtomic(paths.meta,
-      s"""{"n_docs":$nDocs,"avgdl":$avgdl,"n_terms":$nTerms,""" +
-      s""""n_postings":$nPostings,"k1":${mconf.k1},"b":${mconf.b},""" +
-      s""""fingerprint":"$fp"}""")
+    // no tombstone purge (see scaladoc)
+    mergeInto(spark, sources, dir, Nil, sources.map(_.split('/').last), lemmas, mconf)
     dir
   }
 

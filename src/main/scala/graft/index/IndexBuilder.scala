@@ -203,9 +203,9 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
   // ------------------------------------------------------------- stage 2
 
   /** Chunker over an ALREADY (term, salt)-partitioned, (term, salt,
-    * doc_id)-sorted dataset (the stage-1 shuffle output, read directly;
-    * Generations.compact re-shuffles its generation union into this
-    * shape first — the k-way merge). Streams each group through a
+    * doc_id)-sorted dataset (the persisted segments, read directly; a
+    * merge or compaction re-shuffles its sources' union into this shape
+    * and persists it first — the k-way merge, Compactor.mergeInto). Streams each group through a
     * 128-posting cut (reference k-way merge src/spimi.rs:50-121 + chunk
     * cut index_merge_writer.rs:148); memory is bounded by one chunk, not
     * one term (stopword-safe). chunk_seq = the chunk's min_doc_id (see
@@ -484,12 +484,13 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
       .sortWithinPartitions($"term_id", $"chunk_seq"), dir).rows
   }
 
-  /** Stage 2, shared by build() and Generations.compact so the layout
-    * guarantees cannot drift: dictionary (term-sorted, range-partitioned
-    * — the layout PlanSpec asserts), postings (term-range dirs, each
-    * range-partitioned/sorted by (term_id, chunk_seq); readers use
-    * recursiveFileLookup), and the SymSpell fuzzy variant table. Every
-    * piece carries its own manifest under `fp`:
+  /** Stage 2 of every index writer (build, merge and compaction share
+    * it through [[finish]], so the layout guarantees cannot drift):
+    * dictionary (term-sorted, range-partitioned — the layout PlanSpec
+    * asserts), postings (term-range dirs, each range-partitioned/sorted
+    * by (term_id, chunk_seq); readers use recursiveFileLookup), and the
+    * SymSpell fuzzy variant table. Every piece carries its own manifest
+    * under `fp`:
     *
     *  - dictionary: one manifest (stats agg + RangeRank are global — a
     *    dense term_id cannot be assigned per-range — but this pass is
@@ -500,33 +501,65 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     *  - fuzzy table: skipped when its dict-token matches the dictionary
     *    it was derived from (tableToken), rebuilt otherwise.
     *
-    * `segments` must be (term, salt)-grouped and (term, salt, doc_id)-
-    * sorted within partitions (stage-1 layout; compaction re-shuffles
-    * its generation union into this shape first). Returns the written
-    * dictionary's (n_terms, n_postings): its manifest's `rows` and
-    * `df_sum` (observed when the dictionary was written), or one
-    * aggregate over it when an older manifest lacks `df_sum`.
+    * Reads the persisted segments under `root`, which every writer
+    * leaves (term, salt)-grouped and (term, salt, doc_id)-sorted within
+    * files (the stage-1 layout; a merge or compaction re-shuffles its
+    * sources' union into it). The Parquet reader preserves row order
+    * within each file/split, so the chunker runs DIRECTLY on the read,
+    * with no second shuffle; a group straddling a split seam just
+    * yields an extra sub-128 seam chunk (chunk_seq = min_doc_id keeps
+    * identities unique and ordered). Returns the written dictionary's
+    * (n_terms, n_postings): its manifest's `rows` and `df_sum`
+    * (observed when the dictionary was written), or one aggregate over
+    * it when an older manifest lacks `df_sum`.
     */
-  def writeStage2(segments: Dataset[SegmentRow], nDocs: Long, avgdl: Double,
-      root: String, fp: String): (Long, Long) = {
+  private[index] def writeStage2(nDocs: Long, avgdl: Double, root: String,
+      fp: String): (Long, Long) = {
     val paths = IndexPaths(root)
+    val segments = readSegments(paths.segments)
 
     def restrict[T](ds: Dataset[T], lo: Option[String], hi: Option[String]): Dataset[T] =
       (lo.map(col("term") >= _) ++ hi.map(col("term") < _))
         .foldLeft(ds)((d, c) => d.filter(c))
 
-    // 2b: per-term-range postings writer, shared by the fresh and resume
-    // paths. chunksFor yields one term-range's chunk rows: a filter over
-    // the fresh path's persisted chunking pass, or a range-pruned
-    // re-chunk of the segments on resume. Range manifests carry the
+    // 2a: the dictionary. A fresh write runs ONE chunking pass that
+    // serves the dictionary stats AND every range write (persisted — a
+    // second chunking pass for the postings measured ~15% of build wall;
+    // at scale the cache spills to executor-local disk, still cheaper
+    // than re-reading + re-decoding the segments)
+    var fresh: Option[Dataset[RawChunk]] = None
+    stage(paths.dictionary, fp) {
+      val rawChunks = chunkSorted(segments, avgdl)
+      rawChunks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      fresh = Some(rawChunks)
+      val dict = finishDictionary(dictStats(rawChunks), nDocs)
+      (if (dict.single)
+        // one term-sorted partition already: written as numParts
+        // term-contiguous files, with no range sample or re-shuffle
+        IndexBuilder.writeCounted(dict.df, paths.dictionary, Seq("df"),
+          maxRecordsPerFile = (dict.rows + conf.numParts - 1) / conf.numParts)
+      else
+        IndexBuilder.writeCounted(dict.df.repartitionByRange(conf.numParts, $"term")
+          .sortWithinPartitions($"term"), paths.dictionary, Seq("df"))).fields
+    }
+    val dictDf = readDictionary(paths.dictionary)
+    val nTerms = manifestRows(paths.dictionary).getOrElse(dictDf.count())
+    // a resumed dictionary (no chunking pass this run) chunks ONLY the
+    // incomplete ranges' segments: the term-range predicate prunes the
+    // scan to ~their row groups (stage-1 files are term-sorted within
+    // partitions)
+    val chunksFor: (Option[String], Option[String]) => Dataset[RawChunk] = fresh match {
+      case Some(c) => restrict(c, _, _)
+      case None => (lo, hi) => chunkSorted(restrict(segments, lo, hi), avgdl)
+    }
+
+    // 2b: per-term-range postings writer. Range manifests carry the
     // geometry (bounds derive from nR + the fingerprinted dictionary, so
     // nR suffices); anything that is not a current range dir — stale
     // flat part files, or range_i >= nR from a run with different
     // geometry — is dropped, since the recursive read would silently
-    // double-count it.
-    def writeRanges(dictDf: DataFrame, nTerms: Long,
-        chunksFor: (Option[String], Option[String]) => Dataset[RawChunk]): Unit = {
-      val t0 = System.nanoTime()
+    // double-count it. Returns the parent manifest's rows and fields.
+    def writeRanges(): (Long, Map[String, String]) = {
       val nRanges = if (conf.stage2Ranges > 0) conf.stage2Ranges
         else math.max(1L, math.min(32L, nTerms / 2000000L)).toInt
       val bounds = rangeBounds(dictDf, nTerms, nRanges)
@@ -541,20 +574,15 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
       val parts = math.max(1, conf.numParts / nR)
       IndexBuilder.concurrently(spark, nR) { r =>
         val dir = s"${paths.postings}/range_$r"
-        if (!manifestComplete(dir, rangeFp)) {
-          val ts = System.nanoTime()
+        stage(dir, rangeFp) {
           val lo = if (r == 0) None else Some(bounds(r - 1))
           val hi = if (r == nR - 1) None else Some(bounds(r))
-          val rows = vtime(s"postings_write_range_$r") {
-            writePostingsRange(chunksFor(lo, hi), restrict(dictDf, lo, hi),
-              dir, parts) }
-          writeManifest(dir, rangeFp, rows, (System.nanoTime() - ts) / 1000000)
+          (writePostingsRange(chunksFor(lo, hi), restrict(dictDf, lo, hi), dir, parts),
+            Map.empty)
         }
       }
-      val totalRows = (0 until nR)
-        .map(r => manifestRows(s"${paths.postings}/range_$r").getOrElse(0L)).sum
-      writeManifest(paths.postings, fp, totalRows,
-        (System.nanoTime() - t0) / 1000000, Map("n_ranges" -> nR.toString))
+      ((0 until nR).map(r => manifestRows(s"${paths.postings}/range_$r").getOrElse(0L)).sum,
+        Map("n_ranges" -> nR.toString))
     }
 
     // 2b': length-bucketed dictionary projection (cp_len, term, term_id,
@@ -577,51 +605,43 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
       Fs.exists(marker) &&
         Fs.readString(marker) == IndexBuilder.tableToken(paths.dictionary)
     }
-    def writeDictByLen(dictDf: DataFrame): Unit =
-      if (!manifestComplete(paths.dictByLen, fp) || !dictByLenCurrent) {
-        val t0 = System.nanoTime()
+    def writeDictByLen(): Unit =
+      stage(paths.dictByLen, fp, current = dictByLenCurrent) {
         // Partition count scales with the LEXICON, not the corpus: a
         // small lexicon in conf.numParts range partitions pays a
         // sampling pass + shuffle + numParts file writes for near-empty
         // files (a measurable share of a small corpus's fixed build
         // cost — the c8/sf0.01 A/B pairs), while one ~64k-term file per
         // partition keeps row groups tight at the 10^9-term scale.
-        val nTerms = manifestRows(paths.dictionary)
-          .getOrElse(dictDf.count())
         val dblParts = math.max(1L,
           math.min(conf.numParts.toLong, nTerms / 65536L + 1L)).toInt
-        vtime("dict_by_len_write") {
-          // length() counts CODE POINTS (matching Fuzzy's qCp bound);
-          // java String.length would under-bucket supplementary-plane
-          // terms and the probe's band would miss true matches
-          dictDf.select(length($"term").cast("int").as("cp_len"),
-              $"term", $"term_id", $"df")
-            .repartitionByRange(dblParts, $"cp_len", $"term")
-            .sortWithinPartitions($"cp_len", $"term")
-            .write.mode("overwrite").parquet(paths.dictByLen)
-        }
+        // length() counts CODE POINTS (matching Fuzzy's qCp bound);
+        // java String.length would under-bucket supplementary-plane
+        // terms and the probe's band would miss true matches
+        dictDf.select(length($"term").cast("int").as("cp_len"),
+            $"term", $"term_id", $"df")
+          .repartitionByRange(dblParts, $"cp_len", $"term")
+          .sortWithinPartitions($"cp_len", $"term")
+          .write.mode("overwrite").parquet(paths.dictByLen)
         // tie to the EXACT dictionary build (same staleness guard as the
         // fuzzy variant tables): a rebuilt dictionary must invalidate it
         Fs.writeString(s"${paths.dictByLen}/${IndexBuilder.DictTokenFile}",
           IndexBuilder.tableToken(paths.dictionary))
-        writeManifest(paths.dictByLen, fp,
-          manifestRows(paths.dictionary).getOrElse(0L),
-          (System.nanoTime() - t0) / 1000000)
+        (nTerms, Map.empty)
       }
 
     // 2c: fuzzy variant table — skip when already derived from THIS
     // dictionary build (the token writeFuzzyIndex leaves behind)
-    def writeFuzzyIfStale(dictDf: DataFrame): Unit = {
+    def writeFuzzyIfStale(): Unit = {
       val dir = paths.fuzzy(conf.fuzzyMaxDistance)
       val tokenFile = s"$dir/${IndexBuilder.DictTokenFile}"
       // token match alone is not enough: a truncated dir (part files
       // lost, markers surviving) must be REPAIRED by a resumed build,
       // not merely distrusted at serve time
-      val fresh = Fs.exists(tokenFile) &&
+      val current = Fs.exists(tokenFile) &&
         Fs.readString(tokenFile) == IndexBuilder.tableToken(paths.dictionary) &&
         IndexBuilder.manifestIntact(dir)
-      if (!fresh)
-        vtime("fuzzy_write") { writeFuzzyIndex(dictDf, root, conf.fuzzyMaxDistance) }
+      if (!current) writeFuzzyIndex(dictDf, root, conf.fuzzyMaxDistance)
     }
 
     // Everything after the dictionary lands is INDEPENDENT (the postings
@@ -631,55 +651,12 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     // writes ride in task slots the (much larger) range writes leave
     // free. Running dict_by_len serially after the ranges measured
     // ~5-7% of bench-scale build wall (round-5 A/B pairs).
-    def postDictStages(dictDf: DataFrame, rangesJob: () => Unit): Unit =
-      IndexBuilder.concurrently(spark, 3) {
-        case 0 => rangesJob()
-        case 1 => writeDictByLen(dictDf)
-        case _ => writeFuzzyIfStale(dictDf)
-      }
-
-    val dictDf =
-      if (!manifestComplete(paths.dictionary, fp)) {
-        // fresh stage 2: ONE chunking pass serves the dictionary stats
-        // AND every range write (persisted — a second chunking pass for
-        // the postings measured ~15% of build wall; at scale the cache
-        // spills to executor-local disk, still cheaper than re-reading
-        // + re-decoding the segments shuffle output)
-        val t0 = System.nanoTime()
-        val rawChunks = chunkSorted(segments, avgdl)
-        rawChunks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val dict = finishDictionary(dictStats(rawChunks), nDocs)
-        val written = vtime("dict_write") {
-          if (dict.single)
-            // one term-sorted partition already: written as numParts
-            // term-contiguous files, with no range sample or re-shuffle
-            IndexBuilder.writeCounted(dict.df, paths.dictionary, Seq("df"),
-              maxRecordsPerFile = (dict.rows + conf.numParts - 1) / conf.numParts)
-          else
-            IndexBuilder.writeCounted(dict.df.repartitionByRange(conf.numParts, $"term")
-              .sortWithinPartitions($"term"), paths.dictionary, Seq("df"))
-        }
-        writeManifest(paths.dictionary, fp, written.rows,
-          (System.nanoTime() - t0) / 1000000,
-          written.sumFields)
-        val dictDf = readDictionary(paths.dictionary)
-        postDictStages(dictDf,
-          () => writeRanges(dictDf, written.rows, (lo, hi) => restrict(rawChunks, lo, hi)))
-        rawChunks.unpersist()
-        dictDf
-      } else {
-        // resume: dictionary complete — chunk ONLY the incomplete
-        // ranges' segments (the term-range predicate prunes the scan to
-        // ~their row groups; stage-1 files are term-sorted within
-        // partitions)
-        val dictDf = readDictionary(paths.dictionary)
-        val nTerms = manifestRows(paths.dictionary).getOrElse(dictDf.count())
-        postDictStages(dictDf, () =>
-          if (!manifestComplete(paths.postings, fp))
-            writeRanges(dictDf, nTerms, (lo, hi) =>
-              chunkSorted(restrict(segments, lo, hi), avgdl)))
-        dictDf
-      }
+    IndexBuilder.concurrently(spark, 3) {
+      case 0 => stage(paths.postings, fp)(writeRanges())
+      case 1 => writeDictByLen()
+      case _ => writeFuzzyIfStale()
+    }
+    fresh.foreach(_.unpersist())
     rowsAndSum(paths.dictionary, "df", dictDf)
   }
 
@@ -693,7 +670,7 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     * file's footer serially on the driver costs minutes at 10^5-10^6
     * part files).
     */
-  private[index] def manifestRows(dir: String): Option[Long] =
+  private def manifestRows(dir: String): Option[Long] =
     IndexBuilder.manifestLong(dir, "rows")
 
   /** (rows, sum of `column`) of a written table: its manifest's `rows`
@@ -701,7 +678,7 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     * before the sum was recorded falls back to one aggregate over
     * `table`, so older roots resume to the same values.
     */
-  private[index] def rowsAndSum(dir: String, column: String,
+  private def rowsAndSum(dir: String, column: String,
       table: => DataFrame): (Long, Long) =
     (for (n <- manifestRows(dir); s <- IndexBuilder.manifestLong(dir, s"${column}_sum"))
       yield (n, s)).getOrElse {
@@ -709,7 +686,7 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
 
-  private[index] def writeManifest(dir: String, fingerprint: String, rows: Long,
+  private def writeManifest(dir: String, fingerprint: String, rows: Long,
       wallMs: Long, extra: Map[String, String] = Map.empty): Unit = {
     Fs.mkdirs(dir)
     val files = Fs.listFilesRecursive(dir, ".parquet")
@@ -722,7 +699,7 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     Fs.writeString(s"$dir/_manifest.json", json)
   }
 
-  private[index] def manifestComplete(dir: String, fingerprint: String): Boolean = {
+  private def manifestComplete(dir: String, fingerprint: String): Boolean = {
     val f = s"$dir/_manifest.json"
     Fs.exists(f) && {
       val s = Fs.readString(f)
@@ -739,15 +716,38 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     }
   }
 
-  // ----------------------------------------------------------- full build
+  /** The one resumable stage of every index writer: skipped when
+    * `dir`'s manifest is complete under `fp` (and `current` holds),
+    * else `write` runs, timed, and returns the rows it wrote and the
+    * manifest's extra fields (sums, geometry), which land with its wall
+    * time in `dir`'s `_manifest.json`.
+    */
+  private[index] def stage(dir: String, fp: String, current: => Boolean = true)(
+      write: => (Long, Map[String, String])): Unit =
+    if (!manifestComplete(dir, fp) || !current) {
+      val t0 = System.nanoTime()
+      val (rows, extra) = write
+      writeManifest(dir, fp, rows, (System.nanoTime() - t0) / 1000000L, extra)
+    }
 
-  private val verbose = sys.env.contains("GRAFT_BUILD_VERBOSE")
-  private def vtime[T](tag: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (verbose) println(f"BUILDSTEP $tag sec=${(System.nanoTime() - t0) / 1e9}%.2f")
-    r
+  /** The tail of every index writer (build, merge, compaction): n_docs
+    * and avgdl from the docs stage's manifest, stage 2 over the
+    * persisted segments ([[writeStage2]]), `commit` (a merge's
+    * `replaces.json`), then the meta — the root's commit point.
+    */
+  private[index] def finish(root: String, fp: String, commit: => Unit = ()): IndexMeta = {
+    val paths = IndexPaths(root)
+    val (nDocs, docLenSum) = rowsAndSum(paths.docs, "doc_len",
+      IndexBuilder.readDocs(spark, paths.docs))
+    val avgdl = IndexBuilder.avgdl(docLenSum, nDocs)
+    val (nTerms, nPostings) = writeStage2(nDocs, avgdl, root, fp)
+    val meta = IndexMeta(nDocs, avgdl, nTerms, nPostings, conf.k1, conf.b)
+    commit
+    IndexBuilder.writeMeta(root, meta, fp)
+    meta
   }
+
+  // ----------------------------------------------------------- full build
 
   /** Cheap input-identity fingerprint: source file list + sizes, read
     * driver-side from the dataset's lineage (no Spark job). Folding this
@@ -794,38 +794,31 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     // Stage 0: docs (doc_id assignment + doc lengths). The write observes
     // its row count and Σdoc_len; the manifest records both, so n_docs
     // and avgdl never cost a pass over the docs table.
-    val docsWithText =
-      if (manifestComplete(paths.docs, fp)) IndexBuilder.readDocs(spark, paths.docs)
-      else {
-        val t0 = System.nanoTime()
-        val docs = buildDocs(turns)
-        val written = vtime("docs_write") {
-          IndexBuilder.writeCounted(docs, paths.docs, Seq("doc_len")) }
-        writeManifest(paths.docs, fp, written.rows,
-          (System.nanoTime() - t0) / 1000000, written.sumFields)
-        IndexBuilder.readDocs(spark, paths.docs)
-      }
-    val (nDocs, docLenSum) = rowsAndSum(paths.docs, "doc_len", docsWithText)
-    // clear error instead of a NaN avgdl — streaming callers
-    // (StreamIngest) skip empty micro-batches before reaching here; a
-    // batch caller indexing nothing is a caller bug
-    require(nDocs > 0L,
-      s"empty input: refusing to build an index over zero turns at $root")
-    val avgdl = IndexBuilder.avgdl(docLenSum, nDocs)
+    stage(paths.docs, fp) {
+      IndexBuilder.writeCounted(buildDocs(turns), paths.docs, Seq("doc_len")).fields
+    }
 
     // Stage 1: SPIMI segments (sorted runs, salted for skew; the salted
-    // set comes from highDfTerms' doc sample).
-    val nSlices = if (conf.resumeSlices > 0) conf.resumeSlices
-      else math.max(1L, math.min(64L, nDocs / 500000L)).toInt
-    if (!manifestComplete(paths.segments, fp)) {
+    // set comes from highDfTerms' doc sample, whose wall time the
+    // manifest records as highdf_ms).
+    stage(paths.segments, fp) {
+      val docsWithText = IndexBuilder.readDocs(spark, paths.docs)
+      val (nDocs, _) = rowsAndSum(paths.docs, "doc_len", docsWithText)
+      // clear error instead of a NaN avgdl — streaming callers
+      // (StreamIngest) skip empty micro-batches before reaching here; a
+      // batch caller indexing nothing is a caller bug
+      require(nDocs > 0L,
+        s"empty input: refusing to build an index over zero turns at $root")
+      val nSlices = if (conf.resumeSlices > 0) conf.resumeSlices
+        else math.max(1L, math.min(64L, nDocs / 500000L)).toInt
       val t0 = System.nanoTime()
-      val highDf = vtime("highdf_sample") { highDfTerms(docsWithText, nDocs) }
+      val highDf = highDfTerms(docsWithText, nDocs)
+      val highDfMs = (System.nanoTime() - t0) / 1000000L
       // stage row count: observed by the single write, or the sum of the
       // slice manifests when sliced
       val rows = if (nSlices <= 1) {
-        vtime("segments_write") {
-          IndexBuilder.writeCounted(buildSegments(docsWithText, nDocs, highDf).toDF(),
-            paths.segments).rows }
+        IndexBuilder.writeCounted(buildSegments(docsWithText, nDocs, highDf).toDF(),
+          paths.segments).rows
       } else {
         // Per-partition resume: independent doc-range slices, each with
         // its own manifest — a kill mid-stage redoes only incomplete
@@ -854,41 +847,24 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
         // own dir + manifest — thread-safe by layout.
         IndexBuilder.concurrently(spark, nSlices) { i =>
           val dir = s"${paths.segments}/slice_$i"
-          if (!manifestComplete(dir, sliceFp)) {
-            val ts = System.nanoTime()
+          stage(dir, sliceFp) {
             val lo = conf.docIdOffset + 1L + i.toLong * sliceWidth
             val hi = lo + sliceWidth
-            val sliceRows = vtime(s"segments_write_slice_$i") {
-              IndexBuilder.writeCounted(buildSegments(
-                docsWithText.filter($"doc_id" >= lo && $"doc_id" < hi),
-                nDocs, highDf).toDF(), dir).rows }
-            writeManifest(dir, sliceFp, sliceRows, (System.nanoTime() - ts) / 1000000)
+            (IndexBuilder.writeCounted(buildSegments(
+              docsWithText.filter($"doc_id" >= lo && $"doc_id" < hi),
+              nDocs, highDf).toDF(), dir).rows, Map.empty)
           }
         }
         (0 until nSlices)
           .map(i => manifestRows(s"${paths.segments}/slice_$i").getOrElse(0L)).sum
       }
-      writeManifest(paths.segments, fp, rows, (System.nanoTime() - t0) / 1000000,
-        Map("salted_terms" -> highDf.size.toString,
-          "n_slices" -> nSlices.toString))
+      (rows, Map("salted_terms" -> highDf.size.toString,
+        "n_slices" -> nSlices.toString, "highdf_ms" -> highDfMs.toString))
     }
 
-    // Stage 2: merge + chunk + dictionary + final postings, with
-    // per-substage + per-term-range manifests (writeStage2). The
-    // segments checkpoint was written one sorted file per (term,
-    // salt)-hash partition, and the Parquet reader preserves row order
-    // within each file/split — so the chunker runs DIRECTLY on the
-    // read, with no second shuffle. A group straddling a split seam
-    // just yields an extra sub-128 seam chunk (chunk_seq = min_doc_id
-    // keeps identities unique and ordered).
-    // n_terms and n_postings (= Σdf) come from the dictionary manifest.
-    val (nTerms, nPostings) =
-      writeStage2(readSegments(paths.segments), nDocs, avgdl, root, fp)
-    val meta = IndexMeta(nDocs, avgdl, nTerms, nPostings, conf.k1, conf.b)
-    IndexBuilder.writeAtomic(paths.meta,
-      s"""{"n_docs":$nDocs,"avgdl":$avgdl,"n_terms":$nTerms,""" +
-      s""""n_postings":$nPostings,"k1":${conf.k1},"b":${conf.b},"fingerprint":"$fp"}""")
-    meta
+    // Stage 2 (merge + chunk + dictionary + final postings, with
+    // per-substage + per-term-range manifests) and the meta.
+    finish(root, fp)
   }
 }
 
@@ -1006,9 +982,11 @@ object IndexBuilder {
 
   /** What a write observed: its row count and the sums of some columns. */
   private[index] final case class Written(rows: Long, sums: Map[String, Long]) {
-    /** The sums as manifest fields (`<column>_sum`). */
-    def sumFields: Map[String, String] =
-      sums.map { case (c, v) => s"${c}_sum" -> v.toString }
+    /** The rows and the sums as manifest fields (`<column>_sum`), as a
+      * stage returns them.
+      */
+    def fields: (Long, Map[String, String]) =
+      (rows, sums.map { case (c, v) => s"${c}_sum" -> v.toString })
   }
 
   /** Writes `df` as parquet at `dir` (overwrite) and returns the rows it
@@ -1110,6 +1088,15 @@ object IndexBuilder {
     */
   def writeAtomic(path: String, content: String): Unit =
     Fs.writeAtomic(path, content)
+
+  /** Writes `root`'s index_meta.json for `meta`, built under
+    * `fingerprint` — the one writer of the format [[readMeta]] parses.
+    */
+  private[index] def writeMeta(root: String, meta: IndexMeta, fingerprint: String): Unit =
+    writeAtomic(IndexPaths(root).meta,
+      s"""{"n_docs":${meta.n_docs},"avgdl":${meta.avgdl},"n_terms":${meta.n_terms},""" +
+      s""""n_postings":${meta.n_postings},"k1":${meta.k1},"b":${meta.b},""" +
+      s""""fingerprint":"$fingerprint"}""")
 
   def readMeta(root: String): IndexMeta = {
     val s = Fs.readString(IndexPaths(root).meta)

@@ -8,8 +8,9 @@ import graft.corpus.Transcripts.mix
 /** Similarity search over an embedding column (`array<float>`).
   *
   *  - Brute-force cosine top-k: one scan + TakeOrderedAndProject — the
-  *    exact baseline; the dot product is a codegen'd `aggregate(zip_with)`
-  *    expression, no UDF.
+  *    exact baseline; the dot product is an `aggregate(zip_with)`
+  *    expression, no UDF. Over parquet input its projection runs
+  *    outside whole-stage code generation (interpreted per row).
   *  - LSH-bucketed ANN: deterministic random-hyperplane signatures;
   *    query probes its own bucket plus all Hamming-1 neighbor buckets,
   *    then exact-scores candidates. At 100 TB the bucketed path turns a
@@ -18,8 +19,10 @@ import graft.corpus.Transcripts.mix
   */
 object Similarity {
 
-  /** Cosine similarity of two float-array columns, as a single codegen'd
-    * expression: dot / (|a| * |b|).
+  /** Cosine similarity of two float-array columns, as a single
+    * expression: dot / (|a| * |b|). Its higher-order functions do not
+    * take part in whole-stage code generation, so over parquet input
+    * the projection is interpreted.
     */
   def cosineCol(a: Column, b: Column): Column = {
     val dot = aggregate(zip_with(a, b, (x, y) => x * y),

@@ -1458,9 +1458,11 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     * `score(d) = (Σ_{t∈q} log10(N/df_t) · tf_{t,d}) / norm_d` — the
     * reference-parity tf-idf numerator (src/scoring/mod.rs:34-48, the
     * same weight tfIdfScores serves) divided by the reference's norm.
-    * The numerator folds in fixed term_id order (A8 determinism); the
-    * norm join touches only candidate docs' rows of the doc_id-sorted
-    * norms table. Returns ALL candidate docs (callers top-k like q07) —
+    * The numerator folds in fixed term_id order (A8 determinism). The
+    * norm join reads the WHOLE norms table: the plan scans `vsm_norms`
+    * with no pushed doc_id filter and broadcasts it (or, above the
+    * broadcast threshold, shuffles every norms row) to meet the
+    * candidates. Returns ALL candidate docs (callers top-k like q07) —
     * every candidate has a norm row (it contains >= 1 query term, so
     * its norm sum is positive), making the inner join total.
     */

@@ -139,15 +139,22 @@ class IndexEndToEndSpec extends SparkSpecBase {
       def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
           e: Exception): Unit = ()
     }
+    // listener events arrive asynchronously and in order: once a
+    // sentinel action is seen, every earlier action has been too
+    def awaitSentinel(name: String): Unit = {
+      spark.range(1).selectExpr(s"id AS $name").collect()
+      val deadline = System.nanoTime() + 60000000000L
+      while (!plans.toArray.exists(_.toString.contains(name)) &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+    }
     spark.listenerManager.register(listener)
     val result = try {
+      // an action the caller ran just before may still be queued: drain
+      // it, so only `body`'s plans are recorded
+      awaitSentinel("plan_start")
+      plans.clear()
       val r = body
-      // listener events arrive asynchronously and in order: once the
-      // sentinel action is seen, every earlier action has been too
-      spark.range(1).selectExpr("id AS plan_sentinel").collect()
-      val deadline = System.nanoTime() + 60000000000L
-      while (!plans.toArray.exists(_.toString.contains("plan_sentinel")) &&
-          System.nanoTime() < deadline) Thread.sleep(10)
+      awaitSentinel("plan_sentinel")
       r
     } finally spark.listenerManager.unregister(listener)
     import scala.jdk.CollectionConverters._

@@ -8,7 +8,9 @@ import graft.query.JobCounting
   * and `df_sum` in the docs and dictionary manifests, and skip the
   * high-df sample when its cutoff exceeds the corpus. These specs pin
   * the two edges of that: a resumed stage whose manifest predates the
-  * sums (the fallback aggregate), and both sides of the high-df gate.
+  * sums (the fallback aggregate), and both sides of the high-df gate,
+  * whose sample the segments manifest records (`salted_terms`,
+  * `highdf_ms`).
   */
 class ObservedWriteSpec extends JobCounting {
 
@@ -90,10 +92,13 @@ class ObservedWriteSpec extends JobCounting {
     (root, m.n_docs)
   }
 
-  private def saltedTerms(root: String): Long =
-    "\"salted_terms\":\"(\\d+)\"".r
+  /** A numeric field of `root`'s segments manifest. */
+  private def segmentsField(root: String, field: String): Long =
+    s""""$field":"(\\d+)"""".r
       .findFirstMatchIn(read(s"${IndexPaths(root).segments}/_manifest.json"))
-      .map(_.group(1).toLong).getOrElse(fail("segments manifest records no salted_terms"))
+      .map(_.group(1).toLong).getOrElse(fail(s"segments manifest records no $field"))
+
+  private def saltedTerms(root: String): Long = segmentsField(root, "salted_terms")
 
   test("high-df gate, shut side: cutoff above n_docs runs no sample job and salts nothing") {
     import spark.implicits._
@@ -111,6 +116,8 @@ class ObservedWriteSpec extends JobCounting {
     val shutRoot = tmpDir("graft-observed-highdf-shut")
     b.build(spark.createDataset(allTurns), shutRoot)
     assert(saltedTerms(shutRoot) == 0L)
+    // the gated sample's wall time is recorded too
+    assert(segmentsField(shutRoot, "highdf_ms") >= 0L)
     assert(spark.read.parquet(IndexPaths(shutRoot).segments)
       .filter($"salt" =!= 0).isEmpty)
   }
@@ -138,6 +145,8 @@ class ObservedWriteSpec extends JobCounting {
       .select($"value").as[String].collect().toSet
     assert(got.nonEmpty && got == ungated)
     assert(saltedTerms(root) == got.size.toLong)
+    // the sample job the build ran is timed in the same manifest
+    assert(segmentsField(root, "highdf_ms") > 0L)
     val saltedInSegments = spark.read.parquet(IndexPaths(root).segments)
       .filter($"salt" =!= 0).select($"term").distinct().as[String].collect().toSet
     assert(saltedInSegments.subsetOf(got) && saltedInSegments.nonEmpty)

@@ -21,11 +21,12 @@ import graft.index.{Compactor, Generations, IndexBuilder, IndexConf, IndexPaths}
   * stays exact.
   *
   * The index writes have budgets too: a build (one slice and two resume
-  * slices), an upsert, a delete and a two-generation merge over the same
-  * corpus. Each budget is the count the write takes with row counts and
-  * meta statistics observed by the writes themselves and generation
-  * docs tables opened with the builder's schema; the comment beside it
-  * gives the count when every stage re-read its output to count it.
+  * slices), an upsert, a delete, a two-generation merge and a compaction
+  * over the same corpus. Each budget is the count the write takes with
+  * row counts and meta statistics observed by the writes themselves and
+  * generation docs tables opened with the builder's schema; the comment
+  * beside it gives the count when every stage re-read its output to
+  * count it (for the compaction: when it did not persist its segments).
   *
   * Opening an engine has budgets as well: every index table opens with
   * the schema its writer produced, and the warm-up collects the
@@ -272,5 +273,18 @@ class JobCountSpec extends SparkSpecBase with JobCounting {
     writeJobs("mergeSmallest", 19) { // re-reading: 49; inferring the docs schema: 21
       Compactor.mergeSmallest(spark, root, 2, lemmas, conf)
     }
+    // a compaction is a merge that purges: it persists its segments, so
+    // a re-run into the same outDir resumes past every stage
+    val out = tmpDir("graft-jobs-compact")
+    writeJobs("compact", 23) { // segments not persisted: 22
+      Compactor.compact(spark, root, out, lemmas, conf)
+    }
+    writeJobs("compact, re-run", 0) {
+      Compactor.compact(spark, root, out, lemmas, conf)
+    }
+    val segments = IndexPaths(out).segments
+    assert(graft.index.Fs.readString(s"$segments/_manifest.json")
+      .contains("\"status\":\"complete\""))
+    assert(IndexBuilder.manifestIntact(segments))
   }
 }
