@@ -62,23 +62,30 @@ object GraftQueries {
 
   private def safeName(dir: String): String = dir.replaceAll("[^a-zA-Z0-9.]", "_")
 
+  /** `name` under the JVM's temporary directory (`java.io.tmpdir`,
+    * `/tmp` unless the JVM is started with another), where the catalog's
+    * index roots and auxiliary tables live.
+    */
+  private def scratchPath(name: String): String =
+    new java.io.File(System.getProperty("java.io.tmpdir"), name).getPath
+
   /** Side-output directory for oracle-auxiliary tables (persisted
     * candidate sets, synthesized media): per-sf-dir so concurrent runs at
     * different scales never clobber each other. Verify substitutes this
     * path for the `{AUX}` placeholder in oracle SQL, so DuckDB reads the
     * exact tables the queries wrote. LIMITATION: two PROCESSES over the
-    * SAME sf dir share this path and the /tmp index cache — they must
+    * SAME sf dir share this path and the index cache — they must
     * run sequentially (as the driver runs Verify and Bench); a
     * concurrent same-sf pair could overwrite a directory mid-read.
     */
-  def auxDir(dir: String): String = s"/tmp/graft_aux_${safeName(dir)}"
+  def auxDir(dir: String): String = scratchPath(s"graft_aux_${safeName(dir)}")
 
   /** Build (once per JVM per sf dir) the full index over `documents` and
     * return an engine plus the internal->original doc_id mapping.
     */
   def engineFor(spark: SparkSession, dir: String): QueryEngine = {
     val root = indexCache.getOrElseUpdate(dir, {
-      val out = s"/tmp/graft_index_${safeName(dir)}"
+      val out = scratchPath(s"graft_index_${safeName(dir)}")
       new IndexBuilder(spark, Map.empty,
         IndexConf(numParts = spark.sparkContext.defaultParallelism,
           skewDfThreshold = 100000L, nSalts = 8))
@@ -114,7 +121,7 @@ object GraftQueries {
   def engineLemmaFor(spark: SparkSession, dir: String): QueryEngine = {
     val key = s"lemma:$dir"
     val root = indexCache.getOrElseUpdate(key, {
-      val out = s"/tmp/graft_index_lemma_${safeName(dir)}"
+      val out = scratchPath(s"graft_index_lemma_${safeName(dir)}")
       new IndexBuilder(spark, testLemmas,
         IndexConf(numParts = spark.sparkContext.defaultParallelism,
           skewDfThreshold = 100000L, nSalts = 8, indexBigrams = true))
@@ -141,7 +148,7 @@ object GraftQueries {
     * order, so internal doc order (gen-0 then gen-1) equals original
     * doc order and tie-breaks agree with the single-index oracle.
     * The root path carries the INPUT's table token: appendAt's
-    * idempotency is meta-existence only, so a /tmp root surviving a
+    * idempotency is meta-existence only, so a cached root surviving a
     * testdata regeneration must resolve to a fresh directory rather
     * than silently serving the old corpus.
     */
@@ -158,7 +165,7 @@ object GraftQueries {
   private def twoGenRootFor(spark: SparkSession, dir: String,
       prefix: String): String = {
     val token = IndexBuilder.tableToken(s"$dir/documents.parquet").take(12)
-    val out = s"/tmp/graft_index_${prefix}_${safeName(dir)}_$token"
+    val out = scratchPath(s"graft_index_${prefix}_${safeName(dir)}_$token")
     val conf = IndexConf(numParts = spark.sparkContext.defaultParallelism,
       skewDfThreshold = 100000L, nSalts = 8)
     val split = documents(spark, dir)
@@ -203,7 +210,7 @@ object GraftQueries {
     * generations were merged by `Compactor.mergeGenerationsAt` (q58) —
     * the partial-compaction serving shape. Every step is idempotent via
     * explicit directories (appendAt / mergeGenerationsAt meta checks),
-    * so a Verify re-run over a cached /tmp root is a no-op replay.
+    * so a Verify re-run over a cached root is a no-op replay.
     * The retired sources are deliberately NOT gc'd here: gcReplaced
     * would delete gen-00000/gen-00001, and a replay in a fresh JVM
     * would then re-append the first third as NEW generations on top of
@@ -214,7 +221,7 @@ object GraftQueries {
     val key = s"merged:$dir"
     val root = indexCache.getOrElseUpdate(key, {
       val token = IndexBuilder.tableToken(s"$dir/documents.parquet").take(12)
-      val out = s"/tmp/graft_index_merged_${safeName(dir)}_$token"
+      val out = scratchPath(s"graft_index_merged_${safeName(dir)}_$token")
       val conf = IndexConf(numParts = spark.sparkContext.defaultParallelism,
         skewDfThreshold = 100000L, nSalts = 8)
       val maxId = documents(spark, dir)

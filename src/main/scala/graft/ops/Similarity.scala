@@ -53,6 +53,24 @@ object Similarity {
   def planeWeight(p: Int, d: Int): Double =
     (mix(0x9E37L * (p.toLong << 20) + d).toDouble / Long.MaxValue)
 
+  /** The hyperplane signature of `emb`: bit p = sign of its dot product
+    * with `planes(p)`, over the dimensions both hold.
+    */
+  private def signature(planes: Array[Array[Double]], emb: Seq[Float]): Long = {
+    var sig = 0L
+    var p = 0
+    while (p < planes.length) {
+      var dot = 0.0
+      val w = planes(p)
+      var d = 0
+      val n = math.min(w.length, emb.length)
+      while (d < n) { dot += emb(d) * w(d); d += 1 }
+      if (dot > 0) sig |= (1L << p)
+      p += 1
+    }
+    sig
+  }
+
   /** Adds an integer LSH signature column `sig`: bit p = sign of the dot
     * product with hyperplane p. Typed mapPartitions with a precomputed
     * plane matrix — a (nPlanes x dim) expression tree would defeat
@@ -69,20 +87,7 @@ object Similarity {
       .as[(Long, Seq[Float])]
       .mapPartitions { it =>
         val planes = Array.tabulate(nPlanes, dim)((p, d) => planeWeight(p, d))
-        it.map { case (id, emb) =>
-          var sig = 0L
-          var p = 0
-          while (p < nPlanes) {
-            var dot = 0.0
-            val w = planes(p)
-            var d = 0
-            val n = math.min(dim, emb.length)
-            while (d < n) { dot += emb(d) * w(d); d += 1 }
-            if (dot > 0) sig |= (1L << p)
-            p += 1
-          }
-          (id, emb, sig)
-        }
+        it.map { case (id, emb) => (id, emb, signature(planes, emb)) }
       }.toDF("vec_id", "embedding", "sig")
   }
 
@@ -152,20 +157,7 @@ object Similarity {
       .as[(Long, Seq[Float])]
       .mapPartitions { it =>
         val planes = Array.tabulate(nPlanes, dim)((p, d) => planeWeight(p, d))
-        it.map { case (id, emb) =>
-          var sig = 0L
-          var p = 0
-          while (p < nPlanes) {
-            var dot = 0.0
-            val w = planes(p)
-            var d = 0
-            val n = math.min(dim, emb.length)
-            while (d < n) { dot += emb(d) * w(d); d += 1 }
-            if (dot > 0) sig |= (1L << p)
-            p += 1
-          }
-          (id, sig)
-        }
+        it.map { case (id, emb) => (id, signature(planes, emb)) }
       }.toDF("vec_id", "sig")
   }
 

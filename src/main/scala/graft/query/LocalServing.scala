@@ -42,8 +42,8 @@ final class TermPostings(val docIds: Array[Long], val tfs: Array[Int], val dls: 
   * term_id order (what `sort_array(collect_list(struct(fold_key,
   * impact)))` folds), the (score desc, doc_id asc) tie-break, the
   * anchor-offset phrase test of the distributed phrase plan, the exact
-  * tier algebra of `TieredQuery.run` and the `split`/`slice` window of
-  * `QueryEngine.assembleSnippets`. Over generations the engine passes
+  * tier algebra of `QueryEngine.tieredTopK` and the `split`/`slice`
+  * window of `QueryEngine.assembleSnippets`. Over generations the engine passes
   * its global entries (term_id = the UTF-8 fold key, global df and idf)
   * and global meta, so the same functions serve every kind of root.
   */
@@ -144,7 +144,7 @@ object LocalServing {
     out.result().sorted
   }
 
-  /** `TieredQuery.run`'s exact form over decoded postings: tier 0 =
+  /** `QueryEngine.tieredTopK`'s exact form over decoded postings: tier 0 =
     * phrase docs with their unigram score, tier 1 = docs holding every
     * query bigram (when `bigramActive`) that are not phrase docs, with
     * their bigram score, tier 2 = every other unigram match; ordered

@@ -1,18 +1,13 @@
 package graft.query
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 import graft.core.{ChunkCodec, Tokenizer}
 import graft.index.{Bm25, DictRow, Generations, IndexBuilder, IndexMeta, IndexPaths,
   MaxInLiterals}
-
-/** Decoded posting for query-side scoring. */
-final case class ScoredPosting(term_id: Long, doc_id: Long, tf: Int, dl: Int)
-
-final case class PositionedPosting(term_id: Long, doc_id: Long, positions: Seq[Int])
 
 /** One built index directory as the engine reads it — a single-index
   * root or one generation of an incremental root: its meta, the
@@ -84,29 +79,6 @@ final class IndexReader(spark: SparkSession, val root: String) {
     dictLocalMap = Some(m)
     true
   }
-
-  /** Chunk rows of `termIds` decoded into (term_id, doc_id, tf, dl). */
-  def decodedPostings(termIds: Seq[Long]): Dataset[ScoredPosting] =
-    postings
-      .filter($"term_id".isin(termIds: _*))
-      .select($"term_id", $"n_postings", $"doc_gaps", $"tfs", $"dls")
-      .as[(Long, Int, Array[Byte], Seq[Int], Seq[Int])]
-      .flatMap { case (termId, n, gaps, tfs, dls) =>
-        val ids = ChunkCodec.decodeDocGaps(gaps, n)
-        Iterator.tabulate(n)(i => ScoredPosting(termId, ids(i), tfs(i), dls(i)))
-      }
-
-  /** Postings with positions decoded. */
-  def positionedPostings(termIds: Seq[Long]): Dataset[PositionedPosting] =
-    postings
-      .filter($"term_id".isin(termIds: _*))
-      .select($"term_id", $"n_postings", $"doc_gaps", $"pos_blob")
-      .as[(Long, Int, Array[Byte], Array[Byte])]
-      .flatMap { case (termId, n, gaps, posBlob) =>
-        val ids = ChunkCodec.decodeDocGaps(gaps, n)
-        val poss = ChunkCodec.decodePositions(posBlob, n)
-        Iterator.tabulate(n)(i => PositionedPosting(termId, ids(i), poss(i).toSeq))
-      }
 
   // -------------------------------------------------- derived tables
 
@@ -640,22 +612,24 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
 
   /** (doc_id, fold_key, impact) rows for the global entries `es` across
     * every reader in one scan — fold_key is the entry's term_id, impacts
-    * use its global idf. `cand` (sorted) engages the candidate-pruned
-    * read: chunks without a candidate are never decoded, decoded
-    * postings are filtered to candidates. Tombstoned docs are dropped
-    * at the fold-row level, so theta, candidate selection and the final
-    * limit all see survivors only. None when no reader holds any of `es`.
+    * use its global idf (with `tfIdf`, the reference-parity weight
+    * `Bm25.tfIdf` of its global df instead). `cand` (sorted) engages the
+    * candidate-pruned read: chunks without a candidate are never
+    * decoded, decoded postings are filtered to candidates. Tombstoned
+    * docs are dropped at the fold-row level, so theta, candidate
+    * selection and the final limit all see survivors only. None when no
+    * reader holds any of `es`.
     */
   private def foldRows(st: TermStats, es: Seq[DictRow],
-      cand: Option[Array[Long]] = None): Option[DataFrame] = {
+      cand: Option[Array[Long]] = None, tfIdf: Boolean = false): Option[DataFrame] = {
     val pairs = st.pairs(es)
     if (pairs.isEmpty) return None
-    val info: Map[(Int, Long), (Long, Double)] =
-      pairs.map { case (gi, l, e) => (gi, l.term_id) -> (e.term_id, e.idf) }.toMap
+    val info: Map[(Int, Long), (Long, Double, Long)] =
+      pairs.map { case (gi, l, e) => (gi, l.term_id) -> (e.term_id, e.idf, e.df) }.toMap
     val bcCand = cand.map(spark.sparkContext.broadcast(_))
     // local copies: the closure must not capture the engine
     val gi = shared.genOf
-    val (avg, k1, b) = (meta.avgdl, meta.k1, meta.b)
+    val (nd, avg, k1, b) = (meta.n_docs, meta.avgdl, meta.k1, meta.b)
     Some(dropDeleted(postingsWithFile(pairs.map(_._2.term_id))
       .select($"_file", $"term_id", $"min_doc_id", $"max_doc_id",
         $"n_postings", $"doc_gaps", $"tfs", $"dls")
@@ -666,10 +640,11 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
         val rangeOk = bcCand.forall(bc => QueryEngine.rangeHasCandidate(minD, maxD, bc.value))
         (if (rangeOk) info.get((gi(file), termId)) else None) match {
           case None => Iterator.empty
-          case Some((key, idf)) =>
+          case Some((key, idf, df)) =>
             val ids = ChunkCodec.decodeDocGaps(gaps, n)
-            val it = Iterator.tabulate(n)(i =>
-              (ids(i), key, Bm25.impact(idf, tfs(i), dls(i), avg, k1, b)))
+            val it = Iterator.tabulate(n)(i => (ids(i), key,
+              if (tfIdf) Bm25.tfIdf(nd, df, tfs(i))
+              else Bm25.impact(idf, tfs(i), dls(i), avg, k1, b)))
             bcCand.fold(it)(bc =>
               it.filter(r => java.util.Arrays.binarySearch(bc.value, r._1) >= 0))
         }
@@ -980,8 +955,7 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     * intersection. Under the [[EngineConfig.localMaxPostings]] gate (unigram plus
     * active bigram df) the tiers are computed on the driver by
     * [[LocalServing.tiered]] from the terms' chunk rows
-    * ([[localPostings]]); above it the tier
-    * composition is [[TieredQuery.run]] over this engine's scorers.
+    * ([[localPostings]]); above it by [[tieredTopK]].
     * Over generations every tier scores under global statistics, so
     * results are tier-, rank- and BIT-identical to the same corpus
     * compacted into one index (IncrementalSpec).
@@ -1000,8 +974,9 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     val st = new TermStats(terms)
     val entries = st.entries
     if (phraseSeq.size == 1 && !servesLocally(entries)) {
+      // no phrase or bigram tier: the unigram top-k, labeled tier 2
       lastHandlePath = "pruned"
-      return TieredQuery.singleTerm(n => topKFromEntries(st, entries, n), k)
+      return TieredQuery.finish(topKFromEntries(st, entries, k).withColumn("tier", lit(2)), k)
     }
     val bigramTerms = parsed.bigrams.map(_.term).distinct
     val bst = new TermStats(bigramTerms, keyBase = entries.size)
@@ -1019,21 +994,154 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
       return LocalServing.tiered(phraseSeq, entries, bigramActive, bigramEntries, ps,
         meta, k).toDF("doc_id", "score", "tier")
     }
+    tieredTopK(phraseSeq, st, bigramTerms, bst, bigramActive, k)
+  }
+
+  /** The distributed tier composition of [[handleQuery]], under the
+    * claim cap ([[EngineConfig.handleQueryClaimCap]]).
+    *
+    * PRUNED form: the claimed (phrase/bigram) doc sets are collected
+    * under the cap — limit(cap+1)-bounded BEFORE the collect — each
+    * claimed tier is scored only for ITS members, and the unigram tier
+    * serves from the top-(k + |claimed|) with a broadcast anti-join,
+    * exact by a counting argument: at most |claimed| of those rows are
+    * claimed, so >= k unclaimed survive. Over-cap sets (or no matching
+    * unigrams) take the EXACT form: full scoring with DataFrame-side
+    * claims, no driver collection.
+    */
+  private def tieredTopK(phraseSeq: Seq[String], st: TermStats,
+      bigramTerms: Seq[String], bst: TermStats, bigramActive: Boolean,
+      k: Int): DataFrame = {
+    import TieredQuery.{finish, TaggedCollect}
+    val entries = st.entries
+    val unigramsPresent = entries.nonEmpty
     // tier claims are delete-filtered too: a tombstoned phrase doc must
     // neither appear in tier 0 nor count against the unigram tier's
     // claimed set
-    TieredQuery.run(spark, TieredQuery.Scorers(
-      unigramsPresent = entries.nonEmpty,
-      bigramActive = bigramActive,
-      phraseDocs = dropDeleted(phraseDocs(phraseSeq, st)),
-      conjDocs = if (bigramActive) Some(dropDeleted(conjunctiveDocs(bigramTerms, bst))) else None,
-      topK = n => topKFromEntries(st, entries, n),
-      candScores = ids => scoresForCandidates(st, entries, ids),
-      bigramCandScores = ids => scoresForCandidates(bst, bigramEntries, ids),
-      exactScores = () => exactScores(st, entries),
-      bigramExactScores = () => exactScores(bst, bigramEntries), // thread 2's bigram_scores
-      empty = () => emptyScores()),
-      k, conf.handleQueryClaimCap, p => lastHandlePath = p)
+    val phrase = dropDeleted(phraseDocs(phraseSeq, st))
+    val conj = if (bigramActive) Some(dropDeleted(conjunctiveDocs(bigramTerms, bst))) else None
+    // Clamped: limit(cap + 1) with cap = Int.MaxValue (a natural way to
+    // "disable" the cap) would overflow to a negative limit and throw.
+    val cap = math.min(conf.handleQueryClaimCap, Int.MaxValue - 1)
+    // The bigram-conjunctive probe overlaps the phrase probe (guide
+    // §2.6; the reference itself runs its strategies on separate
+    // threads, search_engine/mod.rs:147-206): both are independent
+    // cap-bounded collects, and running them sequentially paid two
+    // driver round-trips back to back. Launched BEFORE the phrase
+    // collect; the phrase-fill early exit below cancels it. Without an
+    // active bigram tier (conj = None) nothing is launched.
+    val conjProbe = conj.map(c => new TaggedCollect(spark.sparkContext,
+      () => c.select($"doc_id").limit(cap + 1).as[Long].collect()))
+    val phraseIds = phrase.select($"doc_id").limit(cap + 1).as[Long].collect()
+    // Early exit when the phrase tier alone fills k: finish() orders
+    // tier-ascending, so with >= k phrase docs the answer is entirely
+    // tier 0 — the bigram-conjunctive probe, the bigram tier and the
+    // unigram top-k (the expensive block-max pass) can contribute
+    // nothing and are skipped. Exactness: tier 0 here is the SAME
+    // candidate-scored relation the full construction builds; finish
+    // takes its top-k under the same (score desc, doc_id asc) order.
+    if (unigramsPresent && k > 0 && phraseIds.length >= k && phraseIds.length <= cap) {
+      lastHandlePath = "pruned"
+      TieredQuery.phraseFillExits.incrementAndGet()
+      conjProbe.foreach(_.cancel())
+      java.util.Arrays.sort(phraseIds)
+      return finish(scoresForCandidates(st, entries, phraseIds).withColumn("tier", lit(0)), k)
+    }
+    val conjIds = conjProbe.map(_.result()).getOrElse(Array.empty[Long])
+    if (unigramsPresent && phraseIds.length <= cap && conjIds.length <= cap) {
+      lastHandlePath = "pruned"
+      java.util.Arrays.sort(phraseIds)
+      val tier0 = scoresForCandidates(st, entries, phraseIds).withColumn("tier", lit(0))
+      val phraseSet = phraseIds.toSet
+      val tier1 =
+        if (bigramActive) {
+          val t1Ids = conjIds.filterNot(phraseSet)
+          java.util.Arrays.sort(t1Ids)
+          scoresForCandidates(bst, bst.entries, t1Ids).withColumn("tier", lit(1))
+        } else emptyScores().withColumn("tier", lit(1))
+      val claimedIds = (phraseIds ++ conjIds).distinct
+      // Unigram tier: exact top-k of the UNCLAIMED docs. The worst-case
+      // guarantee is top-(k + |claimed|) (at most |claimed| of those
+      // rows are claimed, so >= k unclaimed survive) — but for a
+      // stopword-led phrase |claimed| can be 100k+, and a top-(k+100k)
+      // request collapses block-max pruning (theta becomes the
+      // ~100k-th score: near-exhaustive decode). ADAPTIVE escalation
+      // keeps the exact answer with the pruning intact: ask for
+      // top-(k + min(|claimed|, 5k)) first — claimed docs crowd the
+      // top slots only so far — and re-run at the worst-case width
+      // only when fewer than k unclaimed survive AND the first round
+      // came back full (a short return = match universe exhausted).
+      // Each round collects its (<= width) rows once, so the common
+      // case is ONE sharply-pruned pass; the pathological case costs
+      // one extra pass, bounded by the old construction's cost.
+      val guess = k + math.min(claimedIds.length, math.max(TieredQuery.GuessFloor, 4 * k))
+      val tier2 =
+        if (guess >= k + claimedIds.length) {
+          // small claimed set: the guess already IS the worst-case
+          // width — keep tier 2 LAZY so it fuses into the single final
+          // job (an eager collect here serializes one extra multi-
+          // second job at the 10^6-doc scale for no width savings).
+          // claimedDf built only HERE: the adaptive branch filters
+          // driver-side, and eagerly encoding up to 2x claimCap longs
+          // into a LocalRelation would be wasted work on that path.
+          val claimedDf = claimedIds.toSeq.toDF("doc_id")
+          topKFromEntries(st, entries, k + claimedIds.length)
+            .join(broadcast(claimedDf), Seq("doc_id"), "left_anti")
+            .withColumn("tier", lit(2))
+        } else {
+          // large claimed set: adaptive rounds — each collects its
+          // <= width top rows ONCE and filters claims DRIVER-side: the
+          // claimed set already lives on the driver, so shipping it
+          // back as a broadcast anti-join would add an exchange plus a
+          // multi-MB broadcast to every executor for nothing. Common
+          // case stays ONE sharply-pruned pass; escalation to the
+          // worst-case top-(k + |claimed|) width runs only when the
+          // first round proves BOTH that < k unclaimed survive AND
+          // that deeper rows exist — a short topK return means the
+          // match universe is exhausted, so the full-width
+          // (theta-collapsing) re-run could not surface anything new.
+          val claimedSet = claimedIds.toSet
+          def round(m: Int): (Int, Array[(Long, Double)]) = {
+            val top = topKFromEntries(st, entries, m).select($"doc_id", $"score")
+              .as[(Long, Double)].collect()
+            (top.length, top.filterNot(r => claimedSet.contains(r._1)))
+          }
+          val (got, first) = round(guess)
+          var rows = first
+          if (rows.length < k && got == guess) {
+            TieredQuery.adaptiveEscalations.incrementAndGet()
+            rows = round(k + claimedIds.length)._2
+          }
+          rows.toSeq.toDF("doc_id", "score").withColumn("tier", lit(2))
+        }
+      finish(tier0.unionByName(tier1).unionByName(tier2), k)
+    } else {
+      lastHandlePath = "exact"
+      // KNOWN COST: `phrase` was evaluated once by the cap probe above
+      // and its subtree appears twice more in this plan (the tier-0
+      // left_semi and the bigram tier's left_anti) — Spark's
+      // exchange/AQE stage reuse usually dedups the identical
+      // subtrees, but is not guaranteed. This is the rare over-cap
+      // fallback whose budget is already "full distributed scoring"
+      // (SCALE.md); persisting `phrase` here would trade a per-query
+      // cache leak on the serving path for that occasional recompute,
+      // a worse deal.
+      val scored = if (unigramsPresent) exactScores(st, entries) else emptyScores()
+      val inPhrase = scored.join(phrase, Seq("doc_id"), "left_semi")
+        .withColumn("tier", lit(0))
+      val bigramTier =
+        if (bigramActive) {
+          // thread 2's bigram_scores
+          exactScores(bst, bst.entries)
+            .join(conj.get, Seq("doc_id"), "left_semi")
+            .join(phrase, Seq("doc_id"), "left_anti")
+            .withColumn("tier", lit(1))
+        } else emptyScores().withColumn("tier", lit(1))
+      val claimed = inPhrase.select($"doc_id").unionByName(bigramTier.select($"doc_id"))
+      val rest = scored.join(claimed, Seq("doc_id"), "left_anti")
+        .withColumn("tier", lit(2))
+      finish(inPhrase.unionByName(bigramTier).unionByName(rest), k)
+    }
   }
 
   // ----------------------------------------------- filtered search (q51)
@@ -1170,21 +1278,27 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
         Seq("doc_id"), "left_semi")
 
   /** Serving wrapper: BM25 top-k with snippets in one call — the
-    * result-page shape (doc_id, score, first_pos, snippet). The top-k
-    * ids are collected (k-bounded) to drive the chunk-skipping snippet
-    * pass; left join so a result doc is never dropped by the snippet
-    * stage. Under the driver-local gate: the terms' chunk rows
-    * (positions included) rank and anchor on the driver,
-    * and one pushed `doc_id IN` job fetches the k texts.
+    * result-page shape (doc_id, score, first_pos, snippet). ONE top-k
+    * job collects the k rows, which become a LocalRelation for the
+    * snippet join and drive the chunk-skipping snippet pass —
+    * re-referencing the lazy top-k plan would recompute the whole
+    * scoring pass at the final collect (measured ~2x the latency) — and
+    * a LEFT join keeps a result doc the snippet stage drops. Under the
+    * driver-local gate: the terms' chunk rows (positions included) rank
+    * and anchor on the driver, and one pushed `doc_id IN` job fetches
+    * the k texts.
     */
   def searchWithSnippets(query: String, k: Int, window: Int = 3): DataFrame = {
     val st = new TermStats(queryTerms(query))
-    if (window >= 0 && servesLocally(st.entries)) searchPageLocal(st, k, window)
-    else QueryEngine.searchPage(spark, topKFromEntries(st, st.entries, k),
-      ids => snippets(st, ids, window))
+    if (window >= 0 && servesLocally(st.entries)) return localResultPage(st, k, window)
+    val top = topKFromEntries(st, st.entries, k).collect()
+      .map(r => (r.getLong(0), r.getDouble(1)))
+    top.toSeq.toDF("doc_id", "score")
+      .join(snippets(st, top.map(_._1), window), Seq("doc_id"), "left")
+      .orderBy($"score".desc, $"doc_id".asc)
   }
 
-  private def searchPageLocal(st: TermStats, k: Int, window: Int): DataFrame = {
+  private def localResultPage(st: TermStats, k: Int, window: Int): DataFrame = {
     val es = st.entries
     val ps = localPostings(st.pairs(es), es.map(_.term_id).toSet)
     val top = LocalServing.topK(LocalServing.scores(es, ps, meta), k)
@@ -1265,17 +1379,17 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     * the min-df term's doc set drives a chain of LEFT SEMI joins against
     * the other terms' postings — Catalyst broadcasts the probe side when
     * small, which is the distributed analog of the reference's
-    * binary-search probing. Single index only.
+    * binary-search probing. The chain runs in ascending (df, term_id)
+    * order over [[docIdsOf]] reads. Single index only.
     */
   def conjunctiveSemi(terms: Seq[String]): DataFrame = {
-    val r = single
-    val entries = r.lookupTerms(terms)
-    if (entries.size < terms.distinct.size) return Seq.empty[Long].toDF("doc_id")
-    val byDf = entries.sortBy(e => (e.df, e.term_id))
-    dropDeleted(byDf.tail.foldLeft(r.decodedPostings(Seq(byDf.head.term_id)).select($"doc_id")) {
-      (acc, e) => acc.join(r.decodedPostings(Seq(e.term_id)).select($"doc_id"),
-        Seq("doc_id"), "left_semi")
-    }.distinct())
+    single
+    val st = new TermStats(terms)
+    if (!st.allPresent(terms)) return Seq.empty[Long].toDF("doc_id")
+    dropDeleted(st.entries.sortBy(e => (e.df, e.term_id))
+      .map(e => docIdsOf(st.locals(Seq(e.term))))
+      .reduceLeft((acc, next) => acc.join(next, Seq("doc_id"), "left_semi"))
+      .distinct())
   }
 
   /** Docs where `terms` occur at consecutive positions (reference
@@ -1410,10 +1524,6 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     results.join(
       docs.select($"doc_id", $"conv_id", $"turn_idx", $"role"), Seq("doc_id"))
 
-  /** Postings of one single-index root with positions decoded. */
-  def positionedPostings(termIds: Seq[Long]): Dataset[PositionedPosting] =
-    single.positionedPostings(termIds)
-
   // ------------------------------- reference-parity scorers (single index)
   //
   // DELIBERATELY NOT SERVED across generations: tfIdfScores reproduces
@@ -1425,30 +1535,12 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
   // vsm_norms tables cannot be rescaled post-hoc. Compact first.
 
   /** Reference-parity tf-idf scorer (src/scoring/mod.rs:34-48):
-    * score(doc) = Σ_t log10(N/df_t) * tf_{t,doc}.
+    * score(doc) = Σ_t log10(N/df_t) * tf_{t,doc}, over live docs.
     */
-  def tfIdfScores(terms: Seq[String]): DataFrame =
-    dropDeleted(tfIdfFold(terms).getOrElse(emptyScores()))
-
-  /** Shared per-doc tf-idf fold (doc_id, score) — the numerator of BOTH
-    * reference-parity scorers. ONE home: the sort_array fold order is
-    * determinism-critical, and two copies would silently drift.
-    * None when no query term is in the dictionary.
-    */
-  private def tfIdfFold(terms: Seq[String]): Option[DataFrame] = {
-    val r = single
-    val entries = r.lookupTerms(terms)
-    if (entries.isEmpty) return None
-    val n = meta.n_docs
-    val bcDf = spark.sparkContext.broadcast(entries.map(e => e.term_id -> e.df).toMap)
-    Some(r.decodedPostings(entries.map(_.term_id))
-      .map(p => (p.doc_id, p.term_id, Bm25.tfIdf(n, bcDf.value(p.term_id), p.tf)))
-      .toDF("doc_id", "term_id", "w")
-      .groupBy($"doc_id")
-      .agg(aggregate(
-        sort_array(collect_list(struct($"term_id", $"w"))),
-        lit(0.0),
-        (acc, x) => acc + x.getField("w")).as("score")))
+  def tfIdfScores(terms: Seq[String]): DataFrame = {
+    single
+    val st = new TermStats(terms)
+    foldRows(st, st.entries, tfIdf = true).fold(emptyScores())(aggScores)
   }
 
   /** A9 — vector-space (cosine-normalized) scoring, completing the
@@ -1457,23 +1549,23 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     * was never written, so the completion is the standard VSM shape):
     * `score(d) = (Σ_{t∈q} log10(N/df_t) · tf_{t,d}) / norm_d` — the
     * reference-parity tf-idf numerator (src/scoring/mod.rs:34-48, the
-    * same weight tfIdfScores serves) divided by the reference's norm.
-    * The numerator folds in fixed term_id order (A8 determinism). The
-    * norm join reads the WHOLE norms table: the plan scans `vsm_norms`
-    * with no pushed doc_id filter and broadcasts it (or, above the
-    * broadcast threshold, shuffles every norms row) to meet the
-    * candidates. Returns ALL candidate docs (callers top-k like q07) —
+    * same fold rows and weight tfIdfScores serves) divided by the
+    * reference's norm. The numerator folds in fixed term_id order
+    * through [[aggScores]] (A8 determinism). The norm join reads the
+    * WHOLE norms table: the plan scans `vsm_norms` with no pushed
+    * doc_id filter and broadcasts it (or, above the broadcast
+    * threshold, shuffles every norms row) to meet the candidates. Returns ALL candidate docs (callers top-k like q07) —
     * every candidate has a norm row (it contains >= 1 query term, so
     * its norm sum is positive), making the inner join total.
     */
-  def vsmScores(terms: Seq[String]): DataFrame =
-    tfIdfFold(terms) match {
-      case None => emptyScores()
-      case Some(num) =>
-        dropDeleted(num.withColumnRenamed("score", "num")
-          .join(single.vsmNorms, Seq("doc_id"))
-          .select($"doc_id", ($"num" / $"vsm_norm").as("score")))
-    }
+  def vsmScores(terms: Seq[String]): DataFrame = {
+    val r = single
+    val st = new TermStats(terms)
+    foldRows(st, st.entries, tfIdf = true).fold(emptyScores())(rows =>
+      aggScores(rows).withColumnRenamed("score", "num")
+        .join(r.vsmNorms, Seq("doc_id"))
+        .select($"doc_id", ($"num" / $"vsm_norm").as("score")))
+  }
 }
 
 object QueryEngine {
@@ -1656,7 +1748,9 @@ object QueryEngine {
     */
   val PositionalPruneDensity: Long = 256L
 
-  /** The result-page schema [[searchPage]]'s left join produces. */
+  /** The result-page schema the left join of
+    * [[QueryEngine.searchWithSnippets]] produces.
+    */
   val SearchPageSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(StructField("doc_id", LongType, nullable = false),
@@ -1751,25 +1845,6 @@ object QueryEngine {
         n.stripPrefix("fuzzy_d").toIntOption }
       .flatten.sorted
 
-  /** Result-page assembly: ONE
-    * top-k job whose k collected rows become a LocalRelation for the
-    * snippet join — re-referencing the lazy top-k plan would recompute
-    * the whole scoring pass at the final collect (measured ~2x the
-    * latency) — and a LEFT join so a result doc is never dropped by
-    * the snippet stage.
-    */
-  def searchPage(spark: org.apache.spark.sql.SparkSession,
-      topK: DataFrame, snippets: Array[Long] => DataFrame): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val topRows = topK.collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val ids = topRows.map(_._1).toArray
-    topRows.toDF("doc_id", "score")
-      .join(snippets(ids), Seq("doc_id"), "left")
-      .orderBy(col("score").desc, col("doc_id").asc)
-  }
-
   /** Snippet assembly: join the per-doc
     * `first_pos` relation with the pruned text side and cut the ±window
     * token slice. 0-based first_pos p -> 1-based slice
@@ -1810,17 +1885,10 @@ object QueryEngine {
   * tier 0 = exact-phrase docs (unigram-scored), tier 1 =
   * all-query-bigrams docs (bigram-scored, phrase docs excluded), tier 2
   * = disjunctive unigram matches; a doc keeps its HIGHEST tier, ordered
-  * (tier asc, score desc, doc_id asc), top-k. The engine's scorers are
-  * injected via [[TieredQuery.Scorers]].
-  *
-  * PRUNED form: the claimed (phrase/bigram) doc sets are collected
-  * under `claimCap` — limit(cap+1)-bounded BEFORE the collect — each
-  * claimed tier is scored only for ITS members, and the unigram tier
-  * serves from the top-(k + |claimed|) with a broadcast anti-join,
-  * exact by a counting argument: at most |claimed| of those rows are
-  * claimed, so >= k unclaimed survive. Over-cap sets (or no matching
-  * unigrams) take the EXACT form: full scoring with DataFrame-side
-  * claims, no driver collection.
+  * (tier asc, score desc, doc_id asc), top-k. The engine composes the
+  * tiers from its own scorers (`QueryEngine.tieredTopK`); this object
+  * holds the final ordering, the overlapped probe, the first-guess width
+  * and the counters the specs read.
   */
 private[graft] object TieredQuery {
 
@@ -1842,28 +1910,11 @@ private[graft] object TieredQuery {
   private[graft] val phraseFillExits =
     new java.util.concurrent.atomic.AtomicLong
 
-  /** The engine-specific scoring surface the shared algebra drives.
-    * `topK(n)`/`candScores`/`exactScores` score UNIGRAMS;
-    * `bigramCandScores`/`bigramExactScores` score the query bigrams
-    * (only invoked when `bigramActive`).
-    */
-  final case class Scorers(
-      unigramsPresent: Boolean,
-      bigramActive: Boolean,
-      phraseDocs: DataFrame,
-      conjDocs: Option[DataFrame],
-      topK: Int => DataFrame,
-      candScores: Array[Long] => DataFrame,
-      bigramCandScores: Array[Long] => DataFrame,
-      exactScores: () => DataFrame,
-      bigramExactScores: () => DataFrame,
-      empty: () => DataFrame)
-
-  /** Final tier ordering + projection (also the single-term wrapper's
+  /** Final tier ordering + projection (also the single-term
     * finisher): highest tier wins via the (tier, score desc, doc_id)
     * sort — a doc appears in at most one tier by construction.
     */
-  private def finish(tiers: DataFrame, k: Int): DataFrame =
+  private[query] def finish(tiers: DataFrame, k: Int): DataFrame =
     tiers.orderBy(col("tier").asc, col("score").desc, col("doc_id").asc)
       .limit(k).select("doc_id", "score", "tier")
 
@@ -1879,7 +1930,7 @@ private[graft] object TieredQuery {
     * broadcast wait) makes the pool start compensating workers, which
     * would keep the tag for every later job they run (ProbeCancelSpec).
     */
-  private final class TaggedCollect(sc: org.apache.spark.SparkContext,
+  private[query] final class TaggedCollect(sc: org.apache.spark.SparkContext,
       body: () => Array[Long]) {
     private val tag = ProbeTagPrefix + java.util.UUID.randomUUID()
     private val done = scala.concurrent.Promise[Array[Long]]()
@@ -1910,146 +1961,10 @@ private[graft] object TieredQuery {
       }
   }
 
-  /** Single-term queries have no phrase/bigram tiers: the unigram top-k
-    * IS the answer, labeled tier 2.
-    */
-  def singleTerm(topK: Int => DataFrame, k: Int): DataFrame =
-    finish(topK(k).withColumn("tier", lit(2)), k)
-
   /** First-guess width floor for the adaptive unclaimed-top-k: the
-    * `min(|claimed|, max(GuessFloor, 4k))` slack added to k in [[run]].
+    * `min(|claimed|, max(GuessFloor, 4k))` slack added to k in
+    * `QueryEngine.tieredTopK`.
     */
   val GuessFloor: Int = 50
 
-  /** The tier composition under the claim cap
-    * ([[EngineConfig.handleQueryClaimCap]]).
-    */
-  def run(spark: SparkSession, s: Scorers, k: Int, claimCap: Int,
-      setPath: String => Unit): DataFrame = {
-    import spark.implicits._
-    // Clamped: limit(cap + 1) with cap = Int.MaxValue (a natural way to
-    // "disable" the cap) would overflow to a negative limit and throw.
-    val cap = math.min(claimCap, Int.MaxValue - 1)
-    // The bigram-conjunctive probe overlaps the phrase probe (guide
-    // §2.6; the reference itself runs its strategies on separate
-    // threads, search_engine/mod.rs:147-206): both are independent
-    // cap-bounded collects, and running them sequentially paid two
-    // driver round-trips back to back. Launched BEFORE the phrase
-    // collect; the phrase-fill early exit below cancels it. Engines
-    // without an active bigram tier (conjDocs = None) launch nothing.
-    val conjProbe = s.conjDocs.map(c => new TaggedCollect(spark.sparkContext,
-      () => c.select(col("doc_id")).limit(cap + 1).as[Long].collect()))
-    val phraseIds = s.phraseDocs.select(col("doc_id"))
-      .limit(cap + 1).as[Long].collect()
-    // Early exit when the phrase tier alone fills k: finish() orders
-    // tier-ascending, so with >= k phrase docs the answer is entirely
-    // tier 0 — the bigram-conjunctive probe, the bigram tier and the
-    // unigram top-k (the expensive block-max pass) can contribute
-    // nothing and are skipped. Exactness: tier 0 here is the SAME
-    // candScores relation the full construction builds; finish takes
-    // its top-k under the same (score desc, doc_id asc) order.
-    if (s.unigramsPresent && k > 0 && phraseIds.length >= k &&
-        phraseIds.length <= cap) {
-      setPath("pruned")
-      phraseFillExits.incrementAndGet()
-      conjProbe.foreach(_.cancel())
-      java.util.Arrays.sort(phraseIds)
-      return finish(s.candScores(phraseIds).withColumn("tier", lit(0)), k)
-    }
-    val conjIds = conjProbe.map(_.result()).getOrElse(Array.empty[Long])
-    if (s.unigramsPresent && phraseIds.length <= cap && conjIds.length <= cap) {
-      setPath("pruned")
-      java.util.Arrays.sort(phraseIds)
-      val tier0 = s.candScores(phraseIds).withColumn("tier", lit(0))
-      val phraseSet = phraseIds.toSet
-      val tier1 =
-        if (s.bigramActive) {
-          val t1Ids = conjIds.filterNot(phraseSet)
-          java.util.Arrays.sort(t1Ids)
-          s.bigramCandScores(t1Ids).withColumn("tier", lit(1))
-        } else s.empty().withColumn("tier", lit(1))
-      val claimedIds = (phraseIds ++ conjIds).distinct
-      // Unigram tier: exact top-k of the UNCLAIMED docs. The worst-case
-      // guarantee is top-(k + |claimed|) (at most |claimed| of those
-      // rows are claimed, so >= k unclaimed survive) — but for a
-      // stopword-led phrase |claimed| can be 100k+, and a top-(k+100k)
-      // request collapses block-max pruning (theta becomes the
-      // ~100k-th score: near-exhaustive decode). ADAPTIVE escalation
-      // keeps the exact answer with the pruning intact: ask for
-      // top-(k + min(|claimed|, 5k)) first — claimed docs crowd the
-      // top slots only so far — and re-run at the worst-case width
-      // only when fewer than k unclaimed survive AND the first round
-      // came back full (a short return = match universe exhausted).
-      // Each round collects its (<= width) rows once, so the common
-      // case is ONE sharply-pruned pass; the pathological case costs
-      // one extra pass, bounded by the old construction's cost.
-      val guess = k + math.min(claimedIds.length, math.max(GuessFloor, 4 * k))
-      val tier2 =
-        if (guess >= k + claimedIds.length) {
-          // small claimed set: the guess already IS the worst-case
-          // width — keep tier 2 LAZY so it fuses into the single final
-          // job (an eager collect here serializes one extra multi-
-          // second job at the 10^6-doc scale for no width savings).
-          // claimedDf built only HERE: the adaptive branch filters
-          // driver-side, and eagerly encoding up to 2x claimCap longs
-          // into a LocalRelation would be wasted work on that path.
-          val claimedDf = claimedIds.toSeq.toDF("doc_id")
-          s.topK(k + claimedIds.length)
-            .join(broadcast(claimedDf), Seq("doc_id"), "left_anti")
-            .withColumn("tier", lit(2))
-        } else {
-          // large claimed set: adaptive rounds — each collects its
-          // <= width top rows ONCE and filters claims DRIVER-side: the
-          // claimed set already lives on the driver, so shipping it
-          // back as a broadcast anti-join would add an exchange plus a
-          // multi-MB broadcast to every executor for nothing. Common
-          // case stays ONE sharply-pruned pass; escalation to the
-          // worst-case top-(k + |claimed|) width runs only when the
-          // first round proves BOTH that < k unclaimed survive AND
-          // that deeper rows exist — a short topK return means the
-          // match universe is exhausted, so the full-width
-          // (theta-collapsing) re-run could not surface anything new.
-          val claimedSet = claimedIds.toSet
-          def round(m: Int): (Int, Array[(Long, Double)]) = {
-            val top = s.topK(m).select(col("doc_id"), col("score"))
-              .as[(Long, Double)].collect()
-            (top.length, top.filterNot(r => claimedSet.contains(r._1)))
-          }
-          val (got, first) = round(guess)
-          var rows = first
-          if (rows.length < k && got == guess) {
-            adaptiveEscalations.incrementAndGet()
-            rows = round(k + claimedIds.length)._2
-          }
-          rows.toSeq.toDF("doc_id", "score").withColumn("tier", lit(2))
-        }
-      finish(tier0.unionByName(tier1).unionByName(tier2), k)
-    } else {
-      setPath("exact")
-      // KNOWN COST: s.phraseDocs was evaluated once by the cap probe
-      // above and its subtree appears twice more in this plan (the
-      // tier-0 left_semi and the bigram tier's left_anti) — Spark's
-      // exchange/AQE stage reuse usually dedups the identical
-      // subtrees, but is not guaranteed. This is the rare over-cap
-      // fallback whose budget is already "full distributed scoring"
-      // (SCALE.md); persisting phraseDocs here would trade a
-      // per-query cache leak on the serving path for that occasional
-      // recompute, a worse deal.
-      val scored = if (s.unigramsPresent) s.exactScores() else s.empty()
-      val inPhrase = scored.join(s.phraseDocs, Seq("doc_id"), "left_semi")
-        .withColumn("tier", lit(0))
-      val bigramTier =
-        if (s.bigramActive) {
-          s.bigramExactScores()
-            .join(s.conjDocs.get, Seq("doc_id"), "left_semi")
-            .join(s.phraseDocs, Seq("doc_id"), "left_anti")
-            .withColumn("tier", lit(1))
-        } else s.empty().withColumn("tier", lit(1))
-      val claimed = inPhrase.select(col("doc_id"))
-        .unionByName(bigramTier.select(col("doc_id")))
-      val rest = scored.join(claimed, Seq("doc_id"), "left_anti")
-        .withColumn("tier", lit(2))
-      finish(inPhrase.unionByName(bigramTier).unionByName(rest), k)
-    }
-  }
 }

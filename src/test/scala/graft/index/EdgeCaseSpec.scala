@@ -3,6 +3,7 @@ package graft.index
 import java.sql.Timestamp
 
 import graft.SparkSpecBase
+import graft.core.ChunkCodec
 import graft.corpus.Turn
 import graft.oracle.Oracle
 import graft.query.QueryEngine
@@ -66,9 +67,13 @@ class EdgeCaseSpec extends SparkSpecBase {
   test("huge-tf doc spans multiple chunks worth of positions, decodes back") {
     val e = engine.lookupTerms(Seq("repeat")).head
     assert(e.df == 1 && e.cf == 5000)
-    val p = engine.positionedPostings(Seq(e.term_id)).collect()
-    assert(p.length == 1 && p.head.positions.length == 5000)
-    assert(p.head.positions.toSeq == (0 until 5000))
+    import spark.implicits._
+    val p = engine.postings.filter($"term_id" === e.term_id)
+      .select($"doc_gaps", $"pos_blob", $"n_postings")
+      .as[(Array[Byte], Array[Byte], Int)].collect()
+      .flatMap { case (gaps, pos, n) => ChunkCodec.decode(gaps, pos, n).positions }
+    assert(p.length == 1 && p.head.length == 5000)
+    assert(p.head.toSeq == (0 until 5000))
   }
 
   test("tokenless handleQuery keeps the (doc_id, score, tier) contract") {

@@ -142,6 +142,29 @@ class GenerationDeleteSpec extends SparkSpecBase {
     assert(!got.exists(r => r._1 == delPhrase))
   }
 
+  test("tf-idf, vsm and the semi-join chain drop tombstones on a single index") {
+    import spark.implicits._
+    val dir = tmpDir("graft-del-single")
+    new IndexBuilder(spark, lemmas, conf).build(spark.createDataset(allTurns), dir)
+    val dead = (delFromTop :+ delPhrase).toSet
+    Generations.deleteDocs(spark, spark.createDataset(dead.toSeq), dir)
+    val ts = Seq("the", "of")
+    // the fixture bites: every tombstone is in each full-corpus answer
+    assert(dead.subsetOf(oracle.tfIdfScores(ts).keySet) &&
+      dead.subsetOf(oracle.conjunctive(ts)) && dead.contains(delPhrase))
+    def scores(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
+      df.collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("score")).toMap
+    val live = new QueryEngine(spark, dir, lemmas)
+    assert(live.deletedIds.nonEmpty)
+    // the liveDocs filter and the anti-join fallback alike
+    for (e <- Seq(live, live.withConfig(_.copy(liveDocsCap = 0L)))) {
+      assert(scores(e.tfIdfScores(ts)) == oracle.tfIdfScores(ts) -- dead)
+      assert(scores(e.vsmScores(ts)) == oracle.vsmScores(ts) -- dead)
+      assert(e.conjunctiveSemi(ts).collect().map(_.getLong(0)).toSet ==
+        oracle.conjunctive(ts) -- dead)
+    }
+  }
+
   test("delete batches are idempotent, overlap-safe, and invisible until committed") {
     val before = Generations.delDirs(root).size
     import spark.implicits._

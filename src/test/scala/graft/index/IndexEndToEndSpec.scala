@@ -1,6 +1,7 @@
 package graft.index
 
 import graft.SparkSpecBase
+import graft.core.ChunkCodec
 import graft.corpus.Transcripts
 import graft.oracle.Oracle
 import graft.query.QueryEngine
@@ -66,9 +67,13 @@ class IndexEndToEndSpec extends SparkSpecBase {
     val terms = Seq("the", "alba", "cordi") // stopword (salted) + rare
     val entries = engine.lookupTerms(terms.filter(oracle.postings.contains))
     entries.foreach { e =>
-      val got = engine.positionedPostings(Seq(e.term_id))
-        .collect().sortBy(_.doc_id)
-        .map(p => (p.doc_id, p.positions.toVector)).toSeq
+      val got = engine.postings.filter($"term_id" === e.term_id)
+        .select($"doc_gaps", $"pos_blob", $"n_postings")
+        .as[(Array[Byte], Array[Byte], Int)].collect()
+        .flatMap { case (gaps, pos, n) =>
+          val c = ChunkCodec.decode(gaps, pos, n)
+          c.docIds.zip(c.positions.map(_.toVector))
+        }.sortBy(_._1).toSeq
       val want = oracle.postings(e.term)
         .map(p => (p._1, p._3)).toSeq
       assert(got == want, s"postings mismatch for '${e.term}'")

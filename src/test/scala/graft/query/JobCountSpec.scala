@@ -54,6 +54,9 @@ class JobCountSpec extends SparkSpecBase with JobCounting {
   // two consecutive tokens of a live doc: a phrase that matches
   private lazy val phrase: Seq[String] =
     graft.core.Tokenizer.tokenize(allTurns(10).text, lemmas).take(2).map(_.term)
+  // three distinct terms of a live doc: a conjunction that matches
+  private lazy val conjTerms: Seq[String] =
+    graft.core.Tokenizer.tokenize(allTurns(10).text, lemmas).map(_.term).distinct.take(3)
 
   private lazy val singleRoot: String = {
     import spark.implicits._
@@ -88,13 +91,29 @@ class JobCountSpec extends SparkSpecBase with JobCounting {
       ("handleQuery", () => { e.handleQuery(q, 10).collect(); () }, 8)) // pre-pass: 9
   }
 
-  for ((label, root) <- Seq(("single index", () => singleRoot),
-      ("3 generations with tombstones", () => genRoot)))
+  /** The single-index-only calls -> (the warm call, its job budget).
+    * Each budget is the count the call took when the reader kept a
+    * decode of its own: tf-idf and vsm folded its (term_id, doc_id, tf,
+    * dl) rows in a fold of their own, and the semi-join chain read each
+    * term's doc ids from those rows; the comment beside it repeats that
+    * count.
+    */
+  private def singleKinds(e: QueryEngine): Seq[(String, () => Unit, Int)] = {
+    val terms = e.queryTerms(q)
+    Seq(
+      ("tfIdfScores", () => { e.tfIdfScores(terms).collect(); () }, 2), // own decode: 2
+      ("vsmScores", () => { e.vsmScores(terms).collect(); () }, 3), // own decode: 3
+      ("conjunctiveSemi", () => { e.conjunctiveSemi(conjTerms).collect(); () },
+        4)) // own decode: 4
+  }
+
+  for ((label, root, single) <- Seq(("single index", () => singleRoot, true),
+      ("3 generations with tombstones", () => genRoot, false)))
     test(s"job budgets above the driver-local gate: $label") {
       val e = new QueryEngine(spark, root(), lemmas,
         EngineConfig(localMaxPostings = 0L, wandMinPostings = 0L))
       e.warmDictionaryLocal()
-      kinds(e).foreach { case (kind, run, budget) =>
+      (kinds(e) ++ (if (single) singleKinds(e) else Nil)).foreach { case (kind, run, budget) =>
         run() // first call resolves lazy state (file listings, codegen, liveDocs)
         val n = jobsOf(run())
         info(s"$kind: $n jobs (budget $budget)")

@@ -142,6 +142,18 @@ class PlanSpec extends SparkSpecBase {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("semi-join conjunctive chain joins by LeftSemi only") {
+    // q30's shape beside q04's inner-join chain: the rarest term's doc
+    // ids drive a chain of LEFT SEMI joins against the other terms'
+    val terms = engine.dictionary
+      .filter(col("df") >= 2).orderBy(col("term")).limit(3)
+      .collect().map(_.getAs[String]("term")).toSeq
+    assert(terms.size == 3, "corpus too small for a 3-term conjunctive")
+    val plan = planOf(engine.conjunctiveSemi(terms))
+    assert(countOf("LeftSemi", plan) == 2, s"expected 2 LeftSemi joins in:\n$plan")
+    assert(!plan.contains("Inner"), s"expected no inner join in:\n$plan")
+  }
+
   test("whole-stage codegen covers the quality-scoring expressions") {
     // parquet-backed input (a literal local relation constant-folds away)
     val docs = engine.docs.select(col("doc_id"), col("text"))

@@ -6,7 +6,8 @@ Usage: python3 tools/loc.py [DIR]   (DIR defaults to src/main)
 A line is not counted when it is blank, when it starts with `//`, or when it
 belongs to a `/* ... */` block (scaladoc included) that starts the line. Code
 with a trailing comment counts. Calibration: `src/main` at commit ed42ed0
-counts 6,845 and at f940ad1 6,986.
+counts 6,845, at f940ad1 6,986, at a0233be 6,371, and 6,296 once the
+tier composition moved into `QueryEngine` (the change after a0233be).
 """
 import pathlib
 import sys
