@@ -281,18 +281,28 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
 
   /** Deletion-neighborhood (SymSpell) fuzzy table: every dictionary term
     * expanded to its <=d-deletion variants, range-partitioned and sorted
-    * by variant so a fuzzy lookup is a pushed `variant IN` probe. Built
-    * at INDEX time — query paths stay read-only (QueryEngine keeps a
-    * lazy-build fallback for indexes from older builds).
+    * by variant so a fuzzy lookup is a pushed `variant IN` probe. The
+    * build writes it at d = `fuzzyMaxDistance`; a reader backfills it on
+    * any root at the first lookup of a larger d up to 3
+    * (QueryEngine.fuzzyIndexFor). Skipped while current: derived from
+    * the dictionary under `root` (see [[writeFuzzy]]).
     */
-  def writeFuzzyIndex(dictDf: DataFrame, root: String, d: Int = 1): Unit = {
+  def writeFuzzyIndex(dictDf: DataFrame, root: String, d: Int = 1): Unit =
+    writeFuzzy(dictDf, root, d, IndexBuilder.tableToken(IndexPaths(root).dictionary))
+
+  /** [[writeFuzzyIndex]] as a stage under `dictToken`, the
+    * [[IndexBuilder.tableToken]] of the dictionary it derives from: a
+    * rebuild over a changed corpus rewrites the dictionary but not a
+    * backfilled fuzzy_dD, which must then read as stale (wrong df,
+    * dangling term_ids), never serve.
+    */
+  private def writeFuzzy(dictDf: DataFrame, root: String, d: Int,
+      dictToken: String): Unit = stage(IndexPaths(root).fuzzy(d), dictToken) {
     // maxLen slack of +d: a term of MaxTermLen+d code points is still
     // within distance d of a MaxTermLen-cp query, so its variants must be
     // in the table (the boundary miss ADVICE flagged); only terms beyond
     // that are exact-match-only.
     val maxLen = graft.core.Fuzzy.MaxTermLen + d
-    val t0 = System.nanoTime()
-    val dir = IndexPaths(root).fuzzy(d)
     val variants = dictDf.select($"term", $"term_id", $"df")
       // unigrams only: on a bigram-indexed root the dictionary also
       // holds space-joined pseudo-terms, which fuzzyTerms never serves
@@ -306,22 +316,7 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
       .toDF(IndexBuilder.FuzzySchema.fieldNames.toSeq: _*)
       .repartitionByRange(conf.numParts, $"variant")
       .sortWithinPartitions($"variant")
-    val rows = IndexBuilder.writeCounted(variants, dir).rows
-    val dictToken = IndexBuilder.tableToken(IndexPaths(root).dictionary)
-    // n_files/bytes manifest: without it the serve-time manifestIntact
-    // gate is VACUOUS for this dir (no manifest => trivially intact), so
-    // a variant table that lost part files under surviving _SUCCESS +
-    // dict-token markers would silently DROP fuzzy matches. The row
-    // count is the one the write observed.
-    writeManifest(dir, dictToken, rows, (System.nanoTime() - t0) / 1000000L)
-    // tie the variant table to the EXACT dictionary build it derives
-    // from: a rebuild over a changed corpus rewrites the dictionary but
-    // only fuzzy_d{fuzzyMaxDistance} — without the token, a stale
-    // lazily-backfilled fuzzy_dD from the old corpus would keep serving
-    // (wrong df, dangling term_ids). Written LAST: the token is the
-    // serve-side commit marker, so a crash mid-write leaves a dir that
-    // reads as stale (rebuilt or scan-served), never as trusted.
-    Fs.writeString(s"$dir/${IndexBuilder.DictTokenFile}", dictToken)
+    (IndexBuilder.writeCounted(variants, IndexPaths(root).fuzzy(d)).rows, Map.empty)
   }
 
   /** A9 — vector-space document norms, the reference's abandoned cosine
@@ -376,30 +371,21 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     * (one ~2M-doc (long, double) file per partition), not conf.numParts
     * — the dict_by_len lesson: range partitioning a small table into
     * many near-empty files pays a sampling pass + writes for nothing.
+    * A stage under the dictionary's [[IndexBuilder.tableToken]] plus
+    * [[IndexBuilder.VsmNormsFormatTag]] (the dictionary and the postings
+    * rewrite together), skipped while current.
     */
   def writeVsmNorms(postingsDf: DataFrame, dictDf: DataFrame, root: String): Unit = {
-    val nDocs = IndexBuilder.readMeta(root).n_docs
-    val parts = math.max(1L,
-      math.min(conf.numParts.toLong, nDocs / 2000000L + 1L)).toInt
-    val t0 = System.nanoTime()
-    val dir = IndexPaths(root).vsmNorms
-    val rows = IndexBuilder.writeCounted(vsmNormsDf(postingsDf, dictDf)
-      .repartitionByRange(parts, $"doc_id")
-      .sortWithinPartitions($"doc_id"), dir).rows
-    val dictToken = IndexBuilder.tableToken(IndexPaths(root).dictionary)
-    // n_files/bytes manifest — QueryEngine.vsmNormsTable's
-    // manifestIntact call was VACUOUS without one (truncated norms =
-    // missing docs in every vsmScores result); rows as the write
-    // observed them
-    writeManifest(dir, dictToken, rows, (System.nanoTime() - t0) / 1000000L)
-    // same staleness guard as the fuzzy tables: tied to the exact
-    // dictionary build (dictionary and postings rewrite together);
-    // token written LAST as the serve-side commit marker. The format
-    // suffix versions the COMPUTATION: norms tables written before the
-    // unigram-only fix (bigram postings inflated norm_d) carry the
-    // bare dictToken, read as stale, and backfill once on first use.
-    Fs.writeString(s"$dir/${IndexBuilder.DictTokenFile}",
-      dictToken + IndexBuilder.VsmNormsFormatTag)
+    val paths = IndexPaths(root)
+    stage(paths.vsmNorms,
+        IndexBuilder.tableToken(paths.dictionary) + IndexBuilder.VsmNormsFormatTag) {
+      val nDocs = IndexBuilder.readMeta(root).n_docs
+      val parts = math.max(1L,
+        math.min(conf.numParts.toLong, nDocs / 2000000L + 1L)).toInt
+      (IndexBuilder.writeCounted(vsmNormsDf(postingsDf, dictDf)
+        .repartitionByRange(parts, $"doc_id")
+        .sortWithinPartitions($"doc_id"), paths.vsmNorms).rows, Map.empty)
+    }
   }
 
   /** Per-term (df, cf, max_norm) from chunk rows — a cheap aggregation
@@ -489,17 +475,19 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     * dictionary (term-sorted, range-partitioned — the layout PlanSpec
     * asserts), postings (term-range dirs, each range-partitioned/sorted
     * by (term_id, chunk_seq); readers use recursiveFileLookup), and the
-    * SymSpell fuzzy variant table. Every piece carries its own manifest
-    * under `fp`:
+    * two dictionary-derived tables, dict_by_len and the SymSpell fuzzy
+    * variant table. Every piece carries its own manifest:
     *
-    *  - dictionary: one manifest (stats agg + RangeRank are global — a
-    *    dense term_id cannot be assigned per-range — but this pass is
-    *    the CHEAP one: column-pruned, no chunk encoding);
+    *  - dictionary: one manifest under `fp` (stats agg + RangeRank are
+    *    global — a dense term_id cannot be assigned per-range — but this
+    *    pass is the CHEAP one: column-pruned, no chunk encoding);
     *  - postings: one manifest per term-range + a parent manifest, so a
     *    kill mid-stage-2 redoes only incomplete ranges (the bulk of
     *    stage-2 wall time is here: chunk encode + blob write);
-    *  - fuzzy table: skipped when its dict-token matches the dictionary
-    *    it was derived from (tableToken), rebuilt otherwise.
+    *  - dict_by_len and fuzzy_d{fuzzyMaxDistance}: one manifest each
+    *    under the dictionary's [[IndexBuilder.tableToken]], so each is
+    *    skipped while derived from this dictionary and intact, and
+    *    rewritten otherwise.
     *
     * Reads the persisted segments under `root`, which every writer
     * leaves (term, salt)-grouped and (term, salt, doc_id)-sorted within
@@ -592,21 +580,13 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     // len+d` range probe (only the query's length band is ever read)
     // instead of the old O(lexicon) scan (round-4 verdict #4).
     // Lexicon-sized projection of 4 columns: negligible build cost.
-    // Runs for resumed roots too (its own manifest under fp), so
-    // pre-existing index caches get backfilled by the next build().
-    // Skip needs BOTH the fp manifest AND a current dict token: a
-    // dictionary repaired/rewritten under the SAME fp (new part UUIDs,
-    // new tableToken) would otherwise leave dict_by_len fp-complete but
-    // stale-tokened — the serve-side token check then fails forever and
-    // every large-d fuzzy query pays the O(lexicon) scan with no build
-    // ever repairing it (writeFuzzyIfStale re-verifies for this reason).
-    def dictByLenCurrent: Boolean = {
-      val marker = s"${paths.dictByLen}/${IndexBuilder.DictTokenFile}"
-      Fs.exists(marker) &&
-        Fs.readString(marker) == IndexBuilder.tableToken(paths.dictionary)
-    }
+    // Like the fuzzy table, a stage under the dictionary's token, not
+    // fp: a dictionary rewritten under the SAME fp (new part UUIDs, new
+    // token) makes it stale, so the next build() repairs it, and the
+    // reader serves it only under the token it was built from.
+    val dictToken = IndexBuilder.tableToken(paths.dictionary)
     def writeDictByLen(): Unit =
-      stage(paths.dictByLen, fp, current = dictByLenCurrent) {
+      stage(paths.dictByLen, dictToken) {
         // Partition count scales with the LEXICON, not the corpus: a
         // small lexicon in conf.numParts range partitions pays a
         // sampling pass + shuffle + numParts file writes for near-empty
@@ -623,26 +603,8 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
           .repartitionByRange(dblParts, $"cp_len", $"term")
           .sortWithinPartitions($"cp_len", $"term")
           .write.mode("overwrite").parquet(paths.dictByLen)
-        // tie to the EXACT dictionary build (same staleness guard as the
-        // fuzzy variant tables): a rebuilt dictionary must invalidate it
-        Fs.writeString(s"${paths.dictByLen}/${IndexBuilder.DictTokenFile}",
-          IndexBuilder.tableToken(paths.dictionary))
         (nTerms, Map.empty)
       }
-
-    // 2c: fuzzy variant table — skip when already derived from THIS
-    // dictionary build (the token writeFuzzyIndex leaves behind)
-    def writeFuzzyIfStale(): Unit = {
-      val dir = paths.fuzzy(conf.fuzzyMaxDistance)
-      val tokenFile = s"$dir/${IndexBuilder.DictTokenFile}"
-      // token match alone is not enough: a truncated dir (part files
-      // lost, markers surviving) must be REPAIRED by a resumed build,
-      // not merely distrusted at serve time
-      val current = Fs.exists(tokenFile) &&
-        Fs.readString(tokenFile) == IndexBuilder.tableToken(paths.dictionary) &&
-        IndexBuilder.manifestIntact(dir)
-      if (!current) writeFuzzyIndex(dictDf, root, conf.fuzzyMaxDistance)
-    }
 
     // Everything after the dictionary lands is INDEPENDENT (the postings
     // ranges, dict_by_len and the fuzzy table each derive only from the
@@ -654,7 +616,7 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     IndexBuilder.concurrently(spark, 3) {
       case 0 => stage(paths.postings, fp)(writeRanges())
       case 1 => writeDictByLen()
-      case _ => writeFuzzyIfStale()
+      case _ => writeFuzzy(dictDf, root, conf.fuzzyMaxDistance, dictToken)
     }
     fresh.foreach(_.unpersist())
     rowsAndSum(paths.dictionary, "df", dictDf)
@@ -699,32 +661,17 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     Fs.writeString(s"$dir/_manifest.json", json)
   }
 
-  private def manifestComplete(dir: String, fingerprint: String): Boolean = {
-    val f = s"$dir/_manifest.json"
-    Fs.exists(f) && {
-      val s = Fs.readString(f)
-      s.contains("\"status\":\"complete\"") &&
-      s.contains(s""""fingerprint":"$fingerprint"""") &&
-      // Integrity check (round-4 ADVICE): the manifest alone is not
-      // the stage — a dir whose part files were partially deleted
-      // while its manifest survived must read as INCOMPLETE, or a
-      // resume silently serves truncated postings. One recursive
-      // listing per stage check compares the manifest's n_files/bytes
-      // against what is actually on disk: O(stages) driver IO,
-      // within the Fs-ops budget (test-pinned).
-      IndexBuilder.declaredMatchesDisk(dir, s)
-    }
-  }
-
-  /** The one resumable stage of every index writer: skipped when
-    * `dir`'s manifest is complete under `fp` (and `current` holds),
-    * else `write` runs, timed, and returns the rows it wrote and the
-    * manifest's extra fields (sums, geometry), which land with its wall
-    * time in `dir`'s `_manifest.json`.
+  /** The one resumable stage of every index writer and derived table:
+    * skipped when [[IndexBuilder.manifestComplete]] holds for `dir`
+    * under `fp`, else `write` runs, timed, and returns the rows it wrote
+    * and the manifest's extra fields (sums, geometry), which land with
+    * its wall time in `dir`'s `_manifest.json` — written only after the
+    * write has committed (an overwrite drops the old manifest first),
+    * so an interrupted write leaves none.
     */
-  private[index] def stage(dir: String, fp: String, current: => Boolean = true)(
+  private[index] def stage(dir: String, fp: String)(
       write: => (Long, Map[String, String])): Unit =
-    if (!manifestComplete(dir, fp) || !current) {
+    if (!IndexBuilder.manifestComplete(dir, fp)) {
       val t0 = System.nanoTime()
       val (rows, extra) = write
       writeManifest(dir, fp, rows, (System.nanoTime() - t0) / 1000000L, extra)
@@ -1016,52 +963,48 @@ object IndexBuilder {
   private[index] def avgdl(docLenSum: Long, nDocs: Long): Double =
     docLenSum.toDouble / nDocs
 
-  /** Marker file inside a fuzzy_dD dir holding [[tableToken]] of the
-    * dictionary it was derived from.
-    */
-  val DictTokenFile = "_graft_dict_token"
-
-  /** Computation-format tag appended to the vsm_norms dict token —
-    * bump when the norm formula changes so persisted tables from the
-    * old computation read as stale (e.g. "#unigram": the fix excluding
-    * bigram pseudo-terms from norm_d).
+  /** Computation-format tag appended to the dictionary token that
+    * fingerprints vsm_norms — bump when the norm formula changes so
+    * persisted tables from the old computation read as stale and
+    * backfill once (e.g. "#unigram": the fix excluding bigram
+    * pseudo-terms from norm_d).
     */
   val VsmNormsFormatTag = "#unigram"
 
-  /** Does `manifest` (a _manifest.json body) agree with `dir`'s actual
-    * parquet files (n_files + bytes)? The integrity core shared by the
-    * build-side [[IndexBuilder.manifestComplete]] resume gate and the
-    * query-side [[manifestIntact]]: a dir whose part files were
-    * partially deleted while its manifest survived must never be
-    * trusted, at build OR serve time. Vacuously true for manifests
-    * predating the n_files/bytes fields.
+  /** The one currency check of every stage and derived table, at build
+    * and at serve time: `dir`'s manifest is complete under
+    * `fingerprint`, and its n_files/bytes agree with one listing of the
+    * parquet files on disk. The manifest alone is not the stage: a dir
+    * whose part files were partially deleted while its manifest
+    * survived must read as INCOMPLETE, or a resume or a reader silently
+    * serves a truncated table. Vacuously intact for manifests predating
+    * the n_files/bytes fields. O(1) driver IO per check (test-pinned
+    * Fs-ops budget).
     */
-  private[graft] def declaredMatchesDisk(dir: String, manifest: String): Boolean = {
-    val declared = for {
-      nf <- "\"n_files\":(\\d+)".r.findFirstMatchIn(manifest)
-      by <- "\"bytes\":(\\d+)".r.findFirstMatchIn(manifest)
-    } yield (nf.group(1).toLong, by.group(1).toLong)
-    declared.forall { case (nFiles, bytes) =>
-      val files = Fs.listFilesRecursive(dir, ".parquet")
-      files.size.toLong == nFiles && files.map(_._3).sum == bytes
-    }
-  }
-
-  /** Query-side integrity gate for a derived layout dir: its manifest
-    * (when present) must match the files on disk. One manifest read +
-    * one listing, once per engine instance (callers are lazy vals).
-    */
-  private[graft] def manifestIntact(dir: String): Boolean = {
+  private[graft] def manifestComplete(dir: String, fingerprint: String): Boolean = {
     val f = s"$dir/_manifest.json"
-    !Fs.exists(f) || declaredMatchesDisk(dir, Fs.readString(f))
+    Fs.exists(f) && {
+      val s = Fs.readString(f)
+      val declared = for {
+        nf <- "\"n_files\":(\\d+)".r.findFirstMatchIn(s)
+        by <- "\"bytes\":(\\d+)".r.findFirstMatchIn(s)
+      } yield (nf.group(1).toLong, by.group(1).toLong)
+      s.contains("\"status\":\"complete\"") &&
+      s.contains(s""""fingerprint":"$fingerprint"""") &&
+      declared.forall { case (nFiles, bytes) =>
+        val files = Fs.listFilesRecursive(dir, ".parquet")
+        files.size.toLong == nFiles && files.map(_._3).sum == bytes
+      }
+    }
   }
 
   /** Identity token of an on-disk parquet table: hash of its sorted
     * (part-file name, size) listing. Part names embed the write's UUID,
     * so ANY rewrite of the table — same content or not — changes the
     * token. Cheap to recompute at serve time (one directory listing);
-    * used to tie derived tables (the fuzzy variant tables) to the exact
-    * dictionary build they came from.
+    * the fingerprint of every table derived from the dictionary
+    * (dict_by_len, fuzzy_dD, vsm_norms), tying each to the exact
+    * dictionary build it came from.
     */
   def tableToken(dir: String): String = {
     val parts = Fs.listFilesRecursive(dir, ".parquet")

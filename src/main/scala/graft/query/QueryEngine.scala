@@ -92,23 +92,38 @@ final class IndexReader(spark: SparkSession, val root: String) {
   private val fuzzyIndexCache =
     scala.collection.concurrent.TrieMap.empty[Int, Option[DataFrame]]
 
-  /** ONE validity gate for every derived-table dir (fuzzy_dD,
-    * dict_by_len, vsm_norms): _SUCCESS present, the dict-token marker
-    * matches the CURRENT dictionary's tableToken (the token hashes the
-    * DICTIONARY's listing — it catches staleness after a rebuild but
-    * NOT this dir's own truncation), and the dir's n_files/bytes
-    * manifest agrees with one disk listing (catches truncation;
-    * vacuously true for pre-manifest tables, the same contract as the
-    * build-side resume gate). Shared so a hardening change cannot land
-    * in one copy and miss another.
+  /** The writer of every backfilled derived table (one pipeline with
+    * the index build, no drift).
     */
-  private def derivedTableValid(dir: String, dictToken: String): Boolean =
-    graft.index.Fs.exists(s"$dir/_SUCCESS") && {
-      val marker = s"$dir/${IndexBuilder.DictTokenFile}"
-      graft.index.Fs.exists(marker) &&
-        graft.index.Fs.readString(marker) == dictToken &&
-        IndexBuilder.manifestIntact(dir)
+  private lazy val builder = new IndexBuilder(spark, Map.empty,
+    graft.index.IndexConf(numParts = math.max(1, spark.sparkContext.defaultParallelism)))
+
+  /** Whether the derived table at `dir` is current under `fp` (the
+    * dictionary's token, see [[IndexBuilder.manifestComplete]]), after
+    * one backfill through `write` when it is not. The write is
+    * serialized per dir (two overwrite jobs into one dir would delete
+    * each other's in-flight files), and the builder's stage runner
+    * re-checks under the lock, so a table another engine just wrote is
+    * not written again. A dir whose backfill failed (e.g. a read-only
+    * mount) is remembered per JVM and not retried, so each fresh
+    * engine over it does not re-run the write just to fail again.
+    */
+  private def backfilled(dir: String, fp: String)(write: IndexBuilder => Unit): Boolean = {
+    def current = IndexBuilder.manifestComplete(dir, fp)
+    current || !QueryEngine.backfillFailed.contains(dir) && {
+      QueryEngine.backfillLocks.getOrElseUpdate(dir, new Object).synchronized {
+        if (!QueryEngine.backfillFailed.contains(dir))
+          try write(builder)
+          catch {
+            case scala.util.control.NonFatal(e) =>
+              QueryEngine.backfillFailed.add(dir)
+              System.err.println(s"[graft] backfill of $dir failed " +
+                s"(serving without it): ${e.getMessage}")
+          }
+      }
+      current
     }
+  }
 
   /** Deletion-neighborhood fuzzy index (SymSpell; Garbe 2012) serving
     * distance d — the Spark-native equivalent of the reference's BK-tree
@@ -119,60 +134,29 @@ final class IndexReader(spark: SparkSession, val root: String) {
     * levenshtein scan — the difference between O(|q|^d) and O(|lexicon|)
     * per query at the 10^8-term lexicons a 100 TB corpus produces.
     *
-    * Resolution order: the smallest VALID persisted fuzzy_dD with D >= d
-    * (valid = its dict-token marker matches the CURRENT dictionary —
-    * a rebuild over a changed corpus rewrites the dictionary but not
-    * old lazily-backfilled tables, which must not keep serving);
-    * otherwise a one-time lazy backfill AT d, serialized per (root, d)
-    * so concurrent first lookups can't race two overwrites into one
-    * directory. Backfill only runs for d <= MaxFuzzyTableDistance —
-    * the variant count grows ~C(len, d), so larger distances go to the
-    * length-pruned dictionary scan instead of writing an enormous table
-    * nobody asked to persist. If the root is not writable (a read-only
-    * served snapshot), fuzzyTerms falls back to the scan as well.
+    * Resolution order: the smallest CURRENT persisted fuzzy_dD with
+    * D >= d (current = built from the CURRENT dictionary — a rebuild
+    * over a changed corpus rewrites the dictionary but not old
+    * backfilled tables, which must not keep serving); otherwise a
+    * one-time [[backfilled]] table AT d. Backfill only runs for
+    * d <= MaxFuzzyTableDistance — the variant count grows ~C(len, d), so
+    * larger distances go to the length-pruned dictionary probe instead
+    * of writing an enormous table nobody asked to persist. If the root
+    * is not writable (a read-only served snapshot), fuzzyTerms falls
+    * back to that probe as well.
     */
   private def fuzzyIndexFor(d: Int): Option[DataFrame] =
     fuzzyIndexCache.getOrElseUpdate(d, {
       val dictToken = IndexBuilder.tableToken(paths.dictionary)
-      def valid(dd: Int): Boolean = derivedTableValid(paths.fuzzy(dd), dictToken)
       // probe EVERY persisted distance (a build may have written
-      // fuzzy_d{fuzzyMaxDistance} above the backfill cap). Tables from
-      // pre-token builds (_SUCCESS but no dict-token marker) read as
-      // stale by design — on a writable root they are rebuilt once; on
-      // a read-only snapshot the scan fallback serves (slower but never
-      // wrong) until the snapshot is refreshed by a tokened build.
-      val found = QueryEngine.fuzzyDistancesOnDisk(root)
-        .filter(_ >= d).find(valid)
-      if (found.isEmpty && d <= MaxFuzzyTableDistance &&
-          !QueryEngine.fuzzyBackfillFailed.contains(s"$root#$d")) {
-        // serialize per (root, d): two concurrent overwrite jobs into the
-        // same directory would delete each other's in-flight files
-        QueryEngine.fuzzyBuildLocks
-          .getOrElseUpdate(s"$root#$d", new Object).synchronized {
-            if (!valid(d) &&
-                !QueryEngine.fuzzyBackfillFailed.contains(s"$root#$d")) {
-              try {
-                // same writer the index build uses (one pipeline, no drift)
-                new IndexBuilder(spark, Map.empty,
-                  graft.index.IndexConf(
-                    numParts = math.max(1, spark.sparkContext.defaultParallelism)))
-                  .writeFuzzyIndex(dictionary, root, d)
-              } catch {
-                case scala.util.control.NonFatal(e) =>
-                  // remember per-JVM so each fresh engine over this root
-                  // doesn't re-run the (large) dictionary-expansion job
-                  // just to fail at write time again
-                  QueryEngine.fuzzyBackfillFailed.add(s"$root#$d")
-                  System.err.println(
-                    s"[graft] fuzzy-index backfill failed for $root d=$d " +
-                      s"(falling back to dictionary scan): ${e.getMessage}")
-              }
-            }
-          }
-      }
-      // orElse re-probes only when nothing was found above — i.e. when
-      // the backfill (which writes at exactly d) may have just run
-      found.orElse(Option(d).filter(valid))
+      // fuzzy_d{fuzzyMaxDistance} above the backfill cap). A table from
+      // an older dictionary reads as stale: on a writable root it is
+      // rebuilt once; on a read-only snapshot the dict_by_len probe or
+      // the scan serves (slower but never wrong).
+      QueryEngine.fuzzyDistancesOnDisk(root).filter(_ >= d)
+        .find(dd => IndexBuilder.manifestComplete(paths.fuzzy(dd), dictToken))
+        .orElse(Option(d).filter(_ <= MaxFuzzyTableDistance).filter(_ =>
+          backfilled(paths.fuzzy(d), dictToken)(_.writeFuzzyIndex(dictionary, root, d))))
         .map(dd => IndexBuilder.reopen(spark, Seq(paths.fuzzy(dd)), IndexBuilder.FuzzySchema))
     })
 
@@ -200,9 +184,9 @@ final class IndexReader(spark: SparkSession, val root: String) {
     * PlanSpec asserts the pushdown; [[QueryEngine.fuzzyRangeProbes]]
     * counts these lookups.
     *
-    * Only when even dict_by_len is unavailable (an index root from an
-    * older build, never re-built since) does the O(|lexicon|)
-    * length-prefiltered dictionary scan run — counted in
+    * Only when even dict_by_len is unavailable (absent, truncated, or
+    * built from another dictionary, with no build() since) does the
+    * O(|lexicon|) length-prefiltered dictionary scan run — counted in
     * [[QueryEngine.fuzzyScanFallbacks]] (monitor it; a climbing counter
     * means a root that deserves one build() pass to lay dict_by_len
     * down, or large-d traffic that deserves a persisted fuzzy_dD via
@@ -250,50 +234,27 @@ final class IndexReader(spark: SparkSession, val root: String) {
   }
 
   /** The `dict_by_len` layout (build-time (cp_len, term)-sorted
-    * dictionary projection), validated against the CURRENT dictionary
-    * via the same dict-token staleness guard the fuzzy variant tables
-    * use; None for roots from builds that predate the layout (the
-    * counted scan fallback serves those).
+    * dictionary projection), served only while current under the
+    * dictionary's token, the fuzzy tables' staleness guard; None for
+    * roots whose dict_by_len predates this dictionary or the layout
+    * (the counted scan fallback serves those until the next build()).
     */
-  private lazy val dictByLen: Option[DataFrame] = {
-    val dir = paths.dictByLen
-    if (derivedTableValid(dir, IndexBuilder.tableToken(paths.dictionary)))
-      Some(IndexBuilder.reopen(spark, Seq(dir), IndexBuilder.DictByLenSchema))
-    else None
-  }
+  private lazy val dictByLen: Option[DataFrame] =
+    Some(paths.dictByLen)
+      .filter(IndexBuilder.manifestComplete(_, IndexBuilder.tableToken(paths.dictionary)))
+      .map(dir => IndexBuilder.reopen(spark, Seq(dir), IndexBuilder.DictByLenSchema))
 
   /** The vsm_norms table (see IndexBuilder.writeVsmNorms): loaded from
-    * the index root when a VALID persisted copy exists (dict-token
-    * marker matches the current dictionary — the fuzzy tables' staleness
-    * guard), else backfilled once (serialized per root); on a read-only
-    * root whose backfill fails, the norms are computed per-reader
-    * in memory (slower — a full postings pass per reader instance —
-    * but never wrong).
+    * the index root when a current persisted copy exists, else
+    * [[backfilled]] once; on a read-only root whose backfill fails, the
+    * norms are computed per-reader in memory (slower — a full postings
+    * pass per reader instance — but never wrong).
     */
-  lazy val vsmNorms: DataFrame = {
-    val dir = paths.vsmNorms
-    def valid: Boolean = derivedTableValid(dir,
-      IndexBuilder.tableToken(paths.dictionary) +
-        IndexBuilder.VsmNormsFormatTag)
-    def builder = new IndexBuilder(spark, Map.empty,
-      graft.index.IndexConf(
-        numParts = math.max(1, spark.sparkContext.defaultParallelism)))
-    if (!valid && !QueryEngine.vsmBackfillFailed.contains(root)) {
-      QueryEngine.fuzzyBuildLocks
-        .getOrElseUpdate(s"$root#vsm", new Object).synchronized {
-          if (!valid && !QueryEngine.vsmBackfillFailed.contains(root)) {
-            try builder.writeVsmNorms(postings, dictionary, root)
-            catch {
-              case scala.util.control.NonFatal(e) =>
-                QueryEngine.vsmBackfillFailed.add(root)
-                System.err.println(
-                  s"[graft] vsm-norms backfill failed for $root " +
-                    s"(computing in memory): ${e.getMessage}")
-            }
-          }
-        }
-    }
-    if (valid) IndexBuilder.reopen(spark, Seq(dir), IndexBuilder.VsmNormsSchema)
+  lazy val vsmNorms: DataFrame =
+    if (backfilled(paths.vsmNorms,
+        IndexBuilder.tableToken(paths.dictionary) + IndexBuilder.VsmNormsFormatTag)(
+        _.writeVsmNorms(postings, dictionary, root)))
+      IndexBuilder.reopen(spark, Seq(paths.vsmNorms), IndexBuilder.VsmNormsSchema)
     else
       // read-only root: the WRITER's computation (one shared home, no
       // drift), PERSISTED — without the cache every vsmScores action
@@ -301,7 +262,6 @@ final class IndexReader(spark: SparkSession, val root: String) {
       // rows: ~16 B/doc, spills to disk beyond memory.
       builder.vsmNormsDf(postings, dictionary)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  }
 }
 
 /** The query engine (SURVEY.md §3.2/§3.3) over a set of [[IndexReader]]s:
@@ -1765,9 +1725,10 @@ object QueryEngine {
   private[graft] val dictProbes = new java.util.concurrent.atomic.AtomicInteger
 
   /** Count of fuzzy lookups served by the O(|lexicon|) dictionary-scan
-    * fallback — taken only when NEITHER a variant table NOR the
-    * dict_by_len range layout is available (an index root from a build
-    * predating the layout). An operational metric: a climbing value
+    * fallback — taken only when NEITHER a variant table NOR a current
+    * dict_by_len range layout is available (an index root whose
+    * dict_by_len is absent, truncated or built from another
+    * dictionary). An operational metric: a climbing value
     * means a root that deserves one build() pass to lay dict_by_len
     * down, or large-d traffic that deserves a persisted fuzzy_dD table
     * (IndexConf.fuzzyMaxDistance).
@@ -1781,16 +1742,10 @@ object QueryEngine {
     */
   val fuzzyRangeProbes = new java.util.concurrent.atomic.AtomicLong
 
-  /** Roots whose lazy fuzzy-index backfill failed (e.g. read-only
-    * mounts): retried at most once per JVM.
+  /** Derived-table dirs whose backfill failed (e.g. read-only mounts):
+    * not retried in this JVM (see IndexReader.backfilled).
     */
-  private[query] val fuzzyBackfillFailed =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Roots whose lazy vsm-norms backfill failed: retried at most once
-    * per JVM (same contract as [[fuzzyBackfillFailed]]).
-    */
-  private[query] val vsmBackfillFailed =
+  private[query] val backfillFailed =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** MaxScore essential/non-essential split (driver-side): the longest
@@ -1834,8 +1789,8 @@ object QueryEngine {
     if (totals.length >= k) math.max(theta, totals(k - 1) - eps) else theta
   }
 
-  /** Per-(root, d) locks serializing the lazy fuzzy-table backfill. */
-  private[query] val fuzzyBuildLocks =
+  /** Per-dir locks serializing the derived-table backfills. */
+  private[query] val backfillLocks =
     scala.collection.concurrent.TrieMap.empty[String, Object]
 
   /** Distances D with a fuzzy_dD directory under `root` (any validity). */

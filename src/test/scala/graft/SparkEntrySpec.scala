@@ -26,9 +26,12 @@ class SparkEntrySpec extends SparkSpecBase {
     val texts = graft.corpus.Transcripts.generateLocal(5L).map(_.text)
     texts.zipWithIndex.map { case (t, i) => (i + 1L, t) }.toDF("doc_id", "text")
       .write.parquet(s"$dir/documents.parquet")
-    val ids = SparkEntry.queries("q37_wiki_ingest")(spark, dir)
-      .select("id").collect().map(_.getString(0))
-    assert(ids.length == texts.size, "q37 must read back one article per document")
-    assert(ids.distinct.length == ids.length, "an article was read twice")
+    // the dumps land in the aux dir, which sits beside `dir`, not in it
+    try {
+      val ids = SparkEntry.queries("q37_wiki_ingest")(spark, dir)
+        .select("id").collect().map(_.getString(0))
+      assert(ids.length == texts.size, "q37 must read back one article per document")
+      assert(ids.distinct.length == ids.length, "an article was read twice")
+    } finally graft.index.Fs.deleteRecursive(GraftQueries.auxDir(dir))
   }
 }

@@ -284,10 +284,11 @@ class IndexEndToEndSpec extends SparkSpecBase {
   test("a TRUNCATED dict_by_len (part files lost under surviving markers) is not trusted") {
     import org.apache.spark.sql.functions.{col, levenshtein, lit}
     // clone the root, then delete ONE dict_by_len parquet part while
-    // _SUCCESS, the dict token AND the manifest survive: the dict token
-    // hashes the DICTIONARY's listing, so only the manifest integrity
-    // check (n_files/bytes vs disk) can catch this — without it every
-    // d>3 fuzzy lookup would silently DROP the matches in that part
+    // _SUCCESS AND the manifest survive: the manifest's fingerprint (the
+    // dictionary's token) hashes the DICTIONARY's listing, so only the
+    // manifest integrity check (n_files/bytes vs disk) can catch this —
+    // without it every d>3 fuzzy lookup would silently DROP the matches
+    // in that part
     val root2 = cloneRoot(indexDir, "graft-truncdbl")
     val victim = Fs.listFilesRecursive(s"$root2/dict_by_len", ".parquet").head._1
     Fs.deleteRecursive(victim)
@@ -307,10 +308,10 @@ class IndexEndToEndSpec extends SparkSpecBase {
   test("a TRUNCATED fuzzy variant table is not trusted (manifest gate)") {
     import org.apache.spark.sql.functions.{col, levenshtein, lit}
     // same attack as the dict_by_len test, on fuzzy_d1: one parquet part
-    // deleted while _SUCCESS + the dict token survive. The dict token
+    // deleted while _SUCCESS + the manifest survive. Its fingerprint
     // hashes the DICTIONARY's listing, so only the variant table's own
-    // n_files/bytes manifest can catch this — without it every d<=1
-    // lookup would silently DROP the matches in the lost part.
+    // n_files/bytes can catch this — without them every d<=1 lookup
+    // would silently DROP the matches in the lost part.
     val root2 = cloneRoot(indexDir, "graft-truncfz")
     // earlier tests may have backfilled fuzzy_d2/d3 onto the source
     // root; drop them from the clone so the truncated d1 is the ONLY
@@ -320,12 +321,13 @@ class IndexEndToEndSpec extends SparkSpecBase {
       .filter(f => f.getName.startsWith("fuzzy_d") && f.getName != "fuzzy_d1")
       .foreach(f => Fs.deleteRecursive(f.getPath))
     val fuzzyDir = IndexPaths(root2).fuzzy(1)
+    val dictToken = IndexBuilder.tableToken(IndexPaths(root2).dictionary)
     assert(Fs.exists(s"$fuzzyDir/_manifest.json"),
       "build-time writeFuzzyIndex must leave a manifest")
-    assert(IndexBuilder.manifestIntact(fuzzyDir))
+    assert(IndexBuilder.manifestComplete(fuzzyDir, dictToken))
     val victim = Fs.listFilesRecursive(fuzzyDir, ".parquet").head._1
     Fs.deleteRecursive(victim)
-    assert(!IndexBuilder.manifestIntact(fuzzyDir),
+    assert(!IndexBuilder.manifestComplete(fuzzyDir, dictToken),
       "lost part file must read as not-intact")
     // a fresh engine must not serve the truncated table: valid() fails
     // and the writable root is re-backfilled, restoring full results
@@ -337,7 +339,7 @@ class IndexEndToEndSpec extends SparkSpecBase {
       .select(col("term"), col("term_id")).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
     assert(got == want, "truncated fuzzy table served partial results")
-    assert(IndexBuilder.manifestIntact(fuzzyDir),
+    assert(IndexBuilder.manifestComplete(fuzzyDir, dictToken),
       "re-backfill must restore an intact manifest")
   }
 
@@ -847,7 +849,8 @@ class IndexEndToEndSpec extends SparkSpecBase {
     // capture manifest mtimes, rebuild, assert untouched
     import java.nio.file.{Files, Paths}
     val paths = IndexPaths(indexDir)
-    val manifests = Seq(paths.docs, paths.segments, paths.dictionary, paths.postings)
+    val manifests = Seq(paths.docs, paths.segments, paths.dictionary, paths.postings,
+      paths.dictByLen, paths.fuzzy(1))
       .map(d => Paths.get(d, "_manifest.json"))
     val before = manifests.map(Files.getLastModifiedTime(_))
     val turns = Transcripts.generate(spark, nConvs)
@@ -859,22 +862,25 @@ class IndexEndToEndSpec extends SparkSpecBase {
   }
 
   test("resumed build repairs a STALE-TOKENED dict_by_len") {
-    // simulate a dictionary rewritten under an UNCHANGED fingerprint
-    // (new part UUIDs => new tableToken, e.g. a repaired stage): the
-    // dict_by_len manifest still matches fp, but its token no longer
-    // matches the dictionary — a fp-only skip would leave it
-    // stale-tokened forever (serve side rejects it, no build repairs
-    // it, every large-d fuzzy query pays the O(lexicon) scan)
+    // simulate a dictionary rewritten under an UNCHANGED build
+    // fingerprint (new part UUIDs => new tableToken, e.g. a repaired
+    // stage): dict_by_len's manifest then carries a token that no
+    // longer matches the dictionary — a build-fp skip would leave it
+    // stale forever (serve side rejects it, no build repairs it, every
+    // large-d fuzzy query pays the O(lexicon) scan)
     val root2 = cloneRoot(indexDir, "graft-staletok")
-    val tokenFile =
-      s"$root2/dict_by_len/${IndexBuilder.DictTokenFile}"
-    Fs.writeString(tokenFile, "stale-token-from-before-the-dict-rewrite")
+    val dictByLen = IndexPaths(root2).dictByLen
+    val dictToken = IndexBuilder.tableToken(IndexPaths(root2).dictionary)
+    val manifest = s"$dictByLen/_manifest.json"
+    Fs.writeString(manifest, Fs.readString(manifest).replace(
+      s""""fingerprint":"$dictToken"""",
+      """"fingerprint":"stale-token-from-before-the-dict-rewrite""""))
+    assert(!IndexBuilder.manifestComplete(dictByLen, dictToken))
     val turns = Transcripts.generate(spark, nConvs)
     new IndexBuilder(spark, lemmas,
       IndexConf(numParts = 4, skewDfThreshold = 300, nSalts = 4))
       .build(turns, root2)
-    assert(Fs.readString(tokenFile) ==
-      IndexBuilder.tableToken(IndexPaths(root2).dictionary),
+    assert(IndexBuilder.manifestComplete(dictByLen, dictToken),
       "resumed build must rewrite a stale-tokened dict_by_len")
   }
 }

@@ -304,6 +304,10 @@ class JobCountSpec extends SparkSpecBase with JobCounting {
     val segments = IndexPaths(out).segments
     assert(graft.index.Fs.readString(s"$segments/_manifest.json")
       .contains("\"status\":\"complete\""))
-    assert(IndexBuilder.manifestIntact(segments))
+    // the segments resume under the fingerprint the compaction's meta
+    // records, and their manifest matches the files on disk
+    val fp = "\"fingerprint\":\"([^\"]+)\"".r
+      .findFirstMatchIn(graft.index.Fs.readString(IndexPaths(out).meta)).get.group(1)
+    assert(IndexBuilder.manifestComplete(segments, fp))
   }
 }

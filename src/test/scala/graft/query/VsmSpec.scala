@@ -75,19 +75,16 @@ class VsmSpec extends SparkSpecBase {
     engineScores(testTerms.take(1)) // triggers the lazy backfill
     val dir = IndexPaths(indexDir).vsmNorms
     assert(Files.exists(Paths.get(dir, "_SUCCESS")), "vsm_norms not written")
-    val marker = Paths.get(dir, IndexBuilder.DictTokenFile)
-    assert(Files.exists(marker), "dict-token marker missing")
-    // marker = dict token + computation-format tag: a norms table from
-    // the pre-unigram-fix computation (bare token) must read as stale
-    assert(Files.readString(marker) ==
-      IndexBuilder.tableToken(IndexPaths(indexDir).dictionary) +
-        IndexBuilder.VsmNormsFormatTag)
-    // the n_files/bytes manifest must exist, or the serve-time
-    // manifestIntact gate is vacuous (truncated norms = silently
-    // missing docs in every vsmScores result)
+    // the n_files/bytes manifest must exist, or the serve-time check
+    // could not catch truncated norms (silently missing docs in every
+    // vsmScores result)
     assert(Files.exists(Paths.get(dir, "_manifest.json")),
       "writeVsmNorms must leave a manifest")
-    assert(IndexBuilder.manifestIntact(dir))
+    // fingerprint = dict token + computation-format tag: a norms table
+    // from the pre-unigram-fix computation (bare token) must read as stale
+    val dictToken = IndexBuilder.tableToken(IndexPaths(indexDir).dictionary)
+    assert(IndexBuilder.manifestComplete(dir, dictToken + IndexBuilder.VsmNormsFormatTag))
+    assert(!IndexBuilder.manifestComplete(dir, dictToken))
     // a FRESH engine over the same root serves the persisted table and
     // stays bit-identical
     val e2 = new QueryEngine(spark, indexDir, lemmas)
@@ -134,14 +131,16 @@ class VsmSpec extends SparkSpecBase {
   test("a TRUNCATED vsm_norms table (part lost under surviving markers) is not trusted") {
     engineScores(testTerms.take(1)) // ensure the table exists under indexDir
     // clone the root, then delete a vsm_norms parquet part while
-    // _SUCCESS and the dict token survive — the token hashes the
-    // DICTIONARY's listing, so only the norms table's own manifest
-    // (n_files/bytes vs one listing) can catch the loss
+    // _SUCCESS and the manifest survive — its fingerprint hashes the
+    // DICTIONARY's listing, so only the manifest's n_files/bytes (vs one
+    // listing) can catch the loss
     val root2 = cloneRoot(indexDir, "graft-vsm-trunc")
     val dir = IndexPaths(root2).vsmNorms
+    val fp = IndexBuilder.tableToken(IndexPaths(root2).dictionary) +
+      IndexBuilder.VsmNormsFormatTag
     val victim = graft.index.Fs.listFilesRecursive(dir, ".parquet").head._1
     graft.index.Fs.deleteRecursive(victim)
-    assert(!IndexBuilder.manifestIntact(dir),
+    assert(!IndexBuilder.manifestComplete(dir, fp),
       "lost part file must read as not-intact")
     // a fresh engine re-backfills (writable root) and stays bit-identical
     val e2 = new QueryEngine(spark, root2, lemmas)
@@ -149,7 +148,7 @@ class VsmSpec extends SparkSpecBase {
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("score")).toMap
     assert(got == oracle.vsmScores(testTerms),
       "truncated vsm_norms served partial results")
-    assert(IndexBuilder.manifestIntact(dir),
+    assert(IndexBuilder.manifestComplete(dir, fp),
       "re-backfill must restore an intact manifest")
   }
 }

@@ -6,8 +6,9 @@ Usage: python3 tools/loc.py [DIR]   (DIR defaults to src/main)
 A line is not counted when it is blank, when it starts with `//`, or when it
 belongs to a `/* ... */` block (scaladoc included) that starts the line. Code
 with a trailing comment counts. Calibration: `src/main` at commit ed42ed0
-counts 6,845, at f940ad1 6,986, at a0233be 6,371, and 6,296 once the
-tier composition moved into `QueryEngine` (the change after a0233be).
+counts 6,845, at f940ad1 6,986, at a0233be 6,371, at a553837 6,296, and
+6,236 once the dictionary-derived tables share the stage runner's one
+check (the change after a553837).
 """
 import pathlib
 import sys
