@@ -19,10 +19,17 @@ import graft.query.QueryEngine
   *    each pair of adjacent levels;
   *  - bm25_p50_sec / bm25_p95_sec: warm-index query latency over the
   *    frozen reference query set (k=10, WAND on).
+  *
+  * Every file it writes (the staged input, the indexes, Spark's local
+  * dirs, the A/B baseline checkout) lands under one root: the first
+  * argument, `/dev/shm/graft` when none is given.
   */
 object Bench {
 
-  private def newSession(cpus: Int): SparkSession = {
+  /** The root every path lands under when no argument names one. */
+  val DefaultRoot = "/dev/shm/graft"
+
+  private def newSession(cpus: Int, root: String): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(s"graft-bench-$cpus")
@@ -38,7 +45,7 @@ object Bench {
       // shuffle + spill on tmpfs: the bench box has one virtio disk whose
       // jitter would otherwise dominate the scaling measurement (a real
       // cluster has NVMe/many disks per executor)
-      .config("spark.local.dir", "/dev/shm/graft/spark-local")
+      .config("spark.local.dir", s"$root/spark-local")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")
@@ -131,14 +138,14 @@ object Bench {
     * SPARK_GRAFT_BENCH_AB=0 disables.
     */
   private def abBuildCompare(results: scala.collection.mutable.Map[String, Double],
-      cpus: Int): Unit = {
+      cpus: Int, root: String): Unit = {
     val pairs = sys.env.getOrElse("SPARK_GRAFT_BENCH_AB_PAIRS", "3").toInt
     val repo = Seq(System.getProperty("user.dir"), "/root/repo")
       .find(d => new java.io.File(d, ".git").exists())
       .getOrElse { System.err.println("[bench/ab] no git repo found; skipping"); return }
-    val abDir = new java.io.File("/dev/shm/graft/ab_base")
+    val abDir = new java.io.File(s"$root/ab_base")
     // 1. worktree of the pinned commit. Reuse is VERIFIED, never assumed:
-    // a surviving /dev/shm dir from an older run (or an AbBaselineCommit
+    // a surviving dir from an older run (or an AbBaselineCommit
     // bump since it was created) must not silently serve the wrong
     // baseline's classes under the pinned commit's name — the exact
     // measurement misattribution this stage exists to prevent.
@@ -201,7 +208,7 @@ object Bench {
       val cp = s"${classes.getAbsolutePath}:/opt/spark/jars/*"
       val (code, out) = runProc(
         Seq(javaBin) ++ addOpens ++ Seq(s"-Xmx$sampleHeap",
-          "-Dspark.ui.enabled=false", "-cp", cp, "graft.Bench"),
+          "-Dspark.ui.enabled=false", "-cp", cp, "graft.Bench", root),
         new java.io.File(repo),
         Map("SPARK_GRAFT_BENCH_LEVELS" -> cpus.toString,
           "SPARK_GRAFT_BENCH_BUILD_ONLY" -> "1",
@@ -232,6 +239,7 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
+    val root = args.headOption.getOrElse(DefaultRoot)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val lowCpus = math.max(1, cpus / 4)
@@ -242,14 +250,13 @@ object Bench {
     val buildOnly = sys.env.contains("SPARK_GRAFT_BENCH_BUILD_ONLY")
 
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get("/dev/shm/graft/spark-local"))
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$root/spark-local"))
 
     // ---- stage the input table once (in production the input IS a
     // table on disk; corpus generation is not part of build throughput)
-    val turnsPath = s"/dev/shm/graft/bench_turns_$nConvs"
+    val turnsPath = s"$root/bench_turns_$nConvs"
     if (!new java.io.File(s"$turnsPath/_SUCCESS").exists()) {
-      val s = newSession(cpus)
+      val s = newSession(cpus, root)
       Transcripts.generate(s, nConvs, partitions = cpus * 4)
         .write.mode("overwrite").parquet(turnsPath)
       s.stop()
@@ -266,11 +273,11 @@ object Bench {
     // warm executors. One small untimed build warms the hot paths first.
     var nTurns = 0L
     val levels = levelsOverride.getOrElse(Seq(2, lowCpus, cpus).distinct.sorted)
-    rmrf("/dev/shm/graft/warmup_idx")
-    val warm = newSession(cpus)
+    rmrf(s"$root/warmup_idx")
+    val warm = newSession(cpus, root)
     new IndexBuilder(warm, Transcripts.lemmas, IndexConf(numParts = cpus))
       .build(Transcripts.generate(warm, math.max(200L, nConvs / 25),
-        partitions = cpus), "/dev/shm/graft/warmup_idx")
+        partitions = cpus), s"$root/warmup_idx")
     warm.stop()
     // best-of-3 per level, INTERLEAVED by round (2,8,32, 2,8,32, ...):
     // the sandbox shares its host and single runs swing >30%; a
@@ -285,10 +292,10 @@ object Bench {
       scala.collection.mutable.Map.empty[Int, List[Double]].withDefault(_ => Nil)
     (1 to buildRounds).foreach { _ =>
       levels.foreach { c =>
-        val s = newSession(c)
+        val s = newSession(c, root)
         val turns = s.read.parquet(turnsPath).as(
           org.apache.spark.sql.Encoders.product[graft.corpus.Turn])
-        val dir = s"/dev/shm/graft/bench_idx_c$c"
+        val dir = s"$root/bench_idx_c$c"
         if (!reuse) rmrf(dir)
         val builder = new IndexBuilder(s, Transcripts.lemmas,
           IndexConf(numParts = math.max(c, 8), skewDfThreshold = 20000L, nSalts = 8))
@@ -325,8 +332,8 @@ object Bench {
     }
 
     // ---- BM25 query latency over the frozen query set (warm index)
-    val spark = newSession(cpus) // same session as high-parallelism build
-    val engine = new QueryEngine(spark, s"/dev/shm/graft/bench_idx_c$cpus",
+    val spark = newSession(cpus, root) // same session as high-parallelism build
+    val engine = new QueryEngine(spark, s"$root/bench_idx_c$cpus",
       Transcripts.lemmas)
     // driver-hash-map dictionary (n_terms-gated; falls back to the
     // cached distributed probe above dictLocalCap) + the OPT-IN postings
@@ -356,7 +363,7 @@ object Bench {
     // with IDENTICAL doc_ids AND bit-identical Double scores
     if (levels.contains(lowCpus) && lowCpus != cpus) {
       val engineLow = new QueryEngine(spark,
-        s"/dev/shm/graft/bench_idx_c$lowCpus", Transcripts.lemmas)
+        s"$root/bench_idx_c$lowCpus", Transcripts.lemmas)
       val matched = referenceQueries.count { q =>
         val a = engine.bm25TopK(q, 10).collect()
           .map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -509,7 +516,7 @@ object Bench {
     // here can never cost the metrics above; soft-fails on its own.
     if (sys.env.getOrElse("SPARK_GRAFT_BENCH_AB", "1") != "0") {
       spark.stop() // the samples are whole fresh JVMs; free this one's slots
-      try abBuildCompare(results, cpus)
+      try abBuildCompare(results, cpus, root)
       catch { case t: Throwable =>
         System.err.println(s"[bench/ab] skipped: $t") }
     }

@@ -6,9 +6,9 @@ import graft.index.{Bm25, DictRow, IndexMeta}
 /** One postings chunk row as the driver-local paths read it (from
   * [[ResidentPostings]] or one collect): the `postings` table's decode
   * columns, with `pos_blob` null when the call does not need positions
-  * for that term.
+  * for that term. (`graft.index.ChunkRow` is the row the table stores.)
   */
-final case class ChunkRow(term_id: Long, n_postings: Int, doc_gaps: Array[Byte],
+final case class LocalChunk(term_id: Long, n_postings: Int, doc_gaps: Array[Byte],
     tfs: Array[Int], dls: Array[Int], pos_blob: Array[Byte])
 
 /** One term's postings decoded on the driver, its chunks concatenated.
@@ -27,6 +27,62 @@ final class TermPostings(val docIds: Array[Long], val tfs: Array[Int], val dls: 
   }
 }
 
+/** A driver lexicon's unigrams bucketed by code-point length, for fuzzy
+  * lookup on the driver: the terms within distance d of a query are
+  * found by scanning only the buckets of the query's length ± d with
+  * [[graft.core.Fuzzy.Within]]. Each bucket packs its terms' UTF-16
+  * units into one array, so the scan reads memory in order and touches
+  * a term's row only when the term matches.
+  */
+final class FuzzyLexicon private (byLen: Map[Int, FuzzyLexicon.Bucket]) {
+
+  private val longest = if (byLen.isEmpty) -1 else byLen.keys.max
+
+  /** The rows whose term is within Levenshtein distance `d` of `q`, in
+    * UTF-8 term order: the term set of `IndexReader.fuzzyTerms`'s Spark
+    * paths.
+    */
+  def within(q: String, d: Int): Seq[DictRow] = {
+    val near = new graft.core.Fuzzy.Within(q, d)
+    val qLen = near.query.length
+    val out = Array.newBuilder[DictRow]
+    var len = math.max(0, qLen - d)
+    while (len <= math.min(longest, qLen.toLong + d)) {
+      byLen.get(len).foreach { b =>
+        var t = 0
+        while (t < b.rows.length) {
+          if (near(b.chars, b.starts(t), b.starts(t + 1))) out += b.rows(t)
+          t += 1
+        }
+      }
+      len += 1
+    }
+    out.result().sortBy(_.term)(Tokenizer.utf8Ordering).toSeq
+  }
+}
+
+object FuzzyLexicon {
+
+  /** The terms of one code-point length: term `t` is the UTF-16 units
+    * `chars[starts(t), starts(t + 1))`, its row `rows(t)`.
+    */
+  private final class Bucket(val chars: Array[Char], val starts: Array[Int],
+      val rows: Array[DictRow])
+
+  /** Buckets the unigrams of `rows` (a bigram-indexed dictionary's
+    * space-joined pseudo-terms are never fuzzy matches).
+    */
+  def apply(rows: Iterable[DictRow]): FuzzyLexicon =
+    new FuzzyLexicon(rows.iterator.filter(r => !r.term.contains(" ")).toArray
+      .groupBy(r => r.term.codePointCount(0, r.term.length))
+      .map { case (len, rs) =>
+        val starts = rs.scanLeft(0)(_ + _.term.length)
+        val chars = new Array[Char](starts.last)
+        rs.indices.foreach(t => rs(t).term.getChars(0, rs(t).term.length, chars, starts(t)))
+        len -> new Bucket(chars, starts, rs)
+      })
+}
+
 /** Driver-local query evaluation over decoded postings: pure functions,
   * no Spark. When the total df of every term a call needs fits under
   * `EngineConfig.localMaxPostings`, the engine reads those terms' chunk
@@ -35,7 +91,12 @@ final class TermPostings(val docIds: Array[Long], val tfs: Array[Int], val dls: 
   * answers from them here — the
   * reference's one-process evaluation of phrase intersection and the
   * three-tier handle_query (positional_intersect/mod.rs:11-35,
-  * search_engine/mod.rs:118-206).
+  * search_engine/mod.rs:118-206). The text the snippet page and the
+  * filtered kinds read comes from the engine's [[ResidentDocs]] when
+  * postings and docs fit that budget together, else from one job on the
+  * docs parquet. On a warm resident root no kind runs a Spark job: the
+  * engine wraps each answer in a local relation of the kind's schema
+  * (`org.apache.spark.sql.graft.LocalFrame`).
   *
   * Every function reproduces its distributed counterpart bit for bit:
   * the same `Bm25.impact`, the per-doc fold from 0.0 in ASCENDING
@@ -52,7 +113,7 @@ object LocalServing {
   /** Decode collected chunk rows, grouped by term, keeping only the
     * postings of docs passing `live` (tombstoned docs are dropped here).
     */
-  def decode(rows: Seq[ChunkRow], live: Long => Boolean = _ => true): Map[Long, TermPostings] =
+  def decode(rows: Seq[LocalChunk], live: Long => Boolean = _ => true): Map[Long, TermPostings] =
     rows.groupBy(_.term_id).map { case (termId, chunks) =>
       val withPos = chunks.forall(_.pos_blob != null)
       val ids = Array.newBuilder[Long]

@@ -2,8 +2,13 @@ package graft.query
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.LocalFrame
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField,
+  StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{ChunkCodec, Tokenizer}
 import graft.index.{Bm25, DictRow, Generations, IndexBuilder, IndexMeta, IndexPaths,
@@ -161,7 +166,16 @@ final class IndexReader(spark: SparkSession, val root: String) {
     })
 
   /** Fuzzy term lookup: all dictionary terms within Levenshtein distance d
-    * (reference BK-tree, src/my_bk_tree/mod.rs:14-21) — the variant-table
+    * (reference BK-tree, src/my_bk_tree/mod.rs:14-21), as (term, term_id,
+    * df) rows.
+    *
+    * With [[warmDictionaryLocal]] installed the driver lexicon answers,
+    * with no Spark job: its unigrams, bucketed by code-point length on
+    * the first fuzzy call ([[FuzzyLexicon]]), are scanned over the
+    * query's length band ± d with a Levenshtein bounded by d. It
+    * returns the Spark paths' term set and moves none of their counters.
+    *
+    * Otherwise Spark answers: the variant-table
     * probe (the SymSpell guarantee: lev(a,b) <= d implies a and b share a
     * string reachable by <= d deletions from each), then an exact
     * levenshtein verify on the candidates. Queries longer than
@@ -192,7 +206,19 @@ final class IndexReader(spark: SparkSession, val root: String) {
     * down, or large-d traffic that deserves a persisted fuzzy_dD via
     * IndexConf.fuzzyMaxDistance).
     */
-  def fuzzyTerms(q: String, d: Int): DataFrame = {
+  def fuzzyTerms(q: String, d: Int): DataFrame =
+    if (dictLocalInstalled)
+      LocalFrame(spark, QueryEngine.FuzzySchema, fuzzyLexicon.within(q, d).map(r =>
+        InternalRow(UTF8String.fromString(r.term), r.term_id, r.df)))
+    else sparkFuzzyTerms(q, d)
+
+  /** The installed lexicon's unigrams by code-point length. */
+  private lazy val fuzzyLexicon: FuzzyLexicon = {
+    import scala.jdk.CollectionConverters._
+    FuzzyLexicon(localDictionary.values.asScala)
+  }
+
+  private def sparkFuzzyTerms(q: String, d: Int): DataFrame = {
     val qCp = q.codePointCount(0, q.length)
     val inDomain = qCp <= graft.core.Fuzzy.MaxTermLen
     val idx = if (inDomain) fuzzyIndexFor(d) else None
@@ -321,11 +347,11 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
   def withConfig(f: EngineConfig => EngineConfig): QueryEngine =
     new QueryEngine(spark, lemmas, shared, f(conf), residentBudget)
 
-  /** This engine with the resident postings budget `bytes` in place of
-    * the one derived from the driver heap (0 shuts it), sharing its
-    * state as [[withConfig]] does.
+  /** This engine with the resident budget `bytes` in place of the one
+    * derived from the driver heap (0 shuts it: no postings and no docs
+    * held), sharing its state as [[withConfig]] does.
     */
-  private[query] def withResidentBudget(bytes: Long): QueryEngine =
+  private[graft] def withResidentBudget(bytes: Long): QueryEngine =
     new QueryEngine(spark, lemmas, shared, conf, bytes)
 
   /** The index directories served, in generation order. */
@@ -666,6 +692,13 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
   private lazy val holdsResident: Boolean =
     residentBudget > 0 && shared.postingsBytes <= residentBudget
 
+  /** Whether this engine reads text from the shared [[ResidentDocs]]:
+    * the docs bytes the readers' manifests record fit its resident
+    * budget together with the postings bytes.
+    */
+  private lazy val holdsDocs: Boolean =
+    holdsResident && shared.docsBytes <= residentBudget - shared.postingsBytes
+
   /** Heap bytes of the postings this engine's root holds on the driver
     * (shared with every engine over it); 0 until loaded.
     */
@@ -714,7 +747,7 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     LocalServing.decode(rows
       .select(k.as("term_id"), $"n_postings", $"doc_gaps", $"tfs", $"dls", pos.as("pos_blob"))
       .filter($"term_id" >= 0)
-      .as[ChunkRow].collect().toSeq, liveLocally.get)
+      .as[LocalChunk].collect().toSeq, liveLocally.get)
   }
 
   // -------------------------------------------------------------- scoring
@@ -748,8 +781,15 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
   private def topK(scored: DataFrame, k: Int): DataFrame =
     scored.orderBy($"score".desc, $"doc_id".asc).limit(k)
 
-  private def emptyScores(): DataFrame =
-    Seq.empty[(Long, Double)].toDF("doc_id", "score")
+  /** A driver-local answer: `rows` of `schema` as a [[LocalFrame]]. */
+  private def local(schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    LocalFrame(spark, schema, rows)
+
+  /** (doc_id, score) rows computed on the driver. */
+  private def localScores(scored: Seq[(Long, Double)]): DataFrame =
+    local(QueryEngine.ScoresSchema, scored.map { case (d, s) => InternalRow(d, s) })
+
+  private def emptyScores(): DataFrame = localScores(Nil)
 
   /** Disjunctive (free-text) BM25 top-k. Block-max pruning applies
     * when the posting volume reaches [[EngineConfig.wandMinPostings]];
@@ -772,8 +812,7 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     else if (servesLocally(es)) {
       lastWandPath = "local"
       val ps = localPostings(st.pairs(es))
-      spark.createDataFrame(LocalServing.topK(LocalServing.scores(es, ps, meta), k))
-        .toDF("doc_id", "score")
+      localScores(LocalServing.topK(LocalServing.scores(es, ps, meta), k))
     } else if (es.map(_.df).sum >= conf.wandMinPostings) maxScoreTopK(st, es, k)
     else {
       lastWandPath = "exact"
@@ -951,8 +990,9 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
         if (phraseSeq.size > 1 && entries.size == terms.size) entries.map(_.term_id).toSet
         else Set.empty[Long]
       val ps = localPostings(st.pairs(entries) ++ bst.pairs(bigramEntries), posIds)
-      return LocalServing.tiered(phraseSeq, entries, bigramActive, bigramEntries, ps,
-        meta, k).toDF("doc_id", "score", "tier")
+      return local(QueryEngine.TieredSchema,
+        LocalServing.tiered(phraseSeq, entries, bigramActive, bigramEntries, ps, meta, k)
+          .map { case (d, s, t) => InternalRow(d, s, t) })
     }
     tieredTopK(phraseSeq, st, bigramTerms, bst, bigramActive, k)
   }
@@ -1147,11 +1187,13 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
   /** [[bm25ScoresFiltered]], top-k'd when `k` is given. Under the
     * driver-local gate the decoded postings bound the candidates: the
     * terms' chunk rows ([[localPostings]]), then the predicate runs only
-    * over the docs those postings hold (one [[textFor]] job, at most
-    * `conf.localMaxPostings` rows), and the allowed docs are scored
-    * and ranked on the driver. The cap-limited candidate probe below
-    * is skipped there: a CollectLimit scans the docs table in
-    * incremental jobs until it sees cap+1 rows or the table ends.
+    * over the docs those postings hold (at most `conf.localMaxPostings`
+    * rows from [[textFor]]: with resident docs a local relation Catalyst
+    * filters on the driver, no Spark job; otherwise one job on the docs
+    * parquet), and the allowed docs are scored and ranked on the driver.
+    * The cap-limited candidate probe below is skipped there: a
+    * CollectLimit scans the docs table in incremental jobs until it sees
+    * cap+1 rows or the table ends.
     */
   private def filteredScores(st: TermStats, pred: Column,
       candidateCap: Int, k: Option[Int]): DataFrame = {
@@ -1167,8 +1209,7 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
       java.util.Arrays.sort(allowedIds)
       val scored = LocalServing.scores(es, ps, meta,
         d => java.util.Arrays.binarySearch(allowedIds, d) >= 0)
-      return spark.createDataFrame(LocalServing.topK(scored, k.getOrElse(Int.MaxValue)))
-        .toDF("doc_id", "score")
+      return localScores(LocalServing.topK(scored, k.getOrElse(Int.MaxValue)))
     }
     // tombstones narrow the allowed set up front, so the routing and the
     // collected candidate array count survivors only. Routing +
@@ -1224,18 +1265,31 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     QueryEngine.assembleSnippets(firstPos, textFor(docIds), window)
   }
 
-  /** The docs rows of `docIds`: the text side must be PRUNED, not just
+  /** The docs rows of `docIds`. With [[holdsDocs]], the held rows as a
+    * local relation (the first such call loads them in one job): a
+    * filter or projection over it runs on the driver with Spark's own
+    * semantics and no job. Otherwise the docs parquet, PRUNED, not just
     * broadcast-joined (with the k-row side broadcast the probe would
     * still SCAN every text row) — a pushed doc_id IN for up to
     * [[graft.index.MaxInLiterals]] ids prunes the doc_id-sorted docs
     * parquet to O(k) row groups; above that a broadcast semi-join.
     */
   private def textFor(docIds: Array[Long]): DataFrame =
-    if (docIds.length <= MaxInLiterals)
-      docs.filter($"doc_id".isin(docIds.toSeq: _*))
-    else
-      docs.join(broadcast(docIds.toSeq.toDF("doc_id")),
-        Seq("doc_id"), "left_semi")
+    residentDocs match {
+      case Some(held) => local(docs.schema, held.rowsOf(docIds))
+      case None =>
+        if (docIds.length <= MaxInLiterals)
+          docs.filter($"doc_id".isin(docIds.toSeq: _*))
+        else
+          docs.join(broadcast(docIds.toSeq.toDF("doc_id")),
+            Seq("doc_id"), "left_semi")
+    }
+
+  /** The shared [[ResidentDocs]] under [[holdsDocs]]; None otherwise, or
+    * while another call is loading them.
+    */
+  private def residentDocs: Option[ResidentDocs] =
+    if (holdsDocs) shared.residentDocs else None
 
   /** Serving wrapper: BM25 top-k with snippets in one call — the
     * result-page shape (doc_id, score, first_pos, snippet). ONE top-k
@@ -1245,8 +1299,8 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     * scoring pass at the final collect (measured ~2x the latency) — and
     * a LEFT join keeps a result doc the snippet stage drops. Under the
     * driver-local gate: the terms' chunk rows (positions included) rank
-    * and anchor on the driver, and one pushed `doc_id IN` job fetches
-    * the k texts.
+    * and anchor on the driver, and the k texts come from the resident
+    * docs (no Spark job once loaded) or else one pushed `doc_id IN` job.
     */
   def searchWithSnippets(query: String, k: Int, window: Int = 3): DataFrame = {
     val st = new TermStats(queryTerms(query))
@@ -1263,18 +1317,23 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     val ps = localPostings(st.pairs(es), es.map(_.term_id).toSet)
     val top = LocalServing.topK(LocalServing.scores(es, ps, meta), k)
     val first = LocalServing.firstPositions(ps, top.map(_._1).toSet)
-    val text: Map[Long, String] =
-      if (top.isEmpty) Map.empty
-      else textFor(top.map(_._1).toArray).select($"doc_id", $"text")
-        .as[(Long, String)].collect().toMap
-    val rows = top.map { case (d, s) =>
-      (first.get(d), text.get(d)) match {
-        case (Some(p), Some(t)) =>
-          org.apache.spark.sql.Row(d, s, p, LocalServing.snippet(t, p, window))
-        case _ => org.apache.spark.sql.Row(d, s, null, null)
+    // a doc's text: None without a docs row; Some(null) for a row
+    // without text, as the parquet lookup gives
+    val text: Long => Option[String] =
+      if (top.isEmpty) _ => None
+      else residentDocs match {
+        case Some(held) => d => held.row(d).map(held.text)
+        case None =>
+          textFor(top.map(_._1).toArray).select($"doc_id", $"text")
+            .as[(Long, String)].collect().toMap.get
       }
-    }
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), QueryEngine.SearchPageSchema)
+    local(QueryEngine.SearchPageSchema, top.map { case (d, s) =>
+      (first.get(d), text(d)) match {
+        case (Some(p), Some(t)) =>
+          InternalRow(d, s, p, UTF8String.fromString(LocalServing.snippet(t, p, window)))
+        case _ => InternalRow(d, s, null, null)
+      }
+    })
   }
 
   // -------------------------------------------- prefix suggest (q53)
@@ -1292,7 +1351,8 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     */
   def suggest(prefix: String, n: Int): DataFrame =
     if (dictLocalInstalled)
-      LocalServing.suggest(shared.suggestTerms, prefix, n).toDF("term", "df")
+      local(QueryEngine.SuggestSchema, LocalServing.suggest(shared.suggestTerms, prefix, n)
+        .map { case (t, df) => InternalRow(UTF8String.fromString(t), df) })
     else {
       val hits = readers.map(_.dictionary.filter($"term".startsWith(prefix))
         .select($"term", $"df")).reduce(_ unionByName _)
@@ -1365,7 +1425,7 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
     else if (servesLocally(es)) {
       val ps = localPostings(st.pairs(es),
         if (terms.size > 1) es.map(_.term_id).toSet else Set.empty)
-      LocalServing.phraseDocs(terms, es, ps).toSeq.toDF("doc_id")
+      local(QueryEngine.DocIdsSchema, LocalServing.phraseDocs(terms, es, ps).toSeq.map(InternalRow(_)))
     } else dropDeleted(phraseDocs(terms, st))
   }
 
@@ -1464,12 +1524,18 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
   }
 
   /** Fuzzy term lookup (see [[IndexReader.fuzzyTerms]]): one reader's
-    * answer directly; over generations the per-reader answers
-    * re-aggregated by term (df summed; local term_ids dropped, as they
-    * have no global meaning).
+    * answer directly; over generations (term, df) rows, df summed over
+    * the readers and local term_ids dropped, as they have no global
+    * meaning. With every reader's dictionary installed on the driver,
+    * the readers' merged lexicon answers with no Spark job (bucketed on
+    * the first fuzzy call, [[FuzzyLexicon]]); otherwise the per-reader
+    * Spark answers are re-aggregated by term.
     */
   def fuzzyTerms(q: String, d: Int): DataFrame =
     if (readers.size == 1) readers.head.fuzzyTerms(q, d)
+    else if (dictLocalInstalled)
+      local(QueryEngine.FuzzyMultiSchema, shared.fuzzyLexicon.within(q, d)
+        .map(r => InternalRow(UTF8String.fromString(r.term), r.df)))
     else readers.map(_.fuzzyTerms(q, d).select($"term", $"df"))
       .reduce(_ unionByName _)
       .groupBy($"term").agg(sum($"df").as("df"))
@@ -1549,8 +1615,11 @@ object QueryEngine {
   private[query] def residentBudget(maxHeap: Long): Long =
     maxHeap / 8 / ResidentLoadBytesPerRecordedByte
 
-  /** The description of the job that loads the resident postings. */
+  /** The descriptions of the jobs that load the resident postings and
+    * the resident docs.
+    */
   private[query] val ResidentLoadDescription = "graft: load resident postings"
+  private[query] val ResidentDocsLoadDescription = "graft: load resident docs"
 
   /** The state every engine over `root` shares, whatever its config:
     * the readers (with their warmed dictionaries and driver maps), the
@@ -1597,57 +1666,57 @@ object QueryEngine {
         f => idx.getOrElse(Generations.genSegOf(f), -1)
       }
 
-    /** The postings bytes the readers' manifests record, summed (no
+    /** The bytes the readers' manifests record for `table`, summed (no
       * job); Long.MaxValue when a reader's manifest records none.
       */
-    lazy val postingsBytes: Long = {
-      val recorded = gens.map(g => IndexBuilder.manifestBytes(IndexPaths(g).postings))
+    private def recordedBytes(table: IndexPaths => String): Long = {
+      val recorded = gens.map(g => IndexBuilder.manifestBytes(table(IndexPaths(g))))
       if (recorded.forall(_.isDefined)) recorded.flatten.sum else Long.MaxValue
     }
 
-    private val residentLock = new java.util.concurrent.locks.ReentrantLock
-    @volatile private var residentHeld: Seq[ResidentPostings] = null
+    lazy val postingsBytes: Long = recordedBytes(_.postings)
+    lazy val docsBytes: Long = recordedBytes(_.docs)
 
     /** Every reader's chunk rows on the driver, indexed like `readers`:
       * loaded by the first caller in ONE scan job over every reader's
       * postings (each row's reader recovered from its file path, as
-      * `genOf` does for the per-call reads). None while another caller
-      * is loading them: a concurrent call collects its own rows rather
-      * than wait. A failed load leaves nothing held, so the next call
-      * loads again.
+      * `genOf` does for the per-call reads), described
+      * [[ResidentLoadDescription]].
       */
-    def resident: Option[Seq[ResidentPostings]] =
-      Option(residentHeld).orElse {
-        if (!residentLock.tryLock()) None
-        else try {
-          if (residentHeld == null) residentHeld = loadResident()
-          Some(residentHeld)
-        } finally residentLock.unlock()
-      }
-
-    /** Heap bytes of the resident arrays; 0 until they are loaded. */
-    def residentBytes: Long = Option(residentHeld).fold(0L)(_.map(_.bytes).sum)
-
-    /** ONE scan job, described [[ResidentLoadDescription]]. The rows
-      * are collected as Spark's binary rows and packed from those, so no
-      * per-row object is deserialized on the driver.
-      */
-    private def loadResident(): Seq[ResidentPostings] = {
+    private val heldPostings = new HeldOnce(() => {
       val gi = genOf
       val reader = if (readers.size == 1) lit(0) else udf(gi).apply(input_file_name())
-      val qe = postings
+      ResidentPostings.packAll(collectDescribed(ResidentLoadDescription, postings
         .select(reader, col("term_id"), col("chunk_seq"), col("n_postings"), col("doc_gaps"),
           col("tfs"), col("dls"), col("pos_blob"), length(col("doc_gaps")),
           length(col("pos_blob")))
-        .toDF(ResidentPostings.Columns: _*)
-        .queryExecution
+        .toDF(ResidentPostings.Columns: _*)), readers.size)
+    })
+
+    def resident: Option[Seq[ResidentPostings]] = heldPostings.get
+
+    /** Heap bytes of the resident arrays; 0 until they are loaded. */
+    def residentBytes: Long = heldPostings.loaded.fold(0L)(_.map(_.bytes).sum)
+
+    /** Every reader's docs rows on the driver: loaded by the first call
+      * that needs text, in ONE scan job over every reader's docs table,
+      * described [[ResidentDocsLoadDescription]].
+      */
+    private val heldDocs = new HeldOnce(() =>
+      ResidentDocs(collectDescribed(ResidentDocsLoadDescription, docs)))
+
+    def residentDocs: Option[ResidentDocs] = heldDocs.get
+
+    /** `df`'s rows in ONE job described `description`, as Spark's binary
+      * rows, so no per-row object is deserialized on the driver.
+      */
+    private def collectDescribed(description: String, df: DataFrame): Array[InternalRow] = {
+      val qe = df.queryExecution
       val sc = spark.sparkContext
-      val description = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(ResidentLoadDescription)
-      val chunks = try SQLExecution.withNewExecutionId(qe, Some("collect"))(
-        qe.executedPlan.executeCollect())
-      finally sc.setJobDescription(description)
-      ResidentPostings.packAll(chunks, readers.size)
+      val previous = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(description)
+      try SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+      finally sc.setJobDescription(previous)
     }
 
     private val delDirs: Seq[String] = Generations.delDirs(root)
@@ -1673,17 +1742,50 @@ object QueryEngine {
       spark.sparkContext.broadcast(java.util.Arrays.copyOf(ids, n))
     }
 
-    /** The readers' driver lexicons merged (df summed per term) in UTF-8
-      * term order — the dictionary Parquet's own order — so a prefix is
-      * one binary-searched range: `suggest` then runs no Spark job.
-      * Built on the first suggest call, not at warm-up.
+    /** The readers' driver lexicons merged: df summed per term, the
+      * other fields those of the first reader holding it (so a
+      * one-reader root keeps its term_ids).
       */
-    lazy val suggestTerms: Array[DictRow] = {
+    private lazy val mergedLexicon: Array[DictRow] = {
       val merged = new java.util.HashMap[String, DictRow]()
       readers.foreach(_.localDictionary.values.forEach(r =>
         merged.merge(r.term, r, (a, b) => a.copy(df = a.df + b.df))))
-      merged.values.toArray(new Array[DictRow](0)).sortBy(_.term)(Tokenizer.utf8Ordering)
+      merged.values.toArray(new Array[DictRow](0))
     }
+
+    /** The merged lexicon in UTF-8 term order — the dictionary Parquet's
+      * own order — so a prefix is one binary-searched range: `suggest`
+      * then runs no Spark job. Built on the first suggest call, not at
+      * warm-up.
+      */
+    lazy val suggestTerms: Array[DictRow] = mergedLexicon.sortBy(_.term)(Tokenizer.utf8Ordering)
+
+    /** The merged lexicon's unigrams by code-point length, built on the
+      * first multi-reader fuzzy call.
+      */
+    lazy val fuzzyLexicon: FuzzyLexicon = FuzzyLexicon(mergedLexicon)
+  }
+
+  /** A value every engine over a root shares, loaded by the first caller
+    * that asks for it. None while another caller is loading it: a
+    * concurrent call takes its per-call path rather than wait. A failed
+    * load leaves nothing held, so the next call loads again.
+    */
+  private final class HeldOnce[T <: AnyRef](load: () => T) {
+    private val lock = new java.util.concurrent.locks.ReentrantLock
+    @volatile private var held: T = _
+
+    def get: Option[T] =
+      Option(held).orElse {
+        if (!lock.tryLock()) None
+        else try {
+          if (held == null) held = load()
+          Some(held)
+        } finally lock.unlock()
+      }
+
+    /** The value if it is loaded; never loads it. */
+    def loaded: Option[T] = Option(held)
   }
 
   /** Broadcast-hint bounds of the join chains. A conjunctive chain hints its first (rarest)
@@ -1711,12 +1813,27 @@ object QueryEngine {
   /** The result-page schema the left join of
     * [[QueryEngine.searchWithSnippets]] produces.
     */
-  val SearchPageSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
+  val SearchPageSchema: StructType =
     StructType(Seq(StructField("doc_id", LongType, nullable = false),
       StructField("score", DoubleType, nullable = false),
       StructField("first_pos", IntegerType), StructField("snippet", StringType)))
-  }
+
+  /** The schemas of the driver-local answers, each the one the kind's
+    * Spark plan produces: ranked (doc_id, score), tiered (doc_id, score,
+    * tier), phrase doc_ids, suggest (term, df), and fuzzy (term, term_id,
+    * df) for one reader and (term, df) for several.
+    */
+  private[query] val ScoresSchema: StructType =
+    StructType(Seq(StructField("doc_id", LongType, nullable = false),
+      StructField("score", DoubleType, nullable = false)))
+  private[query] val TieredSchema: StructType =
+    ScoresSchema.add(StructField("tier", IntegerType, nullable = false))
+  private[query] val DocIdsSchema: StructType = StructType(ScoresSchema.take(1))
+  private[query] val SuggestSchema: StructType =
+    StructType(Seq(StructField("term", StringType), StructField("df", LongType, nullable = false)))
+  private[query] val FuzzySchema: StructType = StructType(IndexBuilder.FuzzySchema.drop(1))
+  private[query] val FuzzyMultiSchema: StructType =
+    StructType(Seq(StructField("term", StringType), StructField("df", LongType)))
 
   /** Dictionary-probe counter (each probe = one pushed driver-side
     * dictionary scan) — test hook for probe budgets: handleQuery must

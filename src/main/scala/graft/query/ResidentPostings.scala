@@ -20,11 +20,11 @@ final class ResidentPostings private (termIds: Array[Long], termStart: Array[Int
   /** The chunk rows of local term `termId` as the per-call collect
     * returns them: labelled `key`, with `pos_blob` only when `withPos`.
     */
-  def rows(termId: Long, key: Long, withPos: Boolean): Seq[ChunkRow] = {
+  def rows(termId: Long, key: Long, withPos: Boolean): Seq[LocalChunk] = {
     val t = java.util.Arrays.binarySearch(termIds, termId)
     if (t < 0) Nil
     else (termStart(t) until termStart(t + 1)).map { c =>
-      ChunkRow(key, postStart(c + 1) - postStart(c),
+      LocalChunk(key, postStart(c + 1) - postStart(c),
         java.util.Arrays.copyOfRange(gaps, gapStart(c), gapStart(c + 1)),
         java.util.Arrays.copyOfRange(tfs, postStart(c), postStart(c + 1)),
         java.util.Arrays.copyOfRange(dls, postStart(c), postStart(c + 1)),

@@ -8,8 +8,10 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A fresh temp dir, deleted with everything in it when the test JVM
+    * exits.
+    */
+  def tmpDir(prefix: String): String = SparkSpecBase.tmpDir(prefix)
 
   /** Recursive file-tree copy — the root-cloning setup shared by the
     * truncation-attack tests (clone an index root, delete one part file,
@@ -35,6 +37,23 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpecBase {
+
+  /** The dirs [[tmpDir]] created, deleted by one shutdown hook. */
+  private val created = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
+
+  private lazy val deleteAtExit: Unit =
+    Runtime.getRuntime.addShutdownHook(new Thread(() => created.forEach { dir =>
+      if (java.nio.file.Files.exists(dir))
+        java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+          .forEach(p => scala.util.Try(java.nio.file.Files.delete(p)))
+    }, "graft-test-tmp-cleanup"))
+
+  def tmpDir(prefix: String): String = {
+    deleteAtExit
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    created.add(dir)
+    dir.toString
+  }
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

@@ -172,12 +172,16 @@ class IndexEndToEndSpec extends SparkSpecBase {
     import org.apache.spark.sql.functions.col
     val pred = col("role") === "user"
     val gateShut = engine.withConfig(_.copy(localMaxPostings = 0L))
+    // the resident budget shut: the text comes from the docs parquet
+    val parquetText = engine.withResidentBudget(0L)
+    def scansDocs(plan: String): Boolean =
+      plan.linesIterator.exists(l => l.contains("FileScan") && l.contains("/docs"))
     // (query, whether its terms' postings hold more than MaxInLiterals docs)
     Seq("albae corba" -> false, "the of and" -> true).foreach { case (q, over) =>
       val held = direct.bm25TopK(q, 1000000).count()
       assert((held > MaxInLiterals) == over,
         s"'$q' holds $held docs, expected ${if (over) "more" else "at most"} than $MaxInLiterals")
-      val (got, plans) = withPlans(engine.bm25TopKFiltered(q, 10, pred).collect()
+      val (got, plans) = withPlans(parquetText.bm25TopKFiltered(q, 10, pred).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq)
       // the driver-local path folds on the driver: no plan aggregates
       assert(!plans.exists(_.contains("HashAggregate")),
@@ -190,6 +194,15 @@ class IndexEndToEndSpec extends SparkSpecBase {
       val semi = plans.exists(_.contains("LeftSemi"))
       if (over) assert(semi && !pushed, s"'$q': expected a broadcast semi-join:\n${plans.mkString("\n")}")
       else assert(pushed && !semi, s"'$q': expected a pushed In(doc_id:\n${plans.mkString("\n")}")
+      assert(plans.exists(scansDocs), s"'$q': no docs scan found in:\n${plans.mkString("\n")}")
+      // resident docs: the same answer from the held rows, filtered on
+      // the driver; the first call loads them
+      engine.bm25TopKFiltered(q, 10, pred).collect()
+      val (resident, residentPlans) = withPlans(engine.bm25TopKFiltered(q, 10, pred).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+      assert(resident == want, s"'$q' resident-docs mismatch\n got=$resident\nwant=$want")
+      assert(!residentPlans.exists(scansDocs),
+        s"'$q': resident docs still scanned the docs table:\n${residentPlans.mkString("\n")}")
     }
   }
 
@@ -356,7 +369,7 @@ class IndexEndToEndSpec extends SparkSpecBase {
   }
 
   test("lemma file round-trip (reference lemmas.txt format)") {
-    val f = java.nio.file.Files.createTempFile("lemmas", ".txt")
+    val f = java.nio.file.Paths.get(tmpDir("graft-lemmas"), "lemmas.txt")
     java.nio.file.Files.write(f,
       Transcripts.lemmaFileLines.mkString("\n").getBytes("UTF-8"))
     val loaded = graft.core.Tokenizer.loadLemmasFile(f.toString)

@@ -356,7 +356,7 @@ class DedupSpec extends SparkSpecBase {
     val rnd = new scala.util.Random(7)
     val n = 40
     val edges = Seq.fill(45)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
+    val dir = tmpDir("graft-cc-ckpt")
     // localMaxEdges = 0 so BOTH runs take the iterative rounds — the
     // checkpoint mode is what differs
     val viaLocal = ccMap(Dedup.connectedComponents(edgesDf(edges),

@@ -37,12 +37,17 @@ import graft.index.{Compactor, Generations, IndexBuilder, IndexConf, IndexPaths}
   * jobs (single index) and 13 (3 generations with tombstones), the
   * first bm25TopK 3 and planning the first fuzzyTerms 1.
   *
-  * Under the resident postings budget the first driver-local
-  * call loads every generation's chunk rows in one job, and later
-  * driver-local calls run none for postings: 0 jobs for bm25TopK,
-  * handleQuery and phraseMatch, 1 (the text lookup) for snippets and
-  * filtered search. With each call collecting its own chunk rows, the
-  * budget shut, every driver-local bm25TopK ran 1 job, the first too.
+  * Under the resident budget the first driver-local call loads every
+  * generation's chunk rows in one job, and the first call that needs
+  * text loads every generation's docs rows in one more. Later
+  * driver-local calls run no job: 0 for bm25TopK, handleQuery,
+  * phraseMatch, snippets and filtered search. With the dictionary
+  * installed on the driver, fuzzyTerms runs none either. With the
+  * budget shut, each call collects its own chunk rows (every
+  * driver-local bm25TopK ran 1 job, the first too) and snippets and
+  * filtered search one more job each for the text. Without the driver
+  * dictionary a warm fuzzyTerms probes the variant table in Spark jobs
+  * (1 on the single index here).
   */
 class JobCountSpec extends SparkSpecBase with JobCounting {
 
@@ -142,14 +147,19 @@ class JobCountSpec extends SparkSpecBase with JobCounting {
     info(s"3 generations with tombstones, open + warm: $gens jobs (budget 4)")
     assert(gens <= 4, s"3-generation open + warm ran $gens jobs, budget 4")
     // resident postings: the first gated call loads every generation's
-    // chunk rows in one job, and later driver-local calls run only the
-    // text lookup some kinds need
+    // chunk rows in one job, and later driver-local calls run none
     val (first, loads) =
       describedJobsOf(QueryEngine.ResidentLoadDescription)(e.bm25TopK(q, 10).collect())
     assert(e.lastWandPath == "local", s"expected the driver-local path, got ${e.lastWandPath}")
     info(s"first bm25TopK after the warm-up (loads the resident postings): $first jobs")
     assert(first == 1 && loads == 1,
       s"first bm25TopK ran $first jobs ($loads loads), expected the one load job")
+    // the first call that needs text loads every generation's docs rows
+    val (firstText, docLoads) = describedJobsOf(QueryEngine.ResidentDocsLoadDescription)(
+      e.searchWithSnippets(q, 10).collect())
+    info(s"first searchWithSnippets (loads the resident docs): $firstText jobs")
+    assert(firstText == 1 && docLoads == 1,
+      s"first searchWithSnippets ran $firstText jobs ($docLoads loads), expected the one load job")
     residentKinds(e).foreach { case (kind, run, budget) =>
       run()
       val n = jobsOf(run())
@@ -164,20 +174,41 @@ class JobCountSpec extends SparkSpecBase with JobCounting {
     info(s"resident budget shut: first bm25TopK $sFirst jobs; warm: $sWarm (budget 1)")
     assert(sWarm <= 1, s"warm bm25TopK ran $sWarm jobs, budget 1")
     assert(sFirst == sWarm, s"first bm25TopK ran $sFirst jobs, a warm one $sWarm")
+    // ... and the text kinds one more each, on the docs parquet
+    shutTextKinds(s).foreach { case (kind, run, budget) =>
+      run()
+      val n = jobsOf(run())
+      info(s"resident budget shut: warm $kind $n jobs (budget $budget)")
+      assert(n == budget, s"warm $kind with the budget shut ran $n jobs, expected $budget")
+    }
     // the variant table opens with its schema: no footer-inference job
     val f = new QueryEngine(spark, singleRoot, lemmas)
     val plan = jobsOf(f.fuzzyTerms("tabel", 1))
     info(s"first fuzzyTerms on a fresh engine, planning: $plan jobs (budget 0)")
     assert(plan == 0, s"planning the first fuzzyTerms ran $plan jobs")
+    f.fuzzyTerms("tabel", 1).collect()
+    val spark2 = jobsOf(f.fuzzyTerms("tabel", 1).collect())
+    info(s"warm fuzzyTerms over the variant table (no driver dictionary): $spark2 jobs (budget 2)")
+    assert(spark2 <= 2, s"warm fuzzyTerms over the variant table ran $spark2 jobs")
   }
 
-  /** kind -> (a driver-local call, its jobs on resident postings). */
+  /** kind -> (a text kind with the resident budget shut, its jobs: the
+    * chunk-row collect and the docs parquet lookup).
+    */
+  private def shutTextKinds(e: QueryEngine): Seq[(String, () => Unit, Int)] = Seq(
+    ("searchWithSnippets", () => { e.searchWithSnippets(q, 10).collect(); () }, 2),
+    ("bm25TopKFiltered", () => { e.bm25TopKFiltered(q, 10, pred).collect(); () }, 2))
+
+  /** kind -> (a driver-local call, its jobs on resident postings and
+    * docs with the dictionary on the driver).
+    */
   private def residentKinds(e: QueryEngine): Seq[(String, () => Unit, Int)] = Seq(
     ("bm25TopK", () => { e.bm25TopK(q, 10).collect(); () }, 0),
     ("handleQuery", () => { e.handleQuery(q, 10).collect(); () }, 0),
     ("phraseMatch", () => { e.phraseMatch(phrase).collect(); () }, 0),
-    ("searchWithSnippets", () => { e.searchWithSnippets(q, 10).collect(); () }, 1),
-    ("bm25TopKFiltered", () => { e.bm25TopKFiltered(q, 10, pred).collect(); () }, 1))
+    ("searchWithSnippets", () => { e.searchWithSnippets(q, 10).collect(); () }, 0),
+    ("bm25TopKFiltered", () => { e.bm25TopKFiltered(q, 10, pred).collect(); () }, 0),
+    ("fuzzyTerms", () => { e.fuzzyTerms("tabel", 1).collect(); () }, 0))
 
   private def answers(e: QueryEngine): (Seq[(Long, Double)], Seq[String], Seq[Long]) =
     (e.bm25TopK(q, 10).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq,
