@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.expr
 
 import graft.core.Tokenizer
 import graft.corpus.Turn
-import graft.index.{Compactor, Generations, IndexBuilder, IndexConf}
+import graft.index.{Compactor, Generations, IndexBuilder, IndexConf, IndexPaths}
 import graft.query.QueryEngine
 
 /** spark-submit entry point — the deployable surface of the library
@@ -66,14 +66,14 @@ object IndexCli {
     * launch instead of silently running with defaults.
     */
   private val IndexingOpts = Set("num-parts", "skew-df", "salts", "k1", "b",
-    "fuzzy-d", "lemmas")
+    "lemmas")
   private val KnownOpts: Map[String, Set[String]] = Map(
     "build" -> (IndexingOpts + "in" + "out"),
     "append" -> (IndexingOpts + "in" + "root"),
     "upsert" -> (IndexingOpts + "in" + "root"),
     "delete-where" -> Set("root", "predicate"),
     "compact" -> (IndexingOpts + "root" + "out"),
-    "merge" -> Set("root", "gens", "smallest", "num-parts", "fuzzy-d", "lemmas"),
+    "merge" -> Set("root", "gens", "smallest", "num-parts", "lemmas"),
     "gc" -> Set("root"),
     "query" -> Set("root", "q", "k", "lemmas", "out-parquet"),
     "search" -> Set("root", "q", "k", "window", "lemmas", "out-parquet"),
@@ -121,7 +121,7 @@ object IndexCli {
       |  stream-deletes --in <watched doc_id parquet dir> --root <generations root>
       |  stats          --root <index|generations root>
       |build/append/upsert/compact/stream-ingest options: --num-parts N --skew-df N
-      |  --salts N --k1 X --b X --bigrams --fuzzy-d N --lemmas <local csv file>
+      |  --salts N --k1 X --b X --bigrams --lemmas <local csv file>
       |query/search options: --out-parquet <dir> (default: show on stdout)
       |stream-* options: --follow <seconds> (micro-batch cadence; default:
       |  catch up on available input, then exit — the AvailableNow trigger)
@@ -136,8 +136,7 @@ object IndexCli {
       nSalts = o.get("salts").map(_.toInt).getOrElse(base.nSalts),
       k1 = o.get("k1").map(_.toDouble).getOrElse(base.k1),
       b = o.get("b").map(_.toDouble).getOrElse(base.b),
-      indexBigrams = flags("bigrams") || base.indexBigrams,
-      fuzzyMaxDistance = o.get("fuzzy-d").map(_.toInt).getOrElse(base.fuzzyMaxDistance))
+      indexBigrams = flags("bigrams") || base.indexBigrams)
   }
 
   private def lemmasFrom(o: Map[String, String]): Map[String, String] =
@@ -166,10 +165,36 @@ object IndexCli {
     * generations root. Anything else fails fast.
     */
   private def isSingleIndex(root: String): Boolean =
-    if (graft.index.Fs.exists(graft.index.IndexPaths(root).meta)) true
+    if (graft.index.Fs.exists(IndexPaths(root).meta)) true
     else if (Generations.genDirs(root).nonEmpty) false
     else throw new IllegalArgumentException(
       s"$root holds neither index_meta.json nor complete gen-* directories")
+
+  /** One line per table of the index dir `dir`: the rows, bytes and
+    * wall_ms its `_manifest.json` records. A derived table (written by a
+    * reader on first use) that no reader has written reads "not written
+    * (first use)", and one not current under the dictionary's token and
+    * its format tag (a reader rejects it) is marked stale; the fuzzy
+    * tables are listed per distance on disk.
+    */
+  private def tableLines(dir: String): Seq[String] = {
+    val p = IndexPaths(dir)
+    val dictToken = IndexBuilder.tableToken(p.dictionary)
+    def line(name: String, table: String, token: Option[String]): String = {
+      val fields = Seq("rows", "bytes", "wall_ms").flatMap(f =>
+        IndexBuilder.manifestLong(table, f).map(v => s"$f=$v")).mkString(" ")
+      s"  $name: " + (if (fields.isEmpty) token.fold("no manifest")(_ => "not written (first use)")
+        else if (token.exists(!IndexBuilder.manifestComplete(table, _))) s"$fields stale (rewritten on first use)"
+        else fields)
+    }
+    val derived = ("dict_by_len", p.dictByLen, IndexBuilder.DictByLenFormatTag) +:
+      // with no fuzzy_dD on disk, one "fuzzy_d*" line over a dir with no manifest
+      QueryEngine.fuzzyDistancesOnDisk(dir).map(d => (s"fuzzy_d$d", p.fuzzy(d), ""))
+        .padTo(1, ("fuzzy_d*", p.fuzzy(1), "")) :+ (("vsm_norms", p.vsmNorms, IndexBuilder.VsmNormsFormatTag))
+    Seq("docs" -> p.docs, "segments" -> p.segments, "dictionary" -> p.dictionary,
+        "postings" -> p.postings).map { case (n, t) => line(n, t, None) } ++
+      derived.map { case (n, t, tag) => line(n, t, Some(dictToken + tag)) }
+  }
 
   def run(spark: SparkSession, argv: Seq[String]): Unit = {
     val a = parseArgs(argv, flagNames = Set("bigrams"))
@@ -237,20 +262,23 @@ object IndexCli {
         emit(if (a.cmd == "query") e.handleQuery(q, k)
           else e.searchWithSnippets(q, k, window), o)
       case "stats" =>
-        // operational inventory, metadata-only: generation metas +
-        // tombstone markers (one small read each), no table scans
+        // operational inventory, metadata-only: generation metas, table
+        // manifests and tombstone markers (one small read each), no
+        // table scans
         val root = req(o, "root")
         if (isSingleIndex(root)) {
           val m = IndexBuilder.readMeta(root)
           println(s"single index $root: n_docs=${m.n_docs} " +
             s"n_terms=${m.n_terms} n_postings=${m.n_postings} " +
             f"avgdl=${m.avgdl}%.2f k1=${m.k1} b=${m.b}")
+          tableLines(root).foreach(println)
         } else {
           val gens = Generations.genDirs(root)
           gens.foreach { g =>
             val m = IndexBuilder.readMeta(g)
             println(s"${g.split('/').last}: n_docs=${m.n_docs} " +
               s"n_terms=${m.n_terms} n_postings=${m.n_postings}")
+            tableLines(g).foreach(println)
           }
           val dels = Generations.delDirs(root)
           dels.foreach { d =>

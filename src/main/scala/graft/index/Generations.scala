@@ -178,7 +178,7 @@ object Generations {
     // batch recompute empty and skip again — idempotent without a
     // marker; the uncommitted dir is removed so delDirs never sees it)
     if (n == 0L) { Fs.deleteRecursive(dir); return dir }
-    IndexBuilder.writeAtomic(s"$dir/del_meta.json", s"""{"n_ids":$n}""")
+    Fs.writeAtomic(s"$dir/del_meta.json", s"""{"n_ids":$n}""")
     dir
   }
 
@@ -351,7 +351,7 @@ object Compactor {
                   s"modified; refusing to fingerprint a merge over it", e)
           })
     }
-    upd(s"np${conf.numParts}-k1${conf.k1}-b${conf.b}-fz${conf.fuzzyMaxDistance}")
+    upd(s"np${conf.numParts}-k1${conf.k1}-b${conf.b}")
     s"merge-${md.digest().map(b => f"$b%02x").mkString}-n$nSources"
   }
 
@@ -403,7 +403,7 @@ object Compactor {
     }
     builder.finish(dir, fp, commit =
       if (replaces.nonEmpty)
-        IndexBuilder.writeAtomic(s"$dir/replaces.json",
+        Fs.writeAtomic(s"$dir/replaces.json",
           s"""{"replaces":[${replaces.map("\"" + _ + "\"").mkString(",")}]}"""))
   }
 

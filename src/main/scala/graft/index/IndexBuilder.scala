@@ -32,11 +32,11 @@ final case class IndexConf(
       * a single dictionary probe instead of a positional intersect.
       */
     indexBigrams: Boolean = false,
-    /** Max edit distance the index-time SymSpell variant table serves as
-      * a pushed probe (fuzzy_d{N} table). Larger distances are served by
-      * a lazy per-distance backfill on first use (QueryEngine
-      * .fuzzyIndexFor); the default keeps build cost at the d=1 table
-      * (~L variants/term vs ~L^2/2 at d=2).
+    /** Ignored: no writer reads it and no fingerprint holds it. A
+      * reader writes fuzzy_d{d} (d <= 3) on the first distributed lookup
+      * at that distance, and serves a lookup from any current fuzzy_dD
+      * with D >= d on disk (QueryEngine.fuzzyIndexFor). The field stays
+      * because perfbench names its fuzzy dir from the default.
       */
     fuzzyMaxDistance: Int = 1,
     /** SPIMI segment stage resume granularity: the doc_id space is cut
@@ -279,44 +279,68 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
       }
   }
 
-  /** Deletion-neighborhood (SymSpell) fuzzy table: every dictionary term
-    * expanded to its <=d-deletion variants, range-partitioned and sorted
-    * by variant so a fuzzy lookup is a pushed `variant IN` probe. The
-    * build writes it at d = `fuzzyMaxDistance`; a reader backfills it on
-    * any root at the first lookup of a larger d up to 3
-    * (QueryEngine.fuzzyIndexFor). Skipped while current: derived from
-    * the dictionary under `root` (see [[writeFuzzy]]).
+  /** Deletion-neighborhood (SymSpell) fuzzy table: every dictionary
+    * unigram expanded to its <=d-deletion variants, range-partitioned
+    * and sorted by variant so a fuzzy lookup is a pushed `variant IN`
+    * probe. No index writer commits it: a reader writes it on the
+    * first distributed lookup at d <= 3 (QueryEngine.fuzzyIndexFor). A
+    * stage under the dictionary's [[IndexBuilder.tableToken]], skipped
+    * while current: a rebuild over a changed corpus rewrites the
+    * dictionary but not fuzzy_dD, which must then read as stale (wrong
+    * df, dangling term_ids), never serve.
     */
-  def writeFuzzyIndex(dictDf: DataFrame, root: String, d: Int = 1): Unit =
-    writeFuzzy(dictDf, root, d, IndexBuilder.tableToken(IndexPaths(root).dictionary))
+  def writeFuzzyIndex(dictDf: DataFrame, root: String, d: Int): Unit = {
+    val paths = IndexPaths(root)
+    stage(paths.fuzzy(d), IndexBuilder.tableToken(paths.dictionary)) {
+      // maxLen slack of +d: a term of MaxTermLen+d code points is still
+      // within distance d of a MaxTermLen-cp query, so its variants must
+      // be in the table (the boundary miss ADVICE flagged); only terms
+      // beyond that are exact-match-only.
+      val maxLen = graft.core.Fuzzy.MaxTermLen + d
+      val variants = unigrams(dictDf).select($"term", $"term_id", $"df")
+        .as[(String, Long, Long)]
+        .flatMap { case (t, id, df) =>
+          graft.core.Fuzzy.deleteVariants(t, d, maxLen).iterator
+            .map(v => (v, t, id, df)) }
+        .toDF(IndexBuilder.FuzzySchema.fieldNames.toSeq: _*)
+        .repartitionByRange(conf.numParts, $"variant")
+        .sortWithinPartitions($"variant")
+      (IndexBuilder.writeCounted(variants, paths.fuzzy(d)).rows, Map.empty)
+    }
+  }
 
-  /** [[writeFuzzyIndex]] as a stage under `dictToken`, the
-    * [[IndexBuilder.tableToken]] of the dictionary it derives from: a
-    * rebuild over a changed corpus rewrites the dictionary but not a
-    * backfilled fuzzy_dD, which must then read as stale (wrong df,
-    * dangling term_ids), never serve.
+  /** The dictionary's unigrams: on a bigram-indexed root it also holds
+    * space-joined pseudo-terms, which fuzzyTerms never serves (filtered
+    * query-side too) and the reference's doc vector has no dimension
+    * for.
     */
-  private def writeFuzzy(dictDf: DataFrame, root: String, d: Int,
-      dictToken: String): Unit = stage(IndexPaths(root).fuzzy(d), dictToken) {
-    // maxLen slack of +d: a term of MaxTermLen+d code points is still
-    // within distance d of a MaxTermLen-cp query, so its variants must be
-    // in the table (the boundary miss ADVICE flagged); only terms beyond
-    // that are exact-match-only.
-    val maxLen = graft.core.Fuzzy.MaxTermLen + d
-    val variants = dictDf.select($"term", $"term_id", $"df")
-      // unigrams only: on a bigram-indexed root the dictionary also
-      // holds space-joined pseudo-terms, which fuzzyTerms never serves
-      // (filtered query-side too) — expanding their deletion
-      // neighborhoods would only bloat the table
-      .filter(!$"term".contains(" "))
-      .as[(String, Long, Long)]
-      .flatMap { case (t, id, df) =>
-        graft.core.Fuzzy.deleteVariants(t, d, maxLen).iterator
-          .map(v => (v, t, id, df)) }
-      .toDF(IndexBuilder.FuzzySchema.fieldNames.toSeq: _*)
-      .repartitionByRange(conf.numParts, $"variant")
-      .sortWithinPartitions($"variant")
-    (IndexBuilder.writeCounted(variants, IndexPaths(root).fuzzy(d)).rows, Map.empty)
+  private def unigrams(dictDf: DataFrame): DataFrame = dictDf.filter(!$"term".contains(" "))
+
+  /** Length-bucketed unigram projection of the dictionary (cp_len, term,
+    * term_id, df), range-partitioned AND sorted by (cp_len, term) so
+    * Parquet row-group stats on cp_len are tight: a fuzzy lookup above
+    * the variant tables' cap becomes a PUSHED `cp_len BETWEEN len-d AND
+    * len+d` range probe that reads only the query's length band. Like
+    * fuzzy_dD, written by a reader on first use, as a stage under the
+    * dictionary's token plus [[IndexBuilder.DictByLenFormatTag]].
+    * Partition count scales with the LEXICON (one ~64k-term file per
+    * partition): a small lexicon in conf.numParts range partitions pays
+    * a sampling pass and near-empty file writes for nothing.
+    */
+  def writeDictByLen(dictDf: DataFrame, root: String): Unit = {
+    val paths = IndexPaths(root)
+    stage(paths.dictByLen,
+        IndexBuilder.tableToken(paths.dictionary) + IndexBuilder.DictByLenFormatTag) {
+      val nTerms = IndexBuilder.readMeta(root).n_terms
+      val parts = math.max(1L, math.min(conf.numParts.toLong, nTerms / 65536L + 1L)).toInt
+      // length() counts CODE POINTS (matching Fuzzy's qCp bound); java
+      // String.length would under-bucket supplementary-plane terms and
+      // the probe's band would miss true matches
+      (IndexBuilder.writeCounted(unigrams(dictDf)
+        .select(length($"term").cast("int").as("cp_len"), $"term", $"term_id", $"df")
+        .repartitionByRange(parts, $"cp_len", $"term")
+        .sortWithinPartitions($"cp_len", $"term"), paths.dictByLen).rows, Map.empty)
+    }
   }
 
   /** A9 — vector-space document norms, the reference's abandoned cosine
@@ -348,7 +372,7 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     // output; without this filter a bigram-indexed root inflated every
     // norm with (tf·df)² over "a b" postings. Same exclusion as
     // writeFuzzyIndex. The join drops the bigram postings rows.
-    val dfs = dictDf.filter(!$"term".contains(" ")).select($"term_id", $"df")
+    val dfs = unigrams(dictDf).select($"term_id", $"df")
     postingsDf
       .select($"term_id", $"n_postings", $"doc_gaps", $"tfs")
       .join(dfs, Seq("term_id"))
@@ -419,12 +443,6 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
       }.toDF())
   }
 
-  /** The dictionary table at `dir`, opened with the schema the builder
-    * writes.
-    */
-  private def readDictionary(dir: String): DataFrame =
-    IndexBuilder.reopen(spark, Seq(dir), IndexBuilder.DictionarySchema)
-
   /** The segments table at `dir` (a single dir or slice dirs), opened
     * with the schema the builder writes.
     */
@@ -471,23 +489,21 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
   }
 
   /** Stage 2 of every index writer (build, merge and compaction share
-    * it through [[finish]], so the layout guarantees cannot drift):
+    * it through [[finish]], so the layout guarantees cannot drift): the
     * dictionary (term-sorted, range-partitioned — the layout PlanSpec
-    * asserts), postings (term-range dirs, each range-partitioned/sorted
-    * by (term_id, chunk_seq); readers use recursiveFileLookup), and the
-    * two dictionary-derived tables, dict_by_len and the SymSpell fuzzy
-    * variant table. Every piece carries its own manifest:
+    * asserts) and the postings (term-range dirs, each range-partitioned
+    * and sorted by (term_id, chunk_seq); readers use
+    * recursiveFileLookup). Nothing else: the dictionary-derived tables
+    * (dict_by_len, fuzzy_dD, vsm_norms) are written by a reader on
+    * first use, so a commit carries only what serving reads. Each piece
+    * carries its own manifest:
     *
     *  - dictionary: one manifest under `fp` (stats agg + RangeRank are
     *    global — a dense term_id cannot be assigned per-range — but this
     *    pass is the CHEAP one: column-pruned, no chunk encoding);
     *  - postings: one manifest per term-range + a parent manifest, so a
     *    kill mid-stage-2 redoes only incomplete ranges (the bulk of
-    *    stage-2 wall time is here: chunk encode + blob write);
-    *  - dict_by_len and fuzzy_d{fuzzyMaxDistance}: one manifest each
-    *    under the dictionary's [[IndexBuilder.tableToken]], so each is
-    *    skipped while derived from this dictionary and intact, and
-    *    rewritten otherwise.
+    *    stage-2 wall time is here: chunk encode + blob write).
     *
     * Reads the persisted segments under `root`, which every writer
     * leaves (term, salt)-grouped and (term, salt, doc_id)-sorted within
@@ -530,7 +546,7 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
         IndexBuilder.writeCounted(dict.df.repartitionByRange(conf.numParts, $"term")
           .sortWithinPartitions($"term"), paths.dictionary, Seq("df"))).fields
     }
-    val dictDf = readDictionary(paths.dictionary)
+    val dictDf = IndexBuilder.reopen(spark, Seq(paths.dictionary), IndexBuilder.DictionarySchema)
     val nTerms = manifestRows(paths.dictionary).getOrElse(dictDf.count())
     // a resumed dictionary (no chunking pass this run) chunks ONLY the
     // incomplete ranges' segments: the term-range predicate prunes the
@@ -546,8 +562,8 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     // nR suffices); anything that is not a current range dir — stale
     // flat part files, or range_i >= nR from a run with different
     // geometry — is dropped, since the recursive read would silently
-    // double-count it. Returns the parent manifest's rows and fields.
-    def writeRanges(): (Long, Map[String, String]) = {
+    // double-count it. The parent manifest records the ranges' rows.
+    stage(paths.postings, fp) {
       val nRanges = if (conf.stage2Ranges > 0) conf.stage2Ranges
         else math.max(1L, math.min(32L, nTerms / 2000000L)).toInt
       val bounds = rangeBounds(dictDf, nTerms, nRanges)
@@ -571,52 +587,6 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
       }
       ((0 until nR).map(r => manifestRows(s"${paths.postings}/range_$r").getOrElse(0L)).sum,
         Map("n_ranges" -> nR.toString))
-    }
-
-    // 2b': length-bucketed dictionary projection (cp_len, term, term_id,
-    // df), range-partitioned AND sorted by (cp_len, term) so parquet
-    // row-group stats on cp_len are tight — a fuzzy lookup at d above
-    // the variant-table cap becomes a PUSHED `cp_len BETWEEN len-d AND
-    // len+d` range probe (only the query's length band is ever read)
-    // instead of the old O(lexicon) scan (round-4 verdict #4).
-    // Lexicon-sized projection of 4 columns: negligible build cost.
-    // Like the fuzzy table, a stage under the dictionary's token, not
-    // fp: a dictionary rewritten under the SAME fp (new part UUIDs, new
-    // token) makes it stale, so the next build() repairs it, and the
-    // reader serves it only under the token it was built from.
-    val dictToken = IndexBuilder.tableToken(paths.dictionary)
-    def writeDictByLen(): Unit =
-      stage(paths.dictByLen, dictToken) {
-        // Partition count scales with the LEXICON, not the corpus: a
-        // small lexicon in conf.numParts range partitions pays a
-        // sampling pass + shuffle + numParts file writes for near-empty
-        // files (a measurable share of a small corpus's fixed build
-        // cost — the c8/sf0.01 A/B pairs), while one ~64k-term file per
-        // partition keeps row groups tight at the 10^9-term scale.
-        val dblParts = math.max(1L,
-          math.min(conf.numParts.toLong, nTerms / 65536L + 1L)).toInt
-        // length() counts CODE POINTS (matching Fuzzy's qCp bound);
-        // java String.length would under-bucket supplementary-plane
-        // terms and the probe's band would miss true matches
-        dictDf.select(length($"term").cast("int").as("cp_len"),
-            $"term", $"term_id", $"df")
-          .repartitionByRange(dblParts, $"cp_len", $"term")
-          .sortWithinPartitions($"cp_len", $"term")
-          .write.mode("overwrite").parquet(paths.dictByLen)
-        (nTerms, Map.empty)
-      }
-
-    // Everything after the dictionary lands is INDEPENDENT (the postings
-    // ranges, dict_by_len and the fuzzy table each derive only from the
-    // completed dictionary and write disjoint dirs), so the three run
-    // concurrently on the small fixed pool — the two dictionary-derived
-    // writes ride in task slots the (much larger) range writes leave
-    // free. Running dict_by_len serially after the ranges measured
-    // ~5-7% of bench-scale build wall (round-5 A/B pairs).
-    IndexBuilder.concurrently(spark, 3) {
-      case 0 => stage(paths.postings, fp)(writeRanges())
-      case 1 => writeDictByLen()
-      case _ => writeFuzzy(dictDf, root, conf.fuzzyMaxDistance, dictToken)
     }
     fresh.foreach(_.unpersist())
     rowsAndSum(paths.dictionary, "df", dictDf)
@@ -736,7 +706,7 @@ class IndexBuilder(spark: SparkSession, lemmas: Map[String, String],
     // the same root with a different lemma file must not resume stage
     // manifests and silently serve the OLD lemmatization while queries
     // lemmatize with the new one.
-    val fp = s"v6-np${conf.numParts}-salt${conf.nSalts}-thr${conf.skewDfThreshold}-off${conf.docIdOffset}-bi${conf.indexBigrams}-fz${conf.fuzzyMaxDistance}-k1${conf.k1}-b${conf.b}-lm$lemmaFingerprint-in${inputFingerprint(turns)}"
+    val fp = s"v6-np${conf.numParts}-salt${conf.nSalts}-thr${conf.skewDfThreshold}-off${conf.docIdOffset}-bi${conf.indexBigrams}-k1${conf.k1}-b${conf.b}-lm$lemmaFingerprint-in${inputFingerprint(turns)}"
 
     // Stage 0: docs (doc_id assignment + doc lengths). The write observes
     // its row count and Σdoc_len; the manifest records both, so n_docs
@@ -820,16 +790,12 @@ object IndexBuilder {
   /** A numeric field of a stage's manifest, if the manifest exists and
     * records it (quoted or bare).
     */
-  private[index] def manifestLong(dir: String, field: String): Option[Long] = {
+  private[graft] def manifestLong(dir: String, field: String): Option[Long] = {
     val f = s"$dir/_manifest.json"
     if (!Fs.exists(f)) None
     else s"\"$field\":\"?(\\d+)".r.findFirstMatchIn(Fs.readString(f))
       .map(_.group(1).toLong)
   }
-
-  /** The Parquet bytes a table's manifest recorded when it was written. */
-  private[graft] def manifestBytes(dir: String): Option[Long] =
-    manifestLong(dir, "bytes")
 
   /** Run `job(0..n-1)` on a small fixed pool — independent Spark jobs
     * whose stages the scheduler interleaves into free task slots, so
@@ -897,7 +863,7 @@ object IndexBuilder {
       StructField("term_id", LongType), StructField("df", LongType)))
   }
 
-  /** The dict_by_len table's columns as the build writes them. */
+  /** The dict_by_len table's columns as `writeDictByLen` writes them. */
   val DictByLenSchema: StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(StructField("cp_len", IntegerType), StructField("term", StringType),
@@ -936,7 +902,16 @@ object IndexBuilder {
       (rows, sums.map { case (c, v) => s"${c}_sum" -> v.toString })
   }
 
-  /** Writes `df` as parquet at `dir` (overwrite) and returns the rows it
+  /** The Parquet page codec of every index table. Parquet records the
+    * codec per column chunk, so a root written with another codec keeps
+    * serving, and a merge over it writes this one. On `search`'s index
+    * zstd pages hold the docs, dictionary and postings rows in 23-41%
+    * fewer bytes than Spark's default snappy (BENCH.md).
+    */
+  private[index] val PageCodec = "zstd"
+
+  /** Writes `df` as parquet at `dir` (overwrite) in [[PageCodec]] pages,
+    * and returns the rows it
     * wrote and the sums of `sumCols`, observed by the write itself: an
     * [[org.apache.spark.sql.Observation]] sits at the top of the plan,
     * after its last exchange, so it adds no job, a range-sampling job
@@ -949,6 +924,7 @@ object IndexBuilder {
     val obs = Observation()
     val writer = df.observe(obs, count(lit(1)).as("rows"),
       sumCols.map(c => sum(col(c)).as(c)): _*).write.mode("overwrite")
+      .option("compression", PageCodec)
     (if (maxRecordsPerFile > 0) writer.option("maxRecordsPerFile", maxRecordsPerFile)
      else writer).parquet(dir)
     val m = obs.get
@@ -970,6 +946,12 @@ object IndexBuilder {
     * pseudo-terms from norm_d).
     */
   val VsmNormsFormatTag = "#unigram"
+
+  /** [[VsmNormsFormatTag]]'s counterpart for dict_by_len: "#unigram"
+    * marks the table that holds the dictionary's unigrams only, so one
+    * written with its bigram rows reads as stale and is written again.
+    */
+  val DictByLenFormatTag = "#unigram"
 
   /** The one currency check of every stage and derived table, at build
     * and at serve time: `dir`'s manifest is complete under
@@ -1023,20 +1005,14 @@ object IndexBuilder {
     }
   }
 
-  /** Torn-write-proof marker write (see [[Fs.writeAtomic]]):
-    * index_meta.json existence is the generation-completeness /
-    * streaming-replay-idempotency marker, so a partial meta must be
-    * impossible — it would either drop a replayed batch or poison
-    * readMeta for the whole root.
-    */
-  def writeAtomic(path: String, content: String): Unit =
-    Fs.writeAtomic(path, content)
-
   /** Writes `root`'s index_meta.json for `meta`, built under
     * `fingerprint` — the one writer of the format [[readMeta]] parses.
+    * Torn-write-proof ([[Fs.writeAtomic]]): the file's existence is the
+    * generation-completeness and streaming-replay marker, so a partial
+    * meta would drop a replayed batch or poison readMeta for the root.
     */
   private[index] def writeMeta(root: String, meta: IndexMeta, fingerprint: String): Unit =
-    writeAtomic(IndexPaths(root).meta,
+    Fs.writeAtomic(IndexPaths(root).meta,
       s"""{"n_docs":${meta.n_docs},"avgdl":${meta.avgdl},"n_terms":${meta.n_terms},""" +
       s""""n_postings":${meta.n_postings},"k1":${meta.k1},"b":${meta.b},""" +
       s""""fingerprint":"$fingerprint"}""")

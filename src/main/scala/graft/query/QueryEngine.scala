@@ -153,8 +153,8 @@ final class IndexReader(spark: SparkSession, val root: String) {
   private def fuzzyIndexFor(d: Int): Option[DataFrame] =
     fuzzyIndexCache.getOrElseUpdate(d, {
       val dictToken = IndexBuilder.tableToken(paths.dictionary)
-      // probe EVERY persisted distance (a build may have written
-      // fuzzy_d{fuzzyMaxDistance} above the backfill cap). A table from
+      // probe EVERY persisted distance (an older build may have written
+      // a fuzzy_dD above the backfill cap). A table from
       // an older dictionary reads as stale: on a writable root it is
       // rebuilt once; on a read-only snapshot the dict_by_len probe or
       // the scan serves (slower but never wrong).
@@ -185,11 +185,14 @@ final class IndexReader(spark: SparkSession, val root: String) {
     * variants for terms up to MaxTermLen + d code points, covering every
     * term reachable from an in-domain query.
     *
-    * COST BOUND above the variant tables: d > MaxFuzzyTableDistance
-    * (= 3) deliberately builds no deletion table — a d=4 table is
-    * ~C(len,4) variants per term (10-100x the d=2 table nobody asked to
-    * persist). Instead it probes the build-time `dict_by_len` layout
-    * (the dictionary re-sorted by (cp_len, term)) with a PUSHED
+    * COST. No index writer commits a derived table: the first Spark
+    * lookup at d <= 3 writes fuzzy_d{d}, and the first above the
+    * variant tables writes `dict_by_len`, each once per dictionary (a
+    * job sized by the lexicon, inside that lookup's latency); later
+    * lookups probe them. d > MaxFuzzyTableDistance (= 3) deliberately
+    * builds no deletion table — a d=4 table is ~C(len,4) variants per
+    * term (10-100x the d=2 table). Instead it probes `dict_by_len` (the
+    * dictionary's unigrams sorted by (cp_len, term)) with a PUSHED
     * `cp_len BETWEEN len-d AND len+d` range predicate: parquet
     * row-group stats skip every length band but the query's, so the
     * levenshtein verify runs over O(lexicon ∩ length band), not
@@ -198,13 +201,13 @@ final class IndexReader(spark: SparkSession, val root: String) {
     * PlanSpec asserts the pushdown; [[QueryEngine.fuzzyRangeProbes]]
     * counts these lookups.
     *
-    * Only when even dict_by_len is unavailable (absent, truncated, or
-    * built from another dictionary, with no build() since) does the
-    * O(|lexicon|) length-prefiltered dictionary scan run — counted in
-    * [[QueryEngine.fuzzyScanFallbacks]] (monitor it; a climbing counter
-    * means a root that deserves one build() pass to lay dict_by_len
-    * down, or large-d traffic that deserves a persisted fuzzy_dD via
-    * IndexConf.fuzzyMaxDistance).
+    * Only when dict_by_len is not current and cannot be written (a
+    * read-only root) does the O(|lexicon|) length-prefiltered
+    * dictionary scan run — counted in [[QueryEngine.fuzzyScanFallbacks]].
+    * A read-only snapshot of a fresh build holds neither table, so
+    * every Spark lookup on it scans: warm the root before it is made
+    * read-only, with one Spark lookup at d = 1 and one at d = 4 (the
+    * two writes; BENCH.md times both paths).
     */
   def fuzzyTerms(q: String, d: Int): DataFrame =
     if (dictLocalInstalled)
@@ -220,54 +223,42 @@ final class IndexReader(spark: SparkSession, val root: String) {
 
   private def sparkFuzzyTerms(q: String, d: Int): DataFrame = {
     val qCp = q.codePointCount(0, q.length)
-    val inDomain = qCp <= graft.core.Fuzzy.MaxTermLen
-    val idx = if (inDomain) fuzzyIndexFor(d) else None
+    val idx = if (qCp <= graft.core.Fuzzy.MaxTermLen) fuzzyIndexFor(d) else None
+    val candidates = idx match {
+      case Some(fi) =>
+        fi.filter($"variant".isin(graft.core.Fuzzy.deleteVariants(q, d).toSeq: _*))
+          .select($"term", $"term_id", $"df").distinct()
+      case None if dictByLen.isDefined =>
+        QueryEngine.fuzzyRangeProbes.incrementAndGet()
+        dictByLen.get.filter($"cp_len" >= lit(qCp - d) && $"cp_len" <= lit(qCp + d))
+      case None =>
+        QueryEngine.fuzzyScanFallbacks.incrementAndGet()
+        // +-d bound on CODE POINTS (Spark's length() counts code
+        // points; the JVM String.length counts UTF-16 units and would
+        // under-bound for supplementary-plane queries, dropping true
+        // matches from the prefilter)
+        dictionary.filter(length($"term") >= lit(qCp - d) && length($"term") <= lit(qCp + d))
+    }
     // unigrams ONLY on every path: a bigram-indexed dictionary also
     // holds space-joined pseudo-terms ("table scan"), and without this
     // filter fuzzyTerms("tablescan", 1) would surface them — surprising
     // results and an engine/oracle divergence (the scalar oracle's
     // fuzzy searches unigram postings keys)
-    val noBigrams = !$"term".contains(" ")
-    idx match {
-      case Some(fi) =>
-        val qVars = graft.core.Fuzzy.deleteVariants(q, d).toSeq
-        fi.filter($"variant".isin(qVars: _*))
-          .select($"term", $"term_id", $"df").distinct()
-          .filter(noBigrams)
-          .filter(levenshtein($"term", lit(q)) <= d)
-      case None =>
-        dictByLen match {
-          case Some(dbl) =>
-            QueryEngine.fuzzyRangeProbes.incrementAndGet()
-            dbl.filter($"cp_len" >= lit(qCp - d) && $"cp_len" <= lit(qCp + d))
-              .filter(noBigrams)
-              .filter(levenshtein($"term", lit(q)) <= d)
-              .select($"term", $"term_id", $"df")
-          case None =>
-            QueryEngine.fuzzyScanFallbacks.incrementAndGet()
-            // +-d bound on CODE POINTS (Spark's length() counts code
-            // points; the JVM String.length counts UTF-16 units and would
-            // under-bound for supplementary-plane queries, dropping true
-            // matches from the prefilter)
-            dictionary
-              .filter(length($"term") >= lit(qCp - d) &&
-                length($"term") <= lit(qCp + d))
-              .filter(noBigrams)
-              .filter(levenshtein($"term", lit(q)) <= d)
-              .select($"term", $"term_id", $"df")
-        }
-    }
+    candidates.filter(!$"term".contains(" "))
+      .filter(levenshtein($"term", lit(q)) <= d)
+      .select($"term", $"term_id", $"df")
   }
 
-  /** The `dict_by_len` layout (build-time (cp_len, term)-sorted
-    * dictionary projection), served only while current under the
-    * dictionary's token, the fuzzy tables' staleness guard; None for
-    * roots whose dict_by_len predates this dictionary or the layout
-    * (the counted scan fallback serves those until the next build()).
+  /** The `dict_by_len` layout (the dictionary's unigrams sorted by
+    * (cp_len, term), see IndexBuilder.writeDictByLen): current under
+    * the dictionary's token, or [[backfilled]] once. None when it is
+    * neither (a read-only root whose table is absent, truncated or from
+    * another dictionary): the counted scan fallback serves those.
     */
   private lazy val dictByLen: Option[DataFrame] =
     Some(paths.dictByLen)
-      .filter(IndexBuilder.manifestComplete(_, IndexBuilder.tableToken(paths.dictionary)))
+      .filter(backfilled(_, IndexBuilder.tableToken(paths.dictionary) +
+        IndexBuilder.DictByLenFormatTag)(_.writeDictByLen(dictionary, root)))
       .map(dir => IndexBuilder.reopen(spark, Seq(dir), IndexBuilder.DictByLenSchema))
 
   /** The vsm_norms table (see IndexBuilder.writeVsmNorms): loaded from
@@ -1597,20 +1588,22 @@ class QueryEngine private (spark: SparkSession, lemmas: Map[String, String],
 object QueryEngine {
 
   /** Live driver heap a resident load may take above where it starts,
-    * per postings byte the manifests record. On a 1,300-conversation
-    * `Transcripts` index (20,221,829 recorded bytes, 438,892 chunk rows,
-    * 41,981,501 bytes of arrays held after) the load completed in a
-    * 500 MiB heap that held 199 MB before it, so within 16 bytes a
-    * recorded byte; a full collection every 20 ms during three loads
-    * read 12–16. Spark's collect holds its own copies of the rows, so
-    * this is several times what stays held (2.1).
+    * per byte the manifests record. On a 1,300-conversation
+    * `Transcripts` index in zstd pages (15,718,436 recorded postings
+    * bytes, 43,325,522 bytes of arrays held after; 3,616,770 recorded
+    * docs bytes) the postings load completed in a 500 MiB heap that
+    * held 138 MB before it, so within 24 bytes a recorded byte; a full
+    * collection every 20 ms during three loads read 11.6–15.1 per
+    * postings byte and 13.4–18.0 per docs byte. Spark's collect holds
+    * its own copies of the rows, so this is several times what stays
+    * held (2.8).
     */
-  private[query] val ResidentLoadBytesPerRecordedByte = 16L
+  private[query] val ResidentLoadBytesPerRecordedByte = 24L
 
-  /** The recorded postings bytes an engine holds on the driver when its
-    * max heap is `maxHeap`: a load then takes at most an eighth of the
-    * heap and leaves about 1.6% of it held (25 MB recorded on a 3 GiB
-    * heap).
+  /** The recorded postings and docs bytes an engine holds on the driver
+    * when its max heap is `maxHeap`: a load then takes at most an
+    * eighth of the heap and leaves about 1.4% of it held (16.8 MB
+    * recorded on a 3 GiB heap).
     */
   private[query] def residentBudget(maxHeap: Long): Long =
     maxHeap / 8 / ResidentLoadBytesPerRecordedByte
@@ -1670,7 +1663,7 @@ object QueryEngine {
       * job); Long.MaxValue when a reader's manifest records none.
       */
     private def recordedBytes(table: IndexPaths => String): Long = {
-      val recorded = gens.map(g => IndexBuilder.manifestBytes(table(IndexPaths(g))))
+      val recorded = gens.map(g => IndexBuilder.manifestLong(table(IndexPaths(g)), "bytes"))
       if (recorded.forall(_.isDefined)) recorded.flatten.sum else Long.MaxValue
     }
 
@@ -1843,12 +1836,10 @@ object QueryEngine {
 
   /** Count of fuzzy lookups served by the O(|lexicon|) dictionary-scan
     * fallback — taken only when NEITHER a variant table NOR a current
-    * dict_by_len range layout is available (an index root whose
-    * dict_by_len is absent, truncated or built from another
-    * dictionary). An operational metric: a climbing value
-    * means a root that deserves one build() pass to lay dict_by_len
-    * down, or large-d traffic that deserves a persisted fuzzy_dD table
-    * (IndexConf.fuzzyMaxDistance).
+    * dict_by_len range layout is available and the reader could not
+    * write one (a read-only root). An operational metric: a climbing
+    * value means a read-only root that deserves one writable pass to
+    * lay dict_by_len down.
     */
   val fuzzyScanFallbacks = new java.util.concurrent.atomic.AtomicLong
 
@@ -1862,7 +1853,7 @@ object QueryEngine {
   /** Derived-table dirs whose backfill failed (e.g. read-only mounts):
     * not retried in this JVM (see IndexReader.backfilled).
     */
-  private[query] val backfillFailed =
+  private[graft] val backfillFailed =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** MaxScore essential/non-essential split (driver-side): the longest
@@ -1911,7 +1902,7 @@ object QueryEngine {
     scala.collection.concurrent.TrieMap.empty[String, Object]
 
   /** Distances D with a fuzzy_dD directory under `root` (any validity). */
-  private[query] def fuzzyDistancesOnDisk(root: String): Seq[Int] =
+  private[graft] def fuzzyDistancesOnDisk(root: String): Seq[Int] =
     graft.index.Fs.listNames(root)
       .collect { case n if n.startsWith("fuzzy_d") =>
         n.stripPrefix("fuzzy_d").toIntOption }

@@ -44,7 +44,7 @@ object StreamIngest {
     val p = s"$checkpointDir/graft_stream_id"
     graft.index.Fs.mkdirs(checkpointDir)
     if (!graft.index.Fs.exists(p))
-      graft.index.IndexBuilder.writeAtomic(p,
+      graft.index.Fs.writeAtomic(p,
         java.util.UUID.randomUUID().toString.take(8))
     graft.index.Fs.readString(p).trim
   }

@@ -154,4 +154,63 @@ class IndexCliSpec extends SparkSpecBase {
     // stats is metadata-only and runs on both root shapes
     IndexCli.run(spark, Seq("stats", "--root", root))
   }
+
+  /** What `stats` prints for `root`, line by line. */
+  private def stats(root: String): Seq[String] = {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(IndexCli.run(spark, Seq("stats", "--root", root)))
+    out.toString("UTF-8").linesIterator.toSeq
+  }
+
+  /** The manifest fields `stats` prints for `table` of the index dir `dir`. */
+  private def manifestFields(dir: String, table: String): String =
+    Seq("rows", "bytes", "wall_ms").map(f =>
+      s"$f=${graft.index.IndexBuilder.manifestLong(s"$dir/$table", f).get}").mkString(" ")
+
+  test("CLI stats: each table's rows, bytes and wall_ms, or not written (first use)") {
+    val spark0 = spark
+    import spark0.implicits._
+    import graft.index.{Generations, IndexBuilder, IndexConf}
+    val turns = Transcripts.generateLocal(12L)
+    val conf = IndexConf(numParts = 2)
+    val single = tmpDir("cli_stats_single") + "/root"
+    new IndexBuilder(spark, Transcripts.lemmas, conf).build(turns.toDS(), single)
+    val core = Seq("docs", "segments", "dictionary", "postings")
+    val derived = Seq("dict_by_len", "fuzzy_d*", "vsm_norms")
+    val fresh = stats(single)
+    assert(fresh.head.startsWith(s"single index $single: n_docs=${turns.size} "))
+    assert(fresh.tail == core.map(t => s"  $t: ${manifestFields(single, t)}") ++
+      derived.map(t => s"  $t: not written (first use)"), fresh.mkString("\n"))
+    // a Spark lookup at d = 1 writes fuzzy_d1
+    new graft.query.QueryEngine(spark, single, Transcripts.lemmas).fuzzyTerms("tabel", 1).collect()
+    val after = stats(single)
+    assert(after.contains(s"  fuzzy_d1: ${manifestFields(single, "fuzzy_d1")}"), after.mkString("\n"))
+    assert(!after.exists(_.startsWith("  fuzzy_d*")))
+    // a d = 4 lookup writes dict_by_len; under the bare dictionary token
+    // (a table from before the unigram format) it reads as stale
+    new graft.query.QueryEngine(spark, single, Transcripts.lemmas).fuzzyTerms("tabel", 4).collect()
+    val byLen = s"  dict_by_len: ${manifestFields(single, "dict_by_len")}"
+    assert(stats(single).contains(byLen))
+    val dictToken = IndexBuilder.tableToken(s"$single/dictionary")
+    val manifest = s"$single/dict_by_len/_manifest.json"
+    graft.index.Fs.writeString(manifest, graft.index.Fs.readString(manifest).replace(
+      s""""fingerprint":"$dictToken${IndexBuilder.DictByLenFormatTag}"""", s""""fingerprint":"$dictToken""""))
+    val stale = stats(single)
+    assert(stale.contains(s"$byLen stale (rewritten on first use)"), stale.mkString("\n"))
+
+    val gens = tmpDir("cli_stats_gens") + "/root"
+    turns.grouped(turns.size / 2 + 1).foreach(b =>
+      Generations.append(spark, b.toDS(), gens, Transcripts.lemmas, conf))
+    val lines = stats(gens)
+    val dirs = Generations.genDirs(gens)
+    assert(dirs.size == 2)
+    val expected = dirs.flatMap { g =>
+      val m = IndexBuilder.readMeta(g)
+      s"${g.split('/').last}: n_docs=${m.n_docs} n_terms=${m.n_terms} n_postings=${m.n_postings}" +:
+        (core.map(t => s"  $t: ${manifestFields(g, t)}") ++
+          derived.map(t => s"  $t: not written (first use)"))
+    }
+    assert(lines.take(expected.size) == expected, lines.mkString("\n"))
+    assert(lines.last.startsWith("total: 2 generations"))
+  }
 }

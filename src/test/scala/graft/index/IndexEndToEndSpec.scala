@@ -274,48 +274,73 @@ class IndexEndToEndSpec extends SparkSpecBase {
     assert(got == want, "range-probe results differ from ground truth")
   }
 
-  test("fuzzy large-d on a root WITHOUT dict_by_len takes the counted scan fallback") {
+  /** Ground truth of a fuzzy lookup: the dictionary's terms within d. */
+  private def fuzzyTruth(q: String, d: Int): Set[(String, Long)] = {
     import org.apache.spark.sql.functions.{col, levenshtein, lit}
-    // clone the index root minus dict_by_len: an older-build root shape
-    val oldRoot = tmpDir("graft-oldroot")
-    val src = new java.io.File(indexDir)
-    src.listFiles().filter(_.getName != "dict_by_len")
-      .foreach(f => copyTree(f, new java.io.File(oldRoot, f.getName)))
-    val oldEngine = new QueryEngine(spark, oldRoot, lemmas)
-    val before = QueryEngine.fuzzyScanFallbacks.get()
-    val got = oldEngine.fuzzyTerms("kelba", 4).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(QueryEngine.fuzzyScanFallbacks.get() == before + 1,
-      "without dict_by_len, d=4 must take the COUNTED scan fallback")
-    val want = engine.dictionary
-      .filter(levenshtein(col("term"), lit("kelba")) <= 4)
+    engine.dictionary
+      .filter(levenshtein(col("term"), lit(q)) <= d)
       .select(col("term"), col("term_id")).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(got == want, "scan-fallback results differ from ground truth")
+  }
+
+  /** A d = 4 lookup of "kelba" on `root`, with the (range probes, scan
+    * fallbacks) it took. `readOnly` marks the root's dict_by_len as a
+    * failed backfill, as on a read-only mount, while it runs.
+    */
+  private def largeD(root: String, readOnly: Boolean): (Set[(String, Long)], (Long, Long)) = {
+    val dir = IndexPaths(root).dictByLen
+    if (readOnly) QueryEngine.backfillFailed.add(dir)
+    try {
+      val probes = QueryEngine.fuzzyRangeProbes.get()
+      val scans = QueryEngine.fuzzyScanFallbacks.get()
+      val got = new QueryEngine(spark, root, lemmas).fuzzyTerms("kelba", 4).collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSet
+      (got, (QueryEngine.fuzzyRangeProbes.get() - probes,
+        QueryEngine.fuzzyScanFallbacks.get() - scans))
+    } finally QueryEngine.backfillFailed.remove(dir)
+  }
+
+  test("fuzzy large-d on a root WITHOUT dict_by_len writes it, or scans when read-only") {
+    // clone the index root minus dict_by_len: an older-build root shape
+    def withoutDictByLen(prefix: String): String = {
+      val oldRoot = tmpDir(prefix)
+      new java.io.File(indexDir).listFiles().filter(_.getName != "dict_by_len")
+        .foreach(f => copyTree(f, new java.io.File(oldRoot, f.getName)))
+      oldRoot
+    }
+    val want = fuzzyTruth("kelba", 4)
+    val (got, counts) = largeD(withoutDictByLen("graft-oldroot"), readOnly = false)
+    assert(counts == (1L, 0L),
+      s"a writable root must write dict_by_len, then range-probe it (probes, scans): $counts")
+    assert(got == want, "range-probe results differ from ground truth")
+    val (gotRo, countsRo) = largeD(withoutDictByLen("graft-oldroot-ro"), readOnly = true)
+    assert(countsRo == (0L, 1L),
+      s"without dict_by_len, a read-only root must take the COUNTED scan fallback: $countsRo")
+    assert(gotRo == want, "scan-fallback results differ from ground truth")
   }
 
   test("a TRUNCATED dict_by_len (part files lost under surviving markers) is not trusted") {
-    import org.apache.spark.sql.functions.{col, levenshtein, lit}
     // clone the root, then delete ONE dict_by_len parquet part while
     // _SUCCESS AND the manifest survive: the manifest's fingerprint (the
     // dictionary's token) hashes the DICTIONARY's listing, so only the
     // manifest integrity check (n_files/bytes vs disk) can catch this —
     // without it every d>3 fuzzy lookup would silently DROP the matches
     // in that part
-    val root2 = cloneRoot(indexDir, "graft-truncdbl")
-    val victim = Fs.listFilesRecursive(s"$root2/dict_by_len", ".parquet").head._1
-    Fs.deleteRecursive(victim)
-    val truncEngine = new QueryEngine(spark, root2, lemmas)
-    val beforeScans = QueryEngine.fuzzyScanFallbacks.get()
-    val got = truncEngine.fuzzyTerms("kelba", 4).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(QueryEngine.fuzzyScanFallbacks.get() == beforeScans + 1,
-      "truncated dict_by_len must fall back to the counted full scan, not serve partial results")
-    val want = engine.dictionary
-      .filter(levenshtein(col("term"), lit("kelba")) <= 4)
-      .select(col("term"), col("term_id")).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(got == want, "fallback results differ from ground truth")
+    engine.fuzzyTerms("kelba", 4).collect() // writes dict_by_len on first use
+    def truncated(prefix: String): String = {
+      val root2 = cloneRoot(indexDir, prefix)
+      Fs.deleteRecursive(Fs.listFilesRecursive(s"$root2/dict_by_len", ".parquet").head._1)
+      root2
+    }
+    val want = fuzzyTruth("kelba", 4)
+    val (got, counts) = largeD(truncated("graft-truncdbl"), readOnly = false)
+    assert(counts == (1L, 0L),
+      s"a writable root must rewrite a truncated dict_by_len, then range-probe it: $counts")
+    assert(got == want, "range-probe results differ from ground truth")
+    val (gotRo, countsRo) = largeD(truncated("graft-truncdbl-ro"), readOnly = true)
+    assert(countsRo == (0L, 1L),
+      s"truncated dict_by_len on a read-only root must fall back to the counted scan: $countsRo")
+    assert(gotRo == want, "fallback results differ from ground truth")
   }
 
   test("a TRUNCATED fuzzy variant table is not trusted (manifest gate)") {
@@ -325,6 +350,7 @@ class IndexEndToEndSpec extends SparkSpecBase {
     // hashes the DICTIONARY's listing, so only the variant table's own
     // n_files/bytes can catch this — without them every d<=1 lookup
     // would silently DROP the matches in the lost part.
+    engine.fuzzyTerms("kelba", 1).collect() // writes fuzzy_d1 on first use
     val root2 = cloneRoot(indexDir, "graft-truncfz")
     // earlier tests may have backfilled fuzzy_d2/d3 onto the source
     // root; drop them from the clone so the truncated d1 is the ONLY
@@ -336,7 +362,7 @@ class IndexEndToEndSpec extends SparkSpecBase {
     val fuzzyDir = IndexPaths(root2).fuzzy(1)
     val dictToken = IndexBuilder.tableToken(IndexPaths(root2).dictionary)
     assert(Fs.exists(s"$fuzzyDir/_manifest.json"),
-      "build-time writeFuzzyIndex must leave a manifest")
+      "the first d=1 lookup's writeFuzzyIndex must leave a manifest")
     assert(IndexBuilder.manifestComplete(fuzzyDir, dictToken))
     val victim = Fs.listFilesRecursive(fuzzyDir, ".parquet").head._1
     Fs.deleteRecursive(victim)
@@ -840,8 +866,8 @@ class IndexEndToEndSpec extends SparkSpecBase {
     e1.fuzzyTerms("alba", 2).collect() // lazily backfills fuzzy_d2
     assert(Files.exists(Paths.get(s"$dir/fuzzy_d2/_SUCCESS")),
       "d=2 backfill did not run")
-    // different corpus, SAME root: the rebuild rewrites dictionary and
-    // fuzzy_d1, but not the old backfilled fuzzy_d2 — it must be
+    // different corpus, SAME root: the rebuild rewrites the dictionary,
+    // but not the old backfilled fuzzy_d2 — it must be
     // detected as stale (dict-token mismatch) instead of serving
     // old-corpus terms/term_ids/dfs against the new index
     b.build(spark.read.parquet(turnsB).as[graft.corpus.Turn], dir)
@@ -862,6 +888,8 @@ class IndexEndToEndSpec extends SparkSpecBase {
     // capture manifest mtimes, rebuild, assert untouched
     import java.nio.file.{Files, Paths}
     val paths = IndexPaths(indexDir)
+    // the derived tables a reader wrote survive a resumed build untouched
+    Seq(1, 4).foreach(d => engine.fuzzyTerms("kelba", d).collect())
     val manifests = Seq(paths.docs, paths.segments, paths.dictionary, paths.postings,
       paths.dictByLen, paths.fuzzy(1))
       .map(d => Paths.get(d, "_manifest.json"))
@@ -874,26 +902,26 @@ class IndexEndToEndSpec extends SparkSpecBase {
     assert(before == after, "resume should not rewrite completed stages")
   }
 
-  test("resumed build repairs a STALE-TOKENED dict_by_len") {
+  test("the first large-d lookup repairs a STALE-TOKENED dict_by_len") {
     // simulate a dictionary rewritten under an UNCHANGED build
     // fingerprint (new part UUIDs => new tableToken, e.g. a repaired
     // stage): dict_by_len's manifest then carries a token that no
-    // longer matches the dictionary — a build-fp skip would leave it
-    // stale forever (serve side rejects it, no build repairs it, every
-    // large-d fuzzy query pays the O(lexicon) scan)
+    // longer matches the dictionary — unless a reader rewrites it, every
+    // large-d fuzzy query pays the O(lexicon) scan
+    engine.fuzzyTerms("kelba", 4).collect() // writes dict_by_len on first use
     val root2 = cloneRoot(indexDir, "graft-staletok")
     val dictByLen = IndexPaths(root2).dictByLen
-    val dictToken = IndexBuilder.tableToken(IndexPaths(root2).dictionary)
+    val token = IndexBuilder.tableToken(IndexPaths(root2).dictionary) +
+      IndexBuilder.DictByLenFormatTag
     val manifest = s"$dictByLen/_manifest.json"
     Fs.writeString(manifest, Fs.readString(manifest).replace(
-      s""""fingerprint":"$dictToken"""",
+      s""""fingerprint":"$token"""",
       """"fingerprint":"stale-token-from-before-the-dict-rewrite""""))
-    assert(!IndexBuilder.manifestComplete(dictByLen, dictToken))
-    val turns = Transcripts.generate(spark, nConvs)
-    new IndexBuilder(spark, lemmas,
-      IndexConf(numParts = 4, skewDfThreshold = 300, nSalts = 4))
-      .build(turns, root2)
-    assert(IndexBuilder.manifestComplete(dictByLen, dictToken),
-      "resumed build must rewrite a stale-tokened dict_by_len")
+    assert(!IndexBuilder.manifestComplete(dictByLen, token))
+    val (got, counts) = largeD(root2, readOnly = false)
+    assert(IndexBuilder.manifestComplete(dictByLen, token),
+      "the first large-d lookup must rewrite a stale-tokened dict_by_len")
+    assert(counts == (1L, 0L), s"(range probes, scan fallbacks): $counts")
+    assert(got == fuzzyTruth("kelba", 4))
   }
 }

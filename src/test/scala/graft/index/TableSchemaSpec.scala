@@ -42,8 +42,38 @@ class TableSchemaSpec extends SparkSpecBase {
     assertSchema(p.dictionary, IndexBuilder.DictionarySchema)
     assertSchema(p.postings, IndexBuilder.PostingsSchema, recursive = true)
     assertSchema(p.segments, IndexBuilder.SegmentsSchema, recursive = true)
+  }
+
+  /** The derived tables a reader writes on first use. */
+  private def assertDerivedTables(root: String): Unit = {
+    val p = IndexPaths(root)
     assertSchema(p.fuzzy(conf.fuzzyMaxDistance), IndexBuilder.FuzzySchema)
     assertSchema(p.dictByLen, IndexBuilder.DictByLenSchema)
+  }
+
+  /** Writes the fuzzy tables of every generation under `root`: a Spark
+    * lookup at d = 1 writes fuzzy_d1, one at d = 4 dict_by_len.
+    */
+  private def writeFuzzyTables(root: String): Unit = {
+    val e = new QueryEngine(spark, root, lemmas)
+    Seq(1, 4).foreach(d => e.fuzzyTerms("tabel", d).collect())
+  }
+
+  /** The Parquet files under `dir` whose footers record a column chunk
+    * in a codec other than zstd, with that codec.
+    */
+  private def notZstd(dir: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val hconf = spark.sparkContext.hadoopConfiguration
+    Fs.listFilesRecursive(dir, ".parquet").map(_._1).flatMap { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), hconf))
+      try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec))
+        .filter(_ != CompressionCodecName.ZSTD).map(c => s"$f: $c").distinct
+      finally r.close()
+    }
   }
 
   test("each reader schema equals what parquet infers from the written tables") {
@@ -51,7 +81,9 @@ class TableSchemaSpec extends SparkSpecBase {
     val single = tmpDir("graft-schema-single")
     new IndexBuilder(spark, lemmas, conf).build(spark.createDataset(allTurns), single)
     assertIndexTables(single)
-    // vsm_norms is backfilled on first use
+    // the fuzzy tables and vsm_norms are backfilled on first use
+    writeFuzzyTables(single)
+    assertDerivedTables(single)
     val e = new QueryEngine(spark, single, lemmas)
     e.vsmScores(e.queryTerms(q)).collect()
     assertSchema(IndexPaths(single).vsmNorms, IndexBuilder.VsmNormsSchema)
@@ -63,9 +95,43 @@ class TableSchemaSpec extends SparkSpecBase {
     Generations.deleteDocs(spark, spark.createDataset(Seq(3L, 40L)), gens)
     Generations.deleteWhere(spark, gens, col("conv_id") === "conv-00000002")
     Generations.genDirs(gens).foreach(assertIndexTables)
+    writeFuzzyTables(gens)
+    Generations.genDirs(gens).foreach(assertDerivedTables)
     val dels = Generations.delDirs(gens)
     assert(dels.size == 2)
     dels.foreach(d => assertSchema(s"$d/ids", Generations.DeletedIdsSchema))
+  }
+
+  test("writers commit no derived table, and every table is written in zstd pages") {
+    import spark.implicits._
+    val single = tmpDir("graft-codec-single")
+    new IndexBuilder(spark, lemmas, conf).build(spark.createDataset(allTurns), single)
+    val gens = tmpDir("graft-codec-gens")
+    val (base, fresh) = allTurns.splitAt(allTurns.size / 2)
+    Generations.append(spark, spark.createDataset(base), gens, lemmas, conf)
+    Generations.upsert(spark, spark.createDataset(
+      fresh ++ base.take(5).map(t => t.copy(text = t.text + " corrected"))), gens, lemmas, conf)
+    Generations.deleteDocs(spark, spark.createDataset(Seq(3L, 40L)), gens)
+    assert(Generations.delDirs(gens).nonEmpty)
+    Compactor.mergeSmallest(spark, gens, 2, lemmas, conf)
+    val written = single +: Generations.genDirs(gens)
+    assert(written.size == 2, s"expected one merged generation: ${Generations.genDirs(gens)}")
+    written.foreach { dir =>
+      val derived = new java.io.File(dir).listFiles().map(_.getName)
+        .filter(n => n == "dict_by_len" || n.startsWith("fuzzy_d"))
+      assert(derived.isEmpty, s"$dir: a writer committed ${derived.mkString(", ")}")
+    }
+    // the lazily written tables too
+    Seq(single, gens).foreach(writeFuzzyTables)
+    val e = new QueryEngine(spark, single, lemmas)
+    e.vsmScores(e.queryTerms(q)).collect()
+    written.foreach(assertDerivedTables)
+    assert(Fs.exists(IndexPaths(single).vsmNorms))
+    Seq(single, gens).foreach { root =>
+      assert(Fs.listFilesRecursive(root, ".parquet").size > 10)
+      val bad = notZstd(root)
+      assert(bad.isEmpty, s"part files not in zstd pages:\n${bad.mkString("\n")}")
+    }
   }
 
   test("a root whose docs files predate ts opens and serves snippets and filtered search") {

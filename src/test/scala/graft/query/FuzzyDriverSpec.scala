@@ -7,13 +7,13 @@ import org.apache.spark.sql.DataFrame
 import graft.SparkSpecBase
 import graft.core.Fuzzy
 import graft.corpus.{Transcripts, Turn}
-import graft.index.{Generations, IndexBuilder, IndexConf}
+import graft.index.{Generations, IndexBuilder, IndexConf, IndexPaths}
 
 /** Driver fuzzy lookup: with the dictionary installed on the driver,
   * `fuzzyTerms` answers from the driver lexicon. Its rows must equal the
   * Spark paths' (the variant table at d <= 3, the `dict_by_len` range
   * probe at d = 4 and beyond `Fuzzy.MaxTermLen`, the scan fallback on a
-  * root without `dict_by_len`) on a single index and on a 3-generation
+  * read-only root without `dict_by_len`) on a single index and on a 3-generation
   * root with tombstones, supplementary-plane terms included, and it must
   * take none of those paths (their counters do not move).
   */
@@ -51,11 +51,14 @@ class FuzzyDriverSpec extends SparkSpecBase {
     dir
   }
 
-  /** The single root without `dict_by_len`: large d takes the scan. */
+  /** The single root without `dict_by_len`, whose backfill of it failed
+    * (as on a read-only mount): large d takes the scan.
+    */
   private lazy val noDictByLen: String = {
     val dir = tmpDir("graft-fuzzq-driver-nodbl")
     new java.io.File(singleRoot).listFiles().filter(_.getName != "dict_by_len")
       .foreach(f => copyTree(f, new java.io.File(dir, f.getName)))
+    QueryEngine.backfillFailed.add(IndexPaths(dir).dictByLen)
     dir
   }
 
